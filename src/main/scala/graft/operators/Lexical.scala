@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.functions.{Bm25, TextFunctions}
 
 /** Lexical retrieval — the BM25 sibling of the vector-search path, and
   * the rank-fusion glue for hybrid retrieval. The reference's RAG stack
@@ -30,10 +30,14 @@ object Lexical {
     *  2. N/avgdl and the per-term document frequencies (|terms| driver
     *     rows, small by construction) aggregate off the narrow frame;
     *  3. per query, one shuffle-free scoring pass over the narrow frame:
-    *     per-term tf scans only the (tiny) occurrence array; the BM25
-    *     sum folds LEFT-TO-RIGHT over `terms` with the oracle's exact
-    *     operator association ((b*dl)/avgdl) so the floating-point
-    *     result is bit-reproducible across engines;
+    *     the [[graft.functions.Bm25Score]] kernel counts each term's tf
+    *     in the (tiny) occurrence array and sums the Okapi terms
+    *     LEFT-TO-RIGHT over `terms` with the oracle's exact operator
+    *     association ((b*dl)/avgdl), so the floating-point result is
+    *     bit-reproducible across engines. The query's terms, idfs and
+    *     avgdl reach the generated code as referenced objects, never as
+    *     inlined literals: the stage's Java source depends only on the
+    *     plan shape, so it compiles once per JVM, not once per query;
     *     TakeOrderedAndProject keeps per-partition k-row heaps (no
     *     corpus sort, no shuffle).
     * EAGER (the minHashNearDups discipline): the k-row results are
@@ -96,29 +100,25 @@ object Lexical {
         .groupBy(col("__t")).agg(count(lit(1)).as("__df"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-      // (1-b) + (b*dl)/avgdl — the same left-to-right association DuckDB
-      // parses for `0.25 + 0.75 * dl/avgdl`, so the doubles match bit-
-      // for-bit (ADVICE r5: b*(dl/avgdl) differed in the last ulp).
-      val norm = lit(1.0 - b) + lit(b) * col("__dl") / avgdl
       lowered.map { termsLower =>
-      val perTerm: Seq[Column] = termsLower.map { t =>
-        val dfT = dfCounts.getOrElse(t, 0L)
-        val idf = math.log(1.0 + (n - dfT + 0.5) / (dfT + 0.5))
-        val tf = size(filter(col("__wq"), w => w === lit(t))).cast("double")
-        when(tf > 0,
-          lit(idf) * tf * lit(k1 + 1.0) / (tf + lit(k1) * norm))
-          .otherwise(lit(0.0))
-      }
-      scored.withColumn("__score", perTerm.reduceLeft(_ + _))
-        .filter(col("__score") > 0)
-        .orderBy(desc("__score"), asc("id"))
-        .limit(k)
-        .select(col("id").as(idCol), round(col("__score"), 6).as("score"))
-        // materialize the k rows so the corpus frame can be freed now
-        .localCheckpoint(true)
+        val idfs = termsLower.map(t => Bm25.idf(n, dfCounts.getOrElse(t, 0L)))
+        topKByScore(scored,
+          Bm25.score(col("__wq"), col("__dl"), termsLower, idfs, avgdl, k1, b), idCol, k)
       }
     } finally graft.util.Checkpoints.free(scored)
   }
+
+  /** The top-k tail both BM25 paths share: rows scoring > 0, ordered
+    * (score DESC, id ASC), scores rounded to 6 places, materialized so
+    * the caller can free its corpus-sized frame. `frame` carries `id`. */
+  private[operators] def topKByScore(
+      frame: DataFrame, score: Column, idCol: String, k: Int): DataFrame =
+    frame.withColumn("__score", score)
+      .filter(col("__score") > 0)
+      .orderBy(desc("__score"), asc("id"))
+      .limit(k)
+      .select(col("id").as(idCol), round(col("__score"), 6).as("score"))
+      .localCheckpoint(true)
 
   /** Reciprocal-rank fusion over any number of (idCol, score) rankings:
     * rrf(id) = sum over rankings of 1/(c + rank), rank 1-based by

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.functions.{Bm25, TextFunctions}
 import graft.sources.{CompositeIndex, MergeTable}
 
 /** Persisted inverted index for [[Lexical]] — the serving path.
@@ -55,9 +55,9 @@ import graft.sources.{CompositeIndex, MergeTable}
   *
   * Scoring reproduces [[Lexical.bm25TopKMany]] EXACTLY (spec-gated):
   * same tokenization, same df/N/avgdl statistics (integer-valued sums,
-  * so aggregation order cannot flip bits), same left-to-right Okapi
-  * fold with per-term tf looked up from a per-doc map — indexed and
-  * fresh rankings are bit-identical on the same corpus.
+  * so aggregation order cannot flip bits), the same scoring kernel with
+  * per-term tf looked up from a per-doc map — indexed and fresh
+  * rankings are bit-identical on the same corpus.
   */
 object LexicalIndex {
 
@@ -354,9 +354,11 @@ object LexicalIndex {
     *     bounded by the scored terms' document frequencies — are
     *     checkpointed and shared by every query's pass;
     *  3. per query: per-doc (term → tf) maps assemble from the matched
-    *     postings (one bounded shuffle on id), then the same
-    *     left-to-right Okapi fold as the fresh path scores them and
-    *     TakeOrderedAndProject keeps the top k.
+    *     postings (one bounded shuffle on id), then the fresh path's
+    *     [[graft.functions.Bm25Score]] kernel scores them and
+    *     TakeOrderedAndProject keeps the top k. The kernel holds terms,
+    *     idfs and avgdl as referenced objects, so every query of the
+    *     same plan shape reuses one compiled scoring stage.
     * EAGER like the fresh path: results materialize, intermediates are
     * freed before returning.
     *
@@ -405,8 +407,6 @@ object LexicalIndex {
         else col("term").isin(scoredTerms: _*))
       .localCheckpoint(true)
     try {
-      // identical association to Lexical.bm25TopKMany — bit-for-bit
-      val norm = lit(1.0 - b) + lit(b) * col("dl") / avgdl
       loweredKept.map { termsLower =>
         if (termsLower.isEmpty) {
           // every term of this query was df-pruned: an empty ranking,
@@ -414,25 +414,14 @@ object LexicalIndex {
           matched.limit(0)
             .select(col("id").as(idCol), lit(0.0).as("score"))
         } else {
-        val perDoc = matched
-          .filter(col("term").isin(termsLower: _*))
-          .groupBy(col("id"), col("dl"))
-          .agg(map_from_entries(collect_list(struct(col("term"), col("tf"))))
-            .as("__tfs"))
-        val perTerm: Seq[Column] = termsLower.map { t =>
-          val dfT = dfCounts.getOrElse(t, 0L)
-          val idf = math.log(1.0 + (n - dfT + 0.5) / (dfT + 0.5))
-          val tf = coalesce(element_at(col("__tfs"), lit(t)), lit(0L)).cast("double")
-          when(tf > 0,
-            lit(idf) * tf * lit(k1 + 1.0) / (tf + lit(k1) * norm))
-            .otherwise(lit(0.0))
-        }
-        perDoc.withColumn("__score", perTerm.reduceLeft(_ + _))
-          .filter(col("__score") > 0)
-          .orderBy(desc("__score"), asc("id"))
-          .limit(k)
-          .select(col("id").as(idCol), round(col("__score"), 6).as("score"))
-          .localCheckpoint(true)
+          val perDoc = matched
+            .filter(col("term").isin(termsLower: _*))
+            .groupBy(col("id"), col("dl"))
+            .agg(map_from_entries(collect_list(struct(col("term"), col("tf"))))
+              .as("__tfs"))
+          val idfs = termsLower.map(t => Bm25.idf(n, dfCounts.getOrElse(t, 0L)))
+          Lexical.topKByScore(perDoc,
+            Bm25.score(col("__tfs"), col("dl"), termsLower, idfs, avgdl, k1, b), idCol, k)
         }
       }
     } finally graft.util.Checkpoints.free(matched)

@@ -2,6 +2,7 @@ package graft.util
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.Try
 
 /** Run INDEPENDENT Spark actions from driver threads so the scheduler
   * overlaps their jobs (optimization guide §2.6): actions are only
@@ -25,6 +26,13 @@ import scala.concurrent.duration.Duration
   * a second concurrent writer against a single-writer table. A failed
   * sibling's own partial output is unpublished (MergeTable batch dirs
   * / composite staging), so it is vacuum-reclaimable, never visible.
+  *
+  * Nesting: a call made FROM a pool thread (a composite write inside a
+  * branch) runs its branches inline, in argument order, on that thread.
+  * Parking a pool thread in `Await` on work queued behind it would
+  * deadlock once every pool thread did so — a `three` inside a `three`
+  * fills the pool with waiters. The outer call already overlaps the
+  * jobs; the inner one keeps the same join-all-then-rethrow contract.
   */
 object Par {
   // DEDICATED bounded pool, not ExecutionContext.global: every branch
@@ -40,12 +48,14 @@ object Par {
   // up legibly in driver thread dumps. Submission order is FIFO per
   // call site (both/three submit in argument order), preserving the
   // earlier-job-first back-fill behaviour.
+  private final class PoolThread(r: Runnable, name: String) extends Thread(r, name)
+
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(
     3,
     new java.util.concurrent.ThreadFactory {
       private val n = new java.util.concurrent.atomic.AtomicInteger(0)
       def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"graft-par-${n.getAndIncrement()}")
+        val t = new PoolThread(r, s"graft-par-${n.getAndIncrement()}")
         t.setDaemon(true)
         t
       }
@@ -53,21 +63,23 @@ object Par {
   private implicit val ec: ExecutionContext =
     ExecutionContext.fromExecutorService(pool)
 
-  private def joinAll[T](fs: Seq[Future[Any]]): Seq[Any] = {
-    // await every branch (never throws here) ...
-    val results = fs.map(f => Await.ready(f, Duration.Inf).value.get)
-    // ... THEN surface the first failure, after all siblings settled
+  /** Every branch settled (inline or on the pool), THEN the first
+    * failure in argument order rethrows. */
+  private def joinAll(branches: Seq[() => Any]): Seq[Any] = {
+    val results =
+      if (Thread.currentThread().isInstanceOf[PoolThread]) branches.map(f => Try(f()))
+      else branches.map(f => Future(f())).map(f => Await.ready(f, Duration.Inf).value.get)
     results.collectFirst { case scala.util.Failure(e) => throw e }
     results.map(_.get)
   }
 
   def both[A, B](a: => A, b: => B): (A, B) = {
-    val r = joinAll(Seq(Future(a), Future(b)))
+    val r = joinAll(Seq(() => a, () => b))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
   }
 
   def three[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    val r = joinAll(Seq(Future(a), Future(b), Future(c)))
+    val r = joinAll(Seq(() => a, () => b, () => c))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
   }
 }

@@ -47,6 +47,29 @@ class LexicalIndexSpec extends SparkSpec {
     }
   }
 
+  test("indexed BM25 and hybridSearchKnowledge generate query-invariant code") {
+    val kb = corpus(3, 40).toDF("id", "content")
+    val path = freshPath()
+    LexicalIndex.build(spark, path, kb, "id", "content")
+    def df(t: String) = kb.filter(array_contains(split(col("content"), " "), t)).count()
+    val (qa, qb) = (Seq("w1", "w7", "w20"), Seq("w33", "w2", "w9"))
+    assert(qa.map(df) !== qb.map(df), "the two queries must differ in their idfs")
+    val a = GeneratedCode.of(spark)(LexicalIndex.bm25TopK(spark, path, "id", qa, k = 10))
+    val b = GeneratedCode.of(spark)(LexicalIndex.bm25TopK(spark, path, "id", qb, k = 10))
+    assert(a === b)
+    assert(a.exists(_.contains(classOf[graft.functions.Bm25Score].getName)),
+      "the scoring stage does not run the BM25 kernel")
+
+    val emb = graft.search.HashEmbedder(16)
+    val g = GraftSession(spark, emb)
+      .loadKnowledgeBase(emb.embedColumn(kb, "content", "embedding"))
+      .buildLexicalIndex(freshPath())
+    val ha = GeneratedCode.of(spark)(g.hybridSearchKnowledge(qa.mkString(" "), k = 5).collect())
+    val hb = GeneratedCode.of(spark)(g.hybridSearchKnowledge(qb.mkString(" "), k = 5).collect())
+    assert(ha === hb)
+    assert(ha.exists(_.contains(classOf[graft.functions.Bm25Score].getName)))
+  }
+
   test("upsert replaces docs incrementally: stale postings die, new ones serve") {
     val base = corpus(11, 40)
     val path = freshPath()

@@ -101,6 +101,18 @@ class LexicalSpec extends SparkSpec {
     }
   }
 
+  test("bm25TopK: the generated code is query-invariant (same term count, new terms and idfs)") {
+    // the idf sequences differ (df 2,2,1 vs 1,1,2) — a fold that inlined
+    // each idf as a Java literal would generate (and compile) new code
+    val a = GeneratedCode.of(spark)(Lexical.bm25TopK(docs, "doc_id", "text",
+      Seq("spark", "join", "slow"), k = 10))
+    val b = GeneratedCode.of(spark)(Lexical.bm25TopK(docs, "doc_id", "text",
+      Seq("queue", "today", "spark"), k = 10))
+    assert(a === b)
+    assert(a.exists(_.contains(classOf[graft.functions.Bm25Score].getName)),
+      "the scoring stage does not run the BM25 kernel")
+  }
+
   test("bm25TopK on an empty corpus fails with the friendly require, try/finally intact") {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException](
