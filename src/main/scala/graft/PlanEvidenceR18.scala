@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
 /** Plan evidence for the round-18 writer-path literal fusion: the
   * before/after physical shapes of the three per-commit key probes
   * that [[graft.sources.MergeTable]] now drives from ONE collected
-  * literal list (validatedBatchCountLits) instead of per-consumer
+  * literal list ([[graft.sources.KeySet.Literals]]) instead of per-consumer
   * broadcast builds. Shapes are built over a real staged row-level
   * table (the q144 lineage) so the dumped plans are the ones the
   * bench executes.

@@ -106,9 +106,8 @@ object StreamMergeBloomDemo {
       val u = batch.localCheckpoint(true)
       def once(): Double = {
         val t0 = System.nanoTime()
-        MergeTable.discoveryFrame(
-          MergeTable.relationFor(spark, snap.entries), u,
-          Seq("request_id"), 20).collect()
+        graft.sources.KeySet.Frame(u, Seq("request_id"), 20)
+          .discoveryFrame(MergeTable.relationFor(spark, snap.entries)).collect()
         (System.nanoTime() - t0) / 1e9
       }
       try { once(); dropCaches(); once() }

@@ -110,13 +110,17 @@ object Lexical {
 
   /** The top-k tail both BM25 paths share: rows scoring > 0, ordered
     * (score DESC, id ASC), scores rounded to 6 places, materialized so
-    * the caller can free its corpus-sized frame. `frame` carries `id`. */
+    * the caller can free its corpus-sized frame. `frame` carries `id`.
+    * The `> 0` filter runs AFTER the limit — equivalent, because
+    * positive scores sort ahead of zeros under (score DESC, id ASC) —
+    * so Catalyst cannot inline the score alias into a pushed-down
+    * Filter and run the kernel twice per row. */
   private[operators] def topKByScore(
       frame: DataFrame, score: Column, idCol: String, k: Int): DataFrame =
     frame.withColumn("__score", score)
-      .filter(col("__score") > 0)
       .orderBy(desc("__score"), asc("id"))
       .limit(k)
+      .filter(col("__score") > 0)
       .select(col("id").as(idCol), round(col("__score"), 6).as("score"))
       .localCheckpoint(true)
 

@@ -419,6 +419,10 @@ object LexicalIndex {
             .groupBy(col("id"), col("dl"))
             .agg(map_from_entries(collect_list(struct(col("term"), col("tf"))))
               .as("__tfs"))
+            // true of every group (each holds a query term), but a Filter
+            // here keeps Catalyst from folding the scoring projection into
+            // ObjectHashAggregate's result, which whole-stage codegen skips
+            .filter(size(col("__tfs")) > 0)
           val idfs = termsLower.map(t => Bm25.idf(n, dfCounts.getOrElse(t, 0L)))
           Lexical.topKByScore(perDoc,
             Bm25.score(col("__tfs"), col("dl"), termsLower, idfs, avgdl, k1, b), idCol, k)

@@ -1,0 +1,331 @@
+package graft.sources
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+/** The key set a MergeTable writer or read works with — a write batch's
+  * conflict keys, a fold's removal set, or a version's row-level
+  * suppression set — in ONE of two forms, chosen once where the keys
+  * are first seen:
+  *
+  *  - [[KeySet.Literals]]: one stable-typed key column and at most
+  *    [[KeySet.DiscoveryInLimit]] distinct values, held on the driver.
+  *    Every consumer pushes them as an `In` predicate (NULL-guarded
+  *    NOT-In for anti-joins) straight at the scan: no broadcast build,
+  *    no re-collect job, and on hash/uuid key domains (content_hash,
+  *    request_id — where a RANGE covers every file) the In reaches the
+  *    parquet reader's footer stats AND bloom filters. The staged
+  *    lineages are driver-gap-bound (37 jobs × ~30 ms + ~45 ms gaps
+  *    measured on q144), so every shed job is wall-clock.
+  *  - [[KeySet.Frame]]: every other set — multi-column, an unstable key
+  *    type (binary: reference equality; float/double: NaN equality
+  *    differs between Seq.distinct and SQL), or past the budget — kept
+  *    as a key frame and joined by broadcast. Its size and frame are
+  *    lazy: a set that only feeds a gate or a union costs nothing until
+  *    a consumer runs it.
+  *
+  * Both forms answer every operation with identical rows and files
+  * (KeySetSpec pins it per key type), so each consumer makes ONE call
+  * and never branches on the form. The NULL argument that makes them
+  * agree: a join never matches a NULL key, so an anti-join KEEPS
+  * NULL-keyed rows and a semi-join drops them; `isin` evaluates NULL on
+  * a NULL key, so the literal anti-join adds an explicit `isNull` guard
+  * and the literal semi-join needs none. */
+private[graft] sealed trait KeySet {
+  def keyCols: Seq[String]
+
+  /** Distinct keys, or an upper bound on them (a fold's removal set):
+    * it only picks the discovery form. */
+  def size: Long
+
+  /** The same keys under the table's PHYSICAL column names, over the
+    * renamed batch `u` (the writer boundary's column mapping). */
+  def rebound(u: DataFrame, keyCols: Seq[String]): KeySet
+
+  /** The keys as a frame of exactly `keyCols`. */
+  def keys: DataFrame
+
+  /** One pass over row-level frame `d` answering (its row count, how
+    * many of its rows carry a key of this set) — the disjointness probe
+    * every row-level writer needs (append admission, tombstone
+    * re-insert detection, delta deletion detection). The set's keys
+    * must be unique. */
+  def overlap(d: DataFrame): (Long, Long)
+
+  /** `d` minus the rows whose key is in the set; NULL-keyed rows stay. */
+  def anti(d: DataFrame): DataFrame
+
+  /** Whether any row of `d` carries a key of the set — the OCC rebase
+    * probes over the files a winner added (stops at the first hit). */
+  def hitsAny(d: DataFrame): Boolean
+
+  /** The touched-file discovery plan: distinct `input_file_name` of the
+    * `base` rows whose key is in the set, scanning ONLY the key column.
+    * Filters go DIRECTLY on the relation, before the projection that
+    * adds input_file_name(): that expression is non-deterministic, and
+    * Catalyst refuses to push any predicate through a projection
+    * containing one — filtering after it would silently scan every file
+    * (MergeTableSpec gates both `PushedFilters` shapes). `base` is the
+    * snapshot's relation ([[MergeTable.relationFor]] — manifest-backed,
+    * so discovery pays no listing job either). */
+  def discoveryFrame(base: DataFrame): DataFrame
+
+  /** [[discoveryFrame]] collected to the NORMALIZED touched-file set —
+    * file-count-bounded: one string per matched file, never rows. */
+  final def touchedFiles(base: DataFrame): Set[String] =
+    discoveryFrame(base).collect()
+      .map(r => Manifests.normalizePath(r.getString(0))).toSet
+
+  /** The cheap point-probe discovery every scoping writer gates on:
+    * Some(touched files) only when the set rides the single-column In
+    * path (bloom/footer-pruned point probes); None = the caller commits
+    * unscoped rather than pay a base key-column scan on the write path
+    * ([[MergeTable.rescopeDelta]] bounds that later). */
+  final def pointTouched(base: DataFrame): Option[Set[String]] =
+    if (keyCols.size == 1 && size <= KeySet.DiscoveryInLimit)
+      Some(touchedFiles(base))
+    else None
+
+  /** This set ∪ `that` (same key columns): two literal sets stay
+    * literal while the union fits the budget; anything else is a
+    * frame. */
+  def union(that: KeySet): KeySet = {
+    require(keyCols.toSet == that.keyCols.toSet,
+      s"key sets over [${keyCols.mkString(",")}] and " +
+        s"[${that.keyCols.mkString(",")}] do not union")
+    (this, that) match {
+      case (a: KeySet.Literals, b: KeySet.Literals) =>
+        val vs = (a.values ++ b.values).distinct
+        val merged = a.copy(values = vs)
+        if (vs.size <= KeySet.DiscoveryInLimit) merged
+        else KeySet.Frame(merged.keys, keyCols, vs.size.toLong)
+      case _ =>
+        KeySet.Frame(keys.unionByName(that.keys), keyCols, size + that.size)
+    }
+  }
+
+  /** The suppression literals (`Snapshot.dvLits`) of the commit that
+    * adds this set's keys to `snap`'s row-level state. Every row-level
+    * commit's key set is provably prev ∪ batch — a mergeLite key moves
+    * base→delta, a deleteLite key moves delta→deletes or base→deletes,
+    * and no key LEAVES the union short of a fold (which clears the
+    * state whole) — so the recorded set extends with zero jobs whenever
+    * both sides are literal, the union fits the budget and the key
+    * type JSON-round-trips. None otherwise: reads fall back to the
+    * broadcast anti-join (always correct, just slower) and the literal
+    * regime re-enters at the next fold. */
+  final def dvLitsAfter(
+      spark: SparkSession, snap: MergeTable.Snapshot): Option[Seq[Any]] =
+    (if (snap.rowLevel) KeySet.fromSnapshot(spark, snap).union(this)
+     else this) match {
+      case l: KeySet.Literals
+          if l.values.nonEmpty && KeySet.litsEncodableType(l.keyType) =>
+        Some(l.values)
+      case _ => None
+    }
+}
+
+private[graft] object KeySet {
+
+  /** The literal budget: at most this many keys push as one In list.
+    * Above it the list costs more in Catalyst analysis than the scan it
+    * prunes (the DedupIndex idPushLimit rationale — 128k literals
+    * measured tripling a probe). */
+  val DiscoveryInLimit = 1000
+
+  /** One stable-typed key column's COMPLETE distinct values. The
+    * values come from a collect of a `keyType` column (or a typed
+    * manifest decode), so `lit(v)` rebuilds literals of exactly the
+    * column's type. */
+  final case class Literals(keyCol: String, keyType: DataType, values: Seq[Any])
+      extends KeySet {
+    def keyCols: Seq[String] = Seq(keyCol)
+    def size: Long = values.size.toLong
+    def rebound(u: DataFrame, keyCols: Seq[String]): KeySet =
+      copy(keyCol = keyCols.head)
+    def keys: DataFrame = {
+      import scala.jdk.CollectionConverters._
+      SparkSession.active.createDataFrame(values.map(Row(_)).asJava,
+        StructType(Seq(StructField(keyCol, keyType))))
+    }
+    private def in = col(keyCol).isin(values: _*)
+    def overlap(d: DataFrame): (Long, Long) = {
+      val r = d.agg(count(lit(1)), count(when(in, lit(1)))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    def anti(d: DataFrame): DataFrame = d.filter(col(keyCol).isNull || !in)
+    def hitsAny(d: DataFrame): Boolean = d.filter(in).limit(1).count() > 0
+    def discoveryFrame(base: DataFrame): DataFrame =
+      inDiscovery(base, keyCol, values)
+  }
+
+  /** A key frame: `df` projects to `keyCols` (extra columns are
+    * ignored); `n` is its distinct-key count or an upper bound. Both
+    * are evaluated at first use. */
+  final class Frame(df0: => DataFrame, val keyCols: Seq[String], n0: => Long)
+      extends KeySet {
+    lazy val df: DataFrame = df0
+    lazy val size: Long = n0
+    def rebound(u: DataFrame, keyCols: Seq[String]): KeySet =
+      Frame(u, keyCols, size)
+    def keys: DataFrame =
+      if (df.columns.toSeq == keyCols) df else df.select(keyCols.map(col): _*)
+    def overlap(d: DataFrame): (Long, Long) = {
+      // the left join against the unique-keyed set preserves d's row
+      // count; the marker gets a fresh name because a key column
+      // literally named like it would be overwritten by withColumn and
+      // the probe would compare keys against the constant
+      val hit = Iterator.from(0).map("__hit" + _).find(!keyCols.contains(_)).get
+      val r = d.select(keyCols.map(col): _*)
+        .join(broadcast(keys.withColumn(hit, lit(true))), keyCols, "left")
+        .agg(count(lit(1)), count(col(hit))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    def anti(d: DataFrame): DataFrame =
+      d.join(broadcast(keys.distinct()), keyCols, "left_anti")
+    def hitsAny(d: DataFrame): Boolean =
+      d.join(broadcast(keys), keyCols, "left_semi").limit(1).count() > 0
+    def discoveryFrame(base: DataFrame): DataFrame = {
+      if (keyCols.size == 1 && size <= DiscoveryInLimit) {
+        // a small frame collects to literals first — the bounded
+        // helper, not a bare collect: the driver-side fetch must stay
+        // limit-capped even if a caller overstated the set's smallness
+        graft.util.Pushdown.keyLiterals(df, keyCols.head, DiscoveryInLimit) match {
+          case Some(ks) if ks.nonEmpty && !ks.contains(null) =>
+            return inDiscovery(base, keyCols.head, ks)
+          case _ => () // empty, NULL-keyed, or mis-stated size: range path
+        }
+      }
+      // past the budget: the [min,max] range prunes on a compactTable'd
+      // (key-range-sorted) layout, and the semi-join against the
+      // broadcast key set is the membership test
+      val ranged =
+        if (keyCols.size == 1) {
+          val k = keyCols.head
+          val r = df.agg(min(col(k)).as("lo"), max(col(k)).as("hi")).head()
+          if (r.isNullAt(0)) base
+          else base.filter(col(k) >= lit(r.get(0)) && col(k) <= lit(r.get(1)))
+        } else base
+      ranged.select(keyCols.map(col) :+ input_file_name().as("__file"): _*)
+        .join(broadcast(keys.distinct()), keyCols, "left_semi")
+        .select(col("__file")).distinct()
+    }
+  }
+
+  object Frame {
+    def apply(df: => DataFrame, keyCols: Seq[String], n: => Long): Frame =
+      new Frame(df, keyCols, n)
+  }
+
+  /** The exact key list as ONE parquet In predicate — checked against
+    * footer stats and the table's bloom filters — and the complete
+    * membership test, so no semi-join follows. */
+  private def inDiscovery(base: DataFrame, k: String, ks: Seq[Any]): DataFrame =
+    base.filter(col(k).isin(ks: _*))
+      .select(input_file_name().as("__file")).distinct()
+
+  /** A [[MergeTable.merge]] / [[MergeTable.mergeLite]] batch, validated
+    * in ONE action: row count, uniqueness on `keyCols` and the NULL-key
+    * refusal — a bounded collect that also captures the literals when
+    * the batch fits, else a key-only aggregate. */
+  def validated(u: DataFrame, keyCols: Seq[String]): KeySet =
+    capture(u, keyCols, unique = true,
+      s"updates contain NULL in a key column (${keyCols.mkString(",")}); " +
+        "NULL keys cannot match and would duplicate on every merge")
+
+  /** A [[MergeTable.deleteLite]] key frame (already distinct, so
+    * uniqueness is structural): count and NULL refusal, as
+    * [[validated]]. */
+  def validatedDeletes(k: DataFrame, keyCols: Seq[String]): KeySet =
+    capture(k, keyCols, unique = false,
+      s"keys contain NULL in a key column (${keyCols.mkString(",")}); " +
+        "NULL keys never match and would tombstone nothing")
+
+  /** For a single stable-typed key column, ONE bounded collect (key
+    * column only, single-partition early-stopping limit) validates the
+    * batch from the collected list whenever it fits the budget; batches
+    * past it pay one ~1000-row probe task extra and fall back to the
+    * one-pass aggregate. That aggregate scans the batch once and
+    * shuffles only the key columns (partial aggregation below the
+    * exchange); `struct` makes the distinct count NULL-key tolerant (a
+    * bare multi-column countDistinct drops NULL rows, which would mask
+    * duplicates), and with NULLs refused first the struct-distinct
+    * equals the dropDuplicates count exactly. */
+  private def capture(
+      u: DataFrame, keyCols: Seq[String], unique: Boolean,
+      nullMsg: String): KeySet = {
+    val dupMsg = s"updates must be unique on ${keyCols.mkString(",")}"
+    if (keyCols.size == 1) {
+      val t = u.schema(u.schema.fieldIndex(keyCols.head)).dataType
+      if (litStableKeyType(t)) {
+        val vals = u.select(col(keyCols.head)).coalesce(1)
+          .limit(DiscoveryInLimit + 1).collect().map(_.get(0)).toSeq
+        if (vals.length <= DiscoveryInLimit) {
+          require(!vals.contains(null), nullMsg)
+          val distinct = vals.distinct
+          require(vals.length == distinct.length, dupMsg)
+          return Literals(keyCols.head, t, distinct)
+        }
+      }
+    }
+    val anyNull = keyCols.map(col(_).isNull).reduce(_ || _)
+    val row = u.select(Seq(count(lit(1)).as("n"),
+        count(when(anyNull, lit(1))).as("nNull")) ++
+      (if (unique) Seq(countDistinct(struct(keyCols.map(col): _*)).as("nDist"))
+       else Nil): _*).head()
+    require(row.getLong(1) == 0L, nullMsg)
+    if (unique) require(row.getLong(0) == row.getLong(2), dupMsg)
+    Frame(u, keyCols, row.getLong(0))
+  }
+
+  /** The read path's suppression set of a row-level snapshot: the
+    * recorded `dvlits` line decodes to [[Literals]] (reads then filter
+    * the base scan with zero jobs and zero exchanges); otherwise the
+    * delta's keys (each supersedes its base row with the delta's copy)
+    * ∪ the delete tombstones (each supersedes its base row with
+    * nothing) form a [[Frame]]. Delete-key files hold exactly the key
+    * columns — their schema derives from the table schema's key fields,
+    * zero IO. */
+  def fromSnapshot(spark: SparkSession, snap: MergeTable.Snapshot): KeySet = {
+    val sc = snap.schema
+    snap.dvLits match {
+      case Some(vs) =>
+        val k = snap.dvKeys.head
+        Literals(k, sc.get(sc.get.fieldIndex(k)).dataType, vs)
+      case None =>
+        lazy val keys =
+          ((if (snap.delta.isEmpty) Nil
+            else Seq(MergeTable.relationFor(spark, snap.delta, snap.stats, sc)
+              .select(snap.dvKeys.map(col): _*))) ++
+           (if (snap.deletes.isEmpty) Nil
+            else Seq(MergeTable.relationFor(spark, snap.deletes, Nil,
+              sc.map(MergeTable.keySchemaOf(_, snap.dvKeys))))))
+            .reduce(_ unionByName _)
+        Frame(keys, snap.dvKeys, keys.count())
+    }
+  }
+
+  /** Key types whose collected JVM values have stable value equality
+    * AND round-trip exactly through `lit(...)` — the precondition for
+    * validating a batch on the driver and pushing its keys back as
+    * `isin` literals. */
+  def litStableKeyType(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+         StringType | DateType | TimestampType | TimestampNTZType => true
+    case _: DecimalType => true
+    case _ => false
+  }
+
+  /** Key types whose values the dvlits manifest line round-trips exactly
+    * through JSON — strings, integrals and booleans. A stricter subset
+    * of [[litStableKeyType]]: date/timestamp/decimal values depend on
+    * session datetime-API configuration for their JVM class, so tables
+    * keyed by them stay on the broadcast read path rather than risk a
+    * drifted re-materialization. */
+  def litsEncodableType(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+         StringType => true
+    case _ => false
+  }
+}

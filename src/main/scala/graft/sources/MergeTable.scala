@@ -151,7 +151,7 @@ object MergeTable {
     * @param dvLits the version's COMPLETE suppression key set (delta
     *        keys ∪ tombstone keys) as driver-side literal values, when
     *        the table rides the single-column point-probe regime (one
-    *        stable-typed key column, ≤ [[DiscoveryInLimit]] accumulated
+    *        stable-typed key column, ≤ [[KeySet.DiscoveryInLimit]] accumulated
     *        keys): reads then suppress with a NULL-guarded NOT-In
     *        filter pushed straight at the base scan instead of building
     *        a union+distinct+broadcast anti-join per open — zero jobs,
@@ -274,9 +274,9 @@ object MergeTable {
     * frame. */
   private def inbound(
       cm: ColMap, schema0: org.apache.spark.sql.types.StructType,
-      df: DataFrame, keyCols: Seq[String])
-    : (DataFrame, Seq[String], ColMap) = {
-    if (cm.isEmpty) return (df, keyCols, cm)
+      df: DataFrame, ks: KeySet)
+    : (DataFrame, KeySet, ColMap) = {
+    if (cm.isEmpty) return (df, ks, cm)
     val l2p: Map[String, String] =
       schema0.fields.map(f => cm.logicalOf(f.name) -> f.name).toMap
     var used = (schema0.fieldNames.toSeq ++ cm.retired)
@@ -315,7 +315,7 @@ object MergeTable {
     val out =
       if (mapped.forall { case (l, p) => l == p }) df
       else df.select(mapped.map { case (l, p) => col(l).as(p) }: _*)
-    val pKeys = keyCols.map(k => l2p.getOrElse(k, {
+    val pKeys = ks.keyCols.map(k => l2p.getOrElse(k, {
       // a renamed-away physical name is NOT addressable (the
       // physicalNameOf refusal): silently honoring it would key the
       // write on a column the caller just renamed, under its old name
@@ -323,7 +323,7 @@ object MergeTable {
         s"column '$k' was renamed to '${cm.ren(k)}' — key by the new name")
       k
     }))
-    (out, pKeys, cm2)
+    (out, ks.rebound(out, pKeys), cm2)
   }
 
   /** @param filesRewritten files of the previous version REPLACED
@@ -643,22 +643,6 @@ object MergeTable {
   // column mapping: physical->logical renames + retired physical names
   private val ColMapTag = "colmap\t"
 
-  /** Key types whose values the dvlits manifest line can round-trip
-    * exactly through JSON — strings, integrals and booleans. A stricter
-    * subset of [[litStableKeyType]]: date/timestamp/decimal values
-    * depend on session datetime-API configuration for their JVM class,
-    * so tables keyed by them stay on the broadcast read path rather
-    * than risk a drifted re-materialization. */
-  private def litsEncodableType(
-      t: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    t match {
-      case ByteType | ShortType | IntegerType | LongType | BooleanType |
-           StringType => true
-      case _ => false
-    }
-  }
-
   /** The dvlits line payload: one JSON array, deterministically sorted
     * (byte-equal states encode equal — the ColMap convention; integrals
     * normalize to JSON numbers, so a type-widened key re-encodes
@@ -684,7 +668,7 @@ object MergeTable {
 
   /** Decode of [[encodeDvLits]]: values re-typed by the RECORDED key
     * column type, so `lit(v)` rebuilds literals of exactly the column's
-    * type (the writer-side [[antiKeys]] convention). Anything malformed
+    * type (the [[KeySet.Literals]] convention). Anything malformed
     * is foreign or hand-edited content — refused loudly, like every
     * other manifest line. */
   private def decodeDvLits(
@@ -752,7 +736,7 @@ object MergeTable {
       "a suppression scope (dvFiles) requires row-level state")
     // dvlits invariants: a literal set without row-level state (or
     // beyond the point-probe budget) has no meaning — the writer-side
-    // mergedDvLits gate should never produce one, so reaching here is a
+    // KeySet.dvLitsAfter gate should never produce one, so reaching here is a
     // bug worth failing the commit on, not recording
     val dvLitsLine: Seq[String] = dvLits match {
       case None => Nil
@@ -761,9 +745,9 @@ object MergeTable {
           "suppression literals (dvLits) require row-level state")
         require(dvKeys.size == 1,
           "suppression literals require a single key column")
-        require(ls.nonEmpty && ls.size <= DiscoveryInLimit,
+        require(ls.nonEmpty && ls.size <= KeySet.DiscoveryInLimit,
           s"suppression literal set must be nonempty and within the " +
-            s"$DiscoveryInLimit point-probe budget (got ${ls.size})")
+            s"${KeySet.DiscoveryInLimit} point-probe budget (got ${ls.size})")
         require(schemaJson.isDefined,
           "suppression literals require a recorded schema line")
         val st = org.apache.spark.sql.types.DataType.fromJson(schemaJson.get)
@@ -1054,9 +1038,9 @@ object MergeTable {
           s"manifest v$version dvlits key column '${dvKeys.head}' is not " +
             "a schema field — foreign or hand-edited content"))
       val vals = decodeDvLits(j, f.dataType, version)
-      require(vals.nonEmpty && vals.size <= DiscoveryInLimit,
+      require(vals.nonEmpty && vals.size <= KeySet.DiscoveryInLimit,
         s"manifest v$version dvlits set is empty or past the " +
-          s"$DiscoveryInLimit point-probe budget (${vals.size}) — foreign " +
+          s"${KeySet.DiscoveryInLimit} point-probe budget (${vals.size}) — foreign " +
           "or hand-edited content")
       vals
     }
@@ -1306,11 +1290,13 @@ object MergeTable {
   /** The readable frame of a snapshot. DV-free snapshots return the
     * bare base relation — the plan is bit-identical to pre-[[mergeLite]]
     * reads, so tables that only ever rewrite-merge pay ZERO read
-    * overhead. With delta state, the anti-join against the delta's
-    * (small, broadcast) key set — the key-tombstone suppression: every
-    * base row whose key a mergeLite re-wrote is superseded by the
-    * delta's copy — applies ONLY to the base files the manifest's
-    * suppression scope names (the files mergeLite's exact discovery
+    * overhead. With row-level state, the anti-join against the
+    * version's suppression key set ([[KeySet.fromSnapshot]]: the
+    * recorded dvlits as one NULL-guarded NOT-In filter at the base
+    * scan — zero jobs, zero exchanges — else the delta ∪ tombstone
+    * keys, broadcast) — every base row whose key a mergeLite re-wrote
+    * is superseded by the delta's copy — applies ONLY to the base files
+    * the manifest's suppression scope names (the files mergeLite's exact discovery
     * proved to hold a superseded row); every other base file reads
     * BARE, so the full-scan tax is proportional to the files a replay
     * actually touched, not the table (and an insert-only delta — scope
@@ -1327,43 +1313,14 @@ object MergeTable {
       val deltaDf =
         if (snap.delta.isEmpty) None
         else Some(relationFor(spark, snap.delta, snap.stats, sc))
-      // the SUPPRESSION key set: the delta's keys (each supersedes its
-      // base row with the delta's copy) ∪ the delete tombstones (each
-      // supersedes its base row with nothing). Delete-key files hold
-      // exactly the key columns — their schema derives from the table
-      // schema's key fields, zero IO. When the manifest RECORDS the set
-      // (dvLits — the point-probe regime), the whole apparatus —
-      // delta-key projection, tombstone-file scan, union+distinct
-      // exchange, broadcast build — collapses to one NULL-guarded
-      // NOT-In filter at the base scan: zero jobs, zero exchanges.
-      // NULL parity with the anti-join is the antiKeys argument: an
-      // anti-join KEEPS NULL-keyed base rows (NULL matches nothing),
-      // and `!isin` alone would evaluate NULL and drop them.
-      lazy val suppressKeys: Option[DataFrame] = {
-        val legs =
-          deltaDf.map(_.select(snap.dvKeys.map(col): _*)).toSeq ++
-            (if (snap.deletes.isEmpty) Nil
-             else Seq(relationFor(spark, snap.deletes, Nil,
-               sc.map(keySchemaOf(_, snap.dvKeys)))))
-        if (legs.isEmpty) None else Some(legs.reduce(_ unionByName _).distinct())
-      }
-      val litsPred: Option[org.apache.spark.sql.Column] =
-        snap.dvLits.map { ks =>
-          val kc = col(snap.dvKeys.head)
-          kc.isNull || !kc.isin(ks: _*)
-        }
       if (snap.entries.isEmpty) deltaDf.getOrElse(
         // deletes with no base and no delta: an empty table of the
         // recorded schema (nothing left for the tombstones to suppress)
         relationFor(spark, snap.entries, snap.stats, sc))
       else {
-        def suppressed(entries: Seq[FileEntry]): DataFrame = litsPred match {
-          case Some(p) =>
-            relationFor(spark, entries, snap.stats, sc).filter(p)
-          case None =>
-            relationFor(spark, entries, snap.stats, sc)
-              .join(broadcast(suppressKeys.get), snap.dvKeys, "left_anti")
-        }
+        lazy val suppression = KeySet.fromSnapshot(spark, snap)
+        def suppressed(entries: Seq[FileEntry]): DataFrame =
+          suppression.anti(relationFor(spark, entries, snap.stats, sc))
         val legs = snap.dvFiles match {
           case None => Seq(suppressed(snap.entries))
           case Some(dv) =>
@@ -1382,7 +1339,7 @@ object MergeTable {
   /** The key-columns StructType of `schema` in `dvKeys` order — the
     * schema of a [[deleteLite]] tombstone file, derived instead of
     * probed (zero IO; the writer projects exactly these fields). */
-  private def keySchemaOf(
+  private[graft] def keySchemaOf(
       schema: org.apache.spark.sql.types.StructType,
       dvKeys: Seq[String]): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(
@@ -2053,12 +2010,11 @@ object MergeTable {
       // raw AnalysisException, which would shadow the friendly message
       require(keyCols.forall(u.columns.contains),
         s"key ${keyCols.mkString(",")} missing from updates")
-      val (nU, uLits) = validatedBatchCountLits(u, keyCols)
+      val ks = KeySet.validated(u, keyCols)
       var attempt = 0
       while (attempt < maxRetries) {
         attempt += 1
-        try return mergeOnce(spark, path, u, keyCols, nU, allowSchemaEvolution,
-          uLits)
+        try return mergeOnce(spark, path, u, ks, allowSchemaEvolution)
         catch {
           case _: FileAlreadyExistsException => // lost the race: re-snapshot
         }
@@ -2068,108 +2024,9 @@ object MergeTable {
     } finally graft.util.Checkpoints.free(u)
   }
 
-  /** One-pass writer-batch validation (guide §1.2/§2.3): row count,
-    * uniqueness on `keyCols`, and the NULL-key refusal in a SINGLE
-    * key-only aggregate action. The previous shape was three actions —
-    * count, a `dropDuplicates(keyCols).count()` whose exchange carried
-    * the FULL batch width, and a null-probe scan; this one scans the
-    * batch once and shuffles only the key columns (partial aggregation
-    * below the exchange). `struct` makes the distinct count NULL-key
-    * tolerant (a bare multi-column countDistinct drops NULL rows, which
-    * would mask duplicates from the uniqueness check on the path to the
-    * NULL refusal); with NULLs refused first the struct-distinct equals
-    * the dropDuplicates count exactly. */
-  private def validatedBatchCount(u: DataFrame, keyCols: Seq[String]): Long = {
-    val anyNull = keyCols.map(col(_).isNull).reduce(_ || _)
-    val row = u.select(
-      count(lit(1)).as("n"),
-      count(when(anyNull, lit(1))).as("nNull"),
-      countDistinct(struct(keyCols.map(col): _*)).as("nDist")).head()
-    val (n, nNull, nDist) = (row.getLong(0), row.getLong(1), row.getLong(2))
-    require(nNull == 0L,
-      s"updates contain NULL in a key column (${keyCols.mkString(",")}); " +
-        "NULL keys cannot match and would duplicate on every merge")
-    require(n == nDist, s"updates must be unique on ${keyCols.mkString(",")}")
-    n
-  }
-
-  /** Key types whose collected JVM values have stable value equality
-    * AND round-trip exactly through `lit(...)` — the precondition for
-    * validating a batch on the driver and pushing its keys back as
-    * `isin` literals. Binary (array reference equality would mask
-    * duplicates) and float/double (NaN equality differs between
-    * Seq.distinct and SQL) stay on the aggregate path. */
-  private def litStableKeyType(t: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    t match {
-      case ByteType | ShortType | IntegerType | LongType | BooleanType |
-           StringType | DateType | TimestampType | TimestampNTZType => true
-      case _: DecimalType => true
-      case _ => false
-    }
-  }
-
-  /** [[validatedBatchCount]] fused with pushable-literal capture: for a
-    * single stable-typed key column, ONE bounded collect (key column
-    * only, single-partition early-stopping limit) replaces the
-    * validation aggregate whenever the batch fits the
-    * [[DiscoveryInLimit]] point-probe budget — count, NULL refusal and
-    * the uniqueness check all come from the collected list, and the
-    * SAME list then feeds every downstream key probe (delta/tombstone
-    * overlap, survivor filters, scope discovery) as an In predicate,
-    * shedding each consumer's broadcast-exchange build or re-collect
-    * job (guide §1.2: the staged lineages are driver-gap-bound — 37
-    * jobs × ~30 ms + ~45 ms gaps measured on q144 — so every shed job
-    * is wall-clock). Batches past the budget pay one ~1000-row probe
-    * task extra and fall back to the aggregate. */
-  private def validatedBatchCountLits(
-      u: DataFrame, keyCols: Seq[String]): (Long, Option[Seq[Any]]) = {
-    if (keyCols.size == 1 && litStableKeyType(
-        u.schema(u.schema.fieldIndex(keyCols.head)).dataType)) {
-      val vals = u.select(col(keyCols.head)).coalesce(1)
-        .limit(DiscoveryInLimit + 1).collect().map(_.get(0)).toSeq
-      if (vals.length <= DiscoveryInLimit) {
-        require(!vals.contains(null),
-          s"updates contain NULL in a key column (${keyCols.mkString(",")}); " +
-            "NULL keys cannot match and would duplicate on every merge")
-        val distinct = vals.distinct
-        require(vals.length == distinct.length,
-          s"updates must be unique on ${keyCols.mkString(",")}")
-        return (vals.length.toLong, Some(distinct))
-      }
-    }
-    (validatedBatchCount(u, keyCols), None)
-  }
-
-  /** The NEXT version's recorded suppression-literal set. Every
-    * row-level commit's key set is provably prev ∪ batch — a mergeLite
-    * key moves base→delta, a deleteLite key moves delta→deletes or
-    * base→deletes, and no key ever LEAVES the union short of a fold
-    * (which clears the state whole) — so the recorded set extends
-    * incrementally with zero extra jobs whenever (a) the previous state
-    * was empty or carried a recorded set, (b) this batch's complete key
-    * list was captured ([[validatedBatchCountLits]]), (c) the key type
-    * JSON-round-trips, and (d) the union stays inside the point-probe
-    * budget. None otherwise: reads fall back to the broadcast anti-join
-    * (always correct, just slower) and the literal regime re-enters at
-    * the next fold. */
-  private def mergedDvLits(
-      snap: Snapshot, batchLits: Option[Seq[Any]],
-      keyType: org.apache.spark.sql.types.DataType): Option[Seq[Any]] = {
-    if (!litsEncodableType(keyType)) return None
-    val prev: Option[Seq[Any]] = if (!snap.rowLevel) Some(Nil) else snap.dvLits
-    (prev, batchLits) match {
-      case (Some(p), Some(b)) =>
-        val u = (p ++ b).distinct
-        if (u.nonEmpty && u.size <= DiscoveryInLimit) Some(u) else None
-      case _ => None
-    }
-  }
-
   private def mergeOnce(
-      spark: SparkSession, path: String, u0: DataFrame,
-      keyCols0: Seq[String], nU: Long, allowEvolution: Boolean,
-      uLits: Option[Seq[Any]] = None): MergeStats = {
+      spark: SparkSession, path: String, u0: DataFrame, ks0: KeySet,
+      allowEvolution: Boolean): MergeStats = {
     val (fs, root) = fsOf(spark, path)
     val snap = snapshot(spark, path)
     val schema0 = tableSchemaOf(spark, snap)
@@ -2177,13 +2034,13 @@ object MergeTable {
     // below (schema line, dvkeys, stats, data files) speaks PHYSICAL.
     // Re-derived per attempt — a concurrent rename can land between
     // OCC retries.
-    val (u, keyCols, cm1) = inbound(snap.colMap, schema0, u0, keyCols0)
+    val (u, ks, cm1) = inbound(snap.colMap, schema0, u0, ks0)
+    val keyCols = ks.keyCols
     if (!snap.rowLevel)
-      rewriteMerge(spark, fs, root, snap.version, snap.entries, u, keyCols, nU,
+      rewriteMerge(spark, fs, root, snap.version, snap.entries, u, ks,
         snapStats = snap.stats, tableSchema = schema0,
         allowEvolution = allowEvolution, colMap0 = cm1,
-        allowRebase = true, // pure caller batch, DV-free base (see doc)
-        uLits = uLits)
+        allowRebase = true) // pure caller batch, DV-free base (see doc)
     else {
       // FOLD the row-level state into this rewrite: the effective
       // update set is delta ⊎ u (last wins per key, u newest), applied
@@ -2209,16 +2066,15 @@ object MergeTable {
         if (snap.delta.isEmpty) u.select(widened.map(f => col(f.name)): _*)
         else combinedDelta(
           padTo(relationFor(spark, snap.delta, Nil, Some(schema0)), widened),
-          u, keyCols, widened.map(_.name), uLits))
+          u, ks, widened.map(_.name)))
         .localCheckpoint(true)
       // tombstones minus the keys u re-inserts (last wins): those rows
       // drop from their base files with no replacement. Checkpointed —
       // the frame feeds rewriteMerge's discovery count AND anti-join.
       val removeKeys: Option[DataFrame] =
         if (snap.deletes.isEmpty) None
-        else Some(antiKeys(relationFor(spark, snap.deletes, Nil,
-            Some(keySchemaOf(schema0, keyCols))), u, keyCols, uLits)
-          .localCheckpoint(true))
+        else Some(ks.anti(relationFor(spark, snap.deletes, Nil,
+            Some(keySchemaOf(schema0, keyCols)))).localCheckpoint(true))
       try {
         // scope-aware fold: combined's keys = delta keys ∪ u's keys,
         // and the tombstones' files are in the scope too (deleteLite
@@ -2228,19 +2084,19 @@ object MergeTable {
         // discovering: the base scan is sized to THIS batch.
         val known: Option[Set[String]] = snap.dvFiles.map { scope =>
           scope.map(normalize).toSet ++
-            (if (nU == 0) Set.empty[String]
-             else discoverTouched(
-                 relationFor(spark, snap.entries, snap.stats, Some(widened)),
-                 u, keyCols, nU, uLits))
+            (if (ks.size == 0) Set.empty[String]
+             else ks.touchedFiles(
+               relationFor(spark, snap.entries, snap.stats, Some(widened))))
         }
         val stats = rewriteMerge(spark, fs, root, snap.version, snap.entries,
-          combined, keyCols, combined.count(), snapStats = snap.stats,
+          combined, KeySet.Frame(combined, keyCols, combined.count()),
+          snapStats = snap.stats,
           tableSchema = schema0, allowEvolution = allowEvolution,
           knownTouched = known, removeKeys = removeKeys, colMap0 = cm1)
         // report the CALLER's upsert count, not the fold's combined
         // total — rowsUpserted means "rows this call absorbed" on every
         // other path, and accounting against it must not see the delta
-        stats.copy(rowsUpserted = nU)
+        stats.copy(rowsUpserted = ks.size)
       } finally {
         graft.util.Checkpoints.free(combined)
         removeKeys.foreach(graft.util.Checkpoints.free)
@@ -2261,12 +2117,13 @@ object MergeTable {
       s"keyCols repeats a column name: ${keyCols.mkString(",")}")
   }
 
-  /** delta ⊎ u, last wins per key (u newest) — unique per key because
-    * both inputs are. Projected to `cols` order so union legs agree. */
+  /** delta ⊎ u, last wins per key (u newest, keyed by `ks`) — unique per
+    * key because both inputs are. Projected to `cols` order so union
+    * legs agree. */
   private def combinedDelta(
-      deltaDf: DataFrame, u: DataFrame, keyCols: Seq[String],
-      cols: Seq[String], uLits: Option[Seq[Any]] = None): DataFrame =
-    antiKeys(deltaDf, u, keyCols, uLits)
+      deltaDf: DataFrame, u: DataFrame, ks: KeySet,
+      cols: Seq[String]): DataFrame =
+    ks.anti(deltaDf)
       .select(cols.map(col): _*)
       .unionByName(u.select(cols.map(col): _*))
 
@@ -2490,7 +2347,7 @@ object MergeTable {
   private def rewriteMerge(
       spark: SparkSession, fs: FileSystem, root: Path,
       baseVersion: Long, baseEntries: Seq[FileEntry], u: DataFrame,
-      keyCols: Seq[String], nU: Long,
+      ks: KeySet,
       snapStats: Seq[TableStats] = Nil,
       tableSchema: org.apache.spark.sql.types.StructType,
       allowEvolution: Boolean = false,
@@ -2505,11 +2362,9 @@ object MergeTable {
       // manifest with NO file change, so `added` is empty and the key
       // probe never runs) would see the rebase silently RESURRECT them
       // (review catch, r16).
-      allowRebase: Boolean = false,
-      // u's complete distinct key values when the caller's validation
-      // already collected them (validatedBatchCountLits) — saves the
-      // discovery's own collect job
-      uLits: Option[Seq[Any]] = None): MergeStats = {
+      allowRebase: Boolean = false): MergeStats = {
+    val keyCols = ks.keyCols
+    val nU = ks.size
     val widened = conformedSchema(tableSchema, u, keyCols, allowEvolution)
     // a widening can invalidate stat declarations (int→double): they
     // drop on THIS commit, before carriedStats pays footer reads for
@@ -2524,12 +2379,12 @@ object MergeTable {
     val base = relationFor(spark, baseEntries, snapStats, Some(widened))
     val cols = widened.map(_.name)
 
+    // counted only if discovery needs the In-vs-range decision
+    val removal = removeKeys.map(rk => KeySet.Frame(rk, keyCols, rk.count()))
     val touched: Set[String] = knownTouched.getOrElse {
       val uTouched =
-        if (nU == 0) Set.empty[String]
-        else discoverTouched(base, u, keyCols, nU, uLits)
-      uTouched ++ removeKeys.toSeq.flatMap(rk =>
-        discoverTouched(base, rk, keyCols, rk.count()))
+        if (nU == 0) Set.empty[String] else ks.touchedFiles(base)
+      uTouched ++ removal.toSeq.flatMap(_.touchedFiles(base))
     }
 
     val (hit, kept) = baseEntries.partition(e => touched.contains(normalize(e.path)))
@@ -2559,15 +2414,11 @@ object MergeTable {
         return MergeStats(baseVersion + 1, kept.size, 0, 0, 0)
       }
       else if (hit.isEmpty) u.select(cols.map(col): _*).coalesce(insertFiles)
-      else relationFor(spark, hit, Nil, Some(widened))
-        .join(broadcast({
-          // replaced keys AND removed keys drop from the hit files; only
-          // the replaced ones re-enter via u — a removed key's row ends
-          // here (the deleteLite fold)
-          val uk = u.select(keyCols.map(col): _*)
-          removeKeys.map(rk => uk.unionByName(rk.select(keyCols.map(col): _*)))
-            .getOrElse(uk).distinct()
-        }), keyCols, "left_anti")
+      // replaced keys AND removed keys drop from the hit files; only the
+      // replaced ones re-enter via u — a removed key's row ends here
+      // (the deleteLite fold)
+      else removal.fold(ks)(ks.union)
+        .anti(relationFor(spark, hit, Nil, Some(widened)))
         .select(cols.map(col): _*)
         .unionByName(u.select(cols.map(col): _*))
         // as many output files as were hit: without this, the replaced
@@ -2595,8 +2446,8 @@ object MergeTable {
         // removed) can try the disjointness REBASE instead of the full
         // re-attempt; everything else re-runs whole (merge()'s loop).
         (if (allowRebase && hit.isEmpty && removeKeys.isEmpty && nU > 0)
-           rebaseInsertOnly(spark, fs, root, u, keyCols, nU, newFiles,
-             widened, colMap0, baseEntries)
+           rebaseInsertOnly(spark, fs, root, ks, newFiles, widened, colMap0,
+             baseEntries)
          else None).getOrElse(throw e)
     }
   }
@@ -2637,8 +2488,7 @@ object MergeTable {
     * the full re-attempt, which re-runs discovery against the new tip
     * (today's always-correct path). */
   private def rebaseInsertOnly(
-      spark: SparkSession, fs: FileSystem, root: Path,
-      u: DataFrame, keyCols: Seq[String], nU: Long,
+      spark: SparkSession, fs: FileSystem, root: Path, ks: KeySet,
       newFiles: Seq[FileEntry],
       widened: org.apache.spark.sql.types.StructType,
       colMap0: ColMap, baseEntries: Seq[FileEntry]): Option[MergeStats] = {
@@ -2655,13 +2505,9 @@ object MergeTable {
       val added = tip.entries.filterNot(e =>
         baseSet.contains(normalize(e.path)) ||
           mineSet.contains(normalize(e.path)))
-      if (added.nonEmpty) {
-        val overlap = relationFor(spark, withSizes(fs, added), tip.stats,
-            Some(widened))
-          .join(broadcast(u.select(keyCols.map(col): _*)), keyCols, "left_semi")
-          .limit(1).count()
-        if (overlap > 0) return None // stale insert-only claim: replay whole
-      }
+      if (added.nonEmpty && ks.hitsAny(
+          relationFor(spark, withSizes(fs, added), tip.stats, Some(widened))))
+        return None // stale insert-only claim: replay whole
       try {
         commit(fs, root, tip.version + 1,
           encodeSnapshot(withSizes(fs, tip.entries) ++ newFiles, Nil, Nil,
@@ -2670,7 +2516,7 @@ object MergeTable {
             schemaJson = tip.schemaJson,
             colMap = tip.colMap, dvLits = None))
         return Some(MergeStats(tip.version + 1, tip.entries.size, 0,
-          newFiles.size, nU))
+          newFiles.size, ks.size))
       } catch {
         case _: FileAlreadyExistsException => // another winner: re-validate
       }
@@ -2729,14 +2575,15 @@ object MergeTable {
     * outer loop re-attempts whole (today's always-correct path). */
   private def rebaseRowLevelAppend(
       spark: SparkSession, fs: FileSystem, root: Path,
-      u: DataFrame, keyCols: Seq[String], nMine: Long,
+      u: DataFrame, ks: KeySet,
       myDeltaFiles: Seq[FileEntry],
       myTombstones: Boolean,
       mySchemaJson: Option[String], myColMap: ColMap,
       baseEntries: Seq[FileEntry], baseStats: Seq[TableStats],
-      maxDeltaRows: Long, maxDeltaFiles: Int,
-      myLits: Option[Seq[Any]] = None): Option[MergeStats] = {
+      maxDeltaRows: Long, maxDeltaFiles: Int): Option[MergeStats] = {
     val conf = spark.sparkContext.hadoopConfiguration
+    val keyCols = ks.keyCols
+    val nMine = ks.size
     // written at most ONCE, at the first commit attempt, and reused
     // across re-validations (files are immutable; a refused rebase
     // leaves it a vacuum-reclaimable orphan, never referenced)
@@ -2757,23 +2604,19 @@ object MergeTable {
           nMine > maxDeltaRows) return None
       if (tip.delta.size + myDeltaFiles.size > maxDeltaFiles) return None
       // claim 1: my keys vs the tip's row-level state, both directions
-      if (tip.delta.nonEmpty && overlapProbe(
-          relationFor(spark, tip.delta, Nil, Some(schema)), u, keyCols)._2 > 0)
+      if (tip.delta.nonEmpty && ks.overlap(
+          relationFor(spark, tip.delta, Nil, Some(schema)))._2 > 0)
         return None
-      if (tip.deletes.nonEmpty && overlapProbe(
+      if (tip.deletes.nonEmpty && ks.overlap(
           relationFor(spark, tip.deletes, Nil,
-            Some(keySchemaOf(schema, keyCols))), u, keyCols)._2 > 0)
+            Some(keySchemaOf(schema, keyCols))))._2 > 0)
         return None
       // claim 2: my keys vs the files the winner added
       val baseSet = baseEntries.map(e => normalize(e.path)).toSet
       val added = tip.entries.filterNot(e => baseSet.contains(normalize(e.path)))
-      if (added.nonEmpty) {
-        val overlap = relationFor(spark, withSizes(fs, added), tip.stats,
-            Some(schema))
-          .join(broadcast(u.select(keyCols.map(col): _*)), keyCols, "left_semi")
-          .limit(1).count()
-        if (overlap > 0) return None // a scoped commit would miss this file
-      }
+      if (added.nonEmpty && ks.hitsAny(
+          relationFor(spark, withSizes(fs, added), tip.stats, Some(schema))))
+        return None // a scoped commit would miss this file
       // scope composition: the tip's scope covers the tip's own
       // suppression keys; mine covers my keys (point-probed against MY
       // base — sound for carried files, and added files were just
@@ -2782,9 +2625,8 @@ object MergeTable {
       // rescopeDelta bounds it later).
       val scope: Option[Seq[String]] =
         if (tip.rowLevel && tip.dvFiles.isEmpty) None
-        else pointDiscovery(
-            relationFor(spark, baseEntries, baseStats, Some(schema)),
-            u, keyCols, nMine)
+        else ks.pointTouched(
+            relationFor(spark, baseEntries, baseStats, Some(schema)))
           .map { mine =>
             val tipScopeNorm =
               tip.dvFiles.getOrElse(Nil).map(normalize).toSet
@@ -2806,11 +2648,7 @@ object MergeTable {
             colMap = tip.colMap,
             // the rebase appends MY disjoint keys onto the TIP's
             // row-level state: the recorded set extends tip ∪ mine
-            dvLits =
-              if (keyCols.size == 1)
-                mergedDvLits(tip, myLits,
-                  schema(schema.fieldIndex(keyCols.head)).dataType)
-              else None))
+            dvLits = ks.dvLitsAfter(spark, tip)))
         return Some(MergeStats(tip.version + 1,
           tip.entries.size + tip.delta.size, 0,
           myDeltaFiles.size + myTombs.size,
@@ -2909,13 +2747,12 @@ object MergeTable {
     try {
       require(keyCols.forall(u.columns.contains),
         s"key ${keyCols.mkString(",")} missing from updates")
-      val (nU, uLits) = validatedBatchCountLits(u, keyCols)
+      val ks = KeySet.validated(u, keyCols)
       var attempt = 0
       while (attempt < maxRetries) {
         attempt += 1
         try return mergeLiteOnce(
-          spark, path, u, keyCols, nU, maxDeltaRows, maxDeltaFiles,
-          allowSchemaEvolution, uLits)
+          spark, path, u, ks, maxDeltaRows, maxDeltaFiles, allowSchemaEvolution)
         catch {
           case _: FileAlreadyExistsException => // lost the race: re-snapshot
         }
@@ -2926,16 +2763,17 @@ object MergeTable {
   }
 
   private def mergeLiteOnce(
-      spark: SparkSession, path: String, u0: DataFrame,
-      keyCols0: Seq[String], nU: Long, maxDeltaRows: Long,
-      maxDeltaFiles: Int, allowEvolution: Boolean,
-      uLits: Option[Seq[Any]] = None): MergeStats = {
+      spark: SparkSession, path: String, u0: DataFrame, ks0: KeySet,
+      maxDeltaRows: Long, maxDeltaFiles: Int,
+      allowEvolution: Boolean): MergeStats = {
     val (fs, root) = fsOf(spark, path)
     val snap = snapshot(spark, path)
     val schema0 = tableSchemaOf(spark, snap)
     // writer boundary (the mergeOnce rationale): logical in, physical
     // below — re-derived per OCC attempt
-    val (u, keyCols, cm1) = inbound(snap.colMap, schema0, u0, keyCols0)
+    val (u, ks, cm1) = inbound(snap.colMap, schema0, u0, ks0)
+    val keyCols = ks.keyCols
+    val nU = ks.size
     // persisted-state-vs-frame mismatch: IllegalStateException, so a
     // caller's IllegalArgumentException fallback can't bury it (the
     // writeBatch bloom-guard convention). SET equality — join keys are
@@ -2945,7 +2783,7 @@ object MergeTable {
         s"table at $path carries row-level state keyed by " +
           s"[${snap.dvKeys.map(snap.colMap.logicalOf).mkString(",")}] — " +
           "mergeLite by the same keys")
-    // stats ride into the cheapDiscovery probes (conservative pruning)
+    // stats ride into the discovery probes (conservative pruning)
     val base = relationFor(spark, snap.entries, snap.stats, Some(schema0))
     // the widened shape this commit records; every pre-existing file —
     // base AND prior delta files — reads the new columns as NULL
@@ -2985,9 +2823,6 @@ object MergeTable {
     // cost mergeLite exists to avoid. Such batches commit UNSCOPED
     // (reads suppress over every base file — the correct, pre-scoping
     // plan) and a later small batch re-scopes via the upgrade path.
-    def cheapDiscovery(frame: DataFrame, nKeys: Long,
-        lits: Option[Seq[Any]] = None): Option[Set[String]] =
-      pointDiscovery(base, frame, keyCols, nKeys, lits)
     def scopeOf(touched: Option[Set[String]]): Option[Seq[String]] =
       touched.map(t => snap.entries.map(_.path).filter(p => t.contains(normalize(p))))
     def filesFor(rows: Long): Int =
@@ -3007,9 +2842,7 @@ object MergeTable {
     // regardless, so broadcasting its full key set just to learn the
     // overlap would be a wasted pre-fold job (review catch)
     val delProbe: Option[(Long, Long)] =
-      if (nU <= maxDeltaRows)
-        deletesDf.map(overlapProbeWith(_, u, keyCols, uLits))
-      else None
+      if (nU <= maxDeltaRows) deletesDf.map(ks.overlap) else None
     val delRemaining = delProbe.map(p => p._1 - p._2).getOrElse(0L)
     /** The delete-file state this commit carries: untouched when u
       * re-inserts no tombstoned key, else the surviving keys
@@ -3020,7 +2853,7 @@ object MergeTable {
       case Some((_, 0L)) => withSizes(fs, snap.deletes)
       case Some(_) if delRemaining == 0L => Nil
       case Some(_) => writeBatch(spark, fs, root,
-        antiKeys(deletesDf.get, u, keyCols, uLits).coalesce(1), keyOnly = true)
+        ks.anti(deletesDf.get).coalesce(1), keyOnly = true)
     }
     def commitDelta(
         deltaEntries: Seq[FileEntry], scope: Option[Seq[String]],
@@ -3041,11 +2874,7 @@ object MergeTable {
           // the commit's key set is provably prev ∪ batch: every key u
           // re-inserts moves deletes→delta, every key it updates stays
           // in the delta — the union never shrinks short of a fold
-          dvLits =
-            if (keyCols.size == 1)
-              mergedDvLits(snap, uLits,
-                widened(widened.fieldIndex(keyCols.head)).dataType)
-            else None))
+          dvLits = ks.dvLitsAfter(spark, snap)))
     }
     // surviving delete KEYS, for the unscoped-upgrade discovery and the
     // fold's removal set. Independent of the (gated) probe: the fold
@@ -3053,7 +2882,7 @@ object MergeTable {
     // probe-confirmed empty survivor set drops to None.
     def deleteSurvivorKeys(): Option[DataFrame] =
       deletesDf.filter(_ => delProbe.isEmpty || delRemaining > 0L)
-        .map(antiKeys(_, u, keyCols, uLits))
+        .map(ks.anti)
 
     val deltaDf = if (snap.delta.isEmpty) None
       else Some(relationFor(spark, snap.delta, Nil, Some(schema0)))
@@ -3073,9 +2902,7 @@ object MergeTable {
     // batch preserves the delta's row count); nU > maxDeltaRows skips
     // it — such a batch folds regardless.
     val probe: Option[(Long, Long)] = // (delta rows, overlapping rows)
-      if (nU <= maxDeltaRows)
-        deltaDf.map(overlapProbeWith(_, u, keyCols, uLits))
-      else None
+      if (nU <= maxDeltaRows) deltaDf.map(ks.overlap) else None
     // the budget covers the WHOLE suppression broadcast: delta rows
     // plus surviving tombstones
     val appendable = probe.exists(p => p._2 == 0L &&
@@ -3089,12 +2916,12 @@ object MergeTable {
       // is small enough to probe
       val scope = scopeOf(snap.dvFiles match {
         case Some(prior) =>
-          cheapDiscovery(u, nU, uLits).map(_ ++ prior.map(normalize))
+          ks.pointTouched(base).map(_ ++ prior.map(normalize))
         case None =>
           val keysAll = (Seq(deltaDf.get.select(keyCols.map(col): _*),
             u.select(keyCols.map(col): _*)) ++ deleteSurvivorKeys().toSeq)
             .reduce(_ unionByName _)
-          cheapDiscovery(keysAll, n + delRemaining)
+          KeySet.Frame(keysAll, keyCols, n + delRemaining).pointTouched(base)
       })
       val newFiles = writeBatch(spark, fs, root,
         u.select(cols.map(col): _*).coalesce(filesFor(nU)))
@@ -3109,13 +2936,12 @@ object MergeTable {
           // re-insert overlap, or none exist) can try the disjointness
           // rebase; a tombstone-touching commit re-runs whole.
           return (if (delProbe.forall(_._2 == 0L))
-            rebaseRowLevelAppend(spark, fs, root, u, keyCols, nU,
+            rebaseRowLevelAppend(spark, fs, root, u, ks,
               myDeltaFiles = newFiles, myTombstones = false,
               mySchemaJson = Some(asNullableSchema(widened).json),
               myColMap = cm1, baseEntries = snap.entries,
               baseStats = snap.stats,
-              maxDeltaRows = maxDeltaRows, maxDeltaFiles = maxDeltaFiles,
-              myLits = uLits)
+              maxDeltaRows = maxDeltaRows, maxDeltaFiles = maxDeltaFiles)
           else None).getOrElse(throw e)
       }
       return MergeStats(snap.version + 1, snap.entries.size + snap.delta.size,
@@ -3130,7 +2956,7 @@ object MergeTable {
     // mergeLite's checkpoint.
     val combined =
       if (snap.delta.isEmpty) u.select(cols.map(col): _*)
-      else combinedDelta(padTo(deltaDf.get, widened), u, keyCols, cols, uLits)
+      else combinedDelta(padTo(deltaDf.get, widened), u, ks, cols)
         .localCheckpoint(true)
     try {
       // exact without a job whenever the probe ran: combined =
@@ -3148,8 +2974,7 @@ object MergeTable {
         // rewrite's removal set.
         val known: Option[Set[String]] =
           snap.dvFiles.filter(_ => snap.rowLevel).map { scope =>
-            scope.map(normalize).toSet ++
-              discoverTouched(base, u, keyCols, nU, uLits)
+            scope.map(normalize).toSet ++ ks.touchedFiles(base)
           }
         // checkpointed (the mergeOnce convention): rewriteMerge reads
         // the removal frame up to three times — count, discovery,
@@ -3157,7 +2982,7 @@ object MergeTable {
         // tombstone files and re-broadcast u's keys (review catch)
         val removeKeys = deleteSurvivorKeys().map(_.localCheckpoint(true))
         try return rewriteMerge(spark, fs, root, snap.version, snap.entries,
-          combined, keyCols, n, snapStats = snap.stats,
+          combined, KeySet.Frame(combined, keyCols, n), snapStats = snap.stats,
           tableSchema = schema0, allowEvolution = allowEvolution,
           knownTouched = known,
           removeKeys = removeKeys, colMap0 = cm1).copy(rowsUpserted = nU)
@@ -3168,12 +2993,12 @@ object MergeTable {
       // tombstones — when that is small
       val touchedNorm: Option[Set[String]] =
         if (snap.dvFiles.isDefined || !snap.rowLevel)
-          cheapDiscovery(u, nU, uLits).map(_ ++
+          ks.pointTouched(base).map(_ ++
             snap.dvFiles.map(_.map(normalize)).getOrElse(Nil))
-        else cheapDiscovery(
+        else KeySet.Frame(
           (Seq(combined.select(keyCols.map(col): _*)) ++
             deleteSurvivorKeys().toSeq).reduce(_ unionByName _),
-          n + delRemaining)
+          keyCols, n + delRemaining).pointTouched(base)
       val deltaFiles = writeBatch(spark, fs, root, combined.coalesce(filesFor(n)))
       commitRaceHookForTest()
       try {
@@ -3185,13 +3010,12 @@ object MergeTable {
           // table — combined IS the caller's batch) and the tombstones
           // were untouched; a delta-rewriting combine re-runs whole
           return (if (snap.delta.isEmpty && delProbe.forall(_._2 == 0L))
-            rebaseRowLevelAppend(spark, fs, root, u, keyCols, nU,
+            rebaseRowLevelAppend(spark, fs, root, u, ks,
               myDeltaFiles = deltaFiles, myTombstones = false,
               mySchemaJson = Some(asNullableSchema(widened).json),
               myColMap = cm1, baseEntries = snap.entries,
               baseStats = snap.stats,
-              maxDeltaRows = maxDeltaRows, maxDeltaFiles = maxDeltaFiles,
-              myLits = uLits)
+              maxDeltaRows = maxDeltaRows, maxDeltaFiles = maxDeltaFiles)
           else None).getOrElse(throw e)
       }
       MergeStats(snap.version + 1, snap.entries.size, snap.delta.size,
@@ -3229,15 +3053,7 @@ object MergeTable {
         val base = relationFor(spark, snap.entries, snap.stats, Some(schema0))
         // the FULL suppression key set: delta keys ∪ tombstones — the
         // scope must name every file either kind can touch
-        val allKeys = ((if (snap.delta.isEmpty) Nil
-          else Seq(relationFor(spark, snap.delta, Nil, Some(schema0))
-            .select(snap.dvKeys.map(col): _*))) ++
-          (if (snap.deletes.isEmpty) Nil
-           else Seq(relationFor(spark, snap.deletes, Nil,
-             Some(keySchemaOf(schema0, snap.dvKeys))))))
-          .reduce(_ unionByName _).distinct()
-        val nKeys = allKeys.count() // row-level-sized (maxDeltaRows-bounded)
-        val touched = discoverTouched(base, allKeys, snap.dvKeys, nKeys)
+        val touched = KeySet.fromSnapshot(spark, snap).touchedFiles(base)
         val scope = snap.entries.map(_.path)
           .filter(p => touched.contains(normalize(p)))
         val entries = withSizes(fs, snap.entries)
@@ -3256,151 +3072,6 @@ object MergeTable {
     }
     throw new CommitConflict(
       s"rescopeDelta at $path lost $maxRetries optimistic commits in a row")
-  }
-
-  /** One pass over row-level frame `d` answering (its row count, how
-    * many of its keys `u` also carries) — the disjointness/overlap
-    * probe every row-level writer needs (append admission, tombstone
-    * re-insert detection, delta deletion detection). The left join
-    * against the unique-keyed `u` preserves `d`'s row count; the
-    * marker gets a fresh name because a key column literally named
-    * like it would be overwritten by withColumn and the probe would
-    * compare keys against the constant. */
-  private def overlapProbe(
-      d: DataFrame, u: DataFrame, keyCols: Seq[String]): (Long, Long) = {
-    val hit = Iterator.from(0).map("__hit" + _)
-      .find(!keyCols.contains(_)).get
-    val r = d.select(keyCols.map(col): _*)
-      .join(broadcast(u.select(keyCols.map(col): _*)
-        .withColumn(hit, lit(true))), keyCols, "left")
-      .agg(count(lit(1)), count(col(hit))).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  /** [[overlapProbe]] when the batch's complete distinct key list is
-    * already on the driver ([[validatedBatchCountLits]]): the same
-    * (row count, overlap count) from ONE aggregate over an In
-    * predicate — no broadcast-exchange build job. Row-identical to the
-    * join probe: a NULL key in `d` makes the In NULL, so `when` skips
-    * it, exactly as a NULL never matches the broadcast join. */
-  private def overlapProbeLits(
-      d: DataFrame, keyCol: String, ks: Seq[Any]): (Long, Long) = {
-    val r = d.agg(count(lit(1)),
-      count(when(col(keyCol).isin(ks: _*), lit(1)))).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  /** The probe both ways: literals when the caller's validation
-    * collected them, broadcast join otherwise. */
-  private def overlapProbeWith(
-      d: DataFrame, u: DataFrame, keyCols: Seq[String],
-      lits: Option[Seq[Any]]): (Long, Long) = lits match {
-    case Some(ks) => overlapProbeLits(d, keyCols.head, ks)
-    case None => overlapProbe(d, u, keyCols)
-  }
-
-  /** `d` minus the rows whose key appears in `u` — a literal NOT-In
-    * filter when the batch's complete key list is already on the
-    * driver, else the broadcast anti-join. NULL-guarded so the two are
-    * row-identical: an anti-join KEEPS NULL-keyed rows (NULL matches
-    * nothing), and `!isin` alone would evaluate NULL and drop them. */
-  private def antiKeys(
-      d: DataFrame, u: DataFrame, keyCols: Seq[String],
-      lits: Option[Seq[Any]]): DataFrame = lits match {
-    case Some(ks) =>
-      val kc = col(keyCols.head)
-      d.filter(kc.isNull || !kc.isin(ks: _*))
-    case None =>
-      d.join(broadcast(u.select(keyCols.map(col): _*).distinct()),
-        keyCols, "left_anti")
-  }
-
-  /** The cheap point-probe discovery gate shared by every scoping
-    * writer: Some(touched normalized base files) only when the key set
-    * rides the single-column In-pushdown path (≤ [[DiscoveryInLimit]]
-    * keys — bloom/footer-pruned point probes); None = the caller
-    * commits unscoped rather than paying a base key-column scan on the
-    * write path ([[rescopeDelta]] bounds that later). */
-  private def pointDiscovery(
-      base: DataFrame, frame: DataFrame, keyCols: Seq[String],
-      nKeys: Long, lits: Option[Seq[Any]] = None): Option[Set[String]] =
-    if (keyCols.size == 1 && nKeys <= DiscoveryInLimit)
-      Some(discoverTouched(base, frame, keyCols, nKeys, lits))
-    else None
-
-  /** [[discoveryFrame]] collected to the NORMALIZED touched-file set —
-    * the driver-side terminal every scoping/fold/rewrite path shares
-    * (file-count-bounded: one string per matched file, never rows). */
-  private def discoverTouched(
-      base: DataFrame, frame: DataFrame, keyCols: Seq[String],
-      nKeys: Long, lits: Option[Seq[Any]] = None): Set[String] =
-    discoveryFrame(base, frame, keyCols, nKeys, lits)
-      .collect().map(r => normalize(r.getString(0))).toSet
-
-  /** Small-batch cap for pushing the EXACT update-key list into the
-    * discovery scan (one parquet In predicate) instead of the [min,max]
-    * range: above it, the literal list costs more in Catalyst analysis
-    * than the scan it prunes (the DedupIndex idPushLimit rationale —
-    * 128k literals measured tripling a probe). */
-  private val DiscoveryInLimit = 1000
-
-  /** The touched-file discovery plan: distinct `input_file_name` of
-    * rows whose key matches an update key, scanning ONLY the key
-    * column. `nKeys` is the caller's distinct-key count ([[merge]]
-    * enforces key uniqueness, so `mergeOnce` passes its row count —
-    * large batches never pay a probe job just to learn "too big").
-    *
-    * For a single key column and a SMALL batch (≤ [[DiscoveryInLimit]]
-    * keys) the exact key list pushes as ONE parquet In predicate — the
-    * reader checks it against footer stats AND the table's bloom
-    * filters, so on a hash/uuid key domain (content_hash, request_id —
-    * where a RANGE covers every file) a bloomed table's discovery
-    * opens only the row groups that can hold a matched key; the In IS
-    * the complete membership test, so no semi-join follows. Larger
-    * batches push the [min,max] range (pruning on [[compactTable]]'d
-    * key-range-sorted layouts) and semi-join against the broadcast key
-    * set. MergeTableSpec gates both `PushedFilters` shapes.
-    *
-    * `base` is the snapshot's relation ([[relationFor]] — manifest-
-    * backed, so discovery pays no listing job either).
-    *
-    * `lits` — the batch's complete distinct key values when the caller
-    * already collected them (the [[validatedBatchCountLits]] fusion):
-    * skips this function's own collect job; the caller guarantees the
-    * list is COMPLETE for `u`'s single key column. */
-  private[graft] def discoveryFrame(
-      base: DataFrame, u: DataFrame,
-      keyCols: Seq[String], nKeys: Long,
-      lits: Option[Seq[Any]] = None): DataFrame = {
-    // Filters go DIRECTLY on the relation, before the projection that
-    // adds input_file_name(): that expression is non-deterministic, and
-    // Catalyst refuses to push any predicate through a projection
-    // containing one — filtering after it would silently scan every
-    // file (caught by the PushedFilters plan gate).
-    if (keyCols.size == 1 && nKeys <= DiscoveryInLimit) {
-      val k = keyCols.head
-      // the bounded helper, not a bare collect: the driver-side fetch
-      // must stay limit-capped even if a future caller understates
-      // nKeys (it is the only thing standing between a mis-sized batch
-      // and a driver OOM)
-      lits.orElse(graft.util.Pushdown.keyLiterals(u, k, DiscoveryInLimit)) match {
-        case Some(keys) if keys.nonEmpty && !keys.contains(null) =>
-          return base.filter(col(k).isin(keys: _*))
-            .select(input_file_name().as("__file")).distinct()
-        case _ => () // empty, NULL-keyed, or mis-stated nKeys: range path
-      }
-    }
-    val ranged =
-      if (keyCols.size == 1) {
-        val k = keyCols.head
-        val r = u.agg(min(col(k)).as("lo"), max(col(k)).as("hi")).head()
-        if (r.isNullAt(0)) base
-        else base.filter(col(k) >= lit(r.get(0)) && col(k) <= lit(r.get(1)))
-      } else base
-    ranged.select(keyCols.map(col) :+ input_file_name().as("__file"): _*)
-      .join(broadcast(u.select(keyCols.map(col): _*).distinct()),
-        keyCols, "left_semi")
-      .select(col("__file")).distinct()
   }
 
   /** Row-level keyed DELETE — removes the rows whose keys appear in
@@ -3449,46 +3120,11 @@ object MergeTable {
       s"key ${keyCols.mkString(",")} missing from keys frame")
     val u = keys.select(keyCols.map(col): _*).distinct().localCheckpoint(true)
     try {
-      // one bounded collect fuses the count + NULL refusal with the
-      // literal capture when the key set rides the single-column
-      // point-probe path (validatedBatchCountLits, distinct-input
-      // form): the SAME list then feeds the delta probe, the survivor
-      // filters and the scope discovery as In predicates — each
-      // otherwise a broadcast-exchange build or collect job of its own
-      val (nK, kLits) = {
-        val nullMsg =
-          s"keys contain NULL in a key column (${keyCols.mkString(",")}); " +
-            "NULL keys never match and would tombstone nothing"
-        if (keyCols.size == 1 && litStableKeyType(
-            u.schema(u.schema.fieldIndex(keyCols.head)).dataType)) {
-          val vals = u.coalesce(1).limit(DiscoveryInLimit + 1)
-            .collect().map(_.get(0)).toSeq
-          if (vals.length <= DiscoveryInLimit) {
-            require(!vals.contains(null), nullMsg)
-            (vals.length.toLong, Some(vals)) // u is distinct() already
-          } else {
-            // past the point-probe budget: one-pass count + NULL
-            // refusal (the validatedBatchCount shape; uniqueness is
-            // structural here — u is already distinct())
-            val vr = u.select(count(lit(1)).as("n"),
-              count(when(col(keyCols.head).isNull, lit(1))).as("nNull"))
-              .head()
-            require(vr.getLong(1) == 0L, nullMsg)
-            (vr.getLong(0), None)
-          }
-        } else {
-          val vr = u.select(count(lit(1)).as("n"),
-            count(when(keyCols.map(col(_).isNull).reduce(_ || _), lit(1)))
-              .as("nNull")).head()
-          require(vr.getLong(1) == 0L, nullMsg)
-          (vr.getLong(0), None)
-        }
-      }
+      val ks = KeySet.validatedDeletes(u, keyCols)
       var attempt = 0
       while (attempt < maxRetries) {
         attempt += 1
-        try return deleteLiteOnce(spark, path, u, keyCols, nK, maxDeltaRows,
-          kLits)
+        try return deleteLiteOnce(spark, path, u, ks, maxDeltaRows)
         catch {
           case _: FileAlreadyExistsException => // lost the race: re-snapshot
         }
@@ -3499,23 +3135,24 @@ object MergeTable {
   }
 
   private def deleteLiteOnce(
-      spark: SparkSession, path: String, k0: DataFrame,
-      keyCols0: Seq[String], nK: Long, maxDeltaRows: Long,
-      kLits: Option[Seq[Any]] = None): MergeStats = {
+      spark: SparkSession, path: String, k0: DataFrame, ks0: KeySet,
+      maxDeltaRows: Long): MergeStats = {
     val (fs, root) = fsOf(spark, path)
     val snap = snapshot(spark, path)
     val schema0 = tableSchemaOf(spark, snap)
     // writer boundary (the mergeOnce rationale); the extended-map slot
     // is discarded — a key naming no live column extends nothing that
     // commits, and fails the membership check just below
-    val (k, keyCols, _) = inbound(snap.colMap, schema0, k0, keyCols0)
+    val (k, ks, _) = inbound(snap.colMap, schema0, k0, ks0)
+    val keyCols = ks.keyCols
+    val nK = ks.size
     if (snap.rowLevel && snap.dvKeys.toSet != keyCols.toSet)
       throw new IllegalStateException(
         s"table at $path carries row-level state keyed by " +
           s"[${snap.dvKeys.map(snap.colMap.logicalOf).mkString(",")}] — " +
           "deleteLite by the same keys")
     require(keyCols.forall(schema0.fieldNames.contains),
-      s"key ${keyCols0.mkString(",")} missing from table")
+      s"key ${ks0.keyCols.mkString(",")} missing from table")
     if (nK == 0)
       return MergeStats(snap.version,
         snap.entries.size + snap.delta.size + snap.deletes.size, 0, 0, 0)
@@ -3534,8 +3171,7 @@ object MergeTable {
     // (the delta re-writes without them — small by maxDeltaRows)
     val deltaDf = if (snap.delta.isEmpty) None
       else Some(relationFor(spark, snap.delta, Nil, Some(schema0)))
-    val deltaProbe: Option[(Long, Long)] =
-      deltaDf.map(overlapProbeWith(_, k, keyCols, kLits))
+    val deltaProbe: Option[(Long, Long)] = deltaDf.map(ks.overlap)
     val deltaRemaining = deltaProbe.map(p => p._1 - p._2).getOrElse(0L)
     // the accumulated tombstone set: prior ∪ k (distinct — both inputs
     // unique, overlap collapses in the union). With NO prior
@@ -3559,13 +3195,13 @@ object MergeTable {
         val survivors = deltaProbe match {
           case None => padTo(base.limit(0), schema0) // typed empty frame
           case Some((_, 0L)) => deltaDf.get
-          case Some(_) => antiKeys(deltaDf.get, k, keyCols, kLits)
+          case Some(_) => ks.anti(deltaDf.get)
         }
         val known: Option[Set[String]] = snap.dvFiles.map(scope =>
-          scope.map(normalize).toSet ++
-            discoverTouched(base, k, keyCols, nK, kLits))
+          scope.map(normalize).toSet ++ ks.touchedFiles(base))
         val st = rewriteMerge(spark, fs, root, snap.version, snap.entries,
-          survivors, keyCols, deltaRemaining, snapStats = snap.stats,
+          survivors, KeySet.Frame(survivors, keyCols, deltaRemaining),
+          snapStats = snap.stats,
           tableSchema = schema0, knownTouched = known,
           removeKeys = Some(allTombstones), colMap0 = snap.colMap)
         if (st.version != snap.version) return st.copy(rowsUpserted = 0)
@@ -3590,7 +3226,7 @@ object MergeTable {
       val deltaRewritten = deltaTouched && deltaRemaining > 0L
       val survivorsCkpt: Option[DataFrame] =
         if (deltaRewritten && snap.dvFiles.isEmpty)
-          Some(antiKeys(deltaDf.get, k, keyCols, kLits).localCheckpoint(true))
+          Some(ks.anti(deltaDf.get).localCheckpoint(true))
         else None
       try {
         val newDelta: Seq[FileEntry] = deltaProbe match {
@@ -3598,7 +3234,7 @@ object MergeTable {
           case Some((_, 0L)) => withSizes(fs, snap.delta)
           case Some(_) if deltaRemaining == 0L => Nil
           case Some(_) => writeBatch(spark, fs, root,
-            survivorsCkpt.getOrElse(antiKeys(deltaDf.get, k, keyCols, kLits))
+            survivorsCkpt.getOrElse(ks.anti(deltaDf.get))
               .coalesce(math.max(1, snap.delta.size)))
         }
         val delFiles = writeBatch(spark, fs, root, allTombstones.coalesce(1),
@@ -3606,8 +3242,7 @@ object MergeTable {
         commitRaceHookForTest()
         val scope: Option[Seq[String]] = (snap.dvFiles match {
           case Some(prior) =>
-            pointDiscovery(base, k, keyCols, nK, kLits)
-              .map(_ ++ prior.map(normalize))
+            ks.pointTouched(base).map(_ ++ prior.map(normalize))
           case None =>
             // an untouched delta's keys are all disjoint from k, so the
             // raw delta frame stands in for the survivors there
@@ -3615,7 +3250,8 @@ object MergeTable {
               (if (deltaRemaining == 0L) Nil
                else Seq(survivorsCkpt.getOrElse(deltaDf.get)
                  .select(keyCols.map(col): _*)))).reduce(_ unionByName _)
-            pointDiscovery(base, keysAll, keyCols, delTotal + deltaRemaining)
+            KeySet.Frame(keysAll, keyCols, delTotal + deltaRemaining)
+              .pointTouched(base)
         }).map(t => snap.entries.map(_.path).filter(p => t.contains(normalize(p))))
         try {
           commit(fs, root, snap.version + 1,
@@ -3630,11 +3266,7 @@ object MergeTable {
               deletes = delFiles, colMap = snap.colMap,
               // prev ∪ batch: a deleted delta key moves delta→deletes,
               // everything else stays put — the union never shrinks
-              dvLits =
-                if (keyCols.size == 1)
-                  mergedDvLits(snap, kLits,
-                    keySchema(keySchema.fieldIndex(keyCols.head)).dataType)
-                else None))
+              dvLits = ks.dvLitsAfter(spark, snap)))
         } catch {
           case e: FileAlreadyExistsException =>
             // lost the OCC race. Append-SHAPED only when the delta was
@@ -3644,12 +3276,12 @@ object MergeTable {
             // binds MY base's tombstones — stale vs the tip — and
             // becomes a vacuum-reclaimable orphan)
             return (if (!deltaTouched)
-              rebaseRowLevelAppend(spark, fs, root, k, keyCols, nK,
+              rebaseRowLevelAppend(spark, fs, root, k, ks,
                 myDeltaFiles = Nil, myTombstones = true,
                 mySchemaJson = Some(asNullableSchema(schema0).json),
                 myColMap = snap.colMap, baseEntries = snap.entries,
                 baseStats = snap.stats, maxDeltaRows = maxDeltaRows,
-                maxDeltaFiles = Int.MaxValue, myLits = kLits)
+                maxDeltaFiles = Int.MaxValue)
             else None).getOrElse(throw e)
         }
         // honest churn accounting (review catch): a touched delta's old
@@ -3792,8 +3424,8 @@ object MergeTable {
               else Some(relationFor(spark, snap0.deletes, Nil,
                 Some(keySchemaOf(schema00, snap0.dvKeys))))
             val folded = rewriteMerge(spark, fs, root, snap0.version,
-              snap0.entries, deltaDf, snap0.dvKeys,
-              if (snap0.delta.isEmpty) 0L else deltaDf.count(),
+              snap0.entries, deltaDf, KeySet.Frame(deltaDf, snap0.dvKeys,
+                if (snap0.delta.isEmpty) 0L else deltaDf.count()),
               snapStats = snap0.stats, tableSchema = schema00,
               knownTouched = snap0.dvFiles.map(_.map(normalize).toSet),
               removeKeys = removeKeys, colMap0 = snap0.colMap)

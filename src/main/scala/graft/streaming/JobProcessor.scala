@@ -305,8 +305,8 @@ object JobProcessor {
       batch, keyCols, Seq(col(seqCol).desc, contentTie)).persist()
     try {
       // ONE aggregate over the persisted winners replaces three actions
-      // (NULL-op probe, ups count, dels count — the validatedBatchCount
-      // fusion, micro-batch form): a NULL op matches NEITHER route
+      // (NULL-op probe, ups count, dels count — the KeySet.validated
+      // aggregate, micro-batch form): a NULL op matches NEITHER route
       // filter below — the row would vanish silently — so it is refused
       // loudly like the NULL-key contract.
       val routed = winners.select(

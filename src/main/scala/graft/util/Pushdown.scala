@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions.col
 
 /** Shared pushable-literal-list probe for the index serving paths
   * (DedupIndex buckets, shingle candidate ids, SemanticIndex clusters)
-  * and merge discovery — one place for the collect-bounded-then-isin
-  * idiom and its truncation subtlety.
+  * and the touched-file discovery of a small
+  * [[graft.sources.KeySet.Frame]] — one place for the
+  * collect-bounded-then-isin idiom and its truncation subtlety.
   */
 object Pushdown {
 

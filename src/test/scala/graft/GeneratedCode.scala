@@ -17,7 +17,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * the source text) for every stage of the second call. */
 object GeneratedCode {
 
-  def of(spark: SparkSession)(call: => Any): Seq[String] = {
+  def of(spark: SparkSession)(call: => Any): Seq[String] =
+    plans(spark)(call).flatMap(p => codegenStringSeq(p).map(_._2))
+
+  /** The executed plans of every action `call` runs, in execution order. */
+  def plans(spark: SparkSession)(call: => Any): Seq[SparkPlan] = {
     val captured = new CopyOnWriteArrayList[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
@@ -38,6 +42,6 @@ object GeneratedCode {
         Thread.sleep(50)
       require(captured.asScala.exists(isSentinel), "listener never delivered the sentinel")
     } finally spark.listenerManager.unregister(listener)
-    captured.asScala.toSeq.filterNot(isSentinel).flatMap(p => codegenStringSeq(p).map(_._2))
+    captured.asScala.toSeq.filterNot(isSentinel)
   }
 }

@@ -113,6 +113,22 @@ class LexicalSpec extends SparkSpec {
       "the scoring stage does not run the BM25 kernel")
   }
 
+  test("bm25TopK evaluates the BM25 kernel once per row, fresh and indexed") {
+    // every Bm25Score node across the executed plans of the call's
+    // actions: a score filter below the top-k would inline the scoring
+    // alias and run the kernel a second time per row
+    def kernels(call: => Any): Int =
+      GeneratedCode.plans(spark)(call).flatMap(graft.util.Plans.flatten)
+        .map(_.expressions.map(_.collect {
+          case s: graft.functions.Bm25Score => s }.size).sum).sum
+    assert(kernels(Lexical.bm25TopK(docs, "doc_id", "text",
+      Seq("spark", "join"), k = 2)) === 1)
+    val path = java.nio.file.Files.createTempDirectory("bm25_once").toString + "/ix"
+    graft.operators.LexicalIndex.build(spark, path, docs, "doc_id", "text")
+    assert(kernels(graft.operators.LexicalIndex.bm25TopK(spark, path, "doc_id",
+      Seq("spark", "join"), k = 2)) === 1)
+  }
+
   test("bm25TopK on an empty corpus fails with the friendly require, try/finally intact") {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException](

@@ -356,9 +356,8 @@ class MergeTableSpec extends SparkSpec {
     val snap = MergeTable.snapshot(spark, path)
     def pushedFor(updates: org.apache.spark.sql.DataFrame,
         nKeys: Long): (String, String) = {
-      val df = MergeTable.discoveryFrame(
-        MergeTable.relationFor(spark, snap.entries), updates,
-        Seq("id"), nKeys)
+      val df = graft.sources.KeySet.Frame(updates, Seq("id"), nKeys)
+        .discoveryFrame(MergeTable.relationFor(spark, snap.entries))
       val scans = graft.util.Plans.executedNodes(df).collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }
