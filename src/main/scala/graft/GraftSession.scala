@@ -72,7 +72,11 @@ final case class GraftSession(
     * postings scan — the stopword guard for free-text queries against
     * big indexes. 1.0 = keep every term (bit-exact with the fresh
     * path); the un-indexed fallback tokenizes the corpus anyway and
-    * ignores it. */
+    * ignores it.
+    *
+    * On the indexed path the returned frame is lazy over the index as
+    * pinned at call time, and one action runs both legs and the
+    * fusion; collect it before the index's vacuum retention runs out. */
   def hybridSearchKnowledge(query: String, k: Int = 5,
       idCol: String = "id", contentCol: String = "content",
       maxDfFraction: Double = 1.0): DataFrame = {

@@ -204,7 +204,13 @@ object KnowledgeBase {
     * fraction of the corpus (dictionary-first df lookup) is dropped
     * BEFORE the postings scan, so "the"-class terms never inflate the
     * `term IN` filter into a near-full-table read. Default 1.0 keeps
-    * the bit-exact oracle contract (no term dropped). */
+    * the bit-exact oracle contract (no term dropped).
+    *
+    * The returned frame is LAZY over the index pinned at call time
+    * ([[graft.operators.LexicalIndex.bm25Ranking]]): the call itself
+    * only looks up the query terms' document frequencies, and one
+    * action then runs both legs and the fusion. Act on it before the
+    * index's vacuum retention runs out. */
   def hybridSearchIndexed(
       kb: DataFrame, idCol: String, queryText: String,
       queryEmbedding: Array[Float], indexPath: String, k: Int,
@@ -217,7 +223,7 @@ object KnowledgeBase {
     val terms = queryText.toLowerCase(java.util.Locale.ROOT)
       .split("\\s+").filter(_.nonEmpty).distinct.toSeq
     require(terms.nonEmpty, "queryText has no terms")
-    val lex = graft.operators.LexicalIndex.bm25TopK(
+    val lex = graft.operators.LexicalIndex.bm25Ranking(
       kb.sparkSession, indexPath, idCol, terms, poolSize,
       maxDfFraction = maxDfFraction)
     graft.operators.Lexical.rrfFuse(Seq(vec, lex), idCol, k)

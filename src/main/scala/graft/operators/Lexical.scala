@@ -104,17 +104,20 @@ object Lexical {
         val idfs = termsLower.map(t => Bm25.idf(n, dfCounts.getOrElse(t, 0L)))
         topKByScore(scored,
           Bm25.score(col("__wq"), col("__dl"), termsLower, idfs, avgdl, k1, b), idCol, k)
+          .localCheckpoint(true)
       }
     } finally graft.util.Checkpoints.free(scored)
   }
 
   /** The top-k tail both BM25 paths share: rows scoring > 0, ordered
-    * (score DESC, id ASC), scores rounded to 6 places, materialized so
-    * the caller can free its corpus-sized frame. `frame` carries `id`.
-    * The `> 0` filter runs AFTER the limit — equivalent, because
-    * positive scores sort ahead of zeros under (score DESC, id ASC) —
-    * so Catalyst cannot inline the score alias into a pushed-down
-    * Filter and run the kernel twice per row. */
+    * (score DESC, id ASC), scores rounded to 6 places. `frame` carries
+    * `id`. Returns the LAZY plan: eager callers materialize it before
+    * freeing their inputs, and the indexed single-query ranking stays
+    * lazy so a fused hybrid plan runs it in the same action as the
+    * vector leg. The `> 0` filter runs AFTER the limit — equivalent,
+    * because positive scores sort ahead of zeros under (score DESC,
+    * id ASC) — so Catalyst cannot inline the score alias into a
+    * pushed-down Filter and run the kernel twice per row. */
   private[operators] def topKByScore(
       frame: DataFrame, score: Column, idCol: String, k: Int): DataFrame =
     frame.withColumn("__score", score)
@@ -122,7 +125,6 @@ object Lexical {
       .limit(k)
       .filter(col("__score") > 0)
       .select(col("id").as(idCol), round(col("__score"), 6).as("score"))
-      .localCheckpoint(true)
 
   /** Reciprocal-rank fusion over any number of (idCol, score) rankings:
     * rrf(id) = sum over rankings of 1/(c + rank), rank 1-based by

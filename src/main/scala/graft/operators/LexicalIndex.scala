@@ -25,9 +25,10 @@ import graft.sources.{CompositeIndex, MergeTable}
   *    Scan cost is proportional to the matched postings, not the
   *    corpus: the inverted-index property, in parquet.
   *  - `path/doclens` — (id, dl), keyed id. One narrow row per doc; the
-  *    global N/avgdl statistics aggregate from it in one cheap scan
-  *    (postings alone cannot provide them: docs matching no indexed
-  *    term still count toward N and avgdl).
+  *    global N/avgdl statistics aggregate from it in one cheap scan,
+  *    once per committed doclens version ([[corpusStats]]) — postings
+  *    alone cannot provide them: docs matching no indexed term still
+  *    count toward N and avgdl.
   *  - `path/termdf` — (term, df), keyed term: the DICTIONARY. Document
   *    frequencies are read here (≤ |query terms| rows, pushed filter)
   *    BEFORE any postings scan, which both removes the per-call df
@@ -71,8 +72,13 @@ object LexicalIndex {
     CI.componentPath(path, CI.pin(spark, path)("postings").dir)
   private[graft] def termDfPath(spark: SparkSession, path: String): String =
     CI.componentPath(path, CI.pin(spark, path)("termdf").dir)
+  private[graft] def doclensPath(spark: SparkSession, path: String): String =
+    CI.componentPath(path, CI.pin(spark, path)("doclens").dir)
   private[graft] def pinVersion(spark: SparkSession, path: String): Long =
     CI.pin(spark, path).version
+  /** The N/avgdl a query on the current pin scores with. */
+  private[graft] def corpusStats(spark: SparkSession, path: String): (Long, Double) =
+    corpusStats(spark, path, CI.pin(spark, path))
 
   /** One tokenizing pass over `docs` → (postings, doclens) frames.
     * Shared by build and upsert; the returned frames are two reads of
@@ -108,7 +114,7 @@ object LexicalIndex {
     CI.requireBuildable(spark, path)
     val (postings, doclens, handle) = tokenize(docs, idCol, textCol)
     try {
-      CI.build(spark, path) { dirs =>
+      val pin = CI.build(spark, path) { dirs =>
         // term blooms: pre-[[compact]] the postings layout is id-major
         // (term min/max spans the vocabulary in every file), so the
         // per-term Eq probes of bm25TopK skip nothing without them
@@ -133,7 +139,9 @@ object LexicalIndex {
         Map("postings" -> pv.version, "doclens" -> dv.version,
           "termdf" -> tv.version)
       }
-      ()
+      // seed the stats memo from the frame just written: the first
+      // query on the new index then scans no doclens
+      rememberStats(statsKey(spark, path, pin("doclens")), statsOf(doclens))
     } finally graft.util.Checkpoints.free(handle)
   }
 
@@ -345,22 +353,30 @@ object LexicalIndex {
     * ONE pushed-down scan of the query terms' postings instead of a
     * tokenizing pass over every document.
     *
-    * Plan shape per call:
-    *  1. N/avgdl from one narrow doclens scan; df per query term from
-    *     the termdf DICTIONARY (≤ |terms| rows, pushed filter) — read
-    *     BEFORE any postings touch;
+    * Plan shape per call ([[rankings]]):
+    *  1. N/avgdl of the pinned doclens version from [[corpusStats]]'s
+    *     memo (one narrow doclens scan the first time a version is
+    *     queried, none after); df per query term from the termdf
+    *     DICTIONARY (≤ |terms| rows, pushed filter) — read BEFORE any
+    *     postings touch;
     *  2. postings scan with `term IN (scored terms)` pushed to parquet
-    *     (footer-pruned after [[compact]]); the matched postings —
-    *     bounded by the scored terms' document frequencies — are
-    *     checkpointed and shared by every query's pass;
+    *     (footer-pruned after [[compact]]). With several queries the
+    *     matched postings — bounded by the scored terms' document
+    *     frequencies — are checkpointed once and shared by every
+    *     query's pass; a single query scans them inside its ranking;
     *  3. per query: per-doc (term → tf) maps assemble from the matched
     *     postings (one bounded shuffle on id), then the fresh path's
     *     [[graft.functions.Bm25Score]] kernel scores them and
     *     TakeOrderedAndProject keeps the top k. The kernel holds terms,
     *     idfs and avgdl as referenced objects, so every query of the
     *     same plan shape reuses one compiled scoring stage.
-    * EAGER like the fresh path: results materialize, intermediates are
-    * freed before returning.
+    * EAGER like the fresh path, but each ranking is collected into a
+    * driver-local frame ([[collected]]) rather than checkpointed: a
+    * served ranking goes to a client, and collecting a local frame
+    * launches no further job. The shared checkpoint is freed before
+    * returning. One query costs the dictionary lookup and the
+    * ranking's own action (a first query on a new index version adds
+    * the doclens scan).
     *
     * `maxDfFraction` is the serving-path stopword guard: a term whose
     * df exceeds this fraction of the corpus is dropped BEFORE the
@@ -375,6 +391,38 @@ object LexicalIndex {
       spark: SparkSession, path: String, idCol: String,
       queries: Seq[Seq[String]], k: Int, k1: Double = 1.2,
       b: Double = 0.75, maxDfFraction: Double = 1.0): Seq[DataFrame] = {
+    val (ranked, shared) = rankings(spark, path, idCol, queries, k, k1, b, maxDfFraction)
+    try ranked.map(collected)
+    finally shared.foreach(graft.util.Checkpoints.free)
+  }
+
+  /** A top-k ranking as a driver-local frame: one action collects its
+    * (at most k) rows, after which the frame references no index file
+    * and no checkpoint, and collecting it launches no Spark job. */
+  private def collected(ranking: DataFrame): DataFrame =
+    ranking.sparkSession.createDataFrame(
+      java.util.Arrays.asList(ranking.collect(): _*), ranking.schema)
+
+  /** One query's ranking as a LAZY plan over the index pinned at one
+    * composite version — the lexical leg of
+    * [[graft.kb.KnowledgeBase.hybridSearchIndexed]], whose fused
+    * collect then runs it in the same action as the vector leg. Act on
+    * it before the index's vacuum retention runs out: a vacuum can
+    * reclaim the files of a superseded pin. */
+  private[graft] def bm25Ranking(
+      spark: SparkSession, path: String, idCol: String, terms: Seq[String],
+      k: Int, k1: Double = 1.2, b: Double = 0.75,
+      maxDfFraction: Double = 1.0): DataFrame =
+    rankings(spark, path, idCol, Seq(terms), k, k1, b, maxDfFraction)._1.head
+
+  /** The rankings of `queries` at one pin, as lazy plans, plus the
+    * checkpointed matched-postings frame they share when there are
+    * several queries — the caller frees it once the rankings are acted
+    * on. A single query checkpoints nothing. */
+  private def rankings(
+      spark: SparkSession, path: String, idCol: String,
+      queries: Seq[Seq[String]], k: Int, k1: Double,
+      b: Double, maxDfFraction: Double): (List[DataFrame], Option[DataFrame]) = {
     require(queries.nonEmpty && queries.forall(_.nonEmpty),
       "every query needs at least one term")
     require(k >= 1, s"k must be >= 1, got $k")
@@ -386,11 +434,8 @@ object LexicalIndex {
     // the same composite version, so an upsert landing mid-query can't
     // serve fresh statistics against stale postings (or vice versa)
     val p0 = CI.pin(spark, path)
-    val stats = CI.readAt(spark, path, p0, "doclens")
-      .agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")).head()
-    val n = stats.getLong(0)
+    val (n, avgdl) = corpusStats(spark, path, p0)
     require(n > 0, "corpus is empty")
-    val avgdl = stats.getDouble(1)
     // dictionary lookup FIRST: ≤ |terms| rows, so the stopword guard
     // can drop a ubiquitous term before its posting list is ever read
     val dfCounts = CI.readAt(spark, path, p0, "termdf")
@@ -400,34 +445,86 @@ object LexicalIndex {
     val scoredTerms = allTerms.filter(t => dfCounts.getOrElse(t, 0L) <= dfCap)
     val loweredKept = lowered.map(_.filter(scoredTerms.contains))
     // the ONLY touch of the postings table: scan the scored terms'
-    // postings (predicate pushed into the scan) and keep the small
-    // matched frame for every query's scoring pass
-    val matched = CI.readAt(spark, path, p0, "postings")
+    // postings (predicate pushed into the scan); several queries share
+    // one materialized copy of the small matched frame
+    val scan = CI.readAt(spark, path, p0, "postings")
       .filter(if (scoredTerms.isEmpty) lit(false)
         else col("term").isin(scoredTerms: _*))
-      .localCheckpoint(true)
-    try {
-      loweredKept.map { termsLower =>
-        if (termsLower.isEmpty) {
-          // every term of this query was df-pruned: an empty ranking,
-          // with the contract schema (idCol typed like the corpus id)
-          matched.limit(0)
-            .select(col("id").as(idCol), lit(0.0).as("score"))
-        } else {
-          val perDoc = matched
-            .filter(col("term").isin(termsLower: _*))
-            .groupBy(col("id"), col("dl"))
-            .agg(map_from_entries(collect_list(struct(col("term"), col("tf"))))
-              .as("__tfs"))
-            // true of every group (each holds a query term), but a Filter
-            // here keeps Catalyst from folding the scoring projection into
-            // ObjectHashAggregate's result, which whole-stage codegen skips
-            .filter(size(col("__tfs")) > 0)
-          val idfs = termsLower.map(t => Bm25.idf(n, dfCounts.getOrElse(t, 0L)))
-          Lexical.topKByScore(perDoc,
-            Bm25.score(col("__tfs"), col("dl"), termsLower, idfs, avgdl, k1, b), idCol, k)
-        }
+    val shared = if (lowered.size > 1) Some(scan.localCheckpoint(true)) else None
+    val matched = shared.getOrElse(scan)
+    val ranked = loweredKept.map { termsLower =>
+      if (termsLower.isEmpty) {
+        // every term of this query was df-pruned: an empty ranking,
+        // with the contract schema (idCol typed like the corpus id)
+        matched.limit(0)
+          .select(col("id").as(idCol), lit(0.0).as("score"))
+      } else {
+        val perDoc = matched
+          .filter(col("term").isin(termsLower: _*))
+          .groupBy(col("id"), col("dl"))
+          .agg(map_from_entries(collect_list(struct(col("term"), col("tf"))))
+            .as("__tfs"))
+          // true of every group (each holds a query term), but a Filter
+          // here keeps Catalyst from folding the scoring projection into
+          // ObjectHashAggregate's result, which whole-stage codegen skips
+          .filter(size(col("__tfs")) > 0)
+        val idfs = termsLower.map(t => Bm25.idf(n, dfCounts.getOrElse(t, 0L)))
+        Lexical.topKByScore(perDoc,
+          Bm25.score(col("__tfs"), col("dl"), termsLower, idfs, avgdl, k1, b), idCol, k)
       }
-    } finally graft.util.Checkpoints.free(matched)
+    }
+    (ranked, shared)
+  }
+
+  /** N and avgdl of the index at `p0`, memoized per doclens component
+    * version. The key is (qualified component dir, MergeTable version):
+    * a committed version never changes and token component dirs are
+    * build-unique, so a hit is exact, and the memo holds the aggregate
+    * [[statsOf]] returned, so a hit is bit-identical to a fresh scan.
+    * A pre-token layout's fixed `doclens` dir is not build-unique (a
+    * deleted and rebuilt legacy index reuses it), so it is not
+    * memoized. At most [[StatsMemoCap]] versions are kept, least
+    * recently used evicted first. */
+  private def corpusStats(
+      spark: SparkSession, path: String, p0: CompositeIndex.Pin): (Long, Double) = {
+    val ref = p0("doclens")
+    def scan() = statsOf(CI.readAt(spark, path, p0, "doclens"))
+    if (ref.dir == "doclens") scan()
+    else {
+      val key = statsKey(spark, path, ref)
+      statsMemo.synchronized(Option(statsMemo.get(key))).getOrElse {
+        val stats = scan()
+        rememberStats(key, stats)
+        stats
+      }
+    }
+  }
+
+  private[graft] val StatsMemoCap = 64
+
+  private val statsMemo =
+    new java.util.LinkedHashMap[(String, Long), (Long, Double)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long), (Long, Double)]): Boolean =
+        size() > StatsMemoCap
+    }
+
+  private[graft] def rememberStats(key: (String, Long), stats: (Long, Double)): Unit =
+    statsMemo.synchronized { statsMemo.put(key, stats); () }
+
+  private[graft] def statsMemoSize: Int = statsMemo.synchronized(statsMemo.size())
+
+  private def statsKey(spark: SparkSession, path: String, ref: Ref): (String, Long) = {
+    val dir = new org.apache.hadoop.fs.Path(CI.componentPath(path, ref.dir))
+    (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir).toString,
+      ref.version)
+  }
+
+  /** (N, avgdl) of a doclens frame. `dl` is integer-valued, so the sum
+    * is exact in any order and the result does not depend on how the
+    * rows are partitioned. */
+  private def statsOf(doclens: DataFrame): (Long, Double) = {
+    val r = doclens.agg(count(lit(1)), avg(col("dl"))).head()
+    (r.getLong(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
   }
 }

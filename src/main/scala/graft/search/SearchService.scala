@@ -1,9 +1,13 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions
 import graft.kb.KnowledgeBase
@@ -120,12 +124,33 @@ object SearchService {
           concat(substring(col("content"), 1, 500), lit("..."))).otherwise(col("content")))
   }
 
-  /** F1 preprocessing applied to a single driver-side query string. */
+  /** F1 preprocessing applied to a single driver-side query string,
+    * with no planning per call. [[TextFunctions.preprocessSearchQuery]]'s
+    * expression is analyzed over a one-column relation once per session
+    * and bound to that column; each call evaluates the bound expression
+    * on one `InternalRow`. A DataFrame over the column runs this same
+    * `Expression` (a one-row local frame interprets it through
+    * `ConvertToLocalRelation`), so the two cannot drift, and no call
+    * plans a query. Calls on one session share the bound expression
+    * and evaluate it one at a time: the regex expressions inside it
+    * cache their compiled pattern and result buffer in mutable fields. */
   def preprocess(spark: SparkSession, query: String): String = {
-    import spark.implicits._
-    Seq(query).toDF("q")
-      .select(TextFunctions.preprocessSearchQuery(col("q"))).as[String].head()
+    val e = boundPreprocess(spark)
+    e.synchronized(e.eval(InternalRow(UTF8String.fromString(query)))).toString
   }
+
+  private val preprocessBySession =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, Expression]())
+
+  private def boundPreprocess(spark: SparkSession): Expression =
+    preprocessBySession.computeIfAbsent(spark, s => {
+      val q = s.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(Seq(StructField("q", StringType))))
+      q.select(TextFunctions.preprocessSearchQuery(col("q"))).queryExecution.analyzed match {
+        case Project(Seq(e), child) => BindReferences.bindReference(e, child.output)
+        case other => throw new IllegalStateException(s"unexpected preprocess plan:\n$other")
+      }
+    })
 
   /** Context→source mapping (F13, `backend/tools/search_tools.py:48-56`). */
   val contextSourceMap: Map[String, String] = Map(

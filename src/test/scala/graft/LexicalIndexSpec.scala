@@ -341,4 +341,49 @@ class LexicalIndexSpec extends SparkSpec {
     assert(ranking(LexicalIndex.bm25TopK(
       spark, path, "doc_id", Seq("fresh"), 5)).map(_._1) === Seq(2L))
   }
+
+  test("corpus stats are memoized per doclens version and equal a fresh aggregate") {
+    import graft.sources.MergeTable
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val path = freshPath()
+    LexicalIndex.build(spark, path, corpus(23, 40).toDF("doc_id", "text"), "doc_id", "text")
+    def fresh(): (Long, Double) = {
+      val r = MergeTable.read(spark, LexicalIndex.doclensPath(spark, path))
+        .agg(count(lit(1)), avg(col("dl"))).head()
+      (r.getLong(0), r.getDouble(1))
+    }
+    // does any action of `call` scan the pinned doclens component?
+    def scansDoclens(call: => Any): Boolean = {
+      val dir = new org.apache.hadoop.fs.Path(LexicalIndex.doclensPath(spark, path)).getName
+      GeneratedCode.plans(spark)(call).flatMap(graft.util.Plans.flatten).exists {
+        case f: FileSourceScanExec =>
+          f.relation.location.rootPaths.exists(_.toString.contains(dir))
+        case _ => false
+      }
+    }
+    def query() = LexicalIndex.bm25TopK(spark, path, "doc_id", Seq("w1", "w2"), 5)
+    // build seeds the memo and compact leaves doclens alone: their first
+    // query is already a hit; upsert and delete publish a new doclens
+    // version, which the first query scans once
+    def check(step: String, firstScans: Boolean): Unit = {
+      assert(scansDoclens(query()) === firstScans, s"$step: first query")
+      assert(!scansDoclens(query()), s"$step: second query on the same pin scanned doclens")
+      val (n, avgdl) = fresh()
+      val used = LexicalIndex.corpusStats(spark, path)
+      assert(used._1 === n && used._2.equals(avgdl), s"$step: memo $used, fresh ($n, $avgdl)")
+    }
+    check("build", firstScans = false)
+    LexicalIndex.upsert(spark, path,
+      Seq((3L, "a much longer replacement text with many more words than before"),
+        (41L, "new doc")).toDF("doc_id", "text"), "doc_id", "text")
+    check("upsert", firstScans = true)
+    LexicalIndex.delete(spark, path, Seq(5L, 6L, 7L))
+    check("delete", firstScans = true)
+    LexicalIndex.compact(spark, path, numFiles = 2)
+    check("compact", firstScans = false)
+    // bounded: past the cap the least recently used versions go
+    (1 to LexicalIndex.StatsMemoCap + 10).foreach(i =>
+      LexicalIndex.rememberStats((s"file:/nowhere/doclens-$i", 1L), (1L, 1.0)))
+    assert(LexicalIndex.statsMemoSize <= LexicalIndex.StatsMemoCap)
+  }
 }

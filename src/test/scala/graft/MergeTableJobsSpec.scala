@@ -1,16 +1,4 @@
-package org.apache.spark {
-  /** The listener bus is `private[spark]`: drained from here so a job
-    * count reads every job-start event of the body it measured. */
-  object JobCountBus {
-    def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
-  }
-}
-
-package graft {
-
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+package graft
 
 import graft.sources.MergeTable
 
@@ -31,31 +19,8 @@ class MergeTableJobsSpec extends SparkSpec {
 
   private def keys(ids: Range) = ids.map(_.toLong).toDF("id")
 
-  /** Spark jobs `body` launches, counted under a job group of its own. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "merge-jobs-" + java.util.UUID.randomUUID()
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet()
-    }
-    org.apache.spark.JobCountBus.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "MergeTable job count", interruptOnCancel = false)
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.JobCountBus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
-
   private def assertCeiling(what: String, ceiling: Int)(body: => Unit): Unit = {
-    val n = jobsOf(body)
+    val n = JobCount.of(spark)(body)
     info(s"$what: $n jobs (ceiling $ceiling)")
     assert(n <= ceiling, s"$what launched $n Spark jobs, ceiling $ceiling")
   }
@@ -131,6 +96,4 @@ class MergeTableJobsSpec extends SparkSpec {
       MergeTable.read(spark, bcast).collect()
     }
   }
-}
-
 }

@@ -52,6 +52,55 @@ class SearchValidationSpec extends SparkSpec {
     assert(SearchService.contextSourceMap("error") === "stackoverflow")
   }
 
+  test("preprocess evaluates F1 without planning and matches the DataFrame path") {
+    // the per-call DataFrame form preprocess used to run, kept here as
+    // the reference
+    def viaFrame(q: String): String = Seq(q).toDF("q")
+      .select(graft.functions.TextFunctions.preprocessSearchQuery(col("q")))
+      .as[String].head()
+    val inputs = Seq(
+      "Ünïcödé 查询 naïve ñandú — 🚀 spark joins",
+      "tabs\tand\nnewlines\r\n   and   runs     of spaces  ",
+      "",
+      ("join " * 50) + "tail",                                     // > 200 chars
+      // q119's six input forms: null, blank, regular, exception + code,
+      // quoted table not found, stack trace with a bare table name
+      null,
+      "   ",
+      "how   do I  fix spark join slow",
+      "org.apache.spark.SparkException: stage failed [JOB_3] at com.example.Runner(Main.java:42)",
+      "Error: Table `db_2.users` cannot be found",
+      "Traceback at worker.task(job.py:7): relation my_sch.tbl_4 does not exist",
+      // the rest of the priority chain
+      "org.apache.spark.sql.utils.AnalysisException: Table or view 'foo.bar' not found",
+      "java.lang.IllegalStateException: boom in 'cfg.key'",
+      "Caused by: java.io.IOException: disk full",
+      "Error: [CODE_7] failed",
+      "Error: could not read main.events")
+    val expected = inputs.map(viaFrame)
+    assert(expected.contains("pyspark table not found") && expected.contains("sql table not found"))
+    inputs.zip(expected).foreach { case (q, exp) =>
+      assert(SearchService.preprocess(spark, q) === exp, s"diverged on <$q>")
+    }
+    assert(GeneratedCode.plans(spark)(SearchService.preprocess(spark, inputs(2))).isEmpty,
+      "preprocess ran a query")
+    // one bound expression per session, evaluated from many threads
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val tasks = (0 until 8).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(Int, String)]] {
+          def call(): Seq[(Int, String)] = (0 until 200).map { i =>
+            val j = (i + t) % inputs.size
+            j -> SearchService.preprocess(spark, inputs(j))
+          }
+        })
+      }
+      tasks.flatMap(_.get(120, java.util.concurrent.TimeUnit.SECONDS)).foreach {
+        case (j, got) => assert(got === expected(j), s"thread result diverged on <${inputs(j)}>")
+      }
+    } finally pool.shutdownNow()
+  }
+
   test("embedder: batched, deterministic, unit-norm; upsert composition") {
     val emb = HashEmbedder(dim = 16)
     val docs = Seq(("alpha content", "t1"), ("beta content", "t2"))
