@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Bm25, TextFunctions}
@@ -83,12 +83,16 @@ object LexicalIndex {
   /** One tokenizing pass over `docs` → (postings, doclens) frames.
     * Shared by build and upsert; the returned frames are two reads of
     * one checkpointed narrow frame, freed by the caller via the
-    * returned handle. */
+    * returned handle. `stats`, when given, observes the batch's row
+    * count `n` and `sum(dl)` `dl` during the checkpoint's own job. */
   private def tokenize(
-      docs: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame, DataFrame) = {
-    val base = docs.select(col(idCol).as("id"),
+      docs: DataFrame, idCol: String, textCol: String,
+      stats: Option[Observation] = None): (DataFrame, DataFrame, DataFrame) = {
+    val words = docs.select(col(idCol).as("id"),
         TextFunctions.wordsLower(col(textCol)).as("__ws"))
       .select(col("id"), size(col("__ws")).cast("double").as("dl"), col("__ws"))
+    val base = stats.fold(words)(o =>
+        words.observe(o, count(lit(1)).as("n"), sum(col("dl")).as("dl")))
       .localCheckpoint(true)
     val doclens = base.select(col("id"), col("dl"))
     val postings = base
@@ -112,7 +116,8 @@ object LexicalIndex {
     // fail fast (index exists / refused legacy layout) BEFORE the
     // corpus-scale tokenization scan; CI.build re-checks
     CI.requireBuildable(spark, path)
-    val (postings, doclens, handle) = tokenize(docs, idCol, textCol)
+    val stats = Observation()
+    val (postings, doclens, handle) = tokenize(docs, idCol, textCol, Some(stats))
     try {
       val pin = CI.build(spark, path) { dirs =>
         // term blooms: pre-[[compact]] the postings layout is id-major
@@ -139,9 +144,13 @@ object LexicalIndex {
         Map("postings" -> pv.version, "doclens" -> dv.version,
           "termdf" -> tv.version)
       }
-      // seed the stats memo from the frame just written: the first
-      // query on the new index then scans no doclens
-      rememberStats(statsKey(spark, path, pin("doclens")), statsOf(doclens))
+      // seed the stats memo from the tokenizing pass (no job of its
+      // own): the first query on the new index then scans no doclens.
+      // avg(dl) is sum(dl) / n, and the integer-valued sum is exact, so
+      // the seed equals the doclens aggregate bit for bit
+      val n = stats.get("n").asInstanceOf[Long]
+      val dlSum = stats.get("dl").asInstanceOf[Double]
+      rememberStats(statsKey(spark, path, pin("doclens")), (n, dlSum / n))
     } finally graft.util.Checkpoints.free(handle)
   }
 
@@ -359,13 +368,11 @@ object LexicalIndex {
     *     queried, none after); df per query term from the termdf
     *     DICTIONARY (≤ |terms| rows, pushed filter) — read BEFORE any
     *     postings touch;
-    *  2. postings scan with `term IN (scored terms)` pushed to parquet
-    *     (footer-pruned after [[compact]]). With several queries the
-    *     matched postings — bounded by the scored terms' document
-    *     frequencies — are checkpointed once and shared by every
-    *     query's pass; a single query scans them inside its ranking;
-    *  3. per query: per-doc (term → tf) maps assemble from the matched
-    *     postings (one bounded shuffle on id), then the fresh path's
+    *  2. per query: a postings scan with `term IN (the query's scored
+    *     terms)` pushed to parquet (footer-pruned after [[compact]]),
+    *     bounded by those terms' document frequencies; per-doc
+    *     (term → tf) maps assemble from the matched postings (one
+    *     bounded shuffle on id), then the fresh path's
     *     [[graft.functions.Bm25Score]] kernel scores them and
     *     TakeOrderedAndProject keeps the top k. The kernel holds terms,
     *     idfs and avgdl as referenced objects, so every query of the
@@ -373,10 +380,9 @@ object LexicalIndex {
     * EAGER like the fresh path, but each ranking is collected into a
     * driver-local frame ([[collected]]) rather than checkpointed: a
     * served ranking goes to a client, and collecting a local frame
-    * launches no further job. The shared checkpoint is freed before
-    * returning. One query costs the dictionary lookup and the
-    * ranking's own action (a first query on a new index version adds
-    * the doclens scan).
+    * launches no further job. Each query costs its ranking's own
+    * action, on top of one dictionary lookup per call (a first query
+    * on a new index version adds the doclens scan).
     *
     * `maxDfFraction` is the serving-path stopword guard: a term whose
     * df exceeds this fraction of the corpus is dropped BEFORE the
@@ -390,11 +396,8 @@ object LexicalIndex {
   def bm25TopKMany(
       spark: SparkSession, path: String, idCol: String,
       queries: Seq[Seq[String]], k: Int, k1: Double = 1.2,
-      b: Double = 0.75, maxDfFraction: Double = 1.0): Seq[DataFrame] = {
-    val (ranked, shared) = rankings(spark, path, idCol, queries, k, k1, b, maxDfFraction)
-    try ranked.map(collected)
-    finally shared.foreach(graft.util.Checkpoints.free)
-  }
+      b: Double = 0.75, maxDfFraction: Double = 1.0): Seq[DataFrame] =
+    rankings(spark, path, idCol, queries, k, k1, b, maxDfFraction).map(collected)
 
   /** A top-k ranking as a driver-local frame: one action collects its
     * (at most k) rows, after which the frame references no index file
@@ -413,16 +416,14 @@ object LexicalIndex {
       spark: SparkSession, path: String, idCol: String, terms: Seq[String],
       k: Int, k1: Double = 1.2, b: Double = 0.75,
       maxDfFraction: Double = 1.0): DataFrame =
-    rankings(spark, path, idCol, Seq(terms), k, k1, b, maxDfFraction)._1.head
+    rankings(spark, path, idCol, Seq(terms), k, k1, b, maxDfFraction).head
 
-  /** The rankings of `queries` at one pin, as lazy plans, plus the
-    * checkpointed matched-postings frame they share when there are
-    * several queries — the caller frees it once the rankings are acted
-    * on. A single query checkpoints nothing. */
+  /** The rankings of `queries`, as lazy plans pinned at one composite
+    * version. */
   private def rankings(
       spark: SparkSession, path: String, idCol: String,
       queries: Seq[Seq[String]], k: Int, k1: Double,
-      b: Double, maxDfFraction: Double): (List[DataFrame], Option[DataFrame]) = {
+      b: Double, maxDfFraction: Double): List[DataFrame] = {
     require(queries.nonEmpty && queries.forall(_.nonEmpty),
       "every query needs at least one term")
     require(k >= 1, s"k must be >= 1, got $k")
@@ -444,22 +445,17 @@ object LexicalIndex {
     val dfCap = maxDfFraction * n
     val scoredTerms = allTerms.filter(t => dfCounts.getOrElse(t, 0L) <= dfCap)
     val loweredKept = lowered.map(_.filter(scoredTerms.contains))
-    // the ONLY touch of the postings table: scan the scored terms'
-    // postings (predicate pushed into the scan); several queries share
-    // one materialized copy of the small matched frame
-    val scan = CI.readAt(spark, path, p0, "postings")
-      .filter(if (scoredTerms.isEmpty) lit(false)
-        else col("term").isin(scoredTerms: _*))
-    val shared = if (lowered.size > 1) Some(scan.localCheckpoint(true)) else None
-    val matched = shared.getOrElse(scan)
-    val ranked = loweredKept.map { termsLower =>
+    // the ONLY touch of the postings table: each ranking scans its own
+    // scored terms' postings (predicate pushed into the scan)
+    val postings = CI.readAt(spark, path, p0, "postings")
+    loweredKept.map { termsLower =>
       if (termsLower.isEmpty) {
         // every term of this query was df-pruned: an empty ranking,
         // with the contract schema (idCol typed like the corpus id)
-        matched.limit(0)
+        postings.limit(0)
           .select(col("id").as(idCol), lit(0.0).as("score"))
       } else {
-        val perDoc = matched
+        val perDoc = postings
           .filter(col("term").isin(termsLower: _*))
           .groupBy(col("id"), col("dl"))
           .agg(map_from_entries(collect_list(struct(col("term"), col("tf"))))
@@ -473,22 +469,27 @@ object LexicalIndex {
           Bm25.score(col("__tfs"), col("dl"), termsLower, idfs, avgdl, k1, b), idCol, k)
       }
     }
-    (ranked, shared)
   }
 
   /** N and avgdl of the index at `p0`, memoized per doclens component
     * version. The key is (qualified component dir, MergeTable version):
     * a committed version never changes and token component dirs are
-    * build-unique, so a hit is exact, and the memo holds the aggregate
-    * [[statsOf]] returned, so a hit is bit-identical to a fresh scan.
-    * A pre-token layout's fixed `doclens` dir is not build-unique (a
-    * deleted and rebuilt legacy index reuses it), so it is not
-    * memoized. At most [[StatsMemoCap]] versions are kept, least
-    * recently used evicted first. */
+    * build-unique, so a hit is exact. The memo holds the doclens
+    * aggregate's own result, or [[build]]'s seed from the tokenizing
+    * pass; `dl` is integer-valued, so sums are exact in any order and
+    * either is bit-identical to a fresh scan. A pre-token layout's
+    * fixed `doclens` dir is not build-unique (a deleted and rebuilt
+    * legacy index reuses it), so it is not memoized. At most
+    * [[StatsMemoCap]] versions are kept, least recently used evicted
+    * first. */
   private def corpusStats(
       spark: SparkSession, path: String, p0: CompositeIndex.Pin): (Long, Double) = {
     val ref = p0("doclens")
-    def scan() = statsOf(CI.readAt(spark, path, p0, "doclens"))
+    def scan() = {
+      val r = CI.readAt(spark, path, p0, "doclens")
+        .agg(count(lit(1)), avg(col("dl"))).head()
+      (r.getLong(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
+    }
     if (ref.dir == "doclens") scan()
     else {
       val key = statsKey(spark, path, ref)
@@ -518,13 +519,5 @@ object LexicalIndex {
     val dir = new org.apache.hadoop.fs.Path(CI.componentPath(path, ref.dir))
     (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir).toString,
       ref.version)
-  }
-
-  /** (N, avgdl) of a doclens frame. `dl` is integer-valued, so the sum
-    * is exact in any order and the result does not depend on how the
-    * rows are partitioned. */
-  private def statsOf(doclens: DataFrame): (Long, Double) = {
-    val r = doclens.agg(count(lit(1)), avg(col("dl"))).head()
-    (r.getLong(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
   }
 }
