@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -51,7 +51,34 @@ private[graft] sealed trait KeySet {
     * every row-level writer needs (append admission, tombstone
     * re-insert detection, delta deletion detection). The set's keys
     * must be unique. */
-  def overlap(d: DataFrame): (Long, Long)
+  final def overlap(d: DataFrame): (Long, Long) = overlaps(Seq(d)).head
+
+  /** [[overlap]] of several row-level frames in ONE job: their key
+    * columns, tagged by frame, are read by a single task — row-level
+    * state is bounded by the fold budget — so the global aggregate
+    * needs no exchange (under adaptive execution an exchange is a job
+    * of its own). */
+  final def overlaps(ds: Seq[DataFrame]): Seq[(Long, Long)] =
+    if (ds.isEmpty) Nil
+    else {
+      val tag = freshName("__probe")
+      val (marked, hit) = withHit(ds.zipWithIndex.map { case (d, i) =>
+        d.select(keyCols.map(col) :+ lit(i).as(tag): _*)
+      }.reduce(_ unionByName _).coalesce(1))
+      val counts = ds.indices.flatMap(i => Seq(
+        count(when(col(tag) === i, lit(1))),
+        count(when(col(tag) === i && hit, lit(1)))))
+      val r = marked.agg(counts.head, counts.tail: _*).head()
+      ds.indices.map(i => (r.getLong(2 * i), r.getLong(2 * i + 1)))
+    }
+
+  /** `d` and a predicate true on exactly its rows whose key is in the
+    * set — [[overlaps]]' membership test. */
+  protected def withHit(d: DataFrame): (DataFrame, Column)
+
+  /** A column name not among the key columns. */
+  protected final def freshName(prefix: String): String =
+    Iterator.from(0).map(prefix + _).find(!keyCols.contains(_)).get
 
   /** `d` minus the rows whose key is in the set; NULL-keyed rows stay. */
   def anti(d: DataFrame): DataFrame
@@ -150,10 +177,7 @@ private[graft] object KeySet {
         StructType(Seq(StructField(keyCol, keyType))))
     }
     private def in = col(keyCol).isin(values: _*)
-    def overlap(d: DataFrame): (Long, Long) = {
-      val r = d.agg(count(lit(1)), count(when(in, lit(1)))).head()
-      (r.getLong(0), r.getLong(1))
-    }
+    protected def withHit(d: DataFrame): (DataFrame, Column) = (d, in)
     def anti(d: DataFrame): DataFrame = d.filter(col(keyCol).isNull || !in)
     def hitsAny(d: DataFrame): Boolean = d.filter(in).limit(1).count() > 0
     def discoveryFrame(base: DataFrame): DataFrame =
@@ -171,19 +195,19 @@ private[graft] object KeySet {
       Frame(u, keyCols, size)
     def keys: DataFrame =
       if (df.columns.toSeq == keyCols) df else df.select(keyCols.map(col): _*)
-    def overlap(d: DataFrame): (Long, Long) = {
+    protected def withHit(d: DataFrame): (DataFrame, Column) = {
       // the left join against the unique-keyed set preserves d's row
       // count; the marker gets a fresh name because a key column
       // literally named like it would be overwritten by withColumn and
       // the probe would compare keys against the constant
-      val hit = Iterator.from(0).map("__hit" + _).find(!keyCols.contains(_)).get
-      val r = d.select(keyCols.map(col): _*)
-        .join(broadcast(keys.withColumn(hit, lit(true))), keyCols, "left")
-        .agg(count(lit(1)), count(col(hit))).head()
-      (r.getLong(0), r.getLong(1))
+      val hit = freshName("__hit")
+      (d.join(broadcast(keys.withColumn(hit, lit(true))), keyCols, "left"),
+        col(hit).isNotNull)
     }
+    // no distinct on the build side: a repeated key cannot change a
+    // left-anti result, and the shuffle a distinct plans is a job
     def anti(d: DataFrame): DataFrame =
-      d.join(broadcast(keys.distinct()), keyCols, "left_anti")
+      d.join(broadcast(keys), keyCols, "left_anti")
     def hitsAny(d: DataFrame): Boolean =
       d.join(broadcast(keys), keyCols, "left_semi").limit(1).count() > 0
     def discoveryFrame(base: DataFrame): DataFrame = {
@@ -225,58 +249,108 @@ private[graft] object KeySet {
     base.filter(col(k).isin(ks: _*))
       .select(input_file_name().as("__file")).distinct()
 
-  /** A [[MergeTable.merge]] / [[MergeTable.mergeLite]] batch, validated
-    * in ONE action: row count, uniqueness on `keyCols` and the NULL-key
-    * refusal — a bounded collect that also captures the literals when
-    * the batch fits, else a key-only aggregate. */
+  /** A [[MergeTable.merge]] batch, validated in ONE action: row count,
+    * uniqueness on `keyCols` and the NULL-key refusal (the upsert side
+    * of [[validatedChanges]]). */
   def validated(u: DataFrame, keyCols: Seq[String]): KeySet =
-    capture(u, keyCols, unique = true,
-      s"updates contain NULL in a key column (${keyCols.mkString(",")}); " +
-        "NULL keys cannot match and would duplicate on every merge")
+    validatedChanges(Some(u), None, keyCols).ks
 
-  /** A [[MergeTable.deleteLite]] key frame (already distinct, so
-    * uniqueness is structural): count and NULL refusal, as
-    * [[validated]]. */
-  def validatedDeletes(k: DataFrame, keyCols: Seq[String]): KeySet =
-    capture(k, keyCols, unique = false,
-      s"keys contain NULL in a key column (${keyCols.mkString(",")}); " +
-        "NULL keys never match and would tombstone nothing")
+  /** The validated sides of one row-level call: `ks` is the union of
+    * both key sets, `nU`/`nD` count each side's keys, and `deletes` is
+    * the delete side as a distinct key frame — driver-local when it fit
+    * the literal budget, else a checkpoint the caller frees. */
+  final case class Changes(
+      ks: KeySet, nU: Long, nD: Long, deletes: Option[DataFrame])
 
-  /** For a single stable-typed key column, ONE bounded collect (key
-    * column only, single-partition early-stopping limit) validates the
-    * batch from the collected list whenever it fits the budget; batches
-    * past it pay one ~1000-row probe task extra and fall back to the
-    * one-pass aggregate. That aggregate scans the batch once and
-    * shuffles only the key columns (partial aggregation below the
-    * exchange); `struct` makes the distinct count NULL-key tolerant (a
-    * bare multi-column countDistinct drops NULL rows, which would mask
-    * duplicates), and with NULLs refused first the struct-distinct
-    * equals the dropDuplicates count exactly. */
-  private def capture(
-      u: DataFrame, keyCols: Seq[String], unique: Boolean,
-      nullMsg: String): KeySet = {
-    val dupMsg = s"updates must be unique on ${keyCols.mkString(",")}"
-    if (keyCols.size == 1) {
-      val t = u.schema(u.schema.fieldIndex(keyCols.head)).dataType
-      if (litStableKeyType(t)) {
-        val vals = u.select(col(keyCols.head)).coalesce(1)
-          .limit(DiscoveryInLimit + 1).collect().map(_.get(0)).toSeq
-        if (vals.length <= DiscoveryInLimit) {
-          require(!vals.contains(null), nullMsg)
-          val distinct = vals.distinct
-          require(vals.length == distinct.length, dupMsg)
-          return Literals(keyCols.head, t, distinct)
-        }
-      }
+  /** Validates an upsert side `u` (full rows, unique keys) and a delete
+    * side `d` (keys, duplicates collapse) of one
+    * [[MergeTable.applyChanges]] call together: NULL keys are refused on
+    * both sides, duplicate upsert keys are refused, and so is a key on
+    * BOTH sides — one call applies one change per key.
+    *
+    * For a single stable-typed key column, ONE bounded collect (key
+    * column only, a single-partition early-stopping limit per side)
+    * validates both sides on the driver whenever each fits the budget,
+    * the both-sides check being a set intersection. Otherwise one
+    * aggregate over the union of both sides' keys does it: counts per
+    * side, NULLs per side, and one distinct count that equals
+    * `nU + nD` exactly when the upserts are unique and the sides are
+    * disjoint (the delete side is made distinct first). `struct` makes
+    * the distinct count NULL-key tolerant, and with NULLs refused first
+    * it equals the dropDuplicates count. Only a failed check runs a
+    * second query, to name which rule broke. */
+  def validatedChanges(
+      u: Option[DataFrame], d: Option[DataFrame],
+      keyCols: Seq[String]): Changes = {
+    val keyList = keyCols.mkString(",")
+    val uNull = s"updates contain NULL in a key column ($keyList); " +
+      "NULL keys cannot match and would duplicate on every merge"
+    val dNull = s"keys contain NULL in a key column ($keyList); " +
+      "NULL keys never match and would tombstone nothing"
+    val dupMsg = s"updates must be unique on $keyList"
+    val bothMsg = s"a key on ($keyList) is both upserted and deleted in " +
+      "one call; resolve each key to one change first"
+    val uKeys = u.map(_.select(keyCols.map(col): _*))
+    val dKeys = d.map(_.select(keyCols.map(col): _*))
+    for (uk <- uKeys; dk <- dKeys; f <- dk.schema) {
+      val t = uk.schema(f.name).dataType
+      require(f.dataType.catalogString == t.catalogString,
+        s"keys column ${f.name} has type ${f.dataType.catalogString} but " +
+          s"the updates carry ${t.catalogString} — cast the keys frame")
     }
+    val t = (uKeys orElse dKeys).get.schema.head.dataType
+    val side = Iterator.from(0).map("__side" + _).find(!keyCols.contains(_)).get
+    def tagged(uk: Option[DataFrame], dk: Option[DataFrame]): DataFrame =
+      (uk.map(_.withColumn(side, lit(true))).toSeq ++
+        dk.map(_.withColumn(side, lit(false)))).reduce(_ unionByName _)
+    val dLits: Option[Seq[Any]] =
+      if (keyCols.size == 1 && litStableKeyType(t)) {
+        val bounded = tagged(
+          uKeys.map(_.coalesce(1).limit(DiscoveryInLimit + 1)),
+          dKeys.map(_.coalesce(1).limit(DiscoveryInLimit + 1))).collect()
+        val (uRows, dRows) = bounded.partition(_.getBoolean(1))
+        val uVals = uRows.map(_.get(0)).toSeq
+        val dVals = dRows.map(_.get(0)).toSeq
+        if (uVals.length <= DiscoveryInLimit && dVals.length <= DiscoveryInLimit) {
+          require(!uVals.contains(null), uNull)
+          require(!dVals.contains(null), dNull)
+          val uDistinct = uVals.distinct
+          require(uVals.length == uDistinct.length, dupMsg)
+          val dDistinct = dVals.distinct
+          val uSet = uDistinct.toSet
+          require(!dDistinct.exists(uSet.contains), bothMsg)
+          val all = Literals(keyCols.head, t, uDistinct ++ dDistinct)
+          return Changes(
+            if (all.values.size <= DiscoveryInLimit) all
+            else Frame(all.keys, keyCols, all.size),
+            uDistinct.size.toLong, dDistinct.size.toLong,
+            dKeys.map(_ => Literals(keyCols.head, t, dDistinct).keys))
+        }
+        if (dVals.length <= DiscoveryInLimit) Some(dVals.distinct) else None
+      } else None
+    val dDistinct = dKeys.map(dk => dLits.fold(dk.distinct().localCheckpoint(true))(
+      vs => Literals(keyCols.head, t, vs).keys))
+    val union = tagged(uKeys, dDistinct)
     val anyNull = keyCols.map(col(_).isNull).reduce(_ || _)
-    val row = u.select(Seq(count(lit(1)).as("n"),
-        count(when(anyNull, lit(1))).as("nNull")) ++
-      (if (unique) Seq(countDistinct(struct(keyCols.map(col): _*)).as("nDist"))
-       else Nil): _*).head()
-    require(row.getLong(1) == 0L, nullMsg)
-    if (unique) require(row.getLong(0) == row.getLong(2), dupMsg)
-    Frame(u, keyCols, row.getLong(0))
+    val row = union.select(Seq(
+        count(when(col(side), lit(1))), count(when(!col(side), lit(1))),
+        count(when(col(side) && anyNull, lit(1))),
+        count(when(!col(side) && anyNull, lit(1)))) ++
+      uKeys.map(_ => countDistinct(struct(keyCols.map(col): _*))): _*).head()
+    val (nU, nD) = (row.getLong(0), row.getLong(1))
+    try {
+      require(row.getLong(2) == 0L, uNull)
+      require(row.getLong(3) == 0L, dNull)
+      if (uKeys.isDefined && row.getLong(4) != nU + nD) {
+        require(uKeys.get.select(countDistinct(struct(keyCols.map(col): _*)))
+          .head().getLong(0) == nU, dupMsg)
+        throw new IllegalArgumentException(bothMsg)
+      }
+    } catch {
+      case e: IllegalArgumentException =>
+        dDistinct.foreach(graft.util.Checkpoints.free); throw e
+    }
+    Changes(Frame(union, keyCols, nU + nD), nU, nD, dDistinct)
   }
 
   /** The read path's suppression set of a row-level snapshot: the

@@ -272,11 +272,11 @@ object MergeTable {
     * re-adding a dropped column can never resurrect the old data.
     * Identity on unmapped tables with no retired names: the very same
     * frame. */
-  private def inbound(
+  private[sources] def inbound(
       cm: ColMap, schema0: org.apache.spark.sql.types.StructType,
-      df: DataFrame, ks: KeySet)
-    : (DataFrame, KeySet, ColMap) = {
-    if (cm.isEmpty) return (df, ks, cm)
+      df: DataFrame, keyCols: Seq[String])
+    : (DataFrame, Seq[String], ColMap) = {
+    if (cm.isEmpty) return (df, keyCols, cm)
     val l2p: Map[String, String] =
       schema0.fields.map(f => cm.logicalOf(f.name) -> f.name).toMap
     var used = (schema0.fieldNames.toSeq ++ cm.retired)
@@ -315,7 +315,7 @@ object MergeTable {
     val out =
       if (mapped.forall { case (l, p) => l == p }) df
       else df.select(mapped.map { case (l, p) => col(l).as(p) }: _*)
-    val pKeys = ks.keyCols.map(k => l2p.getOrElse(k, {
+    val pKeys = keyCols.map(k => l2p.getOrElse(k, {
       // a renamed-away physical name is NOT addressable (the
       // physicalNameOf refusal): silently honoring it would key the
       // write on a column the caller just renamed, under its old name
@@ -323,7 +323,7 @@ object MergeTable {
         s"column '$k' was renamed to '${cm.ren(k)}' — key by the new name")
       k
     }))
-    (out, ks.rebound(out, pKeys), cm2)
+    (out, pKeys, cm2)
   }
 
   /** @param filesRewritten files of the previous version REPLACED
@@ -343,7 +343,7 @@ object MergeTable {
 
   /** Target rows per data file for insert-only merge batches (~100-200
     * MB parquet at typical document-row widths). */
-  private val InsertRowsPerFile = 4000000L
+  private[sources] val InsertRowsPerFile = 4000000L
 
   /** The concurrency grace shared by [[vacuum]]'s default retention and
     * the stranded-temp sweeps: files younger than this may belong to a
@@ -351,7 +351,7 @@ object MergeTable {
   val DefaultRetainMillis: Long = 15L * 60L * 1000L
 
 
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
+  private[sources] def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
@@ -361,7 +361,7 @@ object MergeTable {
   /** Scheme-free absolute path — `input_file_name()` and `listStatus`
     * render the same file with different authorities (`file:/` vs
     * `file:///`), so comparisons use [[Manifests.normalizePath]]. */
-  private def normalize(s: String): String = Manifests.normalizePath(s)
+  private[sources] def normalize(s: String): String = Manifests.normalizePath(s)
 
   /** Create the table at `path` from `df` (version 1). Fails if a
     * manifest already exists.
@@ -722,7 +722,7 @@ object MergeTable {
   // suppression literals would silently knock every later read off the
   // zero-job literal path (perf, never correctness — but permanent
   // until the next fold).
-  private def encodeSnapshot(
+  private[sources] def encodeSnapshot(
       entries: Seq[FileEntry], delta: Seq[FileEntry],
       dvKeys: Seq[String], dvFiles: Option[Seq[String]] = None,
       stats: Seq[TableStats] = Nil,
@@ -1208,7 +1208,7 @@ object MergeTable {
   /** The stats a commit carries forward: kept entries keep their
     * recorded ranges (filtered — a stat line for a vanished path fails
     * decode validation), fresh files get footer-collected ones. */
-  private def carriedStats(
+  private[sources] def carriedStats(
       conf: org.apache.hadoop.conf.Configuration,
       snapStats: Seq[TableStats], kept: Seq[FileEntry],
       fresh: Seq[FileEntry]): Seq[TableStats] = {
@@ -1351,7 +1351,7 @@ object MergeTable {
     * schema when present (evolution-aware, zero IO), else the head
     * file's footer (legacy manifests — all files agree by the
     * pre-evolution writer invariant). */
-  private def tableSchemaOf(
+  private[sources] def tableSchemaOf(
       spark: SparkSession, snap: Snapshot): org.apache.spark.sql.types.StructType =
     snap.schema.getOrElse {
       val head = (snap.entries ++ snap.delta).headOption.getOrElse(
@@ -1538,7 +1538,7 @@ object MergeTable {
 
   /** Total row count from parquet footers — metadata-only, one open
     * per file, parallel (the collectStats convention). */
-  private def footerRowCount(
+  private[sources] def footerRowCount(
       conf: org.apache.hadoop.conf.Configuration,
       entries: Seq[FileEntry]): Long = {
     if (entries.isEmpty) return 0L
@@ -2034,8 +2034,8 @@ object MergeTable {
     // below (schema line, dvkeys, stats, data files) speaks PHYSICAL.
     // Re-derived per attempt — a concurrent rename can land between
     // OCC retries.
-    val (u, ks, cm1) = inbound(snap.colMap, schema0, u0, ks0)
-    val keyCols = ks.keyCols
+    val (u, keyCols, cm1) = inbound(snap.colMap, schema0, u0, ks0.keyCols)
+    val ks = if (keyCols == ks0.keyCols) ks0 else ks0.rebound(u, keyCols)
     if (!snap.rowLevel)
       rewriteMerge(spark, fs, root, snap.version, snap.entries, u, ks,
         snapStats = snap.stats, tableSchema = schema0,
@@ -2111,7 +2111,7 @@ object MergeTable {
     * ambiguous-reference AnalysisException until a fold clears it, and
     * the set-equality guards would pass the repeated spelling through
     * to the same raw failure. */
-  private def requireKeyCols(keyCols: Seq[String]): Unit = {
+  private[sources] def requireKeyCols(keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "keyCols must name at least one column")
     require(keyCols.distinct.size == keyCols.size,
       s"keyCols repeats a column name: ${keyCols.mkString(",")}")
@@ -2156,7 +2156,7 @@ object MergeTable {
     * nullability-only difference (array<float> containsNull true vs
     * false) is the same physical type, and rejecting it would produce
     * an error whose two printed types look identical. */
-  private def conformedSchema(
+  private[sources] def conformedSchema(
       tableSchema: org.apache.spark.sql.types.StructType,
       u: DataFrame, keyCols: Seq[String],
       allowEvolution: Boolean): org.apache.spark.sql.types.StructType = {
@@ -2250,7 +2250,7 @@ object MergeTable {
     * widening never touches. Widening WITHIN the family (int→long)
     * keeps its stats: the recorded ranges remain exact and the pruner
     * binds the promoted type (spec-pinned). */
-  private def statsUnderSchema(
+  private[sources] def statsUnderSchema(
       stats: Seq[TableStats],
       schema: org.apache.spark.sql.types.StructType): Seq[TableStats] =
     stats.filter(s => s.hex ||
@@ -2292,7 +2292,7 @@ object MergeTable {
     * file-backed READ of the same data reports, so the manifest's
     * recorded schema always agrees with what a head-file probe would
     * have said (Catalyst's `asNullable` is spark-private). */
-  private def asNullableSchema(
+  private[sources] def asNullableSchema(
       s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     def relax(dt: DataType): DataType = dt match {
@@ -2311,7 +2311,7 @@ object MergeTable {
     * with typed NULLs — the read-side convention for files written
     * before a widening, applied frame-side where a LOGICAL frame (a
     * delta scan, a CDF probe) predates the evolved schema. */
-  private def padTo(
+  private[sources] def padTo(
       df: DataFrame, schema: org.apache.spark.sql.types.StructType): DataFrame = {
     // present columns CAST to the target type (a no-op when already
     // equal): across a TYPE widening the narrow side must promote or
@@ -2344,7 +2344,7 @@ object MergeTable {
     * caller guarantees they are disjoint from `u`'s keys (the commit
     * invariant: a re-inserted key moves out of the tombstone set), and
     * that `knownTouched` — when passed — covers their files too. */
-  private def rewriteMerge(
+  private[sources] def rewriteMerge(
       spark: SparkSession, fs: FileSystem, root: Path,
       baseVersion: Long, baseEntries: Seq[FileEntry], u: DataFrame,
       ks: KeySet,
@@ -2524,142 +2524,6 @@ object MergeTable {
     None
   }
 
-  /** REBASE of a lost row-level APPEND commit (mergeLite's append
-    * shape / deleteLite's delta-carrying shape) onto the winner's tip —
-    * the second rung of multi-writer reconciliation after
-    * [[rebaseInsertOnly]]: two streams doing mergeLite/deleteLite on
-    * DISJOINT keys land in one retry round instead of serializing via
-    * full re-attempts.
-    *
-    * INVARIANT ANALYSIS — what a row-level append claims, and how each
-    * claim is re-proven against the winner's tip:
-    *
-    *  1. "My keys appear in no OTHER suppression state" (key uniqueness
-    *     across delta files; the tombstone/delta disjointness
-    *     invariant). My own probes proved this against MY base's
-    *     delta/tombstones; the winner may have changed both — so the
-    *     claim is re-proven directly against the TIP's row-level state:
-    *     one overlap probe over tip.delta and one over tip.deletes
-    *     (both maxDeltaRows-bounded frames), zero overlap required.
-    *     Probing tip state directly assumes nothing about WHAT the
-    *     winner did (append, combine, fold, rescope — all covered).
-    *  2. "My scope names every base file holding one of my keys." Files
-    *     CARRIED from my base are immutable, so the proof holds for
-    *     them; files the winner ADDED (insert batch, fold/compaction
-    *     output, deleteWhere rewrite) could hold my keys — probed over
-    *     exactly `tip − base`, the rebaseInsertOnly idiom (cost ∝ the
-    *     winner's churn). Zero hits required: a hit means a scoped
-    *     commit would fail to suppress that file's row — a visible
-    *     duplicate (mergeLite) or a missed deletion (deleteLite). Files
-    *     the winner REMOVED drop out of the composed scope (inert).
-    *  3. "My files carry schema X under mapping M" — exact equality of
-    *     tip.schemaJson/tip.colMap, as in rebaseInsertOnly (an evolving
-    *     or renaming winner refuses; the full retry handles it).
-    *  4. "The suppression stays within budget" — re-checked against the
-    *     TIP's footer row counts plus mine; past-budget refuses (the
-    *     full retry folds, the correct response to a full suppression
-    *     set), as does the delta file cap.
-    *
-    * FOLD commits never reach here: they go through [[rewriteMerge]],
-    * whose own rebase is gated to pure inserts — a fold's input is
-    * delta-carried state whose validity the r16 analysis showed cannot
-    * survive a winner. Delta-REWRITING commits (mergeLite's combine of
-    * an existing delta, deleteLite touching delta keys) are gated out
-    * at the call sites: their commit replaces row-level files the
-    * winner may also have replaced, and key disjointness alone cannot
-    * reconcile two rewrites of the same file set. A torn rebase leaves
-    * my batch/tombstone files orphaned — vacuum-reclaimable, never
-    * referenced (the rebaseInsertOnly durability argument).
-    *
-    * Returns None when any check refuses — the caller rethrows and the
-    * outer loop re-attempts whole (today's always-correct path). */
-  private def rebaseRowLevelAppend(
-      spark: SparkSession, fs: FileSystem, root: Path,
-      u: DataFrame, ks: KeySet,
-      myDeltaFiles: Seq[FileEntry],
-      myTombstones: Boolean,
-      mySchemaJson: Option[String], myColMap: ColMap,
-      baseEntries: Seq[FileEntry], baseStats: Seq[TableStats],
-      maxDeltaRows: Long, maxDeltaFiles: Int): Option[MergeStats] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val keyCols = ks.keyCols
-    val nMine = ks.size
-    // written at most ONCE, at the first commit attempt, and reused
-    // across re-validations (files are immutable; a refused rebase
-    // leaves it a vacuum-reclaimable orphan, never referenced)
-    lazy val tombFiles: Seq[FileEntry] =
-      writeBatch(spark, fs, root,
-        u.select(keyCols.map(col): _*).coalesce(1), keyOnly = true)
-    var attempt = 0
-    while (attempt < 3) {
-      attempt += 1
-      val tip = snapshot(spark, root.toString)
-      if (tip.schemaJson != mySchemaJson) return None      // claim 3
-      if (tip.colMap != myColMap) return None
-      if (tip.dvKeys.nonEmpty && tip.dvKeys.toSet != keyCols.toSet)
-        return None // mismatched key set: let the retry raise loudly
-      val schema = tip.schema.getOrElse(return None)       // legacy: no rebase
-      // claim 4: budget and file cap against the TIP's state plus mine
-      if (footerRowCount(conf, tip.delta) + footerRowCount(conf, tip.deletes) +
-          nMine > maxDeltaRows) return None
-      if (tip.delta.size + myDeltaFiles.size > maxDeltaFiles) return None
-      // claim 1: my keys vs the tip's row-level state, both directions
-      if (tip.delta.nonEmpty && ks.overlap(
-          relationFor(spark, tip.delta, Nil, Some(schema)))._2 > 0)
-        return None
-      if (tip.deletes.nonEmpty && ks.overlap(
-          relationFor(spark, tip.deletes, Nil,
-            Some(keySchemaOf(schema, keyCols))))._2 > 0)
-        return None
-      // claim 2: my keys vs the files the winner added
-      val baseSet = baseEntries.map(e => normalize(e.path)).toSet
-      val added = tip.entries.filterNot(e => baseSet.contains(normalize(e.path)))
-      if (added.nonEmpty && ks.hitsAny(
-          relationFor(spark, withSizes(fs, added), tip.stats, Some(schema))))
-        return None // a scoped commit would miss this file
-      // scope composition: the tip's scope covers the tip's own
-      // suppression keys; mine covers my keys (point-probed against MY
-      // base — sound for carried files, and added files were just
-      // proven key-free; removed files filter out). Either side
-      // unscoped → unscoped (suppress-everywhere is always sound;
-      // rescopeDelta bounds it later).
-      val scope: Option[Seq[String]] =
-        if (tip.rowLevel && tip.dvFiles.isEmpty) None
-        else ks.pointTouched(
-            relationFor(spark, baseEntries, baseStats, Some(schema)))
-          .map { mine =>
-            val tipScopeNorm =
-              tip.dvFiles.getOrElse(Nil).map(normalize).toSet
-            tip.entries.map(_.path).filter(p =>
-              mine.contains(normalize(p)) ||
-                tipScopeNorm.contains(normalize(p)))
-          }
-      try {
-        val myTombs = if (myTombstones) tombFiles else Nil
-        commit(fs, root, tip.version + 1,
-          encodeSnapshot(withSizes(fs, tip.entries),
-            withSizes(fs, tip.delta) ++ myDeltaFiles,
-            tip.dvKeys match { case Nil => keyCols; case pinned => pinned },
-            scope,
-            stats = carriedStats(conf, tip.stats,
-              tip.entries ++ tip.delta, myDeltaFiles),
-            schemaJson = tip.schemaJson,
-            deletes = withSizes(fs, tip.deletes) ++ myTombs,
-            colMap = tip.colMap,
-            // the rebase appends MY disjoint keys onto the TIP's
-            // row-level state: the recorded set extends tip ∪ mine
-            dvLits = ks.dvLitsAfter(spark, tip)))
-        return Some(MergeStats(tip.version + 1,
-          tip.entries.size + tip.delta.size, 0,
-          myDeltaFiles.size + myTombs.size,
-          if (myTombstones) 0 else nMine))
-      } catch {
-        case _: FileAlreadyExistsException => // another winner: re-validate
-      }
-    }
-    None
-  }
-
   /** Legacy-manifest migration at commit time (closing the r13 gap): an
     * entry carried into a new manifest without a recorded size (written
     * before the `path\tsize` codec) is stat'ed ONCE here, so a legacy
@@ -2729,298 +2593,47 @@ object MergeTable {
     * or additive widening with `allowSchemaEvolution` (the [[merge]]
     * semantics: the commit records the widened schema, every file
     * written before it — base AND prior delta files alike — reads the
-    * new columns as NULL). */
+    * new columns as NULL). [[applyChanges]] with no delete side: one
+    * writer, `RowLevel`, serves all three. */
   def mergeLite(
       spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String], maxDeltaRows: Long = DefaultMaxDeltaRows,
       maxRetries: Int = 5, maxDeltaFiles: Int = DefaultMaxDeltaFiles,
+      allowSchemaEvolution: Boolean = false): MergeStats =
+    RowLevel(spark, path, Some(updates), None, keyCols, maxDeltaRows,
+      maxRetries, maxDeltaFiles, allowSchemaEvolution, "mergeLite")
+
+  /** Row-level CHANGES — one call's upserts and keyed deletes land in
+    * ONE commit: [[mergeLite]] and [[deleteLite]] at once, sharing one
+    * snapshot, one validation, one probe of the delta and one of the
+    * tombstones, one delta file set, one tombstone file, one manifest
+    * version and one OCC rebase path (Delta's one-log-entry transaction
+    * of adds and removes). No reader can pin a version holding only
+    * part of the call; the keyed CDC sink
+    * ([[graft.streaming.JobProcessor.runChangesToMergeTable]]) commits
+    * each micro-batch this way.
+    *
+    * `upserts` follows the [[mergeLite]] contract (full rows, unique and
+    * NULL-free keys, schema evolution with `allowSchemaEvolution`);
+    * `deletes` the [[deleteLite]] one (the key columns; extra columns
+    * are ignored, duplicates collapse, NULL keys are refused). None is
+    * an empty side; at least one side must be given. A key on BOTH
+    * sides is refused with an IllegalArgumentException before anything
+    * is written: one call applies one change per key, and a caller
+    * holding an ordered op log resolves each key first (last op wins,
+    * as [[graft.query.Relational.applyChanges]] does). Otherwise the
+    * result reads the same as `mergeLite(upserts)` followed by
+    * `deleteLite(deletes)`; `rowsUpserted` counts the upserts. */
+  def applyChanges(
+      spark: SparkSession, path: String,
+      upserts: Option[DataFrame], deletes: Option[DataFrame],
+      keyCols: Seq[String], maxDeltaRows: Long = DefaultMaxDeltaRows,
+      maxRetries: Int = 5, maxDeltaFiles: Int = DefaultMaxDeltaFiles,
       allowSchemaEvolution: Boolean = false): MergeStats = {
-    requireKeyCols(keyCols)
-    require(maxDeltaFiles >= 1, "maxDeltaFiles must be >= 1")
-    // '\r' too: Manifests.read splits lines on CR as well as LF, so a
-    // CR inside a stored name would shear the dvkeys line into a
-    // phantom entry and corrupt every later snapshot
-    keyCols.foreach(k => require(
-      !k.exists(c => c == ',' || c == '\t' || c == '\n' || c == '\r'),
-      s"key column name not encodable in the manifest dvkeys line: '$k'"))
-    val u = updates.localCheckpoint(true) // one computation across retries
-    try {
-      require(keyCols.forall(u.columns.contains),
-        s"key ${keyCols.mkString(",")} missing from updates")
-      val ks = KeySet.validated(u, keyCols)
-      var attempt = 0
-      while (attempt < maxRetries) {
-        attempt += 1
-        try return mergeLiteOnce(
-          spark, path, u, ks, maxDeltaRows, maxDeltaFiles, allowSchemaEvolution)
-        catch {
-          case _: FileAlreadyExistsException => // lost the race: re-snapshot
-        }
-      }
-      throw new CommitConflict(
-        s"mergeLite at $path lost $maxRetries optimistic commits in a row")
-    } finally graft.util.Checkpoints.free(u)
-  }
-
-  private def mergeLiteOnce(
-      spark: SparkSession, path: String, u0: DataFrame, ks0: KeySet,
-      maxDeltaRows: Long, maxDeltaFiles: Int,
-      allowEvolution: Boolean): MergeStats = {
-    val (fs, root) = fsOf(spark, path)
-    val snap = snapshot(spark, path)
-    val schema0 = tableSchemaOf(spark, snap)
-    // writer boundary (the mergeOnce rationale): logical in, physical
-    // below — re-derived per OCC attempt
-    val (u, ks, cm1) = inbound(snap.colMap, schema0, u0, ks0)
-    val keyCols = ks.keyCols
-    val nU = ks.size
-    // persisted-state-vs-frame mismatch: IllegalStateException, so a
-    // caller's IllegalArgumentException fallback can't bury it (the
-    // writeBatch bloom-guard convention). SET equality — join keys are
-    // unordered (the mergeOnce fold rationale).
-    if (snap.rowLevel && snap.dvKeys.toSet != keyCols.toSet)
-      throw new IllegalStateException(
-        s"table at $path carries row-level state keyed by " +
-          s"[${snap.dvKeys.map(snap.colMap.logicalOf).mkString(",")}] — " +
-          "mergeLite by the same keys")
-    // stats ride into the discovery probes (conservative pruning)
-    val base = relationFor(spark, snap.entries, snap.stats, Some(schema0))
-    // the widened shape this commit records; every pre-existing file —
-    // base AND prior delta files — reads the new columns as NULL
-    val widened = conformedSchema(schema0, u, keyCols, allowEvolution)
-    val cols = widened.map(_.name)
-    if (nU == 0) {
-      // zero-row no-op — EXCEPT when it widens the schema: commit the
-      // manifest-only widening deterministically (merge()'s zero-row
-      // branch does the same), carrying every piece of row-level state
-      // verbatim. Declaring a column ahead of its backfill must not
-      // depend on which writer API the caller reached for. STRUCTURAL
-      // compare, not length (the rewriteMerge type-widening rationale).
-      if (asNullableSchema(widened) == asNullableSchema(schema0))
-        return MergeStats(snap.version, snap.entries.size + snap.delta.size, 0, 0, 0)
-      commit(fs, root, snap.version + 1,
-        encodeSnapshot(withSizes(fs, snap.entries), withSizes(fs, snap.delta),
-          snap.dvKeys, snap.dvFiles,
-          stats = statsUnderSchema(snap.stats, widened),
-          schemaJson = Some(asNullableSchema(widened).json),
-          deletes = withSizes(fs, snap.deletes), colMap = cm1,
-          dvLits = snap.dvLits))
-      return MergeStats(snap.version + 1,
-        snap.entries.size + snap.delta.size, 0, 0, 0)
-    }
-    // the suppression SCOPE: the base files holding a row one of the
-    // delta's keys supersedes, found by the same exact discovery the
-    // rewrite path uses (never a false negative — parquet filtering
-    // is exact above the pruning). Scoping is what keeps the read tax
-    // proportional to the REPLAY, not the table: unscoped, every full
-    // scan anti-joins the whole base (measured 4.6x on a 40M-row
-    // wide-key table); scoped, only the touched files pay, and an
-    // insert-only delta pays nothing. Discovery runs ONLY when it is
-    // cheap — the single-column In-pushdown path (bloom/footer-pruned
-    // point probes): a larger or multi-column batch would fall to the
-    // range+semi-join path, a full base key-column scan on hash
-    // domains, re-introducing on the WRITE path the very table-scale
-    // cost mergeLite exists to avoid. Such batches commit UNSCOPED
-    // (reads suppress over every base file — the correct, pre-scoping
-    // plan) and a later small batch re-scopes via the upgrade path.
-    def scopeOf(touched: Option[Set[String]]): Option[Seq[String]] =
-      touched.map(t => snap.entries.map(_.path).filter(p => t.contains(normalize(p))))
-    def filesFor(rows: Long): Int =
-      math.max(1L, (rows + InsertRowsPerFile - 1) / InsertRowsPerFile).toInt
-
-    // DELETE-tombstone interplay: a key u re-inserts must LEAVE the
-    // tombstone set in this same commit (the delta/deletes
-    // disjointness invariant — a key is superseded by its delta row OR
-    // by nothing, never both). One tombstone-sized probe decides; on
-    // overlap the surviving keys re-write as one fresh key file
-    // (key-only rows — the re-write is trivial next to the delta's
-    // wide rows, which is also why deletes never take an append path).
-    val deletesDf: Option[DataFrame] = if (snap.deletes.isEmpty) None
-      else Some(relationFor(spark, snap.deletes, Nil,
-        Some(keySchemaOf(schema0, keyCols))))
-    // gated like the delta probe below: a past-budget batch folds
-    // regardless, so broadcasting its full key set just to learn the
-    // overlap would be a wasted pre-fold job (review catch)
-    val delProbe: Option[(Long, Long)] =
-      if (nU <= maxDeltaRows) deletesDf.map(ks.overlap) else None
-    val delRemaining = delProbe.map(p => p._1 - p._2).getOrElse(0L)
-    /** The delete-file state this commit carries: untouched when u
-      * re-inserts no tombstoned key, else the surviving keys
-      * re-written (empty when u re-inserts them all). Only reached on
-      * the append/combine paths, where the probe always ran. */
-    def deleteState(): Seq[FileEntry] = delProbe match {
-      case None => Nil
-      case Some((_, 0L)) => withSizes(fs, snap.deletes)
-      case Some(_) if delRemaining == 0L => Nil
-      case Some(_) => writeBatch(spark, fs, root,
-        ks.anti(deletesDf.get).coalesce(1), keyOnly = true)
-    }
-    def commitDelta(
-        deltaEntries: Seq[FileEntry], scope: Option[Seq[String]],
-        fresh: Seq[FileEntry], delEntries: Seq[FileEntry]): Unit = {
-      val freshSet = fresh.map(e => normalize(e.path)).toSet
-      commit(fs, root, snap.version + 1,
-        encodeSnapshot(withSizes(fs, snap.entries), deltaEntries,
-          snap.dvKeys match { case Nil => keyCols; case pinned => pinned },
-          scope,
-          stats = carriedStats(spark.sparkContext.hadoopConfiguration,
-            statsUnderSchema(snap.stats, widened),
-            snap.entries ++
-              deltaEntries.filterNot(e => freshSet.contains(normalize(e.path))),
-            fresh),
-          colMap = cm1,
-          schemaJson = Some(asNullableSchema(widened).json),
-          deletes = delEntries,
-          // the commit's key set is provably prev ∪ batch: every key u
-          // re-inserts moves deletes→delta, every key it updates stays
-          // in the delta — the union never shrinks short of a fold
-          dvLits = ks.dvLitsAfter(spark, snap)))
-    }
-    // surviving delete KEYS, for the unscoped-upgrade discovery and the
-    // fold's removal set. Independent of the (gated) probe: the fold
-    // path must see the tombstones even when the probe was skipped; a
-    // probe-confirmed empty survivor set drops to None.
-    def deleteSurvivorKeys(): Option[DataFrame] =
-      deletesDf.filter(_ => delProbe.isEmpty || delRemaining > 0L)
-        .map(ks.anti)
-
-    val deltaDf = if (snap.delta.isEmpty) None
-      else Some(relationFor(spark, snap.delta, Nil, Some(schema0)))
-    // APPEND when the batch's keys are DISJOINT from the accumulated
-    // delta's — the common shape (new request_ids; redelivered keys
-    // supersede BASE rows, not delta rows): the old delta files are
-    // carried by reference and only the batch is written, so a
-    // sustained stream pays O(batch) per commit instead of re-writing
-    // a growing delta whole (quadratic between folds). Disjointness is
-    // what keeps last-wins trivial: keys stay unique ACROSS the delta
-    // file sets, so the read union needs no precedence order. The
-    // file-set cap bounds the read union's file count — hitting it
-    // falls back to one combine re-write (amortized 1/maxDeltaFiles).
-    // The disjointness probe is delta-sized (small by maxDeltaRows)
-    // and shares ONE delta pass with the row counts the fold check and
-    // the combine sizing need (left join against the unique-keyed
-    // batch preserves the delta's row count); nU > maxDeltaRows skips
-    // it — such a batch folds regardless.
-    val probe: Option[(Long, Long)] = // (delta rows, overlapping rows)
-      if (nU <= maxDeltaRows) deltaDf.map(ks.overlap) else None
-    // the budget covers the WHOLE suppression broadcast: delta rows
-    // plus surviving tombstones
-    val appendable = probe.exists(p => p._2 == 0L &&
-      p._1 + nU + delRemaining <= maxDeltaRows && snap.delta.size < maxDeltaFiles)
-    if (appendable) {
-      val n = probe.get._1 + nU // exact: disjoint
-      // a prior scope unions in (base entries are immutable while delta
-      // state exists, so its paths stay valid and its proof stays
-      // true); a prior UNSCOPED table upgrades here too when the FULL
-      // accumulated key set — delta ∪ batch ∪ surviving tombstones —
-      // is small enough to probe
-      val scope = scopeOf(snap.dvFiles match {
-        case Some(prior) =>
-          ks.pointTouched(base).map(_ ++ prior.map(normalize))
-        case None =>
-          val keysAll = (Seq(deltaDf.get.select(keyCols.map(col): _*),
-            u.select(keyCols.map(col): _*)) ++ deleteSurvivorKeys().toSeq)
-            .reduce(_ unionByName _)
-          KeySet.Frame(keysAll, keyCols, n + delRemaining).pointTouched(base)
-      })
-      val newFiles = writeBatch(spark, fs, root,
-        u.select(cols.map(col): _*).coalesce(filesFor(nU)))
-      commitRaceHookForTest()
-      try {
-        commitDelta(withSizes(fs, snap.delta) ++ newFiles, scope, newFiles,
-          deleteState())
-      } catch {
-        case e: FileAlreadyExistsException =>
-          // lost the OCC race. A PURE append (prior delta carried by
-          // construction; tombstones untouched — probe-confirmed zero
-          // re-insert overlap, or none exist) can try the disjointness
-          // rebase; a tombstone-touching commit re-runs whole.
-          return (if (delProbe.forall(_._2 == 0L))
-            rebaseRowLevelAppend(spark, fs, root, u, ks,
-              myDeltaFiles = newFiles, myTombstones = false,
-              mySchemaJson = Some(asNullableSchema(widened).json),
-              myColMap = cm1, baseEntries = snap.entries,
-              baseStats = snap.stats,
-              maxDeltaRows = maxDeltaRows, maxDeltaFiles = maxDeltaFiles)
-          else None).getOrElse(throw e)
-      }
-      return MergeStats(snap.version + 1, snap.entries.size + snap.delta.size,
-        0, newFiles.size, nU)
-    }
-    // COMBINE: fresh delta, overlapping keys (last-wins re-write of the
-    // delta — small by maxDeltaRows), the file-set cap's compaction, or
-    // the over-threshold fold below.
-    // Checkpointed when a prior delta exists: the combined frame feeds
-    // the write (or the fold's discovery + rewrite) — one computation
-    // of the delta scan and anti-join. u alone is already pinned by
-    // mergeLite's checkpoint.
-    val combined =
-      if (snap.delta.isEmpty) u.select(cols.map(col): _*)
-      else combinedDelta(padTo(deltaDf.get, widened), u, ks, cols)
-        .localCheckpoint(true)
-    try {
-      // exact without a job whenever the probe ran: combined =
-      // delta − overlap + batch (both inputs unique per key)
-      val n = probe.map(p => p._1 - p._2 + nU).getOrElse(
-        if (snap.delta.isEmpty) nU else combined.count())
-      if (n + delRemaining > maxDeltaRows) {
-        // past the read-tax bound: fold the combined rows in ONE rewrite
-        // merge (the compaction the row-level state was deferring),
-        // emitting a DV-free manifest — reporting the CALLER's row
-        // count, as every other path does. Scope-aware (the
-        // mergeOnce-fold rationale): the scope covers the delta AND
-        // tombstone keys exactly, so only u's keys pay a discovery
-        // scan; surviving tombstones drop their base rows via the
-        // rewrite's removal set.
-        val known: Option[Set[String]] =
-          snap.dvFiles.filter(_ => snap.rowLevel).map { scope =>
-            scope.map(normalize).toSet ++ ks.touchedFiles(base)
-          }
-        // checkpointed (the mergeOnce convention): rewriteMerge reads
-        // the removal frame up to three times — count, discovery,
-        // hit-file anti-join — and each replan would re-scan the
-        // tombstone files and re-broadcast u's keys (review catch)
-        val removeKeys = deleteSurvivorKeys().map(_.localCheckpoint(true))
-        try return rewriteMerge(spark, fs, root, snap.version, snap.entries,
-          combined, KeySet.Frame(combined, keyCols, n), snapStats = snap.stats,
-          tableSchema = schema0, allowEvolution = allowEvolution,
-          knownTouched = known,
-          removeKeys = removeKeys, colMap0 = cm1).copy(rowsUpserted = nU)
-        finally removeKeys.foreach(graft.util.Checkpoints.free)
-      }
-      // prior scope unions in; a prior UNSCOPED table upgrades once via
-      // discovery over the full key set — combined ∪ surviving
-      // tombstones — when that is small
-      val touchedNorm: Option[Set[String]] =
-        if (snap.dvFiles.isDefined || !snap.rowLevel)
-          ks.pointTouched(base).map(_ ++
-            snap.dvFiles.map(_.map(normalize)).getOrElse(Nil))
-        else KeySet.Frame(
-          (Seq(combined.select(keyCols.map(col): _*)) ++
-            deleteSurvivorKeys().toSeq).reduce(_ unionByName _),
-          keyCols, n + delRemaining).pointTouched(base)
-      val deltaFiles = writeBatch(spark, fs, root, combined.coalesce(filesFor(n)))
-      commitRaceHookForTest()
-      try {
-        commitDelta(deltaFiles, scopeOf(touchedNorm), deltaFiles, deleteState())
-      } catch {
-        case e: FileAlreadyExistsException =>
-          // the combine path is append-SHAPED only when there was no
-          // prior delta to rewrite (the first mergeLite on a DV-free
-          // table — combined IS the caller's batch) and the tombstones
-          // were untouched; a delta-rewriting combine re-runs whole
-          return (if (snap.delta.isEmpty && delProbe.forall(_._2 == 0L))
-            rebaseRowLevelAppend(spark, fs, root, u, ks,
-              myDeltaFiles = deltaFiles, myTombstones = false,
-              mySchemaJson = Some(asNullableSchema(widened).json),
-              myColMap = cm1, baseEntries = snap.entries,
-              baseStats = snap.stats,
-              maxDeltaRows = maxDeltaRows, maxDeltaFiles = maxDeltaFiles)
-          else None).getOrElse(throw e)
-      }
-      MergeStats(snap.version + 1, snap.entries.size, snap.delta.size,
-        deltaFiles.size, nU)
-    } finally if (snap.delta.nonEmpty) graft.util.Checkpoints.free(combined)
+    require(upserts.isDefined || deletes.isDefined,
+      "applyChanges needs an upsert side, a delete side, or both")
+    RowLevel(spark, path, upserts, deletes, keyCols, maxDeltaRows,
+      maxRetries, maxDeltaFiles, allowSchemaEvolution, "applyChanges")
   }
 
   /** MAINTENANCE RE-SCOPE (r14 verdict #2): give an UNSCOPED delta
@@ -3107,197 +2720,14 @@ object MergeTable {
     * nothing) but count toward the fold budget. Once accumulated
     * delta + tombstone rows would exceed `maxDeltaRows`, the call
     * FOLDS: one rewrite merge that drops every tombstoned row and
-    * materializes the delta, emitting a DV-free manifest. */
+    * materializes the delta, emitting a DV-free manifest.
+    * [[applyChanges]] with no upsert side. */
   def deleteLite(
       spark: SparkSession, path: String, keys: DataFrame,
       keyCols: Seq[String], maxDeltaRows: Long = DefaultMaxDeltaRows,
-      maxRetries: Int = 5): MergeStats = {
-    requireKeyCols(keyCols)
-    keyCols.foreach(k => require(
-      !k.exists(c => c == ',' || c == '\t' || c == '\n' || c == '\r'),
-      s"key column name not encodable in the manifest dvkeys line: '$k'"))
-    require(keyCols.forall(keys.columns.contains),
-      s"key ${keyCols.mkString(",")} missing from keys frame")
-    val u = keys.select(keyCols.map(col): _*).distinct().localCheckpoint(true)
-    try {
-      val ks = KeySet.validatedDeletes(u, keyCols)
-      var attempt = 0
-      while (attempt < maxRetries) {
-        attempt += 1
-        try return deleteLiteOnce(spark, path, u, ks, maxDeltaRows)
-        catch {
-          case _: FileAlreadyExistsException => // lost the race: re-snapshot
-        }
-      }
-      throw new CommitConflict(
-        s"deleteLite at $path lost $maxRetries optimistic commits in a row")
-    } finally graft.util.Checkpoints.free(u)
-  }
-
-  private def deleteLiteOnce(
-      spark: SparkSession, path: String, k0: DataFrame, ks0: KeySet,
-      maxDeltaRows: Long): MergeStats = {
-    val (fs, root) = fsOf(spark, path)
-    val snap = snapshot(spark, path)
-    val schema0 = tableSchemaOf(spark, snap)
-    // writer boundary (the mergeOnce rationale); the extended-map slot
-    // is discarded — a key naming no live column extends nothing that
-    // commits, and fails the membership check just below
-    val (k, ks, _) = inbound(snap.colMap, schema0, k0, ks0)
-    val keyCols = ks.keyCols
-    val nK = ks.size
-    if (snap.rowLevel && snap.dvKeys.toSet != keyCols.toSet)
-      throw new IllegalStateException(
-        s"table at $path carries row-level state keyed by " +
-          s"[${snap.dvKeys.map(snap.colMap.logicalOf).mkString(",")}] — " +
-          "deleteLite by the same keys")
-    require(keyCols.forall(schema0.fieldNames.contains),
-      s"key ${ks0.keyCols.mkString(",")} missing from table")
-    if (nK == 0)
-      return MergeStats(snap.version,
-        snap.entries.size + snap.delta.size + snap.deletes.size, 0, 0, 0)
-    val keySchema = keySchemaOf(schema0, keyCols)
-    // key TYPES must match the table's: a drifted type would silently
-    // tombstone nothing (the join never matches) — the requireConforms
-    // rationale, scoped to the key columns
-    k.schema.foreach { f =>
-      val t = keySchema(keySchema.fieldIndex(f.name)).dataType
-      require(f.dataType.catalogString == t.catalogString,
-        s"keys column ${f.name} has type ${f.dataType.catalogString} but " +
-          s"the table stores ${t.catalogString} — cast the keys frame")
-    }
-    val base = relationFor(spark, snap.entries, snap.stats, Some(schema0))
-    // delta interplay: keys living in the delta lose their delta row
-    // (the delta re-writes without them — small by maxDeltaRows)
-    val deltaDf = if (snap.delta.isEmpty) None
-      else Some(relationFor(spark, snap.delta, Nil, Some(schema0)))
-    val deltaProbe: Option[(Long, Long)] = deltaDf.map(ks.overlap)
-    val deltaRemaining = deltaProbe.map(p => p._1 - p._2).getOrElse(0L)
-    // the accumulated tombstone set: prior ∪ k (distinct — both inputs
-    // unique, overlap collapses in the union). With NO prior
-    // tombstones, k IS the combined set (already distinct, pinned by
-    // deleteLite's checkpoint): the union+distinct+checkpoint and its
-    // count were two jobs for an identity — and freeing that alias
-    // would unpersist k's own checkpoint out from under the retry loop,
-    // so the finally is gated on ownership.
-    val deletesDf = if (snap.deletes.isEmpty) None
-      else Some(relationFor(spark, snap.deletes, Nil, Some(keySchema)))
-    val combinesTombstones = deletesDf.isDefined
-    val allTombstones =
-      if (!combinesTombstones) k.select(keyCols.map(col): _*)
-      else (deletesDf.toSeq :+ k.select(keyCols.map(col): _*))
-        .reduce(_ unionByName _).distinct().localCheckpoint(true)
-    try {
-      val delTotal = if (combinesTombstones) allTombstones.count() else nK
-      if (deltaRemaining + delTotal > maxDeltaRows) {
-        // FOLD: drop every tombstoned row and materialize the delta
-        // survivors in the one rewrite the budget was deferring
-        val survivors = deltaProbe match {
-          case None => padTo(base.limit(0), schema0) // typed empty frame
-          case Some((_, 0L)) => deltaDf.get
-          case Some(_) => ks.anti(deltaDf.get)
-        }
-        val known: Option[Set[String]] = snap.dvFiles.map(scope =>
-          scope.map(normalize).toSet ++ ks.touchedFiles(base))
-        val st = rewriteMerge(spark, fs, root, snap.version, snap.entries,
-          survivors, KeySet.Frame(survivors, keyCols, deltaRemaining),
-          snapStats = snap.stats,
-          tableSchema = schema0, knownTouched = known,
-          removeKeys = Some(allTombstones), colMap0 = snap.colMap)
-        if (st.version != snap.version) return st.copy(rowsUpserted = 0)
-        // nothing touched and no delta: the tombstones provably
-        // suppress nothing — the correct folded state is a clean
-        // entries-only manifest (deleting absent keys is a no-op)
-        commit(fs, root, snap.version + 1,
-          encodeSnapshot(withSizes(fs, snap.entries), Nil, Nil,
-            stats = snap.stats,
-            schemaJson = Some(asNullableSchema(schema0).json),
-            colMap = snap.colMap, dvLits = None))
-        return MergeStats(snap.version + 1, snap.entries.size, 0, 0, 0)
-      }
-      // normal path: carry/re-write the delta, write the combined
-      // tombstone file, scope like mergeLite. The survivors anti-join
-      // is computed ONCE, and CHECKPOINTED only when it genuinely has
-      // two consumers — the delta re-write AND the unscoped-upgrade
-      // discovery (review catch); on a SCOPED table the discovery
-      // below never reads it, so the checkpoint job is skipped and the
-      // write consumes the plan directly.
-      val deltaTouched = deltaProbe.exists(_._2 > 0L)
-      val deltaRewritten = deltaTouched && deltaRemaining > 0L
-      val survivorsCkpt: Option[DataFrame] =
-        if (deltaRewritten && snap.dvFiles.isEmpty)
-          Some(ks.anti(deltaDf.get).localCheckpoint(true))
-        else None
-      try {
-        val newDelta: Seq[FileEntry] = deltaProbe match {
-          case None => Nil
-          case Some((_, 0L)) => withSizes(fs, snap.delta)
-          case Some(_) if deltaRemaining == 0L => Nil
-          case Some(_) => writeBatch(spark, fs, root,
-            survivorsCkpt.getOrElse(ks.anti(deltaDf.get))
-              .coalesce(math.max(1, snap.delta.size)))
-        }
-        val delFiles = writeBatch(spark, fs, root, allTombstones.coalesce(1),
-          keyOnly = true)
-        commitRaceHookForTest()
-        val scope: Option[Seq[String]] = (snap.dvFiles match {
-          case Some(prior) =>
-            ks.pointTouched(base).map(_ ++ prior.map(normalize))
-          case None =>
-            // an untouched delta's keys are all disjoint from k, so the
-            // raw delta frame stands in for the survivors there
-            val keysAll = (Seq(allTombstones) ++
-              (if (deltaRemaining == 0L) Nil
-               else Seq(survivorsCkpt.getOrElse(deltaDf.get)
-                 .select(keyCols.map(col): _*)))).reduce(_ unionByName _)
-            KeySet.Frame(keysAll, keyCols, delTotal + deltaRemaining)
-              .pointTouched(base)
-        }).map(t => snap.entries.map(_.path).filter(p => t.contains(normalize(p))))
-        try {
-          commit(fs, root, snap.version + 1,
-            encodeSnapshot(withSizes(fs, snap.entries), newDelta,
-              snap.dvKeys match { case Nil => keyCols; case pinned => pinned },
-              scope,
-              stats = carriedStats(spark.sparkContext.hadoopConfiguration,
-                snap.stats,
-                snap.entries ++ (if (deltaRewritten) Nil else newDelta),
-                if (deltaRewritten) newDelta else Nil),
-              schemaJson = Some(asNullableSchema(schema0).json),
-              deletes = delFiles, colMap = snap.colMap,
-              // prev ∪ batch: a deleted delta key moves delta→deletes,
-              // everything else stays put — the union never shrinks
-              dvLits = ks.dvLitsAfter(spark, snap)))
-        } catch {
-          case e: FileAlreadyExistsException =>
-            // lost the OCC race. Append-SHAPED only when the delta was
-            // carried untouched (no tombstoned key lived in it): the
-            // rebase appends MY keys as a fresh key-only file onto the
-            // tip's tombstone list (the combined file written above
-            // binds MY base's tombstones — stale vs the tip — and
-            // becomes a vacuum-reclaimable orphan)
-            return (if (!deltaTouched)
-              rebaseRowLevelAppend(spark, fs, root, k, ks,
-                myDeltaFiles = Nil, myTombstones = true,
-                mySchemaJson = Some(asNullableSchema(schema0).json),
-                myColMap = snap.colMap, baseEntries = snap.entries,
-                baseStats = snap.stats, maxDeltaRows = maxDeltaRows,
-                maxDeltaFiles = Int.MaxValue)
-            else None).getOrElse(throw e)
-        }
-        // honest churn accounting (review catch): a touched delta's old
-        // files were REPLACED, as was any prior tombstone file; fresh
-        // writes are the new delta set (when re-written) + the
-        // tombstone file — filesRewritten stays proportional to the
-        // row-level state, never the base
-        val deltaReplaced = if (deltaTouched) snap.delta.size else 0
-        MergeStats(snap.version + 1,
-          snap.entries.size + (if (deltaTouched) 0 else snap.delta.size),
-          deltaReplaced + snap.deletes.size,
-          delFiles.size + (if (deltaRewritten) newDelta.size else 0),
-          0)
-      } finally survivorsCkpt.foreach(graft.util.Checkpoints.free)
-    } finally if (combinesTombstones) graft.util.Checkpoints.free(allTombstones)
-  }
+      maxRetries: Int = 5): MergeStats =
+    RowLevel(spark, path, None, Some(keys), keyCols, maxDeltaRows,
+      maxRetries, DefaultMaxDeltaFiles, allowEvolution = false, "deleteLite")
 
   /** PREDICATE delete on the TOMBSTONE path — the bridge between
     * [[deleteWhere]] (predicate in, every matched file rewritten:
@@ -3914,7 +3344,7 @@ object MergeTable {
     * config (see [[init]]) so every writer path — merge, delete,
     * compact — maintains the filters without the caller threading
     * options through. */
-  private def writeBatch(
+  private[sources] def writeBatch(
       spark: SparkSession, fs: FileSystem, root: Path,
       df: DataFrame, keyOnly: Boolean = false): Seq[FileEntry] = {
     // manifest-line safety of the path\tsize codec needs no runtime
@@ -4063,7 +3493,7 @@ object MergeTable {
     * ([[Manifests.commit]]: atomic on HDFS-like filesystems and on the
     * local filesystem via temp file + link(2)). `lines` come from
     * [[encodeSnapshot]]. */
-  private def commit(
+  private[sources] def commit(
       fs: FileSystem, root: Path, version: Long, lines: Seq[String]): Unit =
     Manifests.commit(fs, manifestDir(root), version, lines)
 }

@@ -1,0 +1,417 @@
+package graft.sources
+
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import MergeTable._
+
+/** The one row-level writer: [[MergeTable.applyChanges]], and through it
+  * [[MergeTable.mergeLite]] (no delete side) and [[MergeTable.deleteLite]]
+  * (no upsert side). A call's upserts and deletes land in ONE manifest
+  * version — Delta's one-log-entry transaction of adds and removes — so
+  * no reader can pin a version holding half of it.
+  *
+  * Per attempt the writer takes one snapshot and, for the union `ks` of
+  * both key sets, runs one probe over the delta and one over the
+  * tombstones. Those two counts decide everything else without a job:
+  *
+  *  - the new DELTA is the prior delta minus `ks`, plus the upserts. A
+  *    delta `ks` does not touch is carried by reference and the upserts
+  *    append as their own file set (O(batch) per commit for a
+  *    sustained stream); a touched delta, or one at the `maxDeltaFiles`
+  *    cap, re-writes combined (small by `maxDeltaRows`);
+  *  - the new TOMBSTONES are the prior tombstones minus `ks`, plus the
+  *    deletes: a re-inserted key leaves the tombstone set in the commit
+  *    that re-inserts it, and a deleted delta key moves delta→tombstones
+  *    (its base row must stay suppressed). The two sets stay disjoint,
+  *    and the tombstones stay ONE key-only file — narrow rows, so
+  *    re-writing the accumulated set costs little next to the delta;
+  *  - once the new delta + tombstone rows would pass `maxDeltaRows`, the
+  *    call FOLDS instead: one rewrite merge of the new delta that drops
+  *    every tombstoned row, emitting a DV-free manifest.
+  *
+  * The suppression is SCOPED as every row-level commit is: the prior
+  * scope plus the base files a cheap point probe proves hold a key of
+  * `ks` (single key column, ≤ [[KeySet.DiscoveryInLimit]] keys); larger
+  * sets commit unscoped rather than scan the base key column on the
+  * write path, and [[MergeTable.rescopeDelta]] bounds that later. */
+private[sources] object RowLevel {
+
+  def apply(
+      spark: SparkSession, path: String,
+      upserts: Option[DataFrame], deletes: Option[DataFrame],
+      keyCols: Seq[String], maxDeltaRows: Long, maxRetries: Int,
+      maxDeltaFiles: Int, allowEvolution: Boolean, caller: String): MergeStats = {
+    requireKeyCols(keyCols)
+    require(maxDeltaFiles >= 1, "maxDeltaFiles must be >= 1")
+    // '\r' too: Manifests.read splits lines on CR as well as LF, so a
+    // CR inside a stored name would shear the dvkeys line into a
+    // phantom entry and corrupt every later snapshot
+    keyCols.foreach(k => require(
+      !k.exists(c => c == ',' || c == '\t' || c == '\n' || c == '\r'),
+      s"key column name not encodable in the manifest dvkeys line: '$k'"))
+    upserts.foreach(u => require(keyCols.forall(u.columns.contains),
+      s"key ${keyCols.mkString(",")} missing from updates"))
+    deletes.foreach(k => require(keyCols.forall(k.columns.contains),
+      s"key ${keyCols.mkString(",")} missing from keys frame"))
+    val u = upserts.map(_.localCheckpoint(true)) // one computation across retries
+    try {
+      val ch = KeySet.validatedChanges(u, deletes, keyCols)
+      try {
+        var attempt = 0
+        while (attempt < maxRetries) {
+          attempt += 1
+          try return once(spark, path, u, ch, maxDeltaRows, maxDeltaFiles,
+            allowEvolution, caller)
+          catch {
+            case _: FileAlreadyExistsException => // lost the race: re-snapshot
+          }
+        }
+        throw new CommitConflict(
+          s"$caller at $path lost $maxRetries optimistic commits in a row")
+      } finally ch.deletes.foreach(graft.util.Checkpoints.free)
+    } finally u.foreach(graft.util.Checkpoints.free)
+  }
+
+  private def once(
+      spark: SparkSession, path: String, u0: Option[DataFrame],
+      ch: KeySet.Changes, maxDeltaRows: Long, maxDeltaFiles: Int,
+      allowEvolution: Boolean, caller: String): MergeStats = {
+    val (fs, root) = fsOf(spark, path)
+    val snap = snapshot(spark, path)
+    val schema0 = tableSchemaOf(spark, snap)
+    // writer boundary (the mergeOnce rationale): logical in, physical
+    // below — re-derived per OCC attempt. The delete side's extended
+    // column map is discarded: a key naming no live column extends
+    // nothing that commits, and fails the membership check below.
+    val logicalKeys = ch.ks.keyCols
+    val ub = u0.map(inbound(snap.colMap, schema0, _, logicalKeys))
+    val db = ch.deletes.map(inbound(snap.colMap, schema0, _, logicalKeys))
+    val u = ub.map(_._1)
+    val d = db.map(_._1)
+    val keyCols = (ub orElse db).get._2
+    val cm1 = ub.fold(snap.colMap)(_._3)
+    val ks = if (keyCols == logicalKeys) ch.ks else ch.ks.rebound(
+      ch.ks.keys.select(logicalKeys.zip(keyCols).map { case (l, p) => col(l).as(p) }: _*),
+      keyCols)
+    val (nU, nD) = (ch.nU, ch.nD)
+    // persisted-state-vs-frame mismatch: IllegalStateException, so a
+    // caller's IllegalArgumentException fallback can't bury it (the
+    // writeBatch bloom-guard convention). SET equality — join keys are
+    // unordered (the mergeOnce fold rationale).
+    if (snap.rowLevel && snap.dvKeys.toSet != keyCols.toSet)
+      throw new IllegalStateException(
+        s"table at $path carries row-level state keyed by " +
+          s"[${snap.dvKeys.map(snap.colMap.logicalOf).mkString(",")}] — " +
+          s"$caller by the same keys")
+    // the widened shape this commit records; every pre-existing file —
+    // base AND prior delta files — reads the new columns as NULL
+    val widened = u.fold {
+      require(keyCols.forall(schema0.fieldNames.contains),
+        s"key ${logicalKeys.mkString(",")} missing from table")
+      schema0
+    }(conformedSchema(schema0, _, keyCols, allowEvolution))
+    // delete key TYPES must match the table's: a drifted type would
+    // silently tombstone nothing (the join never matches) — the
+    // requireConforms rationale, scoped to the key columns
+    d.foreach(_.schema.foreach { f =>
+      val t = widened(f.name).dataType
+      require(f.dataType.catalogString == t.catalogString,
+        s"keys column ${f.name} has type ${f.dataType.catalogString} but " +
+          s"the table stores ${t.catalogString} — cast the keys frame")
+    })
+    val sj = Some(asNullableSchema(widened).json)
+    if (nU == 0 && nD == 0) {
+      val kept = snap.entries.size + snap.delta.size + snap.deletes.size
+      // zero-row no-op — EXCEPT when it widens the schema: commit the
+      // manifest-only widening deterministically (merge()'s zero-row
+      // branch does the same), carrying every piece of row-level state
+      // verbatim. STRUCTURAL compare, not length (the rewriteMerge
+      // type-widening rationale).
+      if (asNullableSchema(widened) == asNullableSchema(schema0))
+        return MergeStats(snap.version, kept, 0, 0, 0)
+      commit(fs, root, snap.version + 1,
+        encodeSnapshot(withSizes(fs, snap.entries), withSizes(fs, snap.delta),
+          snap.dvKeys, snap.dvFiles,
+          stats = statsUnderSchema(snap.stats, widened), schemaJson = sj,
+          deletes = withSizes(fs, snap.deletes), colMap = cm1,
+          dvLits = snap.dvLits))
+      return MergeStats(snap.version + 1, kept, 0, 0, 0)
+    }
+    // stats ride into the discovery probes (conservative pruning)
+    val base = relationFor(spark, snap.entries, snap.stats, Some(schema0))
+    val deltaDf = if (snap.delta.isEmpty) None
+      else Some(relationFor(spark, snap.delta, Nil, Some(schema0)))
+    val tombDf = if (snap.deletes.isEmpty) None
+      else Some(relationFor(spark, snap.deletes, Nil,
+        Some(keySchemaOf(schema0, keyCols))))
+    // (rows, rows carrying a key of ks) of the delta and of the
+    // tombstones, in one job. A call past the budget folds whatever they
+    // say, so it skips them.
+    val probed = nU + nD <= maxDeltaRows
+    val counts = ks.overlaps(if (probed) deltaDf.toSeq ++ tombDf.toSeq else Nil)
+    val deltaProbe = deltaDf.filter(_ => probed).map(_ => counts.head)
+    val tombProbe = tombDf.filter(_ => probed).map(_ => counts.last)
+    val (deltaRows, deltaHit) = deltaProbe.getOrElse((0L, 0L))
+    val (tombRows, tombHit) = tombProbe.getOrElse((0L, 0L))
+    // exact: ks is unique, and each side's survivors are disjoint from it
+    val nDelta = deltaRows - deltaHit + nU
+    val nTomb = tombRows - tombHit + nD
+    val cols = widened.map(_.name)
+    // a probe that saw no key of ks spares the anti-join
+    def withoutKs(df: DataFrame, probe: Option[(Long, Long)]) =
+      if (probe.exists(_._2 == 0L)) df else ks.anti(df)
+    // delta survivors ∪ upserts, projected to the widened shape
+    def newDelta(): DataFrame = (deltaDf.map(df =>
+        withoutKs(padTo(df, widened), deltaProbe).select(cols.map(col): _*)).toSeq ++
+      u.map(_.select(cols.map(col): _*))).reduceOption(_ unionByName _)
+      .getOrElse(padTo(base.limit(0), widened)) // typed empty frame
+    // tombstone survivors ∪ deletes — disjoint, so already distinct
+    def newTombs(): Option[DataFrame] =
+      (tombDf.map(withoutKs(_, tombProbe)).toSeq ++ d).reduceOption(_ unionByName _)
+
+    if (!probed || nDelta + nTomb > maxDeltaRows) {
+      // past the read-tax bound: FOLD the new delta in ONE rewrite merge
+      // that drops every tombstoned row — the compaction the row-level
+      // state was deferring — reporting the CALLER's upsert count.
+      // Scope-aware (the mergeOnce-fold rationale): the prior scope
+      // covers the delta and tombstone keys exactly, so only ks pays a
+      // discovery scan. Both frames are checkpointed when they derive
+      // from prior state: rewriteMerge reads each up to three times
+      // (count, discovery, hit-file anti-join).
+      val combined =
+        if (deltaDf.isEmpty) newDelta() else newDelta().localCheckpoint(true)
+      val removeKeys =
+        if (tombDf.isEmpty) d else newTombs().map(_.localCheckpoint(true))
+      try {
+        val known: Option[Set[String]] = snap.dvFiles.map(scope =>
+          scope.map(normalize).toSet ++ ks.touchedFiles(base))
+        val n = if (probed) nDelta else if (deltaDf.isEmpty) nU else combined.count()
+        val st = rewriteMerge(spark, fs, root, snap.version, snap.entries,
+          combined, KeySet.Frame(combined, keyCols, n), snapStats = snap.stats,
+          tableSchema = schema0, allowEvolution = allowEvolution,
+          knownTouched = known, removeKeys = removeKeys, colMap0 = cm1)
+        if (st.version != snap.version) return st.copy(rowsUpserted = nU)
+        // nothing to write and nothing touched: the tombstones provably
+        // suppress nothing — the folded state is a clean entries-only
+        // manifest (deleting absent keys is a no-op)
+        commit(fs, root, snap.version + 1,
+          encodeSnapshot(withSizes(fs, snap.entries), Nil, Nil,
+            stats = snap.stats, schemaJson = Some(asNullableSchema(schema0).json),
+            colMap = cm1, dvLits = None))
+        return MergeStats(snap.version + 1, snap.entries.size, 0, 0, 0)
+      } finally {
+        if (deltaDf.nonEmpty) graft.util.Checkpoints.free(combined)
+        if (tombDf.nonEmpty) removeKeys.foreach(graft.util.Checkpoints.free)
+      }
+    }
+
+    def filesFor(rows: Long): Int =
+      math.max(1L, (rows + InsertRowsPerFile - 1) / InsertRowsPerFile).toInt
+    // an untouched delta is carried BY REFERENCE and the upserts append
+    // their own file set — keys stay unique ACROSS delta file sets, so
+    // the read union needs no precedence order. A touched delta, or one
+    // at the file-set cap (bounding the read union's file count,
+    // amortized 1/maxDeltaFiles), re-writes combined.
+    val deltaRewritten = snap.delta.nonEmpty &&
+      (deltaHit > 0 || (nU > 0 && snap.delta.size >= maxDeltaFiles))
+    val carried = if (deltaRewritten) Nil else withSizes(fs, snap.delta)
+    val fresh =
+      if (deltaRewritten && nDelta > 0)
+        writeBatch(spark, fs, root, newDelta().coalesce(filesFor(nDelta)))
+      else if (deltaRewritten) Nil
+      else u.fold(Seq.empty[FileEntry])(df => writeBatch(spark, fs, root,
+        df.select(cols.map(col): _*).coalesce(filesFor(nU))))
+    val tombsRewritten = nD > 0 || tombHit > 0
+    val tombs =
+      if (!tombsRewritten) withSizes(fs, snap.deletes)
+      else if (nTomb == 0) Nil
+      else writeBatch(spark, fs, root, newTombs().get.coalesce(1), keyOnly = true)
+    // the SCOPE: the prior scope unions in (base entries are immutable
+    // while row-level state exists, so its paths stay valid and its
+    // proof stays true); a prior UNSCOPED table upgrades here when the
+    // FULL new key set — prior delta and tombstone keys ∪ ks — is small
+    // enough to point-probe
+    val touched: Option[Set[String]] = snap.dvFiles match {
+      case Some(prior) => ks.pointTouched(base).map(_ ++ prior.map(normalize))
+      case None if !snap.rowLevel => ks.pointTouched(base)
+      case None => KeySet.Frame(KeySet.fromSnapshot(spark, snap).union(ks).keys,
+        keyCols, nDelta + nTomb).pointTouched(base)
+    }
+    val scope = touched.map(t =>
+      snap.entries.map(_.path).filter(p => t.contains(normalize(p))))
+    commitRaceHookForTest()
+    try {
+      commit(fs, root, snap.version + 1,
+        encodeSnapshot(withSizes(fs, snap.entries), carried ++ fresh,
+          snap.dvKeys match { case Nil => keyCols; case pinned => pinned },
+          scope,
+          stats = carriedStats(spark.sparkContext.hadoopConfiguration,
+            statsUnderSchema(snap.stats, widened), snap.entries ++ carried, fresh),
+          schemaJson = sj, deletes = tombs, colMap = cm1,
+          // the commit's key set is provably prev ∪ ks: an upserted key
+          // moves base→delta or tombstones→delta, a deleted one moves
+          // base→tombstones or delta→tombstones — the union never
+          // shrinks short of a fold
+          dvLits = ks.dvLitsAfter(spark, snap)))
+    } catch {
+      case e: FileAlreadyExistsException =>
+        // lost the OCC race. APPEND-SHAPED commits — the prior delta
+        // carried verbatim and no prior tombstone touched — can rebase
+        // onto the winner's tip: my delta files as written, my delete
+        // keys as a tombstone file of their own (the file written above
+        // is exactly that when there were no prior tombstones; else it
+        // binds MY base's tombstones, stale vs the tip, and becomes a
+        // vacuum-reclaimable orphan). Anything else re-runs whole.
+        return (if (!deltaRewritten && tombHit == 0)
+          rebaseRowLevelAppend(spark, fs, root, ks,
+            myDeltaFiles = fresh,
+            myTombstones = () =>
+              if (nD == 0) Nil
+              else if (snap.deletes.isEmpty) tombs
+              else writeBatch(spark, fs, root, d.get.coalesce(1), keyOnly = true),
+            myUpserts = nU, mySchemaJson = sj, myColMap = cm1,
+            baseEntries = snap.entries, baseStats = snap.stats,
+            maxDeltaRows = maxDeltaRows, maxDeltaFiles = maxDeltaFiles)
+         else None).getOrElse(throw e)
+    }
+    MergeStats(snap.version + 1,
+      snap.entries.size + carried.size +
+        (if (tombsRewritten) 0 else snap.deletes.size),
+      (if (deltaRewritten) snap.delta.size else 0) +
+        (if (tombsRewritten) snap.deletes.size else 0),
+      fresh.size + (if (tombsRewritten) tombs.size else 0),
+      nU)
+  }
+
+  /** REBASE of a lost row-level APPEND commit onto the winner's tip —
+    * the second rung of multi-writer reconciliation after
+    * [[MergeTable.rebaseInsertOnly]]: two streams writing row-level
+    * changes on DISJOINT keys land in one retry round instead of
+    * serializing via full re-attempts. The commit appends my delta files
+    * (the upserts) and my tombstone file (the deletes) together.
+    *
+    * INVARIANT ANALYSIS — what a row-level append claims, and how each
+    * claim is re-proven against the winner's tip:
+    *
+    *  1. "My keys appear in no OTHER suppression state" (key uniqueness
+    *     across delta files; the tombstone/delta disjointness
+    *     invariant). My own probes proved this against MY base's
+    *     delta/tombstones; the winner may have changed both — so the
+    *     claim is re-proven directly against the TIP's row-level state:
+    *     one overlap probe over tip.delta and tip.deletes (both
+    *     maxDeltaRows-bounded frames), zero overlap required.
+    *     Probing tip state directly assumes nothing about WHAT the
+    *     winner did (append, combine, fold, rescope — all covered).
+    *  2. "My scope names every base file holding one of my keys." Files
+    *     CARRIED from my base are immutable, so the proof holds for
+    *     them; files the winner ADDED (insert batch, fold/compaction
+    *     output, deleteWhere rewrite) could hold my keys — probed over
+    *     exactly `tip − base`, the rebaseInsertOnly idiom (cost ∝ the
+    *     winner's churn). Zero hits required: a hit means a scoped
+    *     commit would fail to suppress that file's row — a visible
+    *     duplicate (an upsert) or a missed deletion (a delete). Files
+    *     the winner REMOVED drop out of the composed scope (inert).
+    *  3. "My files carry schema X under mapping M" — exact equality of
+    *     tip.schemaJson/tip.colMap, as in rebaseInsertOnly (an evolving
+    *     or renaming winner refuses; the full retry handles it).
+    *  4. "The suppression stays within budget" — re-checked against the
+    *     TIP's footer row counts plus mine; past-budget refuses (the
+    *     full retry folds, the correct response to a full suppression
+    *     set), as does the delta file cap when I add delta files.
+    *
+    * FOLD commits never reach here: they go through
+    * [[MergeTable.rewriteMerge]], whose own rebase is gated to pure
+    * inserts — a fold's input is delta-carried state whose validity the
+    * r16 analysis showed cannot survive a winner. Delta- or
+    * tombstone-REWRITING commits are gated out at the call site: their
+    * commit replaces row-level files the winner may also have replaced,
+    * and key disjointness alone cannot reconcile two rewrites of the
+    * same file set. A torn rebase leaves my batch/tombstone files
+    * orphaned — vacuum-reclaimable, never referenced (the
+    * rebaseInsertOnly durability argument).
+    *
+    * Returns None when any check refuses — the caller rethrows and the
+    * outer loop re-attempts whole (today's always-correct path). */
+  private def rebaseRowLevelAppend(
+      spark: SparkSession, fs: FileSystem, root: Path, ks: KeySet,
+      myDeltaFiles: Seq[FileEntry], myTombstones: () => Seq[FileEntry],
+      myUpserts: Long, mySchemaJson: Option[String], myColMap: ColMap,
+      baseEntries: Seq[FileEntry], baseStats: Seq[TableStats],
+      maxDeltaRows: Long, maxDeltaFiles: Int): Option[MergeStats] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keyCols = ks.keyCols
+    // written at most ONCE, at the first commit attempt, and reused
+    // across re-validations (files are immutable; a refused rebase
+    // leaves it a vacuum-reclaimable orphan, never referenced)
+    lazy val tombFiles: Seq[FileEntry] = myTombstones()
+    var attempt = 0
+    while (attempt < 3) {
+      attempt += 1
+      val tip = snapshot(spark, root.toString)
+      if (tip.schemaJson != mySchemaJson) return None      // claim 3
+      if (tip.colMap != myColMap) return None
+      if (tip.dvKeys.nonEmpty && tip.dvKeys.toSet != keyCols.toSet)
+        return None // mismatched key set: let the retry raise loudly
+      val schema = tip.schema.getOrElse(return None)       // legacy: no rebase
+      // claim 4: budget and file cap against the TIP's state plus mine
+      if (footerRowCount(conf, tip.delta) + footerRowCount(conf, tip.deletes) +
+          ks.size > maxDeltaRows) return None
+      if (myDeltaFiles.nonEmpty &&
+          tip.delta.size + myDeltaFiles.size > maxDeltaFiles) return None
+      // claim 1: my keys vs the tip's row-level state, both directions
+      if (ks.overlaps(
+          (if (tip.delta.isEmpty) Nil
+           else Seq(relationFor(spark, tip.delta, Nil, Some(schema)))) ++
+          (if (tip.deletes.isEmpty) Nil
+           else Seq(relationFor(spark, tip.deletes, Nil,
+             Some(keySchemaOf(schema, keyCols)))))).exists(_._2 > 0))
+        return None
+      // claim 2: my keys vs the files the winner added
+      val baseSet = baseEntries.map(e => normalize(e.path)).toSet
+      val added = tip.entries.filterNot(e => baseSet.contains(normalize(e.path)))
+      if (added.nonEmpty && ks.hitsAny(
+          relationFor(spark, withSizes(fs, added), tip.stats, Some(schema))))
+        return None // a scoped commit would miss this file
+      // scope composition: the tip's scope covers the tip's own
+      // suppression keys; mine covers my keys (point-probed against MY
+      // base — sound for carried files, and added files were just
+      // proven key-free; removed files filter out). Either side
+      // unscoped → unscoped (suppress-everywhere is always sound;
+      // rescopeDelta bounds it later).
+      val scope: Option[Seq[String]] =
+        if (tip.rowLevel && tip.dvFiles.isEmpty) None
+        else ks.pointTouched(
+            relationFor(spark, baseEntries, baseStats, Some(schema)))
+          .map { mine =>
+            val tipScopeNorm =
+              tip.dvFiles.getOrElse(Nil).map(normalize).toSet
+            tip.entries.map(_.path).filter(p =>
+              mine.contains(normalize(p)) ||
+                tipScopeNorm.contains(normalize(p)))
+          }
+      try {
+        commit(fs, root, tip.version + 1,
+          encodeSnapshot(withSizes(fs, tip.entries),
+            withSizes(fs, tip.delta) ++ myDeltaFiles,
+            tip.dvKeys match { case Nil => keyCols; case pinned => pinned },
+            scope,
+            stats = carriedStats(conf, tip.stats,
+              tip.entries ++ tip.delta, myDeltaFiles),
+            schemaJson = tip.schemaJson,
+            deletes = withSizes(fs, tip.deletes) ++ tombFiles,
+            colMap = tip.colMap,
+            // the rebase appends MY disjoint keys onto the TIP's
+            // row-level state: the recorded set extends tip ∪ mine
+            dvLits = ks.dvLitsAfter(spark, tip)))
+        return Some(MergeStats(tip.version + 1,
+          tip.entries.size + tip.delta.size, 0,
+          myDeltaFiles.size + tombFiles.size, myUpserts))
+      } catch {
+        case _: FileAlreadyExistsException => // another winner: re-validate
+      }
+    }
+    None
+  }
+}

@@ -250,20 +250,21 @@ object JobProcessor {
     * reference's retraction (`DELETE FROM knowledge_base WHERE
     * content_hash = $1`, `vector_service.py`) gained a batch API in
     * [[graft.kb.KnowledgeBase.retractByContentHash]]; this is its
-    * streaming twin: upserts route through
-    * [[graft.sources.MergeTable.mergeLite]], deletes through
-    * [[graft.sources.MergeTable.deleteLite]] — both O(batch) writes.
+    * streaming twin: each micro-batch's upserts and deletes land in ONE
+    * [[graft.sources.MergeTable.applyChanges]] commit — an O(batch)
+    * write, and one manifest version per non-empty micro-batch, so no
+    * reader can pin a version holding only part of a batch.
     *
     * Per-batch semantics match [[graft.query.Relational.applyChanges]]:
     * last-op-wins per key under `(seq desc, content fingerprint)` —
     * the fingerprint tie-break keeps a replayed batch picking the SAME
     * winner (the mergeResponsesBatch hazard) — so after the window a
-    * key is EITHER upserted or deleted, never both, and the two keyed
-    * writes commute. Cross-batch ordering is the UPSTREAM's contract:
-    * feed this sink [[StreamingCdc.changelog]] (whose per-key state
-    * admits only monotone-seq winners) when the source can deliver
-    * stragglers; a raw at-least-once source applies each batch's
-    * winners as newest.
+    * key is EITHER upserted or deleted, never both, which is what the
+    * one-commit writer requires of its two sides. Cross-batch ordering
+    * is the UPSTREAM's contract: feed this sink
+    * [[StreamingCdc.changelog]] (whose per-key state admits only
+    * monotone-seq winners) when the source can deliver stragglers; a
+    * raw at-least-once source applies each batch's winners as newest.
     *
     * Exactly-once row state under at-least-once foreachBatch, the
     * runToMergeTable argument extended to deletes: a replayed batch
@@ -278,20 +279,15 @@ object JobProcessor {
     ops.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // one materialization (see run); empty batches commit nothing
-        batch.persist()
-        try {
-          if (batch.count() > 0)
-            applyCdcBatch(spark, batch.toDF(), tablePath, keyCols, seqCol,
-              opCol, deleteValue)
-          ()
-        } finally batch.unpersist()
+        applyCdcBatch(spark, batch.toDF(), tablePath, keyCols, seqCol,
+          opCol, deleteValue)
       }
       .start()
 
   /** One micro-batch of [[runChangesToMergeTable]]: reconcile the
-    * batch's ops per key, then route the winners to the two keyed
-    * writes. */
+    * batch's ops per key, then commit the winners — upserts and
+    * deletes together — as one row-level change. An empty batch
+    * commits nothing. */
   private[graft] def applyCdcBatch(
       spark: SparkSession, batch: DataFrame, tablePath: String,
       keyCols: Seq[String], seqCol: String, opCol: String,
@@ -304,42 +300,44 @@ object JobProcessor {
     val winners = graft.operators.Dedup.firstWins(
       batch, keyCols, Seq(col(seqCol).desc, contentTie)).persist()
     try {
-      // ONE aggregate over the persisted winners replaces three actions
-      // (NULL-op probe, ups count, dels count — the KeySet.validated
-      // aggregate, micro-batch form): a NULL op matches NEITHER route
-      // filter below — the row would vanish silently — so it is refused
-      // loudly like the NULL-key contract.
-      val routed = winners.select(
+      // ONE aggregate over the persisted winners routes the batch and
+      // shows an empty one (the KeySet.validated aggregate, micro-batch
+      // form), in a single task so it plans no exchange: a NULL op
+      // matches NEITHER route filter below — the row would vanish
+      // silently — so it is refused loudly like the NULL-key contract.
+      val routed = winners.coalesce(1).select(
         count(when(col(opCol).isNull, lit(1))).as("nNullOp"),
         count(when(col(opCol) =!= deleteValue, lit(1))).as("nUps"),
         count(when(col(opCol) === deleteValue, lit(1))).as("nDels")).head()
       require(routed.getLong(0) == 0L,
         s"batch contains NULL in op column '$opCol'; every CDC op must " +
           s"be an upsert marker or '$deleteValue'")
-      val ups = winners.filter(col(opCol) =!= deleteValue).drop(opCol)
-      val dels = winners.filter(col(opCol) === deleteValue)
-        .select(keyCols.map(col): _*)
-      if (routed.getLong(1) > 0) {
-        if (!MT.exists(spark, tablePath)) {
-          // init bypasses mergeLite's guards — enforce the NULL-key
-          // contract here (the mergeResponsesBatch rationale), and
-          // treat a lost exists→init race as "merge instead" per the
-          // OCC contract
-          require(ups.filter(keyCols.map(col(_).isNull).reduce(_ || _)).isEmpty,
-            s"batch contains NULL in key (${keyCols.mkString(",")}); " +
-              "merge-table keys must be non-null")
-          try { MT.init(spark, tablePath, ups, bloomKeys = keyCols); () }
-          catch {
-            case _: IllegalArgumentException |
-                 _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-              MT.mergeLite(spark, tablePath, ups, keyCols); ()
-          }
-        } else { MT.mergeLite(spark, tablePath, ups, keyCols); () }
+      val ups = Option.when(routed.getLong(1) > 0)(
+        winners.filter(col(opCol) =!= deleteValue).drop(opCol))
+      val dels = Option.when(routed.getLong(2) > 0)(
+        winners.filter(col(opCol) === deleteValue).select(keyCols.map(col): _*))
+      def commit(): Unit = {
+        MT.applyChanges(spark, tablePath, ups, dels, keyCols); ()
       }
-      // a delete against a never-initialized table removes nothing —
-      // and the exists re-check covers the init this very batch made
-      if (routed.getLong(2) > 0 && MT.exists(spark, tablePath)) {
-        MT.deleteLite(spark, tablePath, dels, keyCols); ()
+      if (ups.isEmpty && dels.isEmpty) () // an empty batch commits nothing
+      else if (MT.exists(spark, tablePath)) commit()
+      else ups.foreach { u =>
+        // the first batch creates the table from its upserts alone: its
+        // deletes name keys the upserts do not hold (one op per key
+        // after the window), so on a table that did not exist they
+        // remove nothing, and init IS the batch's one version. Init
+        // bypasses the writer's guards — enforce the NULL-key contract
+        // here (the mergeResponsesBatch rationale) — and a lost
+        // exists→init race commits the whole batch instead, per the
+        // OCC contract.
+        require(u.filter(keyCols.map(col(_).isNull).reduce(_ || _)).isEmpty,
+          s"batch contains NULL in key (${keyCols.mkString(",")}); " +
+            "merge-table keys must be non-null")
+        try { MT.init(spark, tablePath, u, bloomKeys = keyCols); () }
+        catch {
+          case _: IllegalArgumentException |
+               _: org.apache.hadoop.fs.FileAlreadyExistsException => commit()
+        }
       }
     } finally winners.unpersist()
   }

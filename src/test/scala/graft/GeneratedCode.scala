@@ -31,6 +31,10 @@ object GeneratedCode {
     }
     val marker = s"codegen_sentinel_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     def isSentinel(p: SparkPlan) = p.output.exists(_.name == marker)
+    // a late end event of an earlier action (the listener bus is async)
+    // must not land in this call's plans: drain before registering, as
+    // JobCount does
+    org.apache.spark.JobCountBus.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       call

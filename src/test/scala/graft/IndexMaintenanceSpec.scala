@@ -610,8 +610,8 @@ class IndexMaintenanceSpec extends SparkSpec {
 
   test("full retraction pipeline: CDC stream (U/D) → keyed table → cursor sync purges serving") {
     // the r16 composition: StreamingCdc-shaped ops drive
-    // runChangesToMergeTable (upserts → mergeLite, deletes →
-    // deleteLite), and syncFromTable's CDF cursor carries BOTH kinds
+    // runChangesToMergeTable (each batch's upserts and deletes → one
+    // applyChanges commit), and syncFromTable's CDF cursor carries BOTH kinds
     // into the serving indexes — the reference's retraction
     // (DELETE WHERE content_hash) end-to-end from a stream.
     implicit val sqlCtx = spark.sqlContext

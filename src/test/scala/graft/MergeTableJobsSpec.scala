@@ -7,7 +7,11 @@ import graft.sources.MergeTable
   * its own job group and the listener counts only that group's jobs,
   * so jobs another suite leaves running cannot leak in. The ceilings
   * are the counts the writers launched before their key handling moved
-  * into one `KeySet`; a refactor may lower them, never raise them. */
+  * into one `KeySet`, lowered where the one row-level writer
+  * (`RowLevel`) launches fewer; a refactor may lower them, never raise
+  * them. The `applyChanges` and CDC micro-batch ceilings sit below
+  * what the same changes cost as a mergeLite plus a deleteLite (16 and
+  * 17 jobs; 19 for the micro-batch). */
 class MergeTableJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -41,7 +45,7 @@ class MergeTableJobsSpec extends SparkSpec {
     }
     val p1200 = freshPath()
     MergeTable.init(spark, p1200, rows(1 to 3000, "base"))
-    assertCeiling("merge 1200 keys", 14) {
+    assertCeiling("merge 1200 keys", 13) {
       MergeTable.merge(spark, p1200, rows(2401 to 3600, "new"), Seq("id"))
     }
     assert(MergeTable.read(spark, p600).count() === 3300)
@@ -50,21 +54,21 @@ class MergeTableJobsSpec extends SparkSpec {
 
   test("mergeLite: job ceilings for append, combine and past-budget fold") {
     val path = rowLevelTable()
-    assertCeiling("mergeLite append (100 disjoint keys)", 7) {
+    assertCeiling("mergeLite append (100 disjoint keys)", 6) {
       MergeTable.mergeLite(spark, path, rows(201 to 300, "a"), Seq("id"))
     }
-    assertCeiling("mergeLite combine (100 keys, 50 in the delta)", 8) {
+    assertCeiling("mergeLite combine (100 keys, 50 in the delta)", 6) {
       MergeTable.mergeLite(spark, path, rows(251 to 350, "c"), Seq("id"))
     }
     // delta now holds 250 keys: 101 more past a 300-row budget folds
-    assertCeiling("mergeLite past-budget fold", 10) {
+    assertCeiling("mergeLite past-budget fold", 8) {
       MergeTable.mergeLite(spark, path, rows(400 to 500, "f"), Seq("id"),
         maxDeltaRows = 300)
     }
     assert(!MergeTable.snapshot(spark, path).rowLevel)
     assert(MergeTable.read(spark, path).count() === 3000)
     val big = rowLevelTable()
-    assertCeiling("mergeLite append (1200 disjoint keys)", 9) {
+    assertCeiling("mergeLite append (1200 disjoint keys)", 8) {
       MergeTable.mergeLite(spark, big, rows(1001 to 2200, "a"), Seq("id"))
     }
     assert(MergeTable.read(spark, big).count() === 3000)
@@ -72,15 +76,48 @@ class MergeTableJobsSpec extends SparkSpec {
 
   test("deleteLite: job ceilings at 600 (literal) and 1200 (broadcast) keys") {
     val p600 = rowLevelTable()
-    assertCeiling("deleteLite 600 keys", 9) {
+    assertCeiling("deleteLite 600 keys", 6) {
       MergeTable.deleteLite(spark, p600, keys(51 to 650), Seq("id"))
     }
     val p1200 = rowLevelTable()
-    assertCeiling("deleteLite 1200 keys", 12) {
+    assertCeiling("deleteLite 1200 keys", 10) {
       MergeTable.deleteLite(spark, p1200, keys(51 to 1250), Seq("id"))
     }
     assert(MergeTable.read(spark, p600).count() === 2400)
     assert(MergeTable.read(spark, p1200).count() === 1800)
+  }
+
+  test("applyChanges: job ceilings at 200 (literal) and 1800 (broadcast) keys, below mergeLite + deleteLite") {
+    val lit = rowLevelTable()
+    assertCeiling("applyChanges 100 upserts + 100 deletes, 50 in the delta", 7) {
+      MergeTable.applyChanges(spark, lit, Some(rows(201 to 300, "u")),
+        Some(keys(51 to 150)), Seq("id"))
+    }
+    val big = rowLevelTable()
+    assertCeiling("applyChanges 1200 upserts + 600 deletes", 10) {
+      MergeTable.applyChanges(spark, big, Some(rows(1001 to 2200, "u")),
+        Some(keys(51 to 650)), Seq("id"))
+    }
+    assert(MergeTable.read(spark, lit).count() === 2900)
+    assert(MergeTable.read(spark, big).count() === 2400)
+  }
+
+  test("one CDC micro-batch: job ceiling below the routed two-writer batch") {
+    import graft.streaming.{CdcOp, JobProcessor}
+    def op(i: Int, seq: Long, kind: String) =
+      CdcOp(f"k$i%05d", seq, kind, if (kind == "D") null else s"p$i-$seq")
+    val path = freshPath()
+    MergeTable.init(spark, path, (1 to 3000).map(op(_, 1, "U")).toDF().drop("op"),
+      bloomKeys = Seq("key"))
+    JobProcessor.applyCdcBatch(spark, (1 to 100).map(op(_, 2, "U")).toDF(),
+      path, Seq("key"), "seq", "op", "D")
+    // 270 upserts past the delta, 30 deletes of which 20 hit the delta
+    val batch = ((101 to 370).map(op(_, 3, "U")) ++
+      (81 to 100).map(op(_, 3, "D")) ++ (601 to 610).map(op(_, 3, "D"))).toDF()
+    assertCeiling("applyCdcBatch 270 upserts + 30 deletes", 10) {
+      JobProcessor.applyCdcBatch(spark, batch, path, Seq("key"), "seq", "op", "D")
+    }
+    assert(MergeTable.read(spark, path).count() === 2970)
   }
 
   test("row-level read: job ceilings with and without the dvlits line") {
@@ -92,7 +129,7 @@ class MergeTableJobsSpec extends SparkSpec {
     val bcast = rowLevelTable()
     MergeTable.mergeLite(spark, bcast, rows(1001 to 2200, "a"), Seq("id"))
     assert(MergeTable.snapshot(spark, bcast).dvLits.isEmpty)
-    assertCeiling("read without dvlits", 3) {
+    assertCeiling("read without dvlits", 2) {
       MergeTable.read(spark, bcast).collect()
     }
   }

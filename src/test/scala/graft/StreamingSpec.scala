@@ -353,6 +353,50 @@ class StreamingSpec extends SparkSpec {
     assert(got.filter($"key" === "k1").select($"payload").as[String].head() === "v1b")
   }
 
+  test("streaming CDC sink: a micro-batch carrying U and D adds one manifest version; every pinnable version is a whole-batch prefix") {
+    import graft.sources.MergeTable
+    import graft.streaming.CdcOp
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("cdc_one").toString
+    val table = root + "/tbl"
+    // seq grows across batches, so applyChanges of a prefix of the log
+    // orders the ops as the sink applied them
+    val batches = Seq(
+      Seq(CdcOp("k1", 1, "U", "a"), CdcOp("k2", 1, "U", "a"), CdcOp("k3", 1, "U", "a"),
+        CdcOp("k4", 1, "U", "a"), CdcOp("k5", 1, "U", "a"), CdcOp("k6", 1, "U", "a")),
+      Seq(CdcOp("k1", 2, "U", "b"), CdcOp("k2", 2, "D", null), CdcOp("k7", 2, "U", "b"),
+        CdcOp("k9", 2, "D", null)),
+      Seq(CdcOp("k1", 3, "D", null), CdcOp("k2", 3, "U", "c"), CdcOp("k3", 3, "U", "c"),
+        CdcOp("k3", 4, "U", "c2"), CdcOp("k4", 3, "D", null), CdcOp("k7", 3, "U", "c")),
+      Seq(CdcOp("k5", 5, "D", null), CdcOp("k6", 5, "D", null), CdcOp("k8", 5, "U", "d")),
+      Seq(CdcOp("k5", 6, "U", "e"), CdcOp("k7", 6, "D", null), CdcOp("k8", 6, "U", "e"),
+        CdcOp("k1", 6, "U", "e")))
+    val input = MemoryStream[CdcOp]
+    val q = JobProcessor.runChangesToMergeTable(spark, input.toDF(), table,
+      root + "/ckpt", keyCols = Seq("key"))
+    val committed = scala.collection.mutable.ArrayBuffer[Long]()
+    try batches.zipWithIndex.foreach { case (b, i) =>
+      input.addData(b)
+      q.processAllAvailable()
+      val v = MergeTable.snapshot(spark, table).version
+      if (i > 0) assert(v === committed.last + 1,
+        s"batch $i carries U and D and must add exactly one manifest version")
+      committed += v
+    } finally q.stop()
+    assert(MergeTable.versions(spark, table) === committed.toSeq,
+      "no version besides the batches' own commits")
+    val tie = xxhash64(to_json(struct(col("key"), col("seq"), col("op"), col("payload")))).asc
+    committed.zipWithIndex.foreach { case (v, i) =>
+      val expected = graft.query.Relational.applyChanges(
+        batches.take(i + 1).flatten.toDF(), Seq("key"), Seq(col("seq").desc, tie))
+      val got = MergeTable.readAt(spark, table, v)
+      assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+        s"version $v must equal applyChanges of batches 0..$i")
+    }
+    assert(MergeTable.read(spark, table).select($"key").as[String].collect().sorted
+      === Array("k1", "k2", "k3", "k5", "k8"))
+  }
+
   test("CDC sink batch: composite keys route upserts and deletes correctly") {
     import graft.sources.MergeTable
     val table = java.nio.file.Files.createTempDirectory("cdcck").toString + "/t"
