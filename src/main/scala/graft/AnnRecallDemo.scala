@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.SimilaritySearch
+import graft.util.Sessions
 
 /** Measured recall / latency / IO tradeoff for the IVF ANN serving path
   * — the numbers a deployment actually tunes (`nprobe`, and the
@@ -34,13 +35,7 @@ import graft.operators.SimilaritySearch
   * exactness gate). Run: `sbt "runMain graft.AnnRecallDemo"`. */
 object AnnRecallDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
 
     val nVecs = sys.env.getOrElse("ANN_VECS", "1000000").toLong
     val dim = 64

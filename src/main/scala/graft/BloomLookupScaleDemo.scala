@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.MergeTable
+import graft.util.Sessions
 
 /** Scale validation for parquet bloom filters on hash-keyed point
   * lookups — the file-skipping story min/max stats cannot provide.
@@ -18,7 +19,8 @@ import graft.sources.MergeTable
   * those same useless min/max stats to consult. [[MergeTable.init]]'s
   * `bloomKeys` writes a per-row-group bloom filter on the key column;
   * this demo measures what that buys at ≥1M rows, the way
-  * LayoutScaleDemo measures z-order pruning:
+  * LayoutScaleDemo measured z-order pruning (since removed:
+  * git show c10dac1:src/main/scala/graft/LayoutScaleDemo.scala):
   *
   *   - a READER-LEVEL row-group audit per part file
   *     (`ParquetFileReader.getRowGroups` with the Eq predicate — the
@@ -87,11 +89,7 @@ object BloomLookupScaleDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
 
     val n = sys.env.getOrElse("BLOOM_SCALE_ROWS", "4000000").toLong
     // the batch audit generates up to 500 distinct present keys via

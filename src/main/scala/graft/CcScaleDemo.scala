@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.util.Sessions
 
 /** Scale validation for the distributed connected-components LOOP —
   * the path a 100 TB dedup graph actually takes (`Dedup.scala`
@@ -40,12 +40,11 @@ import graft.operators.Dedup
   */
 object CcScaleDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](name: String)(f: => T): T = graft.util.Timing.time(name)(f)
+    val cpus = Sessions.envCpus
+    val spark = Sessions.local(cpus)
+    // the recorded numbers ran 2 shuffle partitions per core (64 on local[32])
+    spark.conf.set("spark.sql.shuffle.partitions", 2L * cpus)
+    import graft.util.Timing.time
 
     // ---- part 1: giant-component loop stress ---------------------------
     val nNodes = sys.env.getOrElse("CC_NODES", "10000000").toLong

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Serving-cost measurement for the persisted near-dup index: at 1M
   * indexed docs, what does the per-batch admission probe actually
@@ -27,12 +29,7 @@ import org.apache.spark.sql.functions._
   * `DEDUP_BATCH` size the corpus/batch. */
 object DedupIndexScaleDemo {
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
     import spark.implicits._
 
     val nDocs = sys.env.getOrElse("DEDUP_DOCS", "1000000").toLong
@@ -89,23 +86,18 @@ object DedupIndexScaleDemo {
       .localCheckpoint(true)
     println(s"batch=${batch.count()} docs (${nBatch / 2} planted near-dups)")
 
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    }
+    import graft.util.Timing.time
 
     if (reuse.isEmpty) {
-      timed(s"build index ($nDocs docs, one-time)") {
+      time(s"build index ($nDocs docs, one-time)") {
         operators.DedupIndex.build(spark, path, corpus, "doc_id", "text")
       }
-      timed("compact (bucket-major locality, one-time)") {
+      time("compact (bucket-major locality, one-time)") {
         operators.DedupIndex.compact(spark, path, numFiles = 32)
       }
     }
 
-    val probe = timed(s"PROBE $nBatch-doc batch against the index") {
+    val probe = time(s"PROBE $nBatch-doc batch against the index") {
       operators.DedupIndex.nearDupsAgainst(
         spark, path, batch, "doc_id", "text", threshold = 0.8)
     }
@@ -121,12 +113,12 @@ object DedupIndexScaleDemo {
       val hotBatch = batch.unionByName(
         Seq((nDocs + nBatch.toLong, hotText)).toDF("doc_id", "text"))
         .localCheckpoint(true)
-      val un = timed(s"probe incl. family-matching doc, UNGUARDED") {
+      val un = time(s"probe incl. family-matching doc, UNGUARDED") {
         operators.DedupIndex.nearDupsAgainst(
           spark, path, hotBatch, "doc_id", "text", threshold = 0.8)
       }
       println(s"  unguarded pairs=${un.count()} (family contributes $nHot)")
-      val gd = timed(s"probe incl. family-matching doc, maxBucketPostings=1000") {
+      val gd = time(s"probe incl. family-matching doc, maxBucketPostings=1000") {
         operators.DedupIndex.nearDupsAgainst(
           spark, path, hotBatch, "doc_id", "text", threshold = 0.8,
           maxBucketPostings = Some(1000))
@@ -135,7 +127,7 @@ object DedupIndexScaleDemo {
     }
 
     if (!sys.env.contains("DEDUP_SKIP_FRESH")) {
-      val fresh = timed("FRESH recompute (minHashNearDups over corpus ∪ batch)") {
+      val fresh = time("FRESH recompute (minHashNearDups over corpus ∪ batch)") {
         val pairs = operators.Dedup.minHashNearDups(
           corpus.unionByName(batch), "doc_id", "text", threshold = 0.8)
         pairs.filter(col("id_a") >= nDocs || col("id_b") >= nDocs)

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, SimilaritySearch}
+import graft.util.Sessions
 
 /** Closes q43's sf1 adjudication with a NUMBER: the embedding-near-dup
   * shape (`Dedup.embeddingNearDups` — within-cluster pairwise cosine,
@@ -34,11 +34,7 @@ import graft.operators.{Dedup, SimilaritySearch}
 object EmbedDedupQuantizerDemo {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
 
     val sf01 = sys.env.getOrElse("GRAFT_SF01_DIR", "/root/testdata/sf0.1")
     val sf1 = sys.env.getOrElse("GRAFT_SF1_DIR", "/tmp/graft_sf1")

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.TimeSeries
+import graft.util.Sessions
 
 /** Scale validation for the time-series operators at 10M events (100×
   * the driver's sf0.1 `events` table) with an adversarial hot key, plus
@@ -36,14 +36,12 @@ import graft.operators.TimeSeries
   * Run manually: `sbt "runMain graft.EventsScaleDemo"`. */
 object EventsScaleDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Sessions.envCpus
+    val spark = Sessions.local(cpus)
+    // the recorded numbers ran 2 shuffle partitions per core (64 on local[32])
+    spark.conf.set("spark.sql.shuffle.partitions", 2L * cpus)
     val skew = new graft.util.TaskSkew().attach(spark)
-    def time[T](name: String)(f: => T): T = graft.util.Timing.time(name)(f)
+    import graft.util.Timing.time
 
     val copies = sys.env.getOrElse("EVENTS_COPIES", "100").toInt
     val shift = 1000000000L

@@ -315,7 +315,9 @@ final case class GraftSession(
     * column is parsed from each recorded path, so the planner rule's
     * probe filter prunes the file list exactly like a directory read,
     * with no per-path listing job (19.5 s at 10k files through
-    * `spark.read.parquet` — ManifestScaleDemo/IvfOpenScaleDemo).
+    * `spark.read.parquet` — ManifestScaleDemo and IvfOpenScaleDemo,
+    * since removed: git show c10dac1:src/main/scala/graft/ManifestScaleDemo.scala,
+    * git show c10dac1:src/main/scala/graft/IvfOpenScaleDemo.scala).
     * Legacy size-less manifests keep the basePath listing read. */
   private def relationOfEntries(
       entries: Seq[graft.sources.MergeTable.FileEntry],

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Maintenance-cost measurement for the IVF serving index: at 1M
   * vectors, what does keeping the index fresh actually cost?
@@ -21,13 +22,7 @@ import org.apache.spark.sql.functions._
   * the corpus is. Run: `sbt "runMain graft.IvfUpsertDemo"`. */
 object IvfUpsertDemo {
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder().master("local[32]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
 
     val nVecs = sys.env.getOrElse("ANN_VECS", "1000000").toLong
     val dim = 64
@@ -52,13 +47,8 @@ object IvfUpsertDemo {
     println(s"kb=${kb.count()} vectors")
     val g = GraftSession(spark, search.HashEmbedder(dim)).loadKnowledgeBase(kb)
 
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    }
-    timed(s"indexKnowledge full build ($nVecs vecs, 32 clusters, 2%% sample)") {
+    import graft.util.Timing.time
+    time(s"indexKnowledge full build ($nVecs vecs, 32 clusters, 2% sample)") {
       g.indexKnowledge(path, nClusters = 32, nprobe = 4,
         kmeansIters = 5, trainSampleFraction = 0.02)
     }
@@ -77,7 +67,7 @@ object IvfUpsertDemo {
         .unionByName(spark.range(2000)
           .select((lit(nVecs * 2) + col("id") * 256 + 3).as("id"))),
       idOffsetForVec = 7777L)
-    timed("upsertIndexedKnowledge (4k localized batch: 2k updates + 2k new)") {
+    time("upsertIndexedKnowledge (4k localized batch: 2k updates + 2k new)") {
       g.upsertIndexedKnowledge(batch)
     }
     val rewritten = dirMtimes().count { case (dirName, m) =>

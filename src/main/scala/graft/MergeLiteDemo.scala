@@ -1,16 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.MergeTable
+import graft.util.Sessions
 
 /** The replay-merge answer, measured (r13 verdict #4): a REPLAY batch —
   * 10 redelivered request_ids spread across the table + 10 new, the
   * at-least-once crash-redelivery case — pays a full file rewrite per
   * touched file under [[MergeTable.merge]] (StreamMergeBloomDemo's
   * honest ~1x replay number: the bloom bounds discovery but nothing
-  * bounds the rewrite). [[MergeTable.mergeLite]] bounds the rewrite:
+  * bounds the rewrite; that demo is since removed:
+  * git show c10dac1:src/main/scala/graft/StreamMergeBloomDemo.scala).
+  * [[MergeTable.mergeLite]] bounds the rewrite:
   * the batch lands as a small DELTA file whose key set suppresses the
   * superseded base rows at read time (the keyed analog of Delta's
   * deletion vectors) — a 20-row replay is a 20-row write at any table
@@ -60,11 +63,7 @@ object MergeLiteDemo {
     } catch { case _: Exception => false }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
     import graft.util.Timing.time
 
     val n = sys.env.getOrElse("MERGE_LITE_ROWS", "40000000").toLong
@@ -79,7 +78,7 @@ object MergeLiteDemo {
     if (!cold) println("WARNING: cannot drop page cache (not root?) — " +
       "the numbers below are WARM-cache")
 
-    // the JobProcessor response-table shape (StreamMergeBloomDemo's)
+    // the JobProcessor response-table shape
     def responseRows(ids: DataFrame): DataFrame = ids
       .withColumn("request_id", sha2(concat(lit("req "),
         col("id").cast("string")), 256))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, Decontaminate, Packing, TimeSeries}
 import graft.query.Relational
+import graft.util.Sessions
 
 /** The 100×-shaped END-TO-END number: the fluent corpus chain
   * ([[Corpus]]: curate → dedupExact → admitAgainst → lmFilter →
@@ -155,11 +156,10 @@ object PipelineScaleDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Sessions.envCpus
+    val spark = Sessions.local(cpus)
+    // the recorded numbers ran 2 shuffle partitions per core (64 on local[32])
+    spark.conf.set("spark.sql.shuffle.partitions", 2L * cpus)
 
     if (sys.env.get("PIPE_LEGACY").contains("1")) { legacy(spark); spark.stop(); return }
 
@@ -199,7 +199,7 @@ object PipelineScaleDemo {
   /** The original round-3 operator sections (kept runnable; they back
     * recorded COVERAGE numbers). `PIPE_LEGACY=1` selects them. */
   private def legacy(spark: SparkSession): Unit = {
-    def time[T](name: String)(f: => T): T = graft.util.Timing.time(name)(f)
+    import graft.util.Timing.time
 
     val n = sys.env.getOrElse("PIPE_ROWS", "10000000").toLong
     val keys = 100000L

@@ -1,7 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
+import graft.util.Sessions
 
 /** Dump `.explain("formatted")` for named queries to plans/<tag>/<name>.txt.
   *
@@ -17,15 +17,7 @@ object PlanDump {
     val tag = args.headOption.getOrElse("r17")
     val prefixes = args.drop(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     val outDir = Paths.get(s"plans/$tag")
     Files.createDirectories(outDir)
     val names = SparkEntry.queries.keys.toSeq.sorted

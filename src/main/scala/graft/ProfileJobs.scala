@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd}
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Per-Spark-job wall-clock profile of one declared query: runs the
   * query lambda under a listener that records every job's start/end and
@@ -14,15 +14,7 @@ object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val repeat = 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     case class Job(id: Int, desc: String, start: Long, var end: Long = 0L)
     val jobs = new scala.collection.mutable.ArrayBuffer[Job]()
     spark.sparkContext.addSparkListener(new SparkListener {

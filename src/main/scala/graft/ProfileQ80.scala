@@ -1,23 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.{Tables => T}
+import graft.util.Sessions
 
 /** Scratch profiler for the q33/q38/q80 chain (not part of the contract). */
 object ProfileQ80 {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
-    def time[A](label: String)(f: => A): A =
-      graft.util.Timing.time(s"STAGE $label")(f)
+    import graft.util.Timing.time
 
     // warmup
     val docs = T.documents(spark, d)
@@ -26,23 +20,23 @@ object ProfileQ80 {
 
     for (round <- 1 to 2) {
       println(s"--- pass $round ---")
-      val pairs = time("minhash pairs") {
+      val pairs = time("STAGE minhash pairs") {
         val p = Dedup.minHashNearDups(docs, "doc_id", "text", threshold = 0.8)
           .select(col("id_a"), col("id_b"))
         p.count(); p
       }
-      val clusters = time("dupClusters (CC)") {
+      val clusters = time("STAGE dupClusters (CC)") {
         val c = Dedup.dupClusters(docs, "doc_id", pairs)
         c.count(); c
       }
-      time("keepBest full") {
+      time("STAGE keepBest full") {
         Dedup.keepBestPerCluster(docs, "doc_id", pairs,
           Seq(desc("n_chars"), asc("doc_id"))).count()
       }
-      time("q80 entry end-to-end") {
+      time("STAGE q80 entry end-to-end") {
         SparkEntry.queries("q80_keep_best")(spark, d).count()
       }
-      time("q38 entry end-to-end") {
+      time("STAGE q38 entry end-to-end") {
         SparkEntry.queries("q38_dup_clusters")(spark, d).count()
       }
     }

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
 import graft.operators.{Curation, Dedup}
+import graft.util.Sessions
 
 /** Stage decomposition for the three standing >2x rows of the sf1
   * scale-step bench (q70 curation, q43 embedding near-dups, q73
@@ -20,12 +20,7 @@ import graft.operators.{Curation, Dedup}
   * not.) */
 object ProfileSf1Tail {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_sf1")
 

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Scale validation for the retrieval/curation operators at 1M+ docs:
   * repeated-span dedup (q99), BM25 (q100), RRF fusion (q101), and the
@@ -16,17 +17,15 @@ import org.apache.spark.sql.functions._
   */
 object RetrievalScaleDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Sessions.envCpus
+    val spark = Sessions.local(cpus)
+    // the recorded numbers ran 2 shuffle partitions per core (64 on local[32])
+    spark.conf.set("spark.sql.shuffle.partitions", 2L * cpus)
     val d = "/root/testdata/sf0.1"
     val copies = sys.env.getOrElse("RETRIEVAL_COPIES", "200").toInt
     val base = s"/tmp/graft_retrieval_$copies"
 
-    def time[T](name: String)(f: => T): T = graft.util.Timing.time(name)(f)
+    import graft.util.Timing.time
 
     // ---- build the scaled corpus once (documents written LAST, and its
     // _SUCCESS file — not the directory, which Spark creates before the

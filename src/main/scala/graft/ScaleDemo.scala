@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Scale validation harness: replicates the sf0.1 corpora to ~200k
   * documents / scaled vectors (each copy's vocabulary prefixed so
@@ -14,12 +16,7 @@ object ScaleDemo {
     // NOTE: driver heap comes from build.sbt's forked-run javaOptions
     // (-Xmx via SPARK_DRIVER_MEM, default 8g) — spark.driver.memory set
     // on the builder is a no-op inside an already-running JVM.
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
     val d = "/root/testdata/sf0.1"
     val copies = sys.env.getOrElse("SCALE_COPIES", "40").toInt
     val vecCopies = math.max(1,
@@ -29,7 +26,7 @@ object ScaleDemo {
     // vecCopies must never silently reuse stale data
     val base = s"/tmp/graft_scale_${copies}_v$vecCopies"
 
-    def time[T](name: String)(f: => T): T = graft.util.Timing.time(name)(f)
+    import graft.util.Timing.time
     def withConf[T](key: String, value: String)(f: => T): T = {
       val before = spark.conf.getOption(key)
       spark.conf.set(key, value)

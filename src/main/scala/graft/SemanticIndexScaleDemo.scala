@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{SemanticIndex, SimilaritySearch}
+import graft.util.Sessions
 
 /** Serving-cost measurement for the persisted semantic-dedup index:
   * at 1M indexed vectors, what does a per-batch admission probe cost
@@ -29,12 +29,7 @@ import graft.operators.{SemanticIndex, SimilaritySearch}
   * [[SemanticIndex.buildKmeans]] instead of latent-label means. */
 object SemanticIndexScaleDemo {
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
 
     val nVecs = sys.env.getOrElse("SEM_VECS", "1000000").toLong
     val nBatch = sys.env.getOrElse("SEM_BATCH", "4000").toInt
@@ -69,12 +64,7 @@ object SemanticIndexScaleDemo {
       .localCheckpoint(true)
     println(s"corpus=${corpus.count()} vectors, $latent latent centers")
 
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    }
+    import graft.util.Timing.time
 
     if (reuse.isEmpty) {
       // SEM_QUANTIZER=kmeans exercises the TRAINED path end-to-end:
@@ -86,21 +76,21 @@ object SemanticIndexScaleDemo {
       // under either quantizer, which is the point: the probe
       // contract does not depend on where the centroids came from.
       if (sys.env.get("SEM_QUANTIZER").contains("kmeans")) {
-        timed(s"buildKmeans ($nVecs vectors, k=$latent, one-time)") {
+        time(s"buildKmeans ($nVecs vectors, k=$latent, one-time)") {
           SemanticIndex.buildKmeans(
             spark, path, corpus, "vec_id", "vec", k = latent, iters = 5)
         }
       } else {
-        val cents = timed("train quantizer (per-center means, one-time)") {
+        val cents = time("train quantizer (per-center means, one-time)") {
           SimilaritySearch.centroids(
             corpus.withColumn("__c", pmod(col("vec_id"), lit(latent))),
             "__c", "vec").localCheckpoint(true)
         }
-        timed(s"build index ($nVecs vectors, one-time)") {
+        time(s"build index ($nVecs vectors, one-time)") {
           SemanticIndex.build(spark, path, corpus, "vec_id", "vec", cents)
         }
       }
-      timed("compact (cluster-major locality, one-time)") {
+      time("compact (cluster-major locality, one-time)") {
         SemanticIndex.compact(spark, path, numFiles = 64)
       }
     }
@@ -134,7 +124,7 @@ object SemanticIndexScaleDemo {
     println(s"batch=${batch.count()} vectors ($half planted near-dups, " +
       s"$hotClusters clusters touched)")
 
-    val probe = timed(s"PROBE $nBatch-vec batch against the index (cold)") {
+    val probe = time(s"PROBE $nBatch-vec batch against the index (cold)") {
       SemanticIndex.nearDupsAgainst(
         spark, path, batch.select(col("vec_id"), col("vec")),
         "vec_id", "vec", tau)
@@ -145,13 +135,13 @@ object SemanticIndexScaleDemo {
     // steady-state serving: the same probe with session machinery warm
     // (codegen cache, manifest/footers in page cache) — what batch
     // N+1 of an ingest stream actually pays
-    timed(s"PROBE again (warm serving)") {
+    time(s"PROBE again (warm serving)") {
       SemanticIndex.nearDupsAgainst(
         spark, path, batch.select(col("vec_id"), col("vec")),
         "vec_id", "vec", tau).count()
     }
 
-    val admitted = timed("ADMIT (gate composed: probe + rank resolution)") {
+    val admitted = time("ADMIT (gate composed: probe + rank resolution)") {
       SemanticIndex.admit(spark, path,
         batch.select(col("vec_id"), col("vec")), "vec_id", "vec", tau)
     }
@@ -162,7 +152,7 @@ object SemanticIndexScaleDemo {
       // full corpus under the same quantizer, then the same
       // same-cluster pair rule restricted to batch-touching pairs
       val cents = SemanticIndex.centroids(spark, path)
-      val fresh = timed("FRESH recompute (assign corpus ∪ batch + pair scan)") {
+      val fresh = time("FRESH recompute (assign corpus ∪ batch + pair scan)") {
         val all = corpus
           .unionByName(batch.select(col("vec_id"), col("vec")))
         val assigned = SimilaritySearch.assignClustersWithSim(all, "vec", cents)

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Generate a 10× ("sf1") dataset from the driver's sf0.1 tables, for
   * the scale-step bench (`SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 sbt
@@ -40,12 +42,7 @@ object Sf1DataGen {
     val out = args.headOption.getOrElse("/tmp/graft_sf1")
     val copies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     def done(name: String) =
       new java.io.File(s"$out/$name.parquet", "_SUCCESS").exists()

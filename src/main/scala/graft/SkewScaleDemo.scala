@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, SimilaritySearch}
+import graft.util.Sessions
 
 /** Adversarial-skew validation at 1M docs, with TASK-LEVEL straggler
   * evidence (per-stage max/median task runtimes from a SparkListener —
@@ -29,13 +29,12 @@ import graft.operators.{Dedup, SimilaritySearch}
 object SkewScaleDemo {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Sessions.envCpus
+    val spark = Sessions.local(cpus)
+    // the recorded numbers ran 2 shuffle partitions per core (64 on local[32])
+    spark.conf.set("spark.sql.shuffle.partitions", 2L * cpus)
     val skew = new graft.util.TaskSkew().attach(spark)
-    def time[T](name: String)(f: => T): T = graft.util.Timing.time(name)(f)
+    import graft.util.Timing.time
 
     // ---- 1. simhash with a 100k-doc identical class --------------------
     val nDocs = sys.env.getOrElse("SKEW_DOCS", "1000000").toLong

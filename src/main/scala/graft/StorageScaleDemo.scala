@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.MergeTable
+import graft.util.Sessions
 
 /** Scale validation for the storage-level keyed MERGE: a 10M-row table
   * compacted into key-range-sorted files, then narrow/scattered merges,
@@ -14,11 +14,7 @@ import graft.sources.MergeTable
   */
 object StorageScaleDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
     import spark.implicits._
 
     val n = sys.env.getOrElse("STORAGE_SCALE_ROWS", "10000000").toLong
@@ -26,7 +22,7 @@ object StorageScaleDemo {
     val path = java.nio.file.Files
       .createTempDirectory("storage_scale").toString + "/tbl"
 
-    def time[T](name: String)(f: => T): T = graft.util.Timing.time(name)(f)
+    import graft.util.Timing.time
     def rows(r: org.apache.spark.sql.DataFrame) =
       r.select(col("id"), md5(col("id").cast("string")).as("payload"))
 

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.model.JobRequest
 import graft.streaming._
+import graft.util.Sessions
 
 /** Streaming throughput validation: pushes 1M events through the
   * watermarked dedup and the exact stateful rate limiter, measuring
@@ -17,11 +17,7 @@ import graft.streaming._
   */
 object StreamScaleDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.model.JobRequest
 import graft.streaming.{JobProcessor, RateEvent, StreamingRateLimiter}
+import graft.util.Sessions
 
 /** Sustained-load measurement for the streaming pipelines — the
   * operators whose correctness the DuckDB oracle cannot express
@@ -35,12 +35,7 @@ import graft.streaming.{JobProcessor, RateEvent, StreamingRateLimiter}
   * Run manually: `sbt "runMain graft.StreamingScaleDemo"`. */
 object StreamingScaleDemo {
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCpus)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -12,10 +12,11 @@ import org.apache.spark.sql.types.StructType
   * over N explicit paths re-discovers what the manifest already knows:
   * it stats every path (a distributed listing job whose default
   * parallelism of one task PER PATH cost a measured 17 s of pure task
-  * overhead at 10k files — ManifestScaleDemo), only to learn sizes the
-  * committing writer recorded. This index hands Spark those recorded
-  * sizes directly: no listing job, no per-path RPC, flat cost at any
-  * file count.
+  * overhead at 10k files — ManifestScaleDemo, since removed:
+  * git show c10dac1:src/main/scala/graft/ManifestScaleDemo.scala), only to
+  * learn sizes the committing writer recorded. This index hands Spark
+  * those recorded sizes directly: no listing job, no per-path RPC,
+  * flat cost at any file count.
   *
   * The execution path downstream is completely unchanged — this is
   * still `FileSourceScanExec` over `ParquetFileFormat`, so predicate
@@ -271,7 +272,7 @@ private[graft] object ManifestFileIndex {
   * value per file is parsed from the recorded path by the caller, so a
   * session open costs a manifest read instead of the per-path listing
   * job (measured 19.5 s at 10k files through `spark.read.parquet` —
-  * ManifestScaleDemo) AND the planner rule's `cluster IN (probed)`
+  * the same demo as above) AND the planner rule's `cluster IN (probed)`
   * filter still prunes at the partition level: `listFiles` evaluates
   * the pushed partition filters against each cluster's values row, the
   * same bound-predicate mechanism Spark's own

@@ -1224,9 +1224,11 @@ object MergeTable {
     * manifest this code writes) the relation is built from the manifest
     * alone — no listing job, no per-path stat; `spark.read.parquet`
     * over explicit paths re-stats every file, measured 17–23 s at
-    * 10k–100k files (ManifestScaleDemo) for information the committing
-    * writer already recorded. One footer read (schema of the head file
-    * — all files agree by the writer invariant) is the only IO. */
+    * 10k–100k files (ManifestScaleDemo, since removed:
+    * git show c10dac1:src/main/scala/graft/ManifestScaleDemo.scala) for
+    * information the committing writer already recorded. One footer
+    * read (schema of the head file — all files agree by the writer
+    * invariant) is the only IO. */
   private[graft] def relationFor(
       spark: SparkSession, entries: Seq[FileEntry]): DataFrame =
     relationFor(spark, entries, Nil, None)
@@ -2556,10 +2558,12 @@ object MergeTable {
   /** Row-level MERGE — absorbs `updates` WITHOUT rewriting any base
     * file (the keyed analog of Delta's deletion vectors). A rewrite
     * [[merge]] pays a full file rewrite for every file a redelivered
-    * key touches — StreamMergeBloomDemo measured replay batches
-    * rewrite-dominated (~1x bloom win) because 10 redelivered ids
-    * spread across ~10 files rewrite them all. mergeLite instead
-    * appends the updates as a small DELTA file and lets the read path
+    * key touches — StreamMergeBloomDemo (since removed:
+    * git show c10dac1:src/main/scala/graft/StreamMergeBloomDemo.scala)
+    * measured replay batches rewrite-dominated (~1x bloom win) because
+    * 10 redelivered ids spread across ~10 files rewrite them all.
+    * mergeLite instead appends the updates as a small DELTA file and
+    * lets the read path
     * suppress superseded base rows by key ([[logicalFrame]]: base
     * ANTI-JOIN delta-keys ∪ delta — the tombstone set IS the delta's
     * key set, so no separate tombstone sidecars exist and the
@@ -3114,7 +3118,9 @@ object MergeTable {
       .foreach(d => fs.delete(d.getPath, false))
     // one listing over _manifests sweeps both the `._v*_*.tmp` temps a
     // crashed commit strands AND expired version manifests beyond
-    // tip ∪ keepVersions — the version-log retention (ManifestScaleDemo:
+    // tip ∪ keepVersions — the version-log retention (ManifestScaleDemo,
+    // since removed:
+    // git show c10dac1:src/main/scala/graft/ManifestScaleDemo.scala:
     // 1000 manifests swept in 0.2 s). Versions >= the resolved tip are
     // structurally protected (a concurrent writer's commit lands above
     // the tip), and the grace keeps a mid-commit writer's temp safe.
@@ -3128,7 +3134,7 @@ object MergeTable {
     // on a lineage that rewrites (any merge hit, any compaction) the
     // superseded versions turn sweepable and each pass clears them, but
     // a PURE-insert lineage re-reads its whole retained history every
-    // vacuum (1000 manifests ≈ 0.2 s, ManifestScaleDemo; at 10k+
+    // vacuum (1000 manifests ≈ 0.2 s, the measurement above; at 10k+
     // versions, compact — which any such table needs anyway for its
     // file count — and the next vacuum sweeps the backlog in one pass).
     Manifests.sweepLog(fs, manifestDir(root), cutoff,

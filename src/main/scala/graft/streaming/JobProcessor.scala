@@ -150,8 +150,10 @@ object JobProcessor {
     * merge — the REPLAY-HEAVY deployment's knob: a redelivered batch
     * whose keys spread across the table rewrites every touched file
     * under the default path (StreamMergeBloomDemo's honest ~1x replay
-    * number), while the row-level path writes only the batch
-    * (MergeLiteDemo: 9.5x median replay wall at 40M rows). The
+    * number; the demo is since removed:
+    * git show c10dac1:src/main/scala/graft/StreamMergeBloomDemo.scala), while
+    * the row-level path writes only the batch (MergeLiteDemo: 9.5x
+    * median replay wall at 40M rows). The
     * exactly-once convergence argument is unchanged — a replayed batch
     * re-combines the same keys last-wins, so the delta converges to
     * the same rows. The read tax is SCOPED: the manifest records which

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** SQL-surface registration via SparkSessionExtensions (the shared test
-  * session is built with `.withExtensions(new GraftExtensions)` —
-  * extensions bind at session build time, so `getOrCreate` on an
-  * existing session would silently skip them). */
+  * session is built by `Sessions.local`, which installs
+  * [[GraftExtensions]] — extensions bind at session build time, so
+  * `getOrCreate` on an existing session would silently skip them). */
 class ExtensionsSpec extends SparkSpec {
 
   private lazy val extSpark: SparkSession = spark

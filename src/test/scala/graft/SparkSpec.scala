@@ -6,14 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all specs (one JVM, one session). */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.util.Sessions.local(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
