@@ -11,7 +11,10 @@ import graft.sources.MergeTable
   * (`RowLevel`) launches fewer; a refactor may lower them, never raise
   * them. The `applyChanges` and CDC micro-batch ceilings sit below
   * what the same changes cost as a mergeLite plus a deleteLite (16 and
-  * 17 jobs; 19 for the micro-batch). */
+  * 17 jobs; 19 for the micro-batch). The ceilings of the row-level
+  * folds (`merge` onto row-level state, `foldRowLevel`, and
+  * `deleteWhere` on a row-level table) are the counts measured while
+  * each of the three built its own fold. */
 class MergeTableJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -118,6 +121,59 @@ class MergeTableJobsSpec extends SparkSpec {
       JobProcessor.applyCdcBatch(spark, batch, path, Seq("key"), "seq", "op", "D")
     }
     assert(MergeTable.read(spark, path).count() === 2970)
+  }
+
+  /** [[rowLevelTable]] plus 50 tombstones on base rows (ids 201..250). */
+  private def tombstonedTable(): String = {
+    val path = rowLevelTable()
+    MergeTable.deleteLite(spark, path, keys(201 to 250), Seq("id"))
+    path
+  }
+
+  test("merge onto row-level state: job ceilings with and without tombstones") {
+    val plain = rowLevelTable()
+    assertCeiling("merge 100 keys onto a delta (50 in it)", 9) {
+      MergeTable.merge(spark, plain, rows(51 to 150, "m"), Seq("id"))
+    }
+    val tombs = tombstonedTable()
+    assertCeiling("merge 100 keys onto a delta and tombstones", 10) {
+      MergeTable.merge(spark, tombs, rows(51 to 150, "m"), Seq("id"))
+    }
+    for ((p, n) <- Seq(plain -> 3000, tombs -> 2950)) {
+      assert(!MergeTable.snapshot(spark, p).rowLevel)
+      assert(MergeTable.read(spark, p).count() === n)
+    }
+  }
+
+  test("foldRowLevel: job ceilings with and without tombstones") {
+    val plain = rowLevelTable()
+    assertCeiling("foldRowLevel of a delta", 6) {
+      MergeTable.foldRowLevel(spark, plain)
+    }
+    val tombs = tombstonedTable()
+    assertCeiling("foldRowLevel of a delta and tombstones", 7) {
+      MergeTable.foldRowLevel(spark, tombs)
+    }
+    for ((p, n) <- Seq(plain -> 3000, tombs -> 2950)) {
+      assert(!MergeTable.snapshot(spark, p).rowLevel)
+      assert(MergeTable.read(spark, p).count() === n)
+    }
+  }
+
+  test("deleteWhere on a row-level table: job ceilings with and without tombstones") {
+    import org.apache.spark.sql.functions.col
+    val plain = rowLevelTable()
+    assertCeiling("deleteWhere after folding a delta", 7) {
+      MergeTable.deleteWhere(spark, plain, col("id").between(2001, 2100))
+    }
+    val tombs = tombstonedTable()
+    assertCeiling("deleteWhere after folding a delta and tombstones", 7) {
+      MergeTable.deleteWhere(spark, tombs, col("id").between(2001, 2100))
+    }
+    for ((p, n) <- Seq(plain -> 2900, tombs -> 2850)) {
+      assert(!MergeTable.snapshot(spark, p).rowLevel)
+      assert(MergeTable.read(spark, p).count() === n)
+    }
   }
 
   test("row-level read: job ceilings with and without the dvlits line") {
