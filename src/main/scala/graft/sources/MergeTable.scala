@@ -332,7 +332,8 @@ object MergeTable {
     *        to this, not to the table size
     * @param filesWritten new files committed for the replacement rows
     *        (sized to match filesRewritten — see the coalesce in
-    *        mergeOnce — so continuous upserts don't fragment the table) */
+    *        rewriteMerge — so continuous upserts don't fragment the
+    *        table) */
   final case class MergeStats(
       version: Long, filesKept: Long, filesRewritten: Long,
       filesWritten: Long, rowsUpserted: Long)
@@ -1578,55 +1579,15 @@ object MergeTable {
     * [[compactTable]] this re-sorts nothing and rewrites only touched
     * files. */
   def foldRowLevel(
-      spark: SparkSession, path: String, maxRetries: Int = 5): MergeStats = {
-    val snap0 = snapshot(spark, path)
-    if (!snap0.rowLevel)
-      return MergeStats(snap0.version, snap0.entries.size, 0, 0, 0)
-    val (fs, root) = fsOf(spark, path)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val pre = snapshot(spark, path)
-      if (!pre.rowLevel)
-        return MergeStats(pre.version, pre.entries.size, 0, 0, 0)
-      // a zero-row merge by the pinned keys routes through mergeOnce's
-      // fold branch (delta ⊎ nothing applied, tombstones removed).
-      // Keys re-derived per attempt — a concurrent rename can land
-      // between loops.
-      val logicalKeys = pre.dvKeys.map(pre.colMap.logicalOf)
-      val st = merge(spark, path, read(spark, path).limit(0), logicalKeys,
-        maxRetries = maxRetries)
-      // The merge either COMMITTED a fold (its version's manifest is
-      // DV-free — done, regardless of what concurrent writers do next)
-      // or was a NO-OP, proving the row-level state inert at EXACTLY
-      // st.version (rewriteMerge's zero-hit/zero-row return reports the
-      // base version uncommitted). Read that pinned version, never the
-      // tip: a mergeLite/deleteLite landing after the proof must not be
-      // blind-cleared — its delta rows would be dropped and its
-      // deletions resurrected (review catch, r17).
-      val proven = snapshotAt(spark, path, st.version)
-      if (!proven.rowLevel) return st
-      // inert state: clear the lines with a manifest-only commit pinned
-      // at proven.version + 1 — OCC refuses if anyone advanced past the
-      // proof, and the loop then re-proves through merge()
-      commitRaceHookForTest()
-      try {
-        commit(fs, root, proven.version + 1,
-          encodeSnapshot(withSizes(fs, proven.entries), Nil, Nil,
-            stats = proven.stats,
-            schemaJson =
-              Some(asNullableSchema(tableSchemaOf(spark, proven)).json),
-            colMap = proven.colMap, dvLits = None))
-        return MergeStats(proven.version + 1, proven.entries.size, 0, 0, 0)
-      } catch {
-        case _: FileAlreadyExistsException =>
-        // tip advanced past the proven version: loop back through
-        // merge() to re-prove inertness against the new tip
-      }
-    }
-    throw new CommitConflict(
-      s"foldRowLevel at $path lost $maxRetries optimistic commits in a row")
-  }
+      spark: SparkSession, path: String, maxRetries: Int = 5): MergeStats =
+    // the row-level writer's fold with no side, by the pinned keys,
+    // against a fresh snapshot per attempt (a concurrent rename can
+    // land between them). A fold that rewrites nothing proves the
+    // state inert at its snapshot and clears it with a manifest-only
+    // commit pinned one version past it (see RowLevel.once).
+    RowLevel.retried(maxRetries, s"foldRowLevel at $path")(
+      RowLevel.fold(spark, path, snapshot(spark, path), clearInert = true,
+        "foldRowLevel"))
 
   /** The "fold before the cliff" policy (delete-heavy tables creep
     * toward the maxDeltaRows budget one small deleteLite at a time;
@@ -1992,8 +1953,14 @@ object MergeTable {
     * key column — the same contract Delta's MERGE effectively enforces
     * (NULL keys never match the semi/anti joins, so a null-keyed row
     * would silently re-insert as a new duplicate on every merge).
-    * A table carrying row-level ([[mergeLite]]) state folds it into the
-    * same commit, emitting a DV-free manifest.
+    *
+    * merge is the row-level writer ([[applyChanges]]) with no delete
+    * side and a zero row budget: every call FOLDS, so a rewrite merge
+    * is a row-level change folded at once. A table carrying row-level
+    * ([[mergeLite]]/[[deleteLite]]) state folds it into the same commit
+    * — even for a zero-row `updates` — emitting a DV-free manifest; a
+    * zero-row merge over tombstones that suppress nothing commits
+    * nothing ([[foldRowLevel]] clears those).
     *
     * `allowSchemaEvolution` (Delta's `mergeSchema`, additive half):
     * extra `updates` columns WIDEN the table — the commit records the
@@ -2004,107 +1971,9 @@ object MergeTable {
   def merge(
       spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String], maxRetries: Int = 5,
-      allowSchemaEvolution: Boolean = false): MergeStats = {
-    requireKeyCols(keyCols)
-    val u = updates.localCheckpoint(true) // one computation across retries
-    try {
-      // presence check FIRST: dropDuplicates on a missing column throws a
-      // raw AnalysisException, which would shadow the friendly message
-      require(keyCols.forall(u.columns.contains),
-        s"key ${keyCols.mkString(",")} missing from updates")
-      val ks = KeySet.validated(u, keyCols)
-      var attempt = 0
-      while (attempt < maxRetries) {
-        attempt += 1
-        try return mergeOnce(spark, path, u, ks, allowSchemaEvolution)
-        catch {
-          case _: FileAlreadyExistsException => // lost the race: re-snapshot
-        }
-      }
-      throw new CommitConflict(
-        s"merge at $path lost $maxRetries optimistic commits in a row")
-    } finally graft.util.Checkpoints.free(u)
-  }
-
-  private def mergeOnce(
-      spark: SparkSession, path: String, u0: DataFrame, ks0: KeySet,
-      allowEvolution: Boolean): MergeStats = {
-    val (fs, root) = fsOf(spark, path)
-    val snap = snapshot(spark, path)
-    val schema0 = tableSchemaOf(spark, snap)
-    // writer boundary: the caller speaks LOGICAL names; everything
-    // below (schema line, dvkeys, stats, data files) speaks PHYSICAL.
-    // Re-derived per attempt — a concurrent rename can land between
-    // OCC retries.
-    val (u, keyCols, cm1) = inbound(snap.colMap, schema0, u0, ks0.keyCols)
-    val ks = if (keyCols == ks0.keyCols) ks0 else ks0.rebound(u, keyCols)
-    if (!snap.rowLevel)
-      rewriteMerge(spark, fs, root, snap.version, snap.entries, u, ks,
-        snapStats = snap.stats, tableSchema = schema0,
-        allowEvolution = allowEvolution, colMap0 = cm1,
-        allowRebase = true) // pure caller batch, DV-free base (see doc)
-    else {
-      // FOLD the row-level state into this rewrite: the effective
-      // update set is delta ⊎ u (last wins per key, u newest), applied
-      // against the BASE files — and the delete tombstones, MINUS any
-      // key u re-inserts, drop their base rows without replacement —
-      // in one commit that emits a DV-free manifest: a rewrite merge
-      // is exactly the compaction the row-level state was deferring,
-      // so it absorbs it for free rather than paying a second rewrite
-      // later. Key comparison is SET equality: join keys are
-      // unordered, and refusing a reordered spelling of the same set
-      // would be a spurious failure.
-      if (snap.dvKeys.toSet != keyCols.toSet) throw new IllegalStateException(
-        s"table at $path carries row-level (mergeLite/deleteLite) state " +
-          s"keyed by [${snap.dvKeys.mkString(",")}] — merge by the same keys")
-      // validate u BEFORE combining: combinedDelta's selects would
-      // otherwise surface a missing column as a raw AnalysisException.
-      // With evolution the delta rows pad to the widened schema — the
-      // same NULL-fill the read path gives pre-widening FILES.
-      val widened = conformedSchema(schema0, u, keyCols, allowEvolution)
-      // checkpointed: the combined frame feeds the fold's count,
-      // discovery collect, AND rewrite — one computation, not three
-      val combined = (
-        if (snap.delta.isEmpty) u.select(widened.map(f => col(f.name)): _*)
-        else combinedDelta(
-          padTo(relationFor(spark, snap.delta, Nil, Some(schema0)), widened),
-          u, ks, widened.map(_.name)))
-        .localCheckpoint(true)
-      // tombstones minus the keys u re-inserts (last wins): those rows
-      // drop from their base files with no replacement. Checkpointed —
-      // the frame feeds rewriteMerge's discovery count AND anti-join.
-      val removeKeys: Option[DataFrame] =
-        if (snap.deletes.isEmpty) None
-        else Some(ks.anti(relationFor(spark, snap.deletes, Nil,
-            Some(keySchemaOf(schema0, keyCols)))).localCheckpoint(true))
-      try {
-        // scope-aware fold: combined's keys = delta keys ∪ u's keys,
-        // and the tombstones' files are in the scope too (deleteLite
-        // records them like mergeLite does). The suppression scope
-        // already names every base file a DELTA or DELETE key touches
-        // (exact — the discovery invariant), so only u's own keys need
-        // discovering: the base scan is sized to THIS batch.
-        val known: Option[Set[String]] = snap.dvFiles.map { scope =>
-          scope.map(normalize).toSet ++
-            (if (ks.size == 0) Set.empty[String]
-             else ks.touchedFiles(
-               relationFor(spark, snap.entries, snap.stats, Some(widened))))
-        }
-        val stats = rewriteMerge(spark, fs, root, snap.version, snap.entries,
-          combined, KeySet.Frame(combined, keyCols, combined.count()),
-          snapStats = snap.stats,
-          tableSchema = schema0, allowEvolution = allowEvolution,
-          knownTouched = known, removeKeys = removeKeys, colMap0 = cm1)
-        // report the CALLER's upsert count, not the fold's combined
-        // total — rowsUpserted means "rows this call absorbed" on every
-        // other path, and accounting against it must not see the delta
-        stats.copy(rowsUpserted = ks.size)
-      } finally {
-        graft.util.Checkpoints.free(combined)
-        removeKeys.foreach(graft.util.Checkpoints.free)
-      }
-    }
-  }
+      allowSchemaEvolution: Boolean = false): MergeStats =
+    RowLevel(spark, path, Some(updates), None, keyCols, maxDeltaRows = 0L,
+      maxRetries, DefaultMaxDeltaFiles, allowSchemaEvolution, "merge")
 
   /** Shared key-list contract of [[merge]] and [[mergeLite]]: nonempty
     * and DUPLICATE-FREE — a repeated name would brick the table: a
@@ -2117,25 +1986,6 @@ object MergeTable {
     require(keyCols.nonEmpty, "keyCols must name at least one column")
     require(keyCols.distinct.size == keyCols.size,
       s"keyCols repeats a column name: ${keyCols.mkString(",")}")
-  }
-
-  /** delta ⊎ u, last wins per key (u newest, keyed by `ks`) — unique per
-    * key because both inputs are. Projected to `cols` order so union
-    * legs agree. */
-  private def combinedDelta(
-      deltaDf: DataFrame, u: DataFrame, ks: KeySet,
-      cols: Seq[String]): DataFrame =
-    ks.anti(deltaDf)
-      .select(cols.map(col): _*)
-      .unionByName(u.select(cols.map(col): _*))
-
-  /** Schema/type conformance of an update frame against the table
-    * schema — shared by the rewrite and row-level merge paths. Exact
-    * match required (the pre-evolution contract). */
-  private def requireConforms(
-      tableSchema: org.apache.spark.sql.types.StructType,
-      u: DataFrame, keyCols: Seq[String]): Unit = {
-    conformedSchema(tableSchema, u, keyCols, allowEvolution = false); ()
   }
 
   /** Conformance + ADDITIVE schema evolution (Delta's `mergeSchema`,
@@ -2356,8 +2206,8 @@ object MergeTable {
       knownTouched: Option[Set[String]] = None,
       removeKeys: Option[DataFrame] = None,
       colMap0: ColMap,
-      // true ONLY for a PURE caller-batch insert against a DV-free base
-      // (mergeOnce's non-fold branch). FOLD calls must never rebase:
+      // true ONLY for a PURE caller batch (no prior delta, no deletes)
+      // on a DV-free base (see RowLevel.once). FOLD calls must never rebase:
       // their `u` is delta-carried state whose validity depends on the
       // base's row-level lines — a winner that deleted those delta keys
       // (e.g. a past-budget deleteLite emitting an entries-only
@@ -2446,7 +2296,7 @@ object MergeTable {
       case e: FileAlreadyExistsException =>
         // lost the OCC race. INSERT-ONLY commits (no file hit, no keys
         // removed) can try the disjointness REBASE instead of the full
-        // re-attempt; everything else re-runs whole (merge()'s loop).
+        // re-attempt; everything else re-runs whole (the writer's loop).
         (if (allowRebase && hit.isEmpty && removeKeys.isEmpty && nU > 0)
            rebaseInsertOnly(spark, fs, root, ks, newFiles, widened, colMap0,
              baseEntries)
@@ -2837,40 +2687,20 @@ object MergeTable {
       try {
         val (fs, root) = fsOf(spark, path)
         val snap0 = snapshot(spark, path)
+        // FOLD row-level (mergeLite/deleteLite) state first: the
+        // per-file rewrite below reasons about PHYSICAL rows and cannot
+        // see the key suppression — deleting a matching DELTA row
+        // directly would un-tombstone its key and RESURRECT the
+        // superseded base row.
         val snap =
           if (!snap0.rowLevel) snap0
-          else {
-            // FOLD row-level (mergeLite/deleteLite) state first: the
-            // per-file rewrite below reasons about PHYSICAL rows and
-            // cannot see the key suppression — deleting a matching
-            // DELTA row directly would un-tombstone its key and
-            // RESURRECT the superseded base row. The fold's update set
-            // is EXACTLY the delta (+ the tombstones as removals),
-            // whose suppression scope (when recorded) is the exact
-            // touched-file set — discovery skipped (scope-aware fold,
-            // r14 verdict #5).
-            val schema00 = tableSchemaOf(spark, snap0)
-            val deltaDf =
-              if (snap0.delta.isEmpty)
-                relationFor(spark, snap0.entries, Nil, Some(schema00)).limit(0)
-              else relationFor(spark, snap0.delta, Nil, Some(schema00))
-            val removeKeys = if (snap0.deletes.isEmpty) None
-              else Some(relationFor(spark, snap0.deletes, Nil,
-                Some(keySchemaOf(schema00, snap0.dvKeys))))
-            val folded = rewriteMerge(spark, fs, root, snap0.version,
-              snap0.entries, deltaDf, KeySet.Frame(deltaDf, snap0.dvKeys,
-                if (snap0.delta.isEmpty) 0L else deltaDf.count()),
-              snapStats = snap0.stats, tableSchema = schema00,
-              knownTouched = snap0.dvFiles.map(_.map(normalize).toSet),
-              removeKeys = removeKeys, colMap0 = snap0.colMap)
-            // tombstones that suppress nothing + no delta: the fold has
-            // nothing to rewrite and commits nothing — the predicate
-            // path below is still sound (no base row was suppressed)
-            // and its own commit drops the inert row-level lines
-            if (folded.version == snap0.version) snap0.copy(
-              delta = Nil, dvKeys = Nil, dvFiles = None, deletes = Nil)
-            else snapshot(spark, path)
-          }
+          else if (RowLevel.fold(spark, path, snap0, clearInert = false,
+              "deleteWhere").version != snap0.version) snapshot(spark, path)
+          // tombstones that suppress nothing + no delta: the fold has
+          // nothing to rewrite and commits nothing — the predicate path
+          // below is still sound (no base row was suppressed) and its
+          // own commit drops the inert row-level lines
+          else snap0.copy(delta = Nil, dvKeys = Nil, dvFiles = None, deletes = Nil)
         val schema0 = tableSchemaOf(spark, snap)
         // the predicate speaks LOGICAL names: evaluate it over the
         // logical-aliased view (identity on unmapped tables) — Catalyst

@@ -7,8 +7,11 @@ import org.apache.spark.sql.functions._
 import MergeTable._
 
 /** The one row-level writer: [[MergeTable.applyChanges]], and through it
-  * [[MergeTable.mergeLite]] (no delete side) and [[MergeTable.deleteLite]]
-  * (no upsert side). A call's upserts and deletes land in ONE manifest
+  * [[MergeTable.mergeLite]] (no delete side), [[MergeTable.deleteLite]]
+  * (no upsert side) and [[MergeTable.merge]] (no delete side, a zero
+  * row budget: every call folds). [[MergeTable.foldRowLevel]] and
+  * [[MergeTable.deleteWhere]] run its fold with no side at all
+  * ([[fold]]). A call's upserts and deletes land in ONE manifest
   * version — Delta's one-log-entry transaction of adds and removes — so
   * no reader can pin a version holding half of it.
   *
@@ -29,7 +32,8 @@ import MergeTable._
   *    re-writing the accumulated set costs little next to the delta;
   *  - once the new delta + tombstone rows would pass `maxDeltaRows`, the
   *    call FOLDS instead: one rewrite merge of the new delta that drops
-  *    every tombstoned row, emitting a DV-free manifest.
+  *    every tombstoned row, emitting a DV-free manifest. Under a zero
+  *    budget the probes are skipped and every call folds.
   *
   * The suppression is SCOPED as every row-level commit is: the prior
   * scope plus the base files a cheap point probe proves hold a key of
@@ -47,50 +51,78 @@ private[sources] object RowLevel {
     require(maxDeltaFiles >= 1, "maxDeltaFiles must be >= 1")
     // '\r' too: Manifests.read splits lines on CR as well as LF, so a
     // CR inside a stored name would shear the dvkeys line into a
-    // phantom entry and corrupt every later snapshot
-    keyCols.foreach(k => require(
+    // phantom entry and corrupt every later snapshot. A zero budget
+    // never commits row-level state, so it never writes the line.
+    if (maxDeltaRows > 0) keyCols.foreach(k => require(
       !k.exists(c => c == ',' || c == '\t' || c == '\n' || c == '\r'),
       s"key column name not encodable in the manifest dvkeys line: '$k'"))
     upserts.foreach(u => require(keyCols.forall(u.columns.contains),
       s"key ${keyCols.mkString(",")} missing from updates"))
     deletes.foreach(k => require(keyCols.forall(k.columns.contains),
       s"key ${keyCols.mkString(",")} missing from keys frame"))
+    // an upsert-only call whose fold rewrites nothing (a zero-row merge
+    // over inert tombstones) commits nothing; foldRowLevel clears them
+    val clearInert = upserts.isEmpty || deletes.isDefined
     val u = upserts.map(_.localCheckpoint(true)) // one computation across retries
     try {
       val ch = KeySet.validatedChanges(u, deletes, keyCols)
-      try {
-        var attempt = 0
-        while (attempt < maxRetries) {
-          attempt += 1
-          try return once(spark, path, u, ch, maxDeltaRows, maxDeltaFiles,
-            allowEvolution, caller)
-          catch {
-            case _: FileAlreadyExistsException => // lost the race: re-snapshot
-          }
-        }
-        throw new CommitConflict(
-          s"$caller at $path lost $maxRetries optimistic commits in a row")
-      } finally ch.deletes.foreach(graft.util.Checkpoints.free)
+      try retried(maxRetries, s"$caller at $path")(
+        once(spark, path, snapshot(spark, path), u, ch, maxDeltaRows,
+          maxDeltaFiles, allowEvolution, caller, clearInert))
+      finally ch.deletes.foreach(graft.util.Checkpoints.free)
     } finally u.foreach(graft.util.Checkpoints.free)
   }
 
+  /** One attempt of the fold alone — no upsert or delete side, a zero
+    * budget — against `snap`. [[MergeTable.foldRowLevel]] retries it;
+    * [[MergeTable.deleteWhere]] runs it before its per-file rewrite
+    * with `clearInert` off, because its own commit drops inert
+    * row-level lines. */
+  def fold(spark: SparkSession, path: String, snap: Snapshot,
+      clearInert: Boolean, caller: String): MergeStats = {
+    val none = KeySet.Frame(spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        keySchemaOf(tableSchemaOf(spark, snap), snap.dvKeys)),
+      snap.dvKeys, 0L)
+    once(spark, path, snap, None, KeySet.Changes(none, 0L, 0L, None),
+      maxDeltaRows = 0L, DefaultMaxDeltaFiles, allowEvolution = false,
+      caller, clearInert)
+  }
+
+  /** `attempt` re-run until it wins its optimistic commit, at most
+    * `maxRetries` times. */
+  def retried(maxRetries: Int, what: String)(attempt: => MergeStats): MergeStats = {
+    var n = 0
+    while (n < maxRetries) {
+      n += 1
+      try return attempt
+      catch {
+        case _: FileAlreadyExistsException => // lost the race: re-snapshot
+      }
+    }
+    throw new CommitConflict(
+      s"$what lost $maxRetries optimistic commits in a row")
+  }
+
   private def once(
-      spark: SparkSession, path: String, u0: Option[DataFrame],
+      spark: SparkSession, path: String, snap: Snapshot, u0: Option[DataFrame],
       ch: KeySet.Changes, maxDeltaRows: Long, maxDeltaFiles: Int,
-      allowEvolution: Boolean, caller: String): MergeStats = {
+      allowEvolution: Boolean, caller: String, clearInert: Boolean): MergeStats = {
     val (fs, root) = fsOf(spark, path)
-    val snap = snapshot(spark, path)
     val schema0 = tableSchemaOf(spark, snap)
-    // writer boundary (the mergeOnce rationale): logical in, physical
-    // below — re-derived per OCC attempt. The delete side's extended
-    // column map is discarded: a key naming no live column extends
-    // nothing that commits, and fails the membership check below.
+    // writer boundary: the caller speaks LOGICAL names; everything
+    // below (schema line, dvkeys, stats, data files) speaks PHYSICAL.
+    // Re-derived per OCC attempt — a concurrent rename can land between
+    // retries. The delete side's extended column map is discarded: a
+    // key naming no live column extends nothing that commits, and
+    // fails the membership check below. A call with no side folds by
+    // the table's own keys.
     val logicalKeys = ch.ks.keyCols
     val ub = u0.map(inbound(snap.colMap, schema0, _, logicalKeys))
     val db = ch.deletes.map(inbound(snap.colMap, schema0, _, logicalKeys))
     val u = ub.map(_._1)
     val d = db.map(_._1)
-    val keyCols = (ub orElse db).get._2
+    val keyCols = (ub orElse db).fold(snap.dvKeys)(_._2)
     val cm1 = ub.fold(snap.colMap)(_._3)
     val ks = if (keyCols == logicalKeys) ch.ks else ch.ks.rebound(
       ch.ks.keys.select(logicalKeys.zip(keyCols).map { case (l, p) => col(l).as(p) }: _*),
@@ -98,8 +130,9 @@ private[sources] object RowLevel {
     val (nU, nD) = (ch.nU, ch.nD)
     // persisted-state-vs-frame mismatch: IllegalStateException, so a
     // caller's IllegalArgumentException fallback can't bury it (the
-    // writeBatch bloom-guard convention). SET equality — join keys are
-    // unordered (the mergeOnce fold rationale).
+    // writeBatch bloom-guard convention). SET equality: join keys are
+    // unordered, and refusing a reordered spelling of the same set
+    // would be a spurious failure.
     if (snap.rowLevel && snap.dvKeys.toSet != keyCols.toSet)
       throw new IllegalStateException(
         s"table at $path carries row-level state keyed by " +
@@ -114,7 +147,7 @@ private[sources] object RowLevel {
     }(conformedSchema(schema0, _, keyCols, allowEvolution))
     // delete key TYPES must match the table's: a drifted type would
     // silently tombstone nothing (the join never matches) — the
-    // requireConforms rationale, scoped to the key columns
+    // conformedSchema rationale, scoped to the key columns
     d.foreach(_.schema.foreach { f =>
       val t = widened(f.name).dataType
       require(f.dataType.catalogString == t.catalogString,
@@ -122,13 +155,14 @@ private[sources] object RowLevel {
           s"the table stores ${t.catalogString} — cast the keys frame")
     })
     val sj = Some(asNullableSchema(widened).json)
-    if (nU == 0 && nD == 0) {
+    // a zero budget admits no row-level state: a zero-row call on a
+    // row-level table falls through to the fold
+    if (nU == 0 && nD == 0 && (maxDeltaRows > 0 || !snap.rowLevel)) {
       val kept = snap.entries.size + snap.delta.size + snap.deletes.size
       // zero-row no-op — EXCEPT when it widens the schema: commit the
-      // manifest-only widening deterministically (merge()'s zero-row
-      // branch does the same), carrying every piece of row-level state
-      // verbatim. STRUCTURAL compare, not length (the rewriteMerge
-      // type-widening rationale).
+      // manifest-only widening deterministically, carrying every piece
+      // of row-level state verbatim. STRUCTURAL compare, not length
+      // (the rewriteMerge type-widening rationale).
       if (asNullableSchema(widened) == asNullableSchema(schema0))
         return MergeStats(snap.version, kept, 0, 0, 0)
       commit(fs, root, snap.version + 1,
@@ -147,9 +181,9 @@ private[sources] object RowLevel {
       else Some(relationFor(spark, snap.deletes, Nil,
         Some(keySchemaOf(schema0, keyCols))))
     // (rows, rows carrying a key of ks) of the delta and of the
-    // tombstones, in one job. A call past the budget folds whatever they
-    // say, so it skips them.
-    val probed = nU + nD <= maxDeltaRows
+    // tombstones, in one job. A call that folds whatever they say —
+    // past the budget, or under a zero one — skips them.
+    val probed = maxDeltaRows > 0 && nU + nD <= maxDeltaRows
     val counts = ks.overlaps(if (probed) deltaDf.toSeq ++ tombDf.toSeq else Nil)
     val deltaProbe = deltaDf.filter(_ => probed).map(_ => counts.head)
     val tombProbe = tombDf.filter(_ => probed).map(_ => counts.last)
@@ -159,9 +193,9 @@ private[sources] object RowLevel {
     val nDelta = deltaRows - deltaHit + nU
     val nTomb = tombRows - tombHit + nD
     val cols = widened.map(_.name)
-    // a probe that saw no key of ks spares the anti-join
+    // an empty ks, or a probe that saw no key of it, spares the anti-join
     def withoutKs(df: DataFrame, probe: Option[(Long, Long)]) =
-      if (probe.exists(_._2 == 0L)) df else ks.anti(df)
+      if (ks.size == 0 || probe.exists(_._2 == 0L)) df else ks.anti(df)
     // delta survivors ∪ upserts, projected to the widened shape
     def newDelta(): DataFrame = (deltaDf.map(df =>
         withoutKs(padTo(df, widened), deltaProbe).select(cols.map(col): _*)).toSeq ++
@@ -172,30 +206,53 @@ private[sources] object RowLevel {
       (tombDf.map(withoutKs(_, tombProbe)).toSeq ++ d).reduceOption(_ unionByName _)
 
     if (!probed || nDelta + nTomb > maxDeltaRows) {
-      // past the read-tax bound: FOLD the new delta in ONE rewrite merge
-      // that drops every tombstoned row — the compaction the row-level
-      // state was deferring — reporting the CALLER's upsert count.
-      // Scope-aware (the mergeOnce-fold rationale): the prior scope
-      // covers the delta and tombstone keys exactly, so only ks pays a
-      // discovery scan. Both frames are checkpointed when they derive
-      // from prior state: rewriteMerge reads each up to three times
-      // (count, discovery, hit-file anti-join).
+      // FOLD the new delta in ONE rewrite merge that drops every
+      // tombstoned row — the compaction the row-level state was
+      // deferring — reporting the CALLER's upsert count. Scope-aware:
+      // the prior scope names every base file a delta or tombstone key
+      // touches (exact, the discovery invariant), so only ks pays a
+      // discovery scan, sized to this call. The new delta is
+      // checkpointed whenever it draws on the prior one, so every fold
+      // groups its output the same way; rewriteMerge reads it up to
+      // three times (count, discovery, hit-file anti-join). The
+      // tombstones are checkpointed when ks filters them.
       val combined =
         if (deltaDf.isEmpty) newDelta() else newDelta().localCheckpoint(true)
       val removeKeys =
-        if (tombDf.isEmpty) d else newTombs().map(_.localCheckpoint(true))
+        if (tombDf.isEmpty || ks.size == 0) newTombs()
+        else newTombs().map(_.localCheckpoint(true))
       try {
         val known: Option[Set[String]] = snap.dvFiles.map(scope =>
-          scope.map(normalize).toSet ++ ks.touchedFiles(base))
-        val n = if (probed) nDelta else if (deltaDf.isEmpty) nU else combined.count()
+          scope.map(normalize).toSet ++
+            (if (ks.size == 0) Set.empty[String] else ks.touchedFiles(base)))
+        // with no key of ks to drop, the new delta is the old one: its
+        // footers count it without a job
+        val n =
+          if (deltaDf.isEmpty) nU
+          else if (probed) nDelta
+          else if (ks.size == 0)
+            footerRowCount(spark.sparkContext.hadoopConfiguration, snap.delta)
+          else combined.count()
+        // a PURE caller batch (no prior delta, no deletes) keeps its own
+        // key set, literal when it fits, and on a DV-free base may
+        // rebase a lost insert-only commit (see rewriteMerge)
+        val pure = deltaDf.isEmpty && d.isEmpty
         val st = rewriteMerge(spark, fs, root, snap.version, snap.entries,
-          combined, KeySet.Frame(combined, keyCols, n), snapStats = snap.stats,
-          tableSchema = schema0, allowEvolution = allowEvolution,
-          knownTouched = known, removeKeys = removeKeys, colMap0 = cm1)
-        if (st.version != snap.version) return st.copy(rowsUpserted = nU)
-        // nothing to write and nothing touched: the tombstones provably
-        // suppress nothing — the folded state is a clean entries-only
-        // manifest (deleting absent keys is a no-op)
+          combined, if (pure) ks else KeySet.Frame(combined, keyCols, n),
+          snapStats = snap.stats, tableSchema = schema0,
+          allowEvolution = allowEvolution, knownTouched = known,
+          removeKeys = removeKeys, colMap0 = cm1,
+          allowRebase = pure && !snap.rowLevel)
+        if (st.version != snap.version || !clearInert)
+          return st.copy(rowsUpserted = nU)
+        // nothing to write and nothing touched: the row-level state
+        // provably suppresses nothing AT snap.version (deleting absent
+        // keys is a no-op), so the folded state is a clean entries-only
+        // manifest — claimed as exactly snap.version + 1. A writer
+        // landing after the proof makes the claim lose OCC, and the
+        // retry re-proves against its state: its delta rows are never
+        // blind-cleared, its deletions never resurrected.
+        commitRaceHookForTest()
         commit(fs, root, snap.version + 1,
           encodeSnapshot(withSizes(fs, snap.entries), Nil, Nil,
             stats = snap.stats, schemaJson = Some(asNullableSchema(schema0).json),
@@ -203,7 +260,8 @@ private[sources] object RowLevel {
         return MergeStats(snap.version + 1, snap.entries.size, 0, 0, 0)
       } finally {
         if (deltaDf.nonEmpty) graft.util.Checkpoints.free(combined)
-        if (tombDf.nonEmpty) removeKeys.foreach(graft.util.Checkpoints.free)
+        if (tombDf.nonEmpty && ks.size > 0)
+          removeKeys.foreach(graft.util.Checkpoints.free)
       }
     }
 

@@ -14,7 +14,9 @@ import graft.sources.MergeTable
   * 17 jobs; 19 for the micro-batch). The ceilings of the row-level
   * folds (`merge` onto row-level state, `foldRowLevel`, and
   * `deleteWhere` on a row-level table) are the counts measured while
-  * each of the three built its own fold. */
+  * each of the three built its own fold (merge 9 and 10, foldRowLevel
+  * 6 and 7, deleteWhere 7 and 7), lowered where the one fold
+  * launches fewer. */
 class MergeTableJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -147,11 +149,11 @@ class MergeTableJobsSpec extends SparkSpec {
 
   test("foldRowLevel: job ceilings with and without tombstones") {
     val plain = rowLevelTable()
-    assertCeiling("foldRowLevel of a delta", 6) {
+    assertCeiling("foldRowLevel of a delta", 3) {
       MergeTable.foldRowLevel(spark, plain)
     }
     val tombs = tombstonedTable()
-    assertCeiling("foldRowLevel of a delta and tombstones", 7) {
+    assertCeiling("foldRowLevel of a delta and tombstones", 3) {
       MergeTable.foldRowLevel(spark, tombs)
     }
     for ((p, n) <- Seq(plain -> 3000, tombs -> 2950)) {
@@ -163,11 +165,11 @@ class MergeTableJobsSpec extends SparkSpec {
   test("deleteWhere on a row-level table: job ceilings with and without tombstones") {
     import org.apache.spark.sql.functions.col
     val plain = rowLevelTable()
-    assertCeiling("deleteWhere after folding a delta", 7) {
+    assertCeiling("deleteWhere after folding a delta", 6) {
       MergeTable.deleteWhere(spark, plain, col("id").between(2001, 2100))
     }
     val tombs = tombstonedTable()
-    assertCeiling("deleteWhere after folding a delta and tombstones", 7) {
+    assertCeiling("deleteWhere after folding a delta and tombstones", 6) {
       MergeTable.deleteWhere(spark, tombs, col("id").between(2001, 2100))
     }
     for ((p, n) <- Seq(plain -> 2900, tombs -> 2850)) {

@@ -230,4 +230,72 @@ class RowLevelSpec extends SparkSpec {
     assert(MergeTable.snapshot(spark, p).version === v0 + 1,
       "only the one valid call committed")
   }
+
+  test("merge is the row-level writer under a zero budget: a zero-row merge folds row-level state") {
+    val path = freshPath()
+    base(path)
+    MergeTable.mergeLite(spark, path, rows(101 to 150, "d"), Seq("id"))
+    MergeTable.deleteLite(spark, path, keys(1 to 10), Seq("id"))
+    val want = sorted(path)
+    val v = MergeTable.snapshot(spark, path).version
+    val st = MergeTable.merge(spark, path, rows(Nil, "z"), Seq("id"))
+    val snap = MergeTable.snapshot(spark, path)
+    assert(st.version === v + 1 && snap.version === v + 1)
+    assert(st.rowsUpserted === 0L)
+    assert(!snap.rowLevel && snap.dvFiles.isEmpty && snap.dvLits.isEmpty,
+      "the zero-row merge must leave a DV-free manifest")
+    assert(sorted(path) === want)
+    // and on the DV-free result it is a no-op that commits nothing
+    assert(MergeTable.merge(spark, path, rows(Nil, "z"), Seq("id")).version === v + 1)
+    assert(MergeTable.snapshot(spark, path).version === v + 1)
+  }
+
+  test("merge never meets the row-level writer's dvkeys-line and delta-file-cap refusals") {
+    // a key name the manifest's dvkeys line cannot store: the row-level
+    // writers refuse it up front; merge, which never commits row-level
+    // state, keys by it as it always has
+    val path = freshPath()
+    def kv(ids: Seq[Int], tag: String) =
+      ids.map(i => (i.toLong, s"$tag$i")).toDF("k,1", "v")
+    MergeTable.init(spark, path, kv(1 to 20, "a"))
+    val e = intercept[IllegalArgumentException] {
+      MergeTable.mergeLite(spark, path, kv(1 to 2, "b"), Seq("k,1"))
+    }
+    assert(e.getMessage.contains("dvkeys"), e.getMessage)
+    val st = MergeTable.merge(spark, path, kv(15 to 25, "c"), Seq("k,1"))
+    assert(st.rowsUpserted === 11L)
+    assert(MergeTable.read(spark, path).count() === 25)
+    assert(MergeTable.read(spark, path).filter($"v".startsWith("c")).count() === 11)
+    // the delta-file cap is a mergeLite option; merge has none to refuse
+    val p2 = freshPath()
+    base(p2)
+    intercept[IllegalArgumentException] {
+      MergeTable.mergeLite(spark, p2, rows(1 to 2, "l"), Seq("id"), maxDeltaFiles = 0)
+    }
+    MergeTable.merge(spark, p2, rows(1 to 2, "m"), Seq("id"))
+    assert(MergeTable.read(spark, p2).filter($"tag" === "m").count() === 2)
+  }
+
+  test("rewriteMerge has one call site in the main code: the row-level writer's fold") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val needle = "rewriteMerge" + "("
+    val dir = Paths.get("src/main/scala")
+    assert(Files.isDirectory(dir), s"src/main/scala not found from ${Paths.get("").toAbsolutePath}")
+    val files = {
+      val s = Files.walk(dir)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    def isComment(line: String): Boolean = {
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }
+    val sites = files.flatMap { p =>
+      Files.readAllLines(p).asScala.filter(l =>
+        !isComment(l) && l.contains(needle) && !l.contains("def " + needle))
+        .map(_ => p.toString)
+    }
+    assert(sites === Seq("src/main/scala/graft/sources/RowLevel.scala"))
+  }
 }
