@@ -249,9 +249,9 @@ private[graft] object KeySet {
     base.filter(col(k).isin(ks: _*))
       .select(input_file_name().as("__file")).distinct()
 
-  /** A [[MergeTable.merge]] batch, validated in ONE action: row count,
+  /** An upsert batch alone, validated in ONE action: row count,
     * uniqueness on `keyCols` and the NULL-key refusal (the upsert side
-    * of [[validatedChanges]]). */
+    * of [[validatedChanges]], which every writer calls). */
   def validated(u: DataFrame, keyCols: Seq[String]): KeySet =
     validatedChanges(Some(u), None, keyCols).ks
 

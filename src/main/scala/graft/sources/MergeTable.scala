@@ -1586,8 +1586,7 @@ object MergeTable {
     // state inert at its snapshot and clears it with a manifest-only
     // commit pinned one version past it (see RowLevel.once).
     RowLevel.retried(maxRetries, s"foldRowLevel at $path")(
-      RowLevel.fold(spark, path, snapshot(spark, path), clearInert = true,
-        "foldRowLevel"))
+      RowLevel.fold(spark, path, snapshot(spark, path), clearInert = true))
 
   /** The "fold before the cliff" policy (delete-heavy tables creep
     * toward the maxDeltaRows budget one small deleteLite at a time;
@@ -2243,7 +2242,7 @@ object MergeTable {
     // Insert-only batches write ceil(nU / InsertRowsPerFile) files: one
     // file per batch fragments nothing, but a single writer task for an
     // arbitrarily large first load would serialize the whole write (the
-    // compute upstream is already materialized by merge()'s checkpoint,
+    // compute upstream is already materialized by the writer's checkpoint,
     // so only write parallelism is at stake).
     val insertFiles = math.max(1L,
       (nU + InsertRowsPerFile - 1) / InsertRowsPerFile).toInt
@@ -2694,8 +2693,8 @@ object MergeTable {
         // superseded base row.
         val snap =
           if (!snap0.rowLevel) snap0
-          else if (RowLevel.fold(spark, path, snap0, clearInert = false,
-              "deleteWhere").version != snap0.version) snapshot(spark, path)
+          else if (RowLevel.fold(spark, path, snap0, clearInert = false)
+              .version != snap0.version) snapshot(spark, path)
           // tombstones that suppress nothing + no delta: the fold has
           // nothing to rewrite and commits nothing — the predicate path
           // below is still sound (no base row was suppressed) and its

@@ -79,14 +79,14 @@ private[sources] object RowLevel {
     * with `clearInert` off, because its own commit drops inert
     * row-level lines. */
   def fold(spark: SparkSession, path: String, snap: Snapshot,
-      clearInert: Boolean, caller: String): MergeStats = {
+      clearInert: Boolean): MergeStats = {
     val none = KeySet.Frame(spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         keySchemaOf(tableSchemaOf(spark, snap), snap.dvKeys)),
       snap.dvKeys, 0L)
     once(spark, path, snap, None, KeySet.Changes(none, 0L, 0L, None),
       maxDeltaRows = 0L, DefaultMaxDeltaFiles, allowEvolution = false,
-      caller, clearInert)
+      "fold", clearInert)
   }
 
   /** `attempt` re-run until it wins its optimistic commit, at most
@@ -212,10 +212,12 @@ private[sources] object RowLevel {
       // the prior scope names every base file a delta or tombstone key
       // touches (exact, the discovery invariant), so only ks pays a
       // discovery scan, sized to this call. The new delta is
-      // checkpointed whenever it draws on the prior one, so every fold
-      // groups its output the same way; rewriteMerge reads it up to
-      // three times (count, discovery, hit-file anti-join). The
-      // tombstones are checkpointed when ks filters them.
+      // checkpointed whenever it draws on the prior one, also when no
+      // key of ks is dropped from it: its partitions, and so the files
+      // the rewrite groups them into, are then the same whichever entry
+      // point folds. rewriteMerge reads it up to three times (count,
+      // discovery, hit-file anti-join). The tombstones are checkpointed
+      // when ks filters them.
       val combined =
         if (deltaDf.isEmpty) newDelta() else newDelta().localCheckpoint(true)
       val removeKeys =
