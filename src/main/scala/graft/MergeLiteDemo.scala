@@ -397,7 +397,7 @@ object MergeLiteDemo {
     // 1000 single-key retractions — the sustained GDPR-queue shape —
     // against the 40M scoped table, read wall sampled every 250.
     println("phase 8 — 1000 sequential single-key deleteLites: read wall " +
-      "stays flat; foldIfTombstones clears at the threshold")
+      "stays flat; maintain's fold policy clears at the threshold")
     val delIds = spark.range(12, 1012)
       .select((col("id") * (n / 1013)).as("id"))
     val delKeys = responseRows(delIds).select("request_id")
@@ -424,12 +424,14 @@ object MergeLiteDemo {
           f"cumulative delete wall $deleteWall%6.1f s)")
       }
     }
-    // threshold policy: under stays put, over folds — then reads are
-    // suppression-free again
-    require(MergeTable.foldIfTombstones(spark, scopedPath, 2000L).isEmpty,
-      "under-threshold must not fold")
+    // threshold policy (maintain's fold branch alone): under stays put,
+    // over folds — then reads are suppression-free again
+    def foldPolicy(maxTombstoneRows: Long) = MergeTable.maintain(spark, scopedPath,
+      MergeTable.MaintenancePolicy(rescope = false,
+        foldAtTombstoneRows = Some(maxTombstoneRows), vacuumRetainMillis = None)).folded
+    require(foldPolicy(2000L).isEmpty, "under-threshold must not fold")
     val t8 = System.nanoTime()
-    val folded8 = MergeTable.foldIfTombstones(spark, scopedPath, 500L)
+    val folded8 = foldPolicy(500L)
     val wFold8 = (System.nanoTime() - t8) / 1e9
     require(folded8.isDefined && !MergeTable.snapshot(spark, scopedPath).rowLevel,
       "over-threshold must fold to a DV-free manifest")

@@ -338,9 +338,16 @@ object MergeTable {
       version: Long, filesKept: Long, filesRewritten: Long,
       filesWritten: Long, rowsUpserted: Long)
 
-  /** Thrown when `maxRetries` optimistic commits in a row lost the
-    * race to a concurrent writer. */
+  /** Thrown when a writer lost [[CommitAttempts]] optimistic commits in
+    * a row to concurrent writers ([[transact]]); a compaction, which
+    * rewrites the whole table, throws it at its first lost race. */
   final class CommitConflict(msg: String) extends RuntimeException(msg)
+
+  /** Attempts [[transact]] gives a writer before [[CommitConflict]]. */
+  private[graft] val CommitAttempts = 5
+
+  /** Re-validations [[commitOrRebase]] gives a lost append. */
+  private[graft] val RebaseAttempts = 3
 
   /** Target rows per data file for insert-only merge batches (~100-200
     * MB parquet at typical document-row widths). */
@@ -396,10 +403,8 @@ object MergeTable {
     val files = writeBatch(spark, fs, root, df)
     // asNullable: file-backed reads render every column nullable, so
     // the recorded schema must agree with what a probe would have said
-    val sj = Some(asNullableSchema(df.schema).json)
-    commit(fs, root, 1L, encodeSnapshot(files, Nil, Nil, schemaJson = sj,
-      colMap = ColMap.empty, dvLits = None))
-    Snapshot(1L, files, schemaJson = sj)
+    commit(fs, root,
+      Snapshot(1L, files, schemaJson = Some(asNullableSchema(df.schema).json)))
   }
 
   /** Zero-copy CLONE (Delta SHALLOW CLONE, miniature): `dst` becomes a
@@ -452,22 +457,15 @@ object MergeTable {
     // the same refusal init(bloomKeys = Nil) makes (and a TORN leftover
     // fails loudly HERE, at creation, not on the clone's first write)
     else requireNoForeignBloom(dstFs, dstRoot)
-    // sizes ride along (withSizes upgrades a legacy size-less source
-    // once, here, so the clone starts on the zero-listing read path) —
-    // returned as committed, so the caller's snapshot agrees with disk
-    val entries = withSizes(srcFs, snap.entries)
-    val delta = withSizes(srcFs, snap.delta)
-    val dels = withSizes(srcFs, snap.deletes)
-    // a legacy schema-less source upgrades once, here (the withSizes
-    // convention): the clone starts with zero-IO opens and a pinned,
-    // evolution-ready schema
-    val sj = Some(asNullableSchema(tableSchemaOf(spark, snap)).json)
-    commit(dstFs, dstRoot, 1L,
-      encodeSnapshot(entries, delta, snap.dvKeys, snap.dvFiles,
-        stats = snap.stats, schemaJson = sj, deletes = dels,
-        colMap = snap.colMap, dvLits = snap.dvLits))
-    Snapshot(1L, entries, delta, snap.dvKeys, snap.dvFiles, snap.stats, sj,
-      dels, snap.colMap, snap.dvLits)
+    // a legacy size-less or schema-less source upgrades once, here (the
+    // sizes stat'ed on the SOURCE's filesystem): the clone starts on the
+    // zero-listing read path with zero-IO opens and a pinned,
+    // evolution-ready schema — returned as committed, so the caller's
+    // snapshot agrees with disk
+    commit(dstFs, dstRoot, snap.copy(version = 1L,
+      entries = withSizes(srcFs, snap.entries),
+      delta = withSizes(srcFs, snap.delta), deletes = withSizes(srcFs, snap.deletes),
+      schemaJson = Some(asNullableSchema(tableSchemaOf(spark, snap)).json)))
   }
 
   /** The refusal [[init]] (no keys) and [[cloneTable]] (bloom-less
@@ -714,23 +712,13 @@ object MergeTable {
             "key values — foreign or hand-edited content")
     }
 
-  // colMap is deliberately REQUIRED (no default): a committing writer
-  // that forgot to carry the table's column mapping would silently
-  // revert every rename and resurrect every dropped column on its
-  // commit — the compiler forces each site to decide.
-  // dvLits is required for the same reason in the opposite direction: a
-  // row-level commit that forgot to carry/extend the recorded
-  // suppression literals would silently knock every later read off the
-  // zero-job literal path (perf, never correctness — but permanent
-  // until the next fold).
-  private[sources] def encodeSnapshot(
-      entries: Seq[FileEntry], delta: Seq[FileEntry],
-      dvKeys: Seq[String], dvFiles: Option[Seq[String]] = None,
-      stats: Seq[TableStats] = Nil,
-      schemaJson: Option[String] = None,
-      deletes: Seq[FileEntry] = Nil,
-      colMap: ColMap,
-      dvLits: Option[Seq[Any]]): Seq[String] = {
+  /** The manifest lines of `s` (its version is the commit's claim, not
+    * a line). Called only by [[commit]], so every writer's state passes
+    * the same invariants: most writers derive the next version from
+    * their snapshot by `copy`, carrying the column mapping and the
+    * suppression literals unless they deliberately change them. */
+  private def encodeSnapshot(s: Snapshot): Seq[String] = {
+    import s._
     require((delta.isEmpty && deletes.isEmpty) == dvKeys.isEmpty,
       "row-level files (delta/deletes) and dvKeys must be committed together")
     require(dvFiles.isEmpty || delta.nonEmpty || deletes.nonEmpty,
@@ -801,8 +789,7 @@ object MergeTable {
     * since [[establishStats]] filters such names first. */
   private[graft] def encodeSnapshotForTest(
       entries: Seq[FileEntry], stats: Seq[TableStats]): Seq[String] =
-    encodeSnapshot(entries, Nil, Nil, stats = stats, colMap = ColMap.empty,
-      dvLits = None)
+    encodeSnapshot(Snapshot(0L, entries, stats = stats))
 
   private def decodeLines(lines: Seq[String], version: Long): Snapshot = {
     val entries = Seq.newBuilder[FileEntry]
@@ -1394,54 +1381,51 @@ object MergeTable {
     * either — this is the same catalog-level operation at the file
     * layer. */
   def renameColumn(
-      spark: SparkSession, path: String, from: String, to: String,
-      maxRetries: Int = 5): Snapshot = {
+      spark: SparkSession, path: String, from: String, to: String): Snapshot = {
     require(to.nonEmpty && to == to.trim &&
       !to.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"new column name not encodable in the manifest: '$to'")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      try {
-        val (fs, root) = fsOf(spark, path)
-        val snap = snapshot(spark, path)
-        val schema0 = snap.schema.getOrElse(throw new IllegalStateException(
-          s"table at $path has no recorded schema line (legacy manifest) — " +
-            "run one merge or compactTable first to record it"))
-        val cm = snap.colMap
-        // resolve `from` with the SESSION resolver — the physicalNameOf
-        // convention every other surface (compact, CDF, merge keys)
-        // already honors; exact-case-only here made renameColumn refuse
-        // a column the rest of the API addresses fine (review, r17)
-        val resolver = spark.sessionState.conf.resolver
-        val phys = schema0.fieldNames.find(p => resolver(cm.logicalOf(p), from))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no column named '$from' (live columns: " +
-              s"${schema0.fieldNames.map(cm.logicalOf).mkString(",")})"))
-        val curLogical = cm.logicalOf(phys)
-        if (curLogical == to) return snap
+    transact(spark, path, "renameColumn") { snap =>
+      val schema0 = recordedSchema(snap, path)
+      val cm = snap.colMap
+      // resolve `from` with the SESSION resolver — the physicalNameOf
+      // convention every other surface (compact, CDF, merge keys)
+      // already honors; exact-case-only here made renameColumn refuse
+      // a column the rest of the API addresses fine (review, r17)
+      val phys = liveColumn(spark, schema0, cm, from)
+      val curLogical = cm.logicalOf(phys)
+      if (curLogical == to) snap
+      else {
         val liveLogicals = schema0.fieldNames.map(cm.logicalOf)
         require(
           !liveLogicals.exists(l => l.equalsIgnoreCase(to) && l != curLogical),
           s"a column named '$to' already exists (case-insensitive — the " +
             "manifest outlives any one session's case sensitivity)")
-        val cm2 = cm.copy(ren =
-          if (to == phys) cm.ren - phys else cm.ren + (phys -> to))
-        val entries = withSizes(fs, snap.entries)
-        val delta = withSizes(fs, snap.delta)
-        val dels = withSizes(fs, snap.deletes)
-        commit(fs, root, snap.version + 1,
-          encodeSnapshot(entries, delta, snap.dvKeys, snap.dvFiles,
-            stats = snap.stats, schemaJson = snap.schemaJson,
-            deletes = dels, colMap = cm2, dvLits = snap.dvLits))
-        return Snapshot(snap.version + 1, entries, delta, snap.dvKeys,
-          snap.dvFiles, snap.stats, snap.schemaJson, dels, cm2, snap.dvLits)
-      } catch {
-        case _: FileAlreadyExistsException => // lost the race: re-snapshot
+        val (fs, root) = fsOf(spark, path)
+        commit(fs, root, snap.copy(version = snap.version + 1,
+          colMap = cm.copy(ren =
+            if (to == phys) cm.ren - phys else cm.ren + (phys -> to))))
       }
     }
-    throw new CommitConflict(
-      s"renameColumn at $path lost $maxRetries optimistic commits in a row")
+  }
+
+  /** The recorded schema a column-mapping commit edits. */
+  private def recordedSchema(
+      snap: Snapshot, path: String): org.apache.spark.sql.types.StructType =
+    snap.schema.getOrElse(throw new IllegalStateException(
+      s"table at $path has no recorded schema line (legacy manifest) — " +
+        "run one merge or compactTable first to record it"))
+
+  /** The physical name of live column `name`, resolved LOGICALLY with the
+    * session resolver. */
+  private def liveColumn(
+      spark: SparkSession, schema0: org.apache.spark.sql.types.StructType,
+      cm: ColMap, name: String): String = {
+    val resolver = spark.sessionState.conf.resolver
+    schema0.fieldNames.find(p => resolver(cm.logicalOf(p), name))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no column named '$name' (live columns: " +
+          s"${schema0.fieldNames.map(cm.logicalOf).mkString(",")})"))
   }
 
   /** DROP a column — a MANIFEST-ONLY retirement (Delta column mapping,
@@ -1458,56 +1442,27 @@ object MergeTable {
     * the state is keyed by it), a persisted bloom column (bloom config
     * is table-lifetime, the init contract), and legacy schema-less
     * manifests. */
-  def dropColumn(
-      spark: SparkSession, path: String, name: String,
-      maxRetries: Int = 5): Snapshot = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      try {
-        val (fs, root) = fsOf(spark, path)
-        val snap = snapshot(spark, path)
-        val schema0 = snap.schema.getOrElse(throw new IllegalStateException(
-          s"table at $path has no recorded schema line (legacy manifest) — " +
-            "run one merge or compactTable first to record it"))
-        val cm = snap.colMap
-        // session-resolver addressing, the renameColumn/physicalNameOf
-        // convention (review, r17)
-        val resolver = spark.sessionState.conf.resolver
-        val phys = schema0.fieldNames.find(p => resolver(cm.logicalOf(p), name))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no column named '$name' (live columns: " +
-              s"${schema0.fieldNames.map(cm.logicalOf).mkString(",")})"))
-        require(schema0.length > 1, "cannot drop the table's last column")
-        require(!snap.dvKeys.contains(phys),
-          s"'$name' keys the table's row-level (mergeLite/deleteLite) " +
-            "state — fold it first (compactTable) before dropping")
-        val bloom = readBloomProps(fs, root)
-        require(!bloom.contains(phys),
-          s"'$name' carries a persisted parquet bloom filter — bloom " +
-            "columns are table-lifetime (the init contract) and every " +
-            "writer must keep maintaining them")
-        val schema2 = org.apache.spark.sql.types.StructType(
-          schema0.filterNot(_.name == phys))
-        val cm2 = ColMap(cm.ren - phys, cm.retired :+ phys)
-        val entries = withSizes(fs, snap.entries)
-        val delta = withSizes(fs, snap.delta)
-        val dels = withSizes(fs, snap.deletes)
-        val sj = Some(asNullableSchema(schema2).json)
-        val stats2 = snap.stats.filterNot(_.col == phys)
-        commit(fs, root, snap.version + 1,
-          encodeSnapshot(entries, delta, snap.dvKeys, snap.dvFiles,
-            stats = stats2, schemaJson = sj,
-            deletes = dels, colMap = cm2, dvLits = snap.dvLits))
-        return Snapshot(snap.version + 1, entries, delta, snap.dvKeys,
-          snap.dvFiles, stats2, sj, dels, cm2, snap.dvLits)
-      } catch {
-        case _: FileAlreadyExistsException => // lost the race: re-snapshot
-      }
+  def dropColumn(spark: SparkSession, path: String, name: String): Snapshot =
+    transact(spark, path, "dropColumn") { snap =>
+      val schema0 = recordedSchema(snap, path)
+      // session-resolver addressing, the renameColumn/physicalNameOf
+      // convention (review, r17)
+      val phys = liveColumn(spark, schema0, snap.colMap, name)
+      require(schema0.length > 1, "cannot drop the table's last column")
+      require(!snap.dvKeys.contains(phys),
+        s"'$name' keys the table's row-level (mergeLite/deleteLite) " +
+          "state — fold it first (compactTable) before dropping")
+      val (fs, root) = fsOf(spark, path)
+      require(!readBloomProps(fs, root).contains(phys),
+        s"'$name' carries a persisted parquet bloom filter — bloom " +
+          "columns are table-lifetime (the init contract) and every " +
+          "writer must keep maintaining them")
+      commit(fs, root, snap.copy(version = snap.version + 1,
+        stats = snap.stats.filterNot(_.col == phys),
+        schemaJson = Some(asNullableSchema(org.apache.spark.sql.types.StructType(
+          schema0.filterNot(_.name == phys))).json),
+        colMap = ColMap(snap.colMap.ren - phys, snap.colMap.retired :+ phys)))
     }
-    throw new CommitConflict(
-      s"dropColumn at $path lost $maxRetries optimistic commits in a row")
-  }
 
   /** ROW-LEVEL PRESSURE of a table version — the numbers that grow
     * until a fold clears them. The delta's and tombstones' key sets
@@ -1578,31 +1533,14 @@ object MergeTable {
     * table. A no-op on tables without row-level state. Unlike
     * [[compactTable]] this re-sorts nothing and rewrites only touched
     * files. */
-  def foldRowLevel(
-      spark: SparkSession, path: String, maxRetries: Int = 5): MergeStats =
+  def foldRowLevel(spark: SparkSession, path: String): MergeStats =
     // the row-level writer's fold with no side, by the pinned keys,
     // against a fresh snapshot per attempt (a concurrent rename can
     // land between them). A fold that rewrites nothing proves the
     // state inert at its snapshot and clears it with a manifest-only
     // commit pinned one version past it (see RowLevel.once).
-    RowLevel.retried(maxRetries, s"foldRowLevel at $path")(
-      RowLevel.fold(spark, path, snapshot(spark, path), clearInert = true))
-
-  /** The "fold before the cliff" policy (delete-heavy tables creep
-    * toward the maxDeltaRows budget one small deleteLite at a time;
-    * only the budget forced a fold before this): fold when the
-    * accumulated TOMBSTONE rows exceed `maxTombstoneRows` — one
-    * footer-metadata check per call, a scope-proportional rewrite only
-    * when triggered. Returns the fold's stats, or None when under the
-    * threshold. */
-  def foldIfTombstones(
-      spark: SparkSession, path: String,
-      maxTombstoneRows: Long): Option[MergeStats] = {
-    require(maxTombstoneRows >= 0, "maxTombstoneRows must be >= 0")
-    val p = rowLevelPressure(spark, path)
-    if (p.tombstoneRows > maxTombstoneRows) Some(foldRowLevel(spark, path))
-    else None
-  }
+    transact(spark, path, "foldRowLevel")(
+      RowLevel.fold(spark, path, _, clearInert = true))
 
   /** One-call operational summary of the table at its tip — the
     * DESCRIBE DETAIL analog (Delta's, miniature): everything an
@@ -1809,51 +1747,6 @@ object MergeTable {
       }
     }
 
-  /** The cost shape of [[changesBetween]] BEFORE paying it (r14
-    * verdict #6): pure manifest algebra — file counts and recorded
-    * byte sizes of exactly the sets the feed would scan, zero data IO
-    * (one manifest read per side, ∝ manifest size). A consumer checks
-    * [[ChangesCost.fullScan]] before a window that might contain a
-    * compaction: a pure-rewrite version churns every file, so the diff
-    * honestly degenerates to ~two full scans — better skipped or
-    * scheduled off-peak than discovered 100k scheduled tasks later.
-    * Legacy size-less entries count −1 bytes; callers on such tables
-    * read the file counts only. */
-  final case class ChangesCost(
-      addedFiles: Int, addedBytes: Long,
-      probeFiles: Int, probeBytes: Long,
-      tableFiles: Int, tableBytes: Long) {
-    /** The scan the feed pays, both sides. */
-    def scanFiles: Int = addedFiles + probeFiles
-    def scanBytes: Long = addedBytes + probeBytes
-    /** True when the window costs at least a full read of the CURRENT
-      * table — the compaction-in-window shape. */
-    def fullScan: Boolean = tableBytes > 0 && scanBytes >= tableBytes
-  }
-
-  def changesCostEstimate(
-      spark: SparkSession, path: String, fromV: Long, toV: Long,
-      keyCols: Seq[String]): ChangesCost = {
-    val (from, to, _) = diffSnapshots(spark, path, fromV, toV, keyCols)
-    val fromSet = from.allFiles.map(normalize).toSet
-    val toSet = to.allFiles.map(normalize).toSet
-    val (addBase, addDelta, addDels) = diffSideFiles(to, fromSet, Nil)
-    def bytes(es: Seq[FileEntry]) = es.map(_.size).sum
-    val table = to.entries ++ to.delta ++ to.deletes
-    // mirror the feed's early return (review catch): a window adding
-    // NO live-row file — a rescope, a pure deleteLite (tombstones hold
-    // no rows) — answers "no changes" from the manifests alone; the
-    // probe side is never built, so it must not be priced either
-    if (addBase.isEmpty && addDelta.isEmpty)
-      return ChangesCost(0, 0L, 0, 0L, table.size, bytes(table))
-    val added = addBase ++ addDelta ++ addDels
-    val (probeBase, probeDelta, probeDels) =
-      diffSideFiles(from, toSet, carriedProbeFor(from, to, toSet))
-    val probe = probeBase ++ probeDelta ++ probeDels
-    ChangesCost(added.size, bytes(added), probe.size, bytes(probe),
-      table.size, bytes(table))
-  }
-
   /** The friendly missing-key refusal every keyed entry point emits —
     * a typo'd key would otherwise die later as a raw USING-join
     * AnalysisException deep inside the diff plan. */
@@ -1885,21 +1778,12 @@ object MergeTable {
 
   /** One side of the version diff as a LOGICAL frame: the snapshot's
     * live rows restricted to its files NOT in `other`, plus `extra`
-    * carried files — with the snapshot's OWN key suppression applied
-    * (its full delta rides along whenever any restricted base file
-    * exists: the delta is bounded small, and a partial key set would
-    * resurrect superseded rows inside the side). */
-  /** The exact (base, delta) FILE sets one diff side reads — shared by
-    * [[diffSide]] (which builds the logical frame over them) and
-    * [[changesCostEstimate]] (which only counts them), so the estimate
-    * can never drift from what the feed actually scans. */
-  private def diffSideFiles(
-      s: Snapshot, other: Set[String],
-      extra: Seq[FileEntry]): (Seq[FileEntry], Seq[FileEntry], Seq[FileEntry]) = {
+    * carried files — with the snapshot's OWN key suppression applied. */
+  private def diffSide(
+      spark: SparkSession, s: Snapshot, other: Set[String],
+      extra: Seq[FileEntry]): Option[DataFrame] = {
     val base = (s.entries.filterNot(e => other.contains(normalize(e.path))) ++
       extra).distinct
-    val deltaDiff = s.delta.filterNot(e => other.contains(normalize(e.path)))
-    val delDiff = s.deletes.filterNot(e => other.contains(normalize(e.path)))
     // whenever the side holds base rows, suppression needs the FULL
     // delta key set AND the full tombstone set — a partial one would
     // resurrect superseded/deleted rows inside the side. The full delta
@@ -1909,15 +1793,10 @@ object MergeTable {
     // match away in the deletes anti-join — and the row-level state is
     // bounded small (maxDeltaRows). Tombstone files contribute no rows
     // at all.
-    (base,
-      if (base.isEmpty) deltaDiff else s.delta,
-      if (base.isEmpty) delDiff else s.deletes)
-  }
-
-  private def diffSide(
-      spark: SparkSession, s: Snapshot, other: Set[String],
-      extra: Seq[FileEntry]): Option[DataFrame] = {
-    val (base, delta, dels) = diffSideFiles(s, other, extra)
+    val (delta, dels) =
+      if (base.nonEmpty) (s.delta, s.deletes)
+      else (s.delta.filterNot(e => other.contains(normalize(e.path))),
+        s.deletes.filterNot(e => other.contains(normalize(e.path))))
     // tombstones alone hold no live rows: the side is empty
     if (base.isEmpty && delta.isEmpty) None
     else {
@@ -1930,8 +1809,8 @@ object MergeTable {
           s.schemaJson, // the side binds ITS version's schema
           dels,
           // the side carries the FULL delta+tombstone sets whenever it
-          // holds base rows (diffSideFiles), so the recorded literal
-          // set applies verbatim; base-less sides never suppress
+          // holds base rows, so the recorded literal set applies
+          // verbatim; base-less sides never suppress
           dvLits = if (base.isEmpty) None else s.dvLits)))
     }
   }
@@ -1957,9 +1836,7 @@ object MergeTable {
     * side and a zero row budget: every call FOLDS, so a rewrite merge
     * is a row-level change folded at once. A table carrying row-level
     * ([[mergeLite]]/[[deleteLite]]) state folds it into the same commit
-    * — even for a zero-row `updates` — emitting a DV-free manifest; a
-    * zero-row merge over tombstones that suppress nothing commits
-    * nothing ([[foldRowLevel]] clears those).
+    * — even for a zero-row `updates` — emitting a DV-free manifest.
     *
     * `allowSchemaEvolution` (Delta's `mergeSchema`, additive half):
     * extra `updates` columns WIDEN the table — the commit records the
@@ -1969,10 +1846,10 @@ object MergeTable {
     * in both modes ([[conformedSchema]]). */
   def merge(
       spark: SparkSession, path: String, updates: DataFrame,
-      keyCols: Seq[String], maxRetries: Int = 5,
+      keyCols: Seq[String],
       allowSchemaEvolution: Boolean = false): MergeStats =
     RowLevel(spark, path, Some(updates), None, keyCols, maxDeltaRows = 0L,
-      maxRetries, DefaultMaxDeltaFiles, allowSchemaEvolution, "merge")
+      DefaultMaxDeltaFiles, allowSchemaEvolution, "merge")
 
   /** Shared key-list contract of [[merge]] and [[mergeLite]]: nonempty
     * and DUPLICATE-FREE — a repeated name would brick the table: a
@@ -2175,10 +2052,10 @@ object MergeTable {
       } else lit(null).cast(f.dataType).as(f.name)): _*)
   }
 
-  /** The rewrite-merge core: apply `u` against `baseEntries` (touched
-    * files rewritten, untouched carried by reference) and commit a
-    * DV-free manifest as `baseVersion + 1`. `tableSchema` is the
-    * CURRENT manifest schema (the caller resolves it once per
+  /** The rewrite-merge core: apply `u` against `snap`'s base entries
+    * (touched files rewritten, untouched carried by reference) and
+    * commit a DV-free manifest as `snap.version + 1`. `tableSchema` is
+    * the CURRENT manifest schema (the caller resolves it once per
     * attempt); the commit records the possibly-widened result, so the
     * next version's manifest is always self-describing. */
   /** `knownTouched` (scope-aware fold, r14 verdict #5): the normalized
@@ -2196,14 +2073,12 @@ object MergeTable {
     * invariant: a re-inserted key moves out of the tombstone set), and
     * that `knownTouched` — when passed — covers their files too. */
   private[sources] def rewriteMerge(
-      spark: SparkSession, fs: FileSystem, root: Path,
-      baseVersion: Long, baseEntries: Seq[FileEntry], u: DataFrame,
-      ks: KeySet,
-      snapStats: Seq[TableStats] = Nil,
+      spark: SparkSession, fs: FileSystem, root: Path, snap: Snapshot,
+      u: DataFrame, ks: KeySet,
       tableSchema: org.apache.spark.sql.types.StructType,
-      allowEvolution: Boolean = false,
-      knownTouched: Option[Set[String]] = None,
-      removeKeys: Option[DataFrame] = None,
+      allowEvolution: Boolean,
+      knownTouched: Option[Set[String]],
+      removeKeys: Option[DataFrame],
       colMap0: ColMap,
       // true ONLY for a PURE caller batch (no prior delta, no deletes)
       // on a DV-free base (see RowLevel.once). FOLD calls must never rebase:
@@ -2213,21 +2088,21 @@ object MergeTable {
       // manifest with NO file change, so `added` is empty and the key
       // probe never runs) would see the rebase silently RESURRECT them
       // (review catch, r16).
-      allowRebase: Boolean = false): MergeStats = {
+      allowRebase: Boolean): MergeStats = {
     val keyCols = ks.keyCols
     val nU = ks.size
     val widened = conformedSchema(tableSchema, u, keyCols, allowEvolution)
     // a widening can invalidate stat declarations (int→double): they
     // drop on THIS commit, before carriedStats pays footer reads for
     // them — see statsUnderSchema
-    val snapStats2 = statsUnderSchema(snapStats, widened)
+    val snapStats2 = statsUnderSchema(snap.stats, widened)
     // the base binds the WIDENED schema: pre-widening files fill the
     // new columns with NULL, so the replaced leg's select below can
     // project every column of the new table shape. Manifest stats
     // ride along so the DISCOVERY scan below prunes files at planning
     // time on a compacted key layout (the rescopeDelta rationale;
     // sound — stats exclusion is conservative).
-    val base = relationFor(spark, baseEntries, snapStats, Some(widened))
+    val base = relationFor(spark, snap.entries, snap.stats, Some(widened))
     val cols = widened.map(_.name)
 
     // counted only if discovery needs the In-vs-range decision
@@ -2238,7 +2113,15 @@ object MergeTable {
       uTouched ++ removal.toSeq.flatMap(_.touchedFiles(base))
     }
 
-    val (hit, kept) = baseEntries.partition(e => touched.contains(normalize(e.path)))
+    val (hit, kept) = snap.entries.partition(e => touched.contains(normalize(e.path)))
+    // the DV-free version this merge publishes over `entries`; kept
+    // entries pass through the commit's withSizes, so a legacy
+    // size-less table's FIRST merge upgrades its manifest to the
+    // zero-listing read path (and the recorded schema line upgrades it
+    // to zero-IO opens)
+    def next(entries: Seq[FileEntry], stats: Seq[TableStats]) =
+      Snapshot(snap.version + 1, entries, stats = stats,
+        schemaJson = Some(asNullableSchema(widened).json), colMap = colMap0)
     // Insert-only batches write ceil(nU / InsertRowsPerFile) files: one
     // file per batch fragments nothing, but a single writer task for an
     // arbitrarily large first load would serialize the whole write (the
@@ -2256,13 +2139,9 @@ object MergeTable {
         // verbatim (no file changed), no data IO. STRUCTURAL compare,
         // not length: a TYPE widening keeps the column count.
         if (asNullableSchema(widened) == asNullableSchema(tableSchema))
-          return MergeStats(baseVersion, kept.size, 0, 0, 0)
-        commit(fs, root, baseVersion + 1,
-          encodeSnapshot(withSizes(fs, kept), Nil, Nil,
-            stats = snapStats2,
-            schemaJson = Some(asNullableSchema(widened).json),
-            colMap = colMap0, dvLits = None))
-        return MergeStats(baseVersion + 1, kept.size, 0, 0, 0)
+          return MergeStats(snap.version, kept.size, 0, 0, 0)
+        commit(fs, root, next(kept, snapStats2))
+        return MergeStats(snap.version + 1, kept.size, 0, 0, 0)
       }
       else if (hit.isEmpty) u.select(cols.map(col): _*).coalesce(insertFiles)
       // replaced keys AND removed keys drop from the hit files; only the
@@ -2278,101 +2157,148 @@ object MergeTable {
         // measured 34 new files for a 1-file hit at 10M rows
         .coalesce(hit.size)
     val newFiles = writeBatch(spark, fs, root, replaced)
-    commitRaceHookForTest()
-    // kept entries pass through withSizes: a legacy size-less table's
-    // FIRST merge upgrades its manifest to the zero-listing read path
-    // (and the recorded schema line upgrades it to zero-IO opens)
-    try {
-      commit(fs, root, baseVersion + 1,
-        encodeSnapshot(withSizes(fs, kept) ++ newFiles, Nil, Nil,
-          stats = carriedStats(
-            spark.sparkContext.hadoopConfiguration, snapStats2, kept,
-            newFiles),
-          schemaJson = Some(asNullableSchema(widened).json),
-          colMap = colMap0, dvLits = None)) // throws on race
-      MergeStats(baseVersion + 1, kept.size, hit.size, newFiles.size, nU)
-    } catch {
-      case e: FileAlreadyExistsException =>
-        // lost the OCC race. INSERT-ONLY commits (no file hit, no keys
-        // removed) can try the disjointness REBASE instead of the full
-        // re-attempt; everything else re-runs whole (the writer's loop).
-        (if (allowRebase && hit.isEmpty && removeKeys.isEmpty && nU > 0)
-           rebaseInsertOnly(spark, fs, root, ks, newFiles, widened, colMap0,
-             baseEntries)
-         else None).getOrElse(throw e)
-    }
+    commitOrRebase(spark, fs, root,
+      next(kept ++ newFiles, carriedStats(
+        spark.sparkContext.hadoopConfiguration, snapStats2, kept, newFiles)),
+      MergeStats(snap.version + 1, kept.size, hit.size, newFiles.size, nU),
+      // INSERT-ONLY commits (no file hit, no keys removed) may rebase
+      // onto a disjoint winner; everything else re-runs whole
+      if (allowRebase && hit.isEmpty && removeKeys.isEmpty && nU > 0)
+        Some(Append(ks, snap, nU, entries = newFiles))
+      else None)
   }
 
-  /** Test seam for the OCC race (no-op in production): runs after a
-    * rewrite-merge's batch files land and before its commit — the
-    * window a concurrent winner occupies. Single-threaded test use
-    * only; the hook must reset itself before committing anything or
-    * the inner write recurses into it. */
+  /** Test seam for the OCC race (no-op in production): [[commit]] runs
+    * it first — after a writer's files land and before its manifest is
+    * claimed, the window a concurrent winner occupies. Single-threaded
+    * test use only; the hook must reset itself before committing
+    * anything or the inner write recurses into it. */
   private[graft] var commitRaceHookForTest: () => Unit = () => ()
 
-  /** REBASE of a lost insert-only commit onto the winner's tip —
-    * multi-writer reconciliation, the provably-safe case (Delta's
-    * disjoint-commit reconciliation, miniature).
+  /** A lost commit [[commitOrRebase]] may land on the winner's tip: the
+    * files it adds — new base `entries` for an insert-only merge, new
+    * `delta` files and a `tombstones` file (written at most once, when
+    * first needed) for a row-level append — and the keys `ks` its
+    * attempt proved against `base`. `budget` is a row-level append's
+    * (maxDeltaRows, maxDeltaFiles); None marks an insert-only one. */
+  private[sources] final case class Append(
+      ks: KeySet, base: Snapshot, upserts: Long,
+      entries: Seq[FileEntry] = Nil, delta: Seq[FileEntry] = Nil,
+      tombstones: () => Seq[FileEntry] = () => Nil,
+      budget: Option[(Long, Int)] = None)
+
+  /** Publishes `next` and returns `won`. A lost claim is rethrown for
+    * [[transact]] to re-run the attempt whole — unless `mine` describes
+    * an APPEND, which this REBASES onto the winner's tip instead
+    * (Delta's disjoint-commit reconciliation, miniature): two writers
+    * on disjoint keys then land in one retry round. Up to
+    * [[RebaseAttempts]] times it re-validates against a fresh tip and
+    * commits `mine` on top of it.
     *
-    * INVARIANT ANALYSIS — why these four checks make the rebase sound:
-    * an insert-only commit's only claims are (1) "my keys exist
-    * nowhere in the table" (discovery proved it against MY base) and
-    * (2) "my new files carry schema `widened` under mapping `colMap0`".
-    * Files are immutable, so (1) stays proven for every file CARRIED
-    * from my base; it can only break in files the winner ADDED — hence
-    * the key probe over exactly `tip − base` (cost ∝ the winner's
-    * churn, not the table; their insert/merge batch in the common
-    * case). (2) breaks only if the winner changed the recorded schema
-    * or the column mapping — both refused by exact equality. ROW-LEVEL
-    * state is refused whole: a winner's tombstone for one of my keys
-    * has no defined order against my insert (their delete neither
-    * precedes nor follows my row), and a winner's delta key hides
-    * row-level state the base-file probe can't see — key overlap, not
-    * file overlap, is the real conflict variable once suppression
-    * exists. A torn rebase (crash between validation and commit)
-    * leaves the winner's tip untouched and my batch files orphaned —
-    * vacuum-reclaimable, never referenced; the table stays readable
-    * because the commit itself is the same atomic manifest publish
-    * every writer uses.
+    * INVARIANT ANALYSIS — what an append claims, and how each claim is
+    * re-proven against the tip:
     *
-    * Returns None when any check refuses — the caller falls back to
-    * the full re-attempt, which re-runs discovery against the new tip
-    * (today's always-correct path). */
-  private def rebaseInsertOnly(
-      spark: SparkSession, fs: FileSystem, root: Path, ks: KeySet,
-      newFiles: Seq[FileEntry],
-      widened: org.apache.spark.sql.types.StructType,
-      colMap0: ColMap, baseEntries: Seq[FileEntry]): Option[MergeStats] = {
-    val mySchemaJson = Some(asNullableSchema(widened).json)
-    var attempt = 0
-    while (attempt < 3) {
-      attempt += 1
+    *  1. "My files carry schema X under mapping M" — exact equality of
+    *     tip.schemaJson/tip.colMap with `next`'s (an evolving or
+    *     renaming winner refuses; the full retry handles it). A legacy
+    *     schema-less tip refuses too.
+    *  2. "My keys appear in no other suppression state." An insert-only
+    *     append refuses ANY row-level tip: a winner's tombstone for one
+    *     of my keys has no defined order against my insert, and a
+    *     winner's delta key hides state the base-file probe can't see.
+    *     A row-level append re-proves key uniqueness across delta
+    *     files and tombstone/delta disjointness directly against the
+    *     TIP's row-level state — one overlap probe over tip.delta and
+    *     tip.deletes (both budget-bounded), zero overlap required — so
+    *     it assumes nothing about WHAT the winner did (append, combine,
+    *     fold, rescope). It also refuses a tip keyed by other columns,
+    *     a tip past the row budget with mine added (the full retry
+    *     folds, the right response to a full suppression set) and, when
+    *     I add delta files, one past the delta file cap.
+    *  3. "My keys are absent from / scoped over the base." Files CARRIED
+    *     from my base are immutable, so my attempt's proof holds for
+    *     them; files the winner ADDED (insert batch, fold/compaction
+    *     output, deleteWhere rewrite) could hold my keys — probed over
+    *     exactly `tip − base` (cost ∝ the winner's churn). Zero hits
+    *     required: a hit would make an insert a duplicate, and a scoped
+    *     row-level commit fail to suppress that file's row. Files the
+    *     winner REMOVED drop out of the composed scope (inert). The
+    *     scope composes the tip's (covering its own keys) with mine
+    *     (point-probed against MY base — sound for carried files, and
+    *     added files were just proven key-free); either side unscoped →
+    *     unscoped (suppress-everywhere is always sound; rescopeDelta
+    *     bounds it later).
+    *
+    * FOLD commits and delta- or tombstone-REWRITING commits never pass
+    * `mine`: a fold's input is delta-carried state whose validity the
+    * r16 analysis showed cannot survive a winner, and key disjointness
+    * alone cannot reconcile two rewrites of the same row-level file
+    * set. A torn rebase (crash between validation and commit) leaves
+    * the winner's tip untouched and my files orphaned —
+    * vacuum-reclaimable, never referenced. */
+  private[sources] def commitOrRebase(
+      spark: SparkSession, fs: FileSystem, root: Path, next: Snapshot,
+      won: MergeStats, mine: Option[Append]): MergeStats = {
+    val lost =
+      try { commit(fs, root, next); return won }
+      catch { case e: FileAlreadyExistsException if mine.isDefined => e }
+    val a = mine.get
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keyCols = a.ks.keyCols
+    val rowLevel = a.budget.isDefined
+    val baseSet = a.base.entries.map(e => normalize(e.path)).toSet
+    lazy val tombs = a.tombstones()
+    var n = 0
+    while (n < RebaseAttempts) {
+      n += 1
       val tip = snapshot(spark, root.toString)
-      if (tip.rowLevel) return None
-      if (tip.schemaJson != mySchemaJson) return None
-      if (tip.colMap != colMap0) return None
-      val baseSet = baseEntries.map(e => normalize(e.path)).toSet
-      val mineSet = newFiles.map(e => normalize(e.path)).toSet
-      val added = tip.entries.filterNot(e =>
-        baseSet.contains(normalize(e.path)) ||
-          mineSet.contains(normalize(e.path)))
-      if (added.nonEmpty && ks.hitsAny(
-          relationFor(spark, withSizes(fs, added), tip.stats, Some(widened))))
-        return None // stale insert-only claim: replay whole
+      val schema = tip.schema.filter(_ => // claim 1
+        tip.schemaJson == next.schemaJson && tip.colMap == next.colMap)
+        .getOrElse(throw lost)
+      val refused = a.budget match { // claim 2
+        case None => tip.rowLevel
+        case Some((maxDeltaRows, maxDeltaFiles)) =>
+          (tip.dvKeys.nonEmpty && tip.dvKeys.toSet != keyCols.toSet) ||
+            footerRowCount(conf, tip.delta) + footerRowCount(conf, tip.deletes) +
+              a.ks.size > maxDeltaRows ||
+            (a.delta.nonEmpty && tip.delta.size + a.delta.size > maxDeltaFiles) ||
+            a.ks.overlaps(
+              (if (tip.delta.isEmpty) Nil
+               else Seq(relationFor(spark, tip.delta, Nil, Some(schema)))) ++
+              (if (tip.deletes.isEmpty) Nil
+               else Seq(relationFor(spark, tip.deletes, Nil,
+                 Some(keySchemaOf(schema, keyCols)))))).exists(_._2 > 0)
+      }
+      val added = tip.entries.filterNot(e => baseSet.contains(normalize(e.path)))
+      if (refused || added.nonEmpty && a.ks.hitsAny( // claim 3
+          relationFor(spark, withSizes(fs, added), tip.stats, Some(schema))))
+        throw lost
+      val scope: Option[Seq[String]] =
+        if (!rowLevel || tip.rowLevel && tip.dvFiles.isEmpty) None
+        else a.ks.pointTouched(
+            relationFor(spark, a.base.entries, a.base.stats, Some(schema)))
+          .map { mine =>
+            val tipScope = tip.dvFiles.getOrElse(Nil).map(normalize).toSet
+            tip.entries.map(_.path).filter(p =>
+              mine.contains(normalize(p)) || tipScope.contains(normalize(p)))
+          }
       try {
-        commit(fs, root, tip.version + 1,
-          encodeSnapshot(withSizes(fs, tip.entries) ++ newFiles, Nil, Nil,
-            stats = carriedStats(spark.sparkContext.hadoopConfiguration,
-              tip.stats, tip.entries, newFiles),
-            schemaJson = tip.schemaJson,
-            colMap = tip.colMap, dvLits = None))
-        return Some(MergeStats(tip.version + 1, tip.entries.size, 0,
-          newFiles.size, ks.size))
+        commit(fs, root, tip.copy(version = tip.version + 1,
+          entries = tip.entries ++ a.entries, delta = tip.delta ++ a.delta,
+          deletes = tip.deletes ++ tombs,
+          dvKeys = if (rowLevel && tip.dvKeys.isEmpty) keyCols else tip.dvKeys,
+          dvFiles = scope,
+          stats = carriedStats(conf, tip.stats, tip.entries ++ tip.delta,
+            a.entries ++ a.delta),
+          // my disjoint keys extend the TIP's recorded set: tip ∪ mine
+          dvLits = if (rowLevel) a.ks.dvLitsAfter(spark, tip) else tip.dvLits))
+        return MergeStats(tip.version + 1, tip.entries.size + tip.delta.size,
+          0, a.entries.size + a.delta.size + tombs.size, a.upserts)
       } catch {
         case _: FileAlreadyExistsException => // another winner: re-validate
       }
     }
-    None
+    throw lost
   }
 
   /** Legacy-manifest migration at commit time (closing the r13 gap): an
@@ -2451,10 +2377,10 @@ object MergeTable {
   def mergeLite(
       spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String], maxDeltaRows: Long = DefaultMaxDeltaRows,
-      maxRetries: Int = 5, maxDeltaFiles: Int = DefaultMaxDeltaFiles,
+      maxDeltaFiles: Int = DefaultMaxDeltaFiles,
       allowSchemaEvolution: Boolean = false): MergeStats =
     RowLevel(spark, path, Some(updates), None, keyCols, maxDeltaRows,
-      maxRetries, maxDeltaFiles, allowSchemaEvolution, "mergeLite")
+      maxDeltaFiles, allowSchemaEvolution, "mergeLite")
 
   /** Row-level CHANGES — one call's upserts and keyed deletes land in
     * ONE commit: [[mergeLite]] and [[deleteLite]] at once, sharing one
@@ -2481,12 +2407,12 @@ object MergeTable {
       spark: SparkSession, path: String,
       upserts: Option[DataFrame], deletes: Option[DataFrame],
       keyCols: Seq[String], maxDeltaRows: Long = DefaultMaxDeltaRows,
-      maxRetries: Int = 5, maxDeltaFiles: Int = DefaultMaxDeltaFiles,
+      maxDeltaFiles: Int = DefaultMaxDeltaFiles,
       allowSchemaEvolution: Boolean = false): MergeStats = {
     require(upserts.isDefined || deletes.isDefined,
       "applyChanges needs an upsert side, a delete side, or both")
     RowLevel(spark, path, upserts, deletes, keyCols, maxDeltaRows,
-      maxRetries, maxDeltaFiles, allowSchemaEvolution, "applyChanges")
+      maxDeltaFiles, allowSchemaEvolution, "applyChanges")
   }
 
   /** MAINTENANCE RE-SCOPE (r14 verdict #2): give an UNSCOPED delta
@@ -2503,16 +2429,11 @@ object MergeTable {
     *
     * No-op (snapshot returned unchanged, nothing committed) when the
     * table carries no delta or is already scoped. Same OCC contract as
-    * every writer ([[CommitConflict]] after `maxRetries` lost races). */
-  def rescopeDelta(
-      spark: SparkSession, path: String, maxRetries: Int = 5): Snapshot = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      try {
-        val (fs, root) = fsOf(spark, path)
-        val snap = snapshot(spark, path)
-        if (!snap.rowLevel || snap.dvFiles.isDefined) return snap
+    * every writer ([[transact]]). */
+  def rescopeDelta(spark: SparkSession, path: String): Snapshot =
+    transact(spark, path, "rescopeDelta") { snap =>
+      if (!snap.rowLevel || snap.dvFiles.isDefined) snap
+      else {
         val schema0 = tableSchemaOf(spark, snap)
         // stats ride into the discovery scan: a compacted key layout
         // prunes most base files before any task runs
@@ -2520,25 +2441,13 @@ object MergeTable {
         // the FULL suppression key set: delta keys ∪ tombstones — the
         // scope must name every file either kind can touch
         val touched = KeySet.fromSnapshot(spark, snap).touchedFiles(base)
-        val scope = snap.entries.map(_.path)
-          .filter(p => touched.contains(normalize(p)))
-        val entries = withSizes(fs, snap.entries)
-        val delta = withSizes(fs, snap.delta)
-        val dels = withSizes(fs, snap.deletes)
-        val sj = Some(asNullableSchema(schema0).json)
-        commit(fs, root, snap.version + 1,
-          encodeSnapshot(entries, delta, snap.dvKeys, Some(scope),
-            stats = snap.stats, schemaJson = sj, deletes = dels,
-            colMap = snap.colMap, dvLits = snap.dvLits))
-        return Snapshot(snap.version + 1, entries, delta, snap.dvKeys,
-          Some(scope), snap.stats, sj, dels, snap.colMap, snap.dvLits)
-      } catch {
-        case _: FileAlreadyExistsException => // lost the race: re-snapshot
+        val (fs, root) = fsOf(spark, path)
+        commit(fs, root, snap.copy(version = snap.version + 1,
+          dvFiles = Some(snap.entries.map(_.path)
+            .filter(p => touched.contains(normalize(p)))),
+          schemaJson = Some(asNullableSchema(schema0).json)))
       }
     }
-    throw new CommitConflict(
-      s"rescopeDelta at $path lost $maxRetries optimistic commits in a row")
-  }
 
   /** Row-level keyed DELETE — removes the rows whose keys appear in
     * `keys` WITHOUT rewriting any base file: the tombstone half of the
@@ -2577,10 +2486,10 @@ object MergeTable {
     * [[applyChanges]] with no upsert side. */
   def deleteLite(
       spark: SparkSession, path: String, keys: DataFrame,
-      keyCols: Seq[String], maxDeltaRows: Long = DefaultMaxDeltaRows,
-      maxRetries: Int = 5): MergeStats =
+      keyCols: Seq[String],
+      maxDeltaRows: Long = DefaultMaxDeltaRows): MergeStats =
     RowLevel(spark, path, None, Some(keys), keyCols, maxDeltaRows,
-      maxRetries, DefaultMaxDeltaFiles, allowEvolution = false, "deleteLite")
+      DefaultMaxDeltaFiles, allowEvolution = false, "deleteLite")
 
   /** PREDICATE delete on the TOMBSTONE path — the bridge between
     * [[deleteWhere]] (predicate in, every matched file rewritten:
@@ -2602,70 +2511,16 @@ object MergeTable {
     * under concurrency the predicate binds to the DISCOVERY snapshot
     * (a concurrent writer's new matching rows are not re-discovered
     * by the commit retries, where deleteWhere re-runs its discovery
-    * per attempt — the price of the O(keys) write path).
-    *
-    * `rediscoverPerRetry = true` opts back into deleteWhere's
-    * concurrent semantics at tombstone cost: whenever a concurrent
-    * commit interleaves with this call — a lost OCC race, OR a
-    * disjoint-key REBASE that landed this call's tombstones on top of
-    * a winner's commit (the row-level rebase makes interference
-    * invisible to the retry loop: the commit *succeeds*, version
-    * jumping past the discovery snapshot) — the pruned discovery
-    * re-runs against the fresh tip, so rows a racing writer inserted
-    * (or un-suppressed) inside the window re-match and die in the
-    * same call. The loop converges when one pass lands exactly one
-    * version past its own discovery (nothing interleaved: the
-    * predicate provably saw the committed-against state), paying zero
-    * extra scans on a quiescent table; each interference costs one
-    * more stats/bloom-pruned discovery + O(matched-keys) commit, and
-    * `maxRetries` interleaved passes in a row raise [[CommitConflict]]
-    * rather than silently downgrading to the discovery-bound
-    * semantics. UNLIKE every other writer's CommitConflict (which
-    * implies nothing committed), each converging-loop pass is an
-    * independently COMMITTED deleteLite — on exhaustion, the earlier
-    * passes' deletions are already durable; the raise means "could
-    * not prove the predicate saw a quiescent tip", not "no rows were
-    * deleted". Callers that retry the call repeat an idempotent
-    * delete (already-deleted keys re-match nothing). */
+    * per attempt — the price of the O(keys) write path). */
   def deleteWhereLite(
       spark: SparkSession, path: String,
       cond: org.apache.spark.sql.Column, keyCols: Seq[String],
-      maxDeltaRows: Long = DefaultMaxDeltaRows,
-      maxRetries: Int = 5,
-      rediscoverPerRetry: Boolean = false): MergeStats = {
+      maxDeltaRows: Long = DefaultMaxDeltaRows): MergeStats = {
     requireKeyCols(keyCols)
-    def discovered(): DataFrame = read(spark, path).filter(cond)
+    val keys = read(spark, path).filter(cond)
       .select(keyCols.map(col): _*).distinct().localCheckpoint(true)
-    if (!rediscoverPerRetry) {
-      val keys = discovered()
-      try return deleteLite(spark, path, keys, keyCols, maxDeltaRows,
-        maxRetries)
-      finally graft.util.Checkpoints.free(keys)
-    }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val preV = snapshot(spark, path).version
-      val keys = discovered()
-      try {
-        val landed =
-          try Some(deleteLite(spark, path, keys, keyCols, maxDeltaRows,
-            maxRetries = 1))
-          catch { case _: CommitConflict => None } // lost: rediscover
-        landed match {
-          // no-op (empty match, version unchanged) or clean single
-          // commit: nothing interleaved between discovery and commit
-          case Some(st) if st.version <= preV + 1 => return st
-          // version jumped: the rebase landed us past a concurrent
-          // winner whose rows this discovery never saw — go again
-          case _ => ()
-        }
-      } finally graft.util.Checkpoints.free(keys)
-    }
-    throw new CommitConflict(
-      s"deleteWhereLite at $path saw $maxRetries interleaved commits in " +
-        "a row (rediscoverPerRetry could not converge; deletions from " +
-        "completed passes are already durable — re-running is idempotent)")
+    try deleteLite(spark, path, keys, keyCols, maxDeltaRows)
+    finally graft.util.Checkpoints.free(keys)
   }
 
   /** Row-level DELETE: rewrite only the files that contain a row
@@ -2679,45 +2534,42 @@ object MergeTable {
     * instead of rewriting every matched file. */
   def deleteWhere(
       spark: SparkSession, path: String,
-      cond: org.apache.spark.sql.Column, maxRetries: Int = 5): MergeStats = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      try {
-        val (fs, root) = fsOf(spark, path)
-        val snap0 = snapshot(spark, path)
-        // FOLD row-level (mergeLite/deleteLite) state first: the
-        // per-file rewrite below reasons about PHYSICAL rows and cannot
-        // see the key suppression — deleting a matching DELTA row
-        // directly would un-tombstone its key and RESURRECT the
-        // superseded base row.
-        val snap =
-          if (!snap0.rowLevel) snap0
-          else if (RowLevel.fold(spark, path, snap0, clearInert = false)
-              .version != snap0.version) snapshot(spark, path)
-          // tombstones that suppress nothing + no delta: the fold has
-          // nothing to rewrite and commits nothing — the predicate path
-          // below is still sound (no base row was suppressed) and its
-          // own commit drops the inert row-level lines
-          else snap0.copy(delta = Nil, dvKeys = Nil, dvFiles = None, deletes = Nil)
-        val schema0 = tableSchemaOf(spark, snap)
-        // the predicate speaks LOGICAL names: evaluate it over the
-        // logical-aliased view (identity on unmapped tables) — Catalyst
-        // pushes the filter through the aliasing Project, so parquet
-        // pushdown and the manifest stat pruners (physical-named) are
-        // unaffected — then project survivors back to physical for the
-        // rewrite.
-        // Manifest stats prune the DISCOVERY too: a TTL sweep on the
-        // stats column schedules tasks only for files whose recorded
-        // range can match — the 100k-file sweep reads the expirable few
-        val touched = presentLogical(
-            relationFor(spark, snap.entries, snap.stats, Some(schema0)),
-            snap.colMap)
-          .filter(cond)
-          .select(input_file_name().as("__file")).distinct()
-          .collect().map(r => normalize(r.getString(0))).toSet
-        val (hit, kept) = snap.entries.partition(e => touched.contains(normalize(e.path)))
-        if (hit.isEmpty) return MergeStats(snap.version, kept.size, 0, 0, 0)
+      cond: org.apache.spark.sql.Column): MergeStats =
+    transact(spark, path, "deleteWhere") { snap0 =>
+      val (fs, root) = fsOf(spark, path)
+      // FOLD row-level (mergeLite/deleteLite) state first: the
+      // per-file rewrite below reasons about PHYSICAL rows and cannot
+      // see the key suppression — deleting a matching DELTA row
+      // directly would un-tombstone its key and RESURRECT the
+      // superseded base row.
+      val snap =
+        if (!snap0.rowLevel) snap0
+        else if (RowLevel.fold(spark, path, snap0, clearInert = false)
+            .version != snap0.version) snapshot(spark, path)
+        // tombstones that suppress nothing + no delta: the fold has
+        // nothing to rewrite and commits nothing — the predicate path
+        // below is still sound (no base row was suppressed) and its
+        // own commit drops the inert row-level lines
+        else snap0.copy(delta = Nil, dvKeys = Nil, dvFiles = None, deletes = Nil)
+      val schema0 = tableSchemaOf(spark, snap)
+      // the predicate speaks LOGICAL names: evaluate it over the
+      // logical-aliased view (identity on unmapped tables) — Catalyst
+      // pushes the filter through the aliasing Project, so parquet
+      // pushdown and the manifest stat pruners (physical-named) are
+      // unaffected — then project survivors back to physical for the
+      // rewrite.
+      // Manifest stats prune the DISCOVERY too: a TTL sweep on the
+      // stats column schedules tasks only for files whose recorded
+      // range can match — the 100k-file sweep reads the expirable few
+      val touched = presentLogical(
+          relationFor(spark, snap.entries, snap.stats, Some(schema0)),
+          snap.colMap)
+        .filter(cond)
+        .select(input_file_name().as("__file")).distinct()
+        .collect().map(r => normalize(r.getString(0))).toSet
+      val (hit, kept) = snap.entries.partition(e => touched.contains(normalize(e.path)))
+      if (hit.isEmpty) MergeStats(snap.version, kept.size, 0, 0, 0)
+      else {
         val survivorsL = presentLogical(
             relationFor(spark, hit, Nil, Some(schema0)), snap.colMap)
           .filter(!coalesce(cond, lit(false)))
@@ -2727,20 +2579,13 @@ object MergeTable {
             .map(p => col(snap.colMap.logicalOf(p)).as(p)): _*))
           .coalesce(hit.size) // one output file per hit file (see rewriteMerge)
         val newFiles = writeBatch(spark, fs, root, survivors)
-        commit(fs, root, snap.version + 1,
-          encodeSnapshot(withSizes(fs, kept) ++ newFiles, Nil, Nil,
-            stats = carriedStats(spark.sparkContext.hadoopConfiguration,
-              snap.stats, kept, newFiles),
-            schemaJson = Some(asNullableSchema(schema0).json),
-            colMap = snap.colMap, dvLits = None))
-        return MergeStats(snap.version + 1, kept.size, hit.size, newFiles.size, 0)
-      } catch {
-        case _: FileAlreadyExistsException => // lost the race: re-snapshot
+        commit(fs, root, Snapshot(snap.version + 1, kept ++ newFiles,
+          stats = carriedStats(spark.sparkContext.hadoopConfiguration,
+            snap.stats, kept, newFiles),
+          schemaJson = Some(asNullableSchema(schema0).json), colMap = snap.colMap))
+        MergeStats(snap.version + 1, kept.size, hit.size, newFiles.size, 0)
       }
     }
-    throw new CommitConflict(
-      s"deleteWhere at $path lost $maxRetries optimistic commits in a row")
-  }
 
   /** Rewrite the whole table into `numFiles` range-sorted files — the
     * [[Catalog.compact]] maintenance pass, expressed as a committed
@@ -2765,47 +2610,40 @@ object MergeTable {
     * writers are serialized by contract). */
   def compactTableAt(
       spark: SparkSession, path: String, sortCol: String,
-      numFiles: Int, atVersion: Option[Long]): Snapshot = {
-    val (fs, root) = fsOf(spark, path)
-    val snap = atVersion.map(snapshotAt(spark, path, _))
-      .getOrElse(snapshot(spark, path))
-    val next = atVersion match {
-      case None => snap.version + 1
-      case Some(_) => latestVersion(fs, root).getOrElse(snap.version) + 1
+      numFiles: Int, atVersion: Option[Long]): Snapshot =
+    compact(spark, path, "compactTable", atVersion) { (frame, snap) =>
+      // the caller names the sort column LOGICALLY; the frame (and the
+      // stats the compaction establishes) speak PHYSICAL
+      val pSort = physicalNameOf(spark, snap, sortCol)
+      (frame.repartitionByRange(numFiles, col(pSort))
+        .sortWithinPartitions(col(pSort)), Seq(pSort))
     }
-    // logicalFrame, not the bare base relation: a compaction of a table
-    // carrying mergeLite delta state applies the key suppression and
-    // absorbs the delta rows — the rewrite IS the fold
-    val frame = logicalFrame(spark, snap)
-    // the caller names the sort column LOGICALLY; the frame (and the
-    // stats the compaction establishes) speak PHYSICAL
-    val pSort = physicalNameOf(spark, snap, sortCol)
-    val sorted = frame
-      .repartitionByRange(numFiles, col(pSort))
-      .sortWithinPartitions(col(pSort))
-    val files = writeBatch(spark, fs, root, sorted)
-    // ESTABLISH manifest stats on the sort column (long-ordered types
-    // only): the compacted layout's per-file ranges are tight by
-    // construction, and every later writer maintains them
-    // (carriedStats) — range/point predicates then prune FILES at
-    // planning time, not tasks at run time
-    val stats = establishStats(spark, frame.schema, files, Seq(pSort))
-    val sj = Some(asNullableSchema(frame.schema).json)
-    try commit(fs, root, next,
-      encodeSnapshot(files, Nil, Nil, stats = stats, schemaJson = sj,
-        colMap = snap.colMap, dvLits = None))
-    catch {
-      // the conflict contract every other writer exposes (merge /
-      // deleteWhere / the composite commitPin): a maintenance job
-      // catching CommitConflict to reschedule must see this one too
-      case _: FileAlreadyExistsException =>
-        throw new CommitConflict(
-          s"compactTable at $path lost the commit race for v$next " +
-            "(concurrent writer landed mid-rewrite); re-run")
+
+  /** The one compaction body: `layout` turns the table's logical frame
+    * into the rows to write, plus the physical columns whose manifest
+    * stats the new layout ESTABLISHES (long-ordered or hex types only):
+    * its per-file ranges are tight by construction, and every later
+    * writer maintains them (carriedStats) — range/point predicates then
+    * prune FILES at planning time, not tasks at run time. One attempt:
+    * a lost race is a loud [[CommitConflict]], since re-running a whole
+    * rewrite is the scheduler's call. */
+  private def compact(
+      spark: SparkSession, path: String, what: String, atVersion: Option[Long])(
+      layout: (DataFrame, Snapshot) => (DataFrame, Seq[String])): Snapshot =
+    transact(spark, path, what, attempts = 1) { tip =>
+      val (fs, root) = fsOf(spark, path)
+      val snap = atVersion.fold(tip)(snapshotAt(spark, path, _))
+      // logicalFrame, not the bare base relation: a compaction of a table
+      // carrying mergeLite delta state applies the key suppression and
+      // absorbs the delta rows — the rewrite IS the fold
+      val frame = logicalFrame(spark, snap)
+      val (rows, statCols) = layout(frame, snap)
+      val files = writeBatch(spark, fs, root, rows)
+      commit(fs, root, Snapshot(tip.version + 1, files,
+        stats = establishStats(spark, frame.schema, files, statCols),
+        schemaJson = Some(asNullableSchema(frame.schema).json),
+        colMap = snap.colMap))
     }
-    Snapshot(next, files, stats = stats, schemaJson = sj,
-      colMap = snap.colMap)
-  }
 
   /** The physical name of caller-facing `logical` — itself on unmapped
     * tables or unknown names (downstream surfaces the miss exactly as
@@ -2871,28 +2709,11 @@ object MergeTable {
     * key. Same commit/conflict contract as [[compactTable]]. */
   def compactTableZOrder(
       spark: SparkSession, path: String, zCols: Seq[String],
-      numFiles: Int, bits: Int = 16): Snapshot = {
-    val (fs, root) = fsOf(spark, path)
-    val snap = snapshot(spark, path)
-    val next = snap.version + 1
-    val frame = logicalFrame(spark, snap)
-    val pZ = zCols.map(physicalNameOf(spark, snap, _)) // the compactTableAt rationale
-    val sorted = graft.operators.Layout.zClustered(frame, pZ, numFiles, bits)
-    val files = writeBatch(spark, fs, root, sorted)
-    val stats = establishStats(spark, frame.schema, files, pZ)
-    val sj = Some(asNullableSchema(frame.schema).json)
-    try commit(fs, root, next,
-      encodeSnapshot(files, Nil, Nil, stats = stats, schemaJson = sj,
-        colMap = snap.colMap, dvLits = None))
-    catch {
-      case _: FileAlreadyExistsException =>
-        throw new CommitConflict(
-          s"compactTableZOrder at $path lost the commit race for v$next " +
-            "(concurrent writer landed mid-rewrite); re-run")
+      numFiles: Int, bits: Int = 16): Snapshot =
+    compact(spark, path, "compactTableZOrder", None) { (frame, snap) =>
+      val pZ = zCols.map(physicalNameOf(spark, snap, _)) // the compactTableAt rationale
+      (graft.operators.Layout.zClustered(frame, pZ, numFiles, bits), pZ)
     }
-    Snapshot(next, files, stats = stats, schemaJson = sj,
-      colMap = snap.colMap)
-  }
 
   /** Delete data files no manifest-latest version references (orphans
     * from failed/superseded commits), and expired version manifests
@@ -3079,7 +2900,7 @@ object MergeTable {
       endVersion: Long)
 
   /** ONE scheduled maintenance entry point — the operator loop's
-    * parts ([[describe]] → [[rescopeDelta]] → [[foldIfTombstones]] →
+    * parts ([[describe]] → [[rescopeDelta]] → [[foldRowLevel]] →
     * [[compactTable]] → [[vacuum]] → [[trimLog]]) composed in their
     * canonical order, each branch gated by the policy's budgets, and
     * a report of what ran. A 100 TB deployment schedules THIS per
@@ -3098,9 +2919,11 @@ object MergeTable {
     *    shrinks the table under `compactAtFiles` and the compaction
     *    then does not fire, the skipped rescope simply runs on the
     *    next pass — a one-pass delay, never a wrong state.)
-    *  - FOLD runs when tombstone rows exceed `foldAtTombstoneRows`
-    *    (the [[foldIfTombstones]] threshold), using the pressure
-    *    counts `before` already paid for — no second footer pass.
+    *  - FOLD ([[foldRowLevel]]) runs when tombstone rows exceed
+    *    `foldAtTombstoneRows` — the fold-before-the-cliff policy:
+    *    delete-heavy tables creep toward the maxDeltaRows budget one
+    *    small deleteLite at a time — using the pressure counts
+    *    `before` already paid for, no second footer pass.
     *    EXCEPT when the compaction branch will also fire: the
     *    compaction rewrite folds the row-level state itself
     *    ([[compactTableAt]] rewrites from the logical frame), so the
@@ -3324,11 +3147,40 @@ object MergeTable {
         "bloom-less table")
   }
 
-  /** Exclusive-create commit — delegates to the shared OCC primitive
-    * ([[Manifests.commit]]: atomic on HDFS-like filesystems and on the
-    * local filesystem via temp file + link(2)). `lines` come from
-    * [[encodeSnapshot]]. */
-  private[sources] def commit(
-      fs: FileSystem, root: Path, version: Long, lines: Seq[String]): Unit =
-    Manifests.commit(fs, manifestDir(root), version, lines)
+  /** The one commit every MergeTable version goes through: records
+    * `next`'s state — its entries, delta and tombstones sized by the
+    * legacy migration ([[withSizes]]) — and claims `next.version` by
+    * exclusive create ([[Manifests.commit]]: atomic on HDFS-like
+    * filesystems and on the local filesystem via temp file + link(2)).
+    * Losing the claim is a loud FileAlreadyExistsException for
+    * [[transact]] or [[commitOrRebase]] to handle. Returns the snapshot
+    * as committed. */
+  private[sources] def commit(fs: FileSystem, root: Path, next: Snapshot): Snapshot = {
+    commitRaceHookForTest()
+    val sized = next.copy(entries = withSizes(fs, next.entries),
+      delta = withSizes(fs, next.delta), deletes = withSizes(fs, next.deletes))
+    Manifests.commit(fs, manifestDir(root), sized.version, encodeSnapshot(sized))
+    sized
+  }
+
+  /** The one OCC loop: runs `attempt` against a fresh snapshot of the
+    * table until its commit wins the version claim, at most `attempts`
+    * times (a lost claim is a FileAlreadyExistsException out of
+    * [[commit]]), then throws [[CommitConflict]]. An attempt that loses
+    * leaves only unreferenced files, which [[vacuum]] reclaims. */
+  private[sources] def transact[A](
+      spark: SparkSession, path: String, what: String,
+      attempts: Int = CommitAttempts)(attempt: Snapshot => A): A = {
+    var n = 0
+    while (n < attempts) {
+      n += 1
+      try return attempt(snapshot(spark, path))
+      catch {
+        case _: FileAlreadyExistsException => // lost the claim: re-snapshot
+      }
+    }
+    throw new CommitConflict(
+      s"$what at $path lost $attempts optimistic commit(s) in a row to " +
+        "concurrent writers; re-run")
+  }
 }

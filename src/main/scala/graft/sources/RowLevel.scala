@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,7 +44,7 @@ private[sources] object RowLevel {
   def apply(
       spark: SparkSession, path: String,
       upserts: Option[DataFrame], deletes: Option[DataFrame],
-      keyCols: Seq[String], maxDeltaRows: Long, maxRetries: Int,
+      keyCols: Seq[String], maxDeltaRows: Long,
       maxDeltaFiles: Int, allowEvolution: Boolean, caller: String): MergeStats = {
     requireKeyCols(keyCols)
     require(maxDeltaFiles >= 1, "maxDeltaFiles must be >= 1")
@@ -60,21 +59,18 @@ private[sources] object RowLevel {
       s"key ${keyCols.mkString(",")} missing from updates"))
     deletes.foreach(k => require(keyCols.forall(k.columns.contains),
       s"key ${keyCols.mkString(",")} missing from keys frame"))
-    // an upsert-only call whose fold rewrites nothing (a zero-row merge
-    // over inert tombstones) commits nothing; foldRowLevel clears them
-    val clearInert = upserts.isEmpty || deletes.isDefined
     val u = upserts.map(_.localCheckpoint(true)) // one computation across retries
     try {
       val ch = KeySet.validatedChanges(u, deletes, keyCols)
-      try retried(maxRetries, s"$caller at $path")(
-        once(spark, path, snapshot(spark, path), u, ch, maxDeltaRows,
-          maxDeltaFiles, allowEvolution, caller, clearInert))
+      try transact(spark, path, caller)(
+        once(spark, path, _, u, ch, maxDeltaRows, maxDeltaFiles,
+          allowEvolution, caller, clearInert = true))
       finally ch.deletes.foreach(graft.util.Checkpoints.free)
     } finally u.foreach(graft.util.Checkpoints.free)
   }
 
   /** One attempt of the fold alone — no upsert or delete side, a zero
-    * budget — against `snap`. [[MergeTable.foldRowLevel]] retries it;
+    * budget — against `snap`. [[MergeTable.foldRowLevel]] transacts it;
     * [[MergeTable.deleteWhere]] runs it before its per-file rewrite
     * with `clearInert` off, because its own commit drops inert
     * row-level lines. */
@@ -87,21 +83,6 @@ private[sources] object RowLevel {
     once(spark, path, snap, None, KeySet.Changes(none, 0L, 0L, None),
       maxDeltaRows = 0L, DefaultMaxDeltaFiles, allowEvolution = false,
       "fold", clearInert)
-  }
-
-  /** `attempt` re-run until it wins its optimistic commit, at most
-    * `maxRetries` times. */
-  def retried(maxRetries: Int, what: String)(attempt: => MergeStats): MergeStats = {
-    var n = 0
-    while (n < maxRetries) {
-      n += 1
-      try return attempt
-      catch {
-        case _: FileAlreadyExistsException => // lost the race: re-snapshot
-      }
-    }
-    throw new CommitConflict(
-      s"$what lost $maxRetries optimistic commits in a row")
   }
 
   private def once(
@@ -165,12 +146,9 @@ private[sources] object RowLevel {
       // (the rewriteMerge type-widening rationale).
       if (asNullableSchema(widened) == asNullableSchema(schema0))
         return MergeStats(snap.version, kept, 0, 0, 0)
-      commit(fs, root, snap.version + 1,
-        encodeSnapshot(withSizes(fs, snap.entries), withSizes(fs, snap.delta),
-          snap.dvKeys, snap.dvFiles,
-          stats = statsUnderSchema(snap.stats, widened), schemaJson = sj,
-          deletes = withSizes(fs, snap.deletes), colMap = cm1,
-          dvLits = snap.dvLits))
+      commit(fs, root, snap.copy(version = snap.version + 1,
+        stats = statsUnderSchema(snap.stats, widened), schemaJson = sj,
+        colMap = cm1))
       return MergeStats(snap.version + 1, kept, 0, 0, 0)
     }
     // stats ride into the discovery probes (conservative pruning)
@@ -239,11 +217,10 @@ private[sources] object RowLevel {
         // key set, literal when it fits, and on a DV-free base may
         // rebase a lost insert-only commit (see rewriteMerge)
         val pure = deltaDf.isEmpty && d.isEmpty
-        val st = rewriteMerge(spark, fs, root, snap.version, snap.entries,
+        val st = rewriteMerge(spark, fs, root, snap,
           combined, if (pure) ks else KeySet.Frame(combined, keyCols, n),
-          snapStats = snap.stats, tableSchema = schema0,
-          allowEvolution = allowEvolution, knownTouched = known,
-          removeKeys = removeKeys, colMap0 = cm1,
+          tableSchema = schema0, allowEvolution = allowEvolution,
+          knownTouched = known, removeKeys = removeKeys, colMap0 = cm1,
           allowRebase = pure && !snap.rowLevel)
         if (st.version != snap.version || !clearInert)
           return st.copy(rowsUpserted = nU)
@@ -254,11 +231,9 @@ private[sources] object RowLevel {
         // landing after the proof makes the claim lose OCC, and the
         // retry re-proves against its state: its delta rows are never
         // blind-cleared, its deletions never resurrected.
-        commitRaceHookForTest()
-        commit(fs, root, snap.version + 1,
-          encodeSnapshot(withSizes(fs, snap.entries), Nil, Nil,
-            stats = snap.stats, schemaJson = Some(asNullableSchema(schema0).json),
-            colMap = cm1, dvLits = None))
+        commit(fs, root, Snapshot(snap.version + 1, snap.entries,
+          stats = snap.stats, schemaJson = Some(asNullableSchema(schema0).json),
+          colMap = cm1))
         return MergeStats(snap.version + 1, snap.entries.size, 0, 0, 0)
       } finally {
         if (deltaDf.nonEmpty) graft.util.Checkpoints.free(combined)
@@ -276,7 +251,7 @@ private[sources] object RowLevel {
     // amortized 1/maxDeltaFiles), re-writes combined.
     val deltaRewritten = snap.delta.nonEmpty &&
       (deltaHit > 0 || (nU > 0 && snap.delta.size >= maxDeltaFiles))
-    val carried = if (deltaRewritten) Nil else withSizes(fs, snap.delta)
+    val carried = if (deltaRewritten) Nil else snap.delta
     val fresh =
       if (deltaRewritten && nDelta > 0)
         writeBatch(spark, fs, root, newDelta().coalesce(filesFor(nDelta)))
@@ -285,7 +260,7 @@ private[sources] object RowLevel {
         df.select(cols.map(col): _*).coalesce(filesFor(nU))))
     val tombsRewritten = nD > 0 || tombHit > 0
     val tombs =
-      if (!tombsRewritten) withSizes(fs, snap.deletes)
+      if (!tombsRewritten) snap.deletes
       else if (nTomb == 0) Nil
       else writeBatch(spark, fs, root, newTombs().get.coalesce(1), keyOnly = true)
     // the SCOPE: the prior scope unions in (base entries are immutable
@@ -301,177 +276,38 @@ private[sources] object RowLevel {
     }
     val scope = touched.map(t =>
       snap.entries.map(_.path).filter(p => t.contains(normalize(p))))
-    commitRaceHookForTest()
-    try {
-      commit(fs, root, snap.version + 1,
-        encodeSnapshot(withSizes(fs, snap.entries), carried ++ fresh,
-          snap.dvKeys match { case Nil => keyCols; case pinned => pinned },
-          scope,
-          stats = carriedStats(spark.sparkContext.hadoopConfiguration,
-            statsUnderSchema(snap.stats, widened), snap.entries ++ carried, fresh),
-          schemaJson = sj, deletes = tombs, colMap = cm1,
-          // the commit's key set is provably prev ∪ ks: an upserted key
-          // moves base→delta or tombstones→delta, a deleted one moves
-          // base→tombstones or delta→tombstones — the union never
-          // shrinks short of a fold
-          dvLits = ks.dvLitsAfter(spark, snap)))
-    } catch {
-      case e: FileAlreadyExistsException =>
-        // lost the OCC race. APPEND-SHAPED commits — the prior delta
-        // carried verbatim and no prior tombstone touched — can rebase
-        // onto the winner's tip: my delta files as written, my delete
-        // keys as a tombstone file of their own (the file written above
-        // is exactly that when there were no prior tombstones; else it
-        // binds MY base's tombstones, stale vs the tip, and becomes a
-        // vacuum-reclaimable orphan). Anything else re-runs whole.
-        return (if (!deltaRewritten && tombHit == 0)
-          rebaseRowLevelAppend(spark, fs, root, ks,
-            myDeltaFiles = fresh,
-            myTombstones = () =>
-              if (nD == 0) Nil
-              else if (snap.deletes.isEmpty) tombs
-              else writeBatch(spark, fs, root, d.get.coalesce(1), keyOnly = true),
-            myUpserts = nU, mySchemaJson = sj, myColMap = cm1,
-            baseEntries = snap.entries, baseStats = snap.stats,
-            maxDeltaRows = maxDeltaRows, maxDeltaFiles = maxDeltaFiles)
-         else None).getOrElse(throw e)
-    }
-    MergeStats(snap.version + 1,
-      snap.entries.size + carried.size +
-        (if (tombsRewritten) 0 else snap.deletes.size),
-      (if (deltaRewritten) snap.delta.size else 0) +
-        (if (tombsRewritten) snap.deletes.size else 0),
-      fresh.size + (if (tombsRewritten) tombs.size else 0),
-      nU)
-  }
-
-  /** REBASE of a lost row-level APPEND commit onto the winner's tip —
-    * the second rung of multi-writer reconciliation after
-    * [[MergeTable.rebaseInsertOnly]]: two streams writing row-level
-    * changes on DISJOINT keys land in one retry round instead of
-    * serializing via full re-attempts. The commit appends my delta files
-    * (the upserts) and my tombstone file (the deletes) together.
-    *
-    * INVARIANT ANALYSIS — what a row-level append claims, and how each
-    * claim is re-proven against the winner's tip:
-    *
-    *  1. "My keys appear in no OTHER suppression state" (key uniqueness
-    *     across delta files; the tombstone/delta disjointness
-    *     invariant). My own probes proved this against MY base's
-    *     delta/tombstones; the winner may have changed both — so the
-    *     claim is re-proven directly against the TIP's row-level state:
-    *     one overlap probe over tip.delta and tip.deletes (both
-    *     maxDeltaRows-bounded frames), zero overlap required.
-    *     Probing tip state directly assumes nothing about WHAT the
-    *     winner did (append, combine, fold, rescope — all covered).
-    *  2. "My scope names every base file holding one of my keys." Files
-    *     CARRIED from my base are immutable, so the proof holds for
-    *     them; files the winner ADDED (insert batch, fold/compaction
-    *     output, deleteWhere rewrite) could hold my keys — probed over
-    *     exactly `tip − base`, the rebaseInsertOnly idiom (cost ∝ the
-    *     winner's churn). Zero hits required: a hit means a scoped
-    *     commit would fail to suppress that file's row — a visible
-    *     duplicate (an upsert) or a missed deletion (a delete). Files
-    *     the winner REMOVED drop out of the composed scope (inert).
-    *  3. "My files carry schema X under mapping M" — exact equality of
-    *     tip.schemaJson/tip.colMap, as in rebaseInsertOnly (an evolving
-    *     or renaming winner refuses; the full retry handles it).
-    *  4. "The suppression stays within budget" — re-checked against the
-    *     TIP's footer row counts plus mine; past-budget refuses (the
-    *     full retry folds, the correct response to a full suppression
-    *     set), as does the delta file cap when I add delta files.
-    *
-    * FOLD commits never reach here: they go through
-    * [[MergeTable.rewriteMerge]], whose own rebase is gated to pure
-    * inserts — a fold's input is delta-carried state whose validity the
-    * r16 analysis showed cannot survive a winner. Delta- or
-    * tombstone-REWRITING commits are gated out at the call site: their
-    * commit replaces row-level files the winner may also have replaced,
-    * and key disjointness alone cannot reconcile two rewrites of the
-    * same file set. A torn rebase leaves my batch/tombstone files
-    * orphaned — vacuum-reclaimable, never referenced (the
-    * rebaseInsertOnly durability argument).
-    *
-    * Returns None when any check refuses — the caller rethrows and the
-    * outer loop re-attempts whole (today's always-correct path). */
-  private def rebaseRowLevelAppend(
-      spark: SparkSession, fs: FileSystem, root: Path, ks: KeySet,
-      myDeltaFiles: Seq[FileEntry], myTombstones: () => Seq[FileEntry],
-      myUpserts: Long, mySchemaJson: Option[String], myColMap: ColMap,
-      baseEntries: Seq[FileEntry], baseStats: Seq[TableStats],
-      maxDeltaRows: Long, maxDeltaFiles: Int): Option[MergeStats] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val keyCols = ks.keyCols
-    // written at most ONCE, at the first commit attempt, and reused
-    // across re-validations (files are immutable; a refused rebase
-    // leaves it a vacuum-reclaimable orphan, never referenced)
-    lazy val tombFiles: Seq[FileEntry] = myTombstones()
-    var attempt = 0
-    while (attempt < 3) {
-      attempt += 1
-      val tip = snapshot(spark, root.toString)
-      if (tip.schemaJson != mySchemaJson) return None      // claim 3
-      if (tip.colMap != myColMap) return None
-      if (tip.dvKeys.nonEmpty && tip.dvKeys.toSet != keyCols.toSet)
-        return None // mismatched key set: let the retry raise loudly
-      val schema = tip.schema.getOrElse(return None)       // legacy: no rebase
-      // claim 4: budget and file cap against the TIP's state plus mine
-      if (footerRowCount(conf, tip.delta) + footerRowCount(conf, tip.deletes) +
-          ks.size > maxDeltaRows) return None
-      if (myDeltaFiles.nonEmpty &&
-          tip.delta.size + myDeltaFiles.size > maxDeltaFiles) return None
-      // claim 1: my keys vs the tip's row-level state, both directions
-      if (ks.overlaps(
-          (if (tip.delta.isEmpty) Nil
-           else Seq(relationFor(spark, tip.delta, Nil, Some(schema)))) ++
-          (if (tip.deletes.isEmpty) Nil
-           else Seq(relationFor(spark, tip.deletes, Nil,
-             Some(keySchemaOf(schema, keyCols)))))).exists(_._2 > 0))
-        return None
-      // claim 2: my keys vs the files the winner added
-      val baseSet = baseEntries.map(e => normalize(e.path)).toSet
-      val added = tip.entries.filterNot(e => baseSet.contains(normalize(e.path)))
-      if (added.nonEmpty && ks.hitsAny(
-          relationFor(spark, withSizes(fs, added), tip.stats, Some(schema))))
-        return None // a scoped commit would miss this file
-      // scope composition: the tip's scope covers the tip's own
-      // suppression keys; mine covers my keys (point-probed against MY
-      // base — sound for carried files, and added files were just
-      // proven key-free; removed files filter out). Either side
-      // unscoped → unscoped (suppress-everywhere is always sound;
-      // rescopeDelta bounds it later).
-      val scope: Option[Seq[String]] =
-        if (tip.rowLevel && tip.dvFiles.isEmpty) None
-        else ks.pointTouched(
-            relationFor(spark, baseEntries, baseStats, Some(schema)))
-          .map { mine =>
-            val tipScopeNorm =
-              tip.dvFiles.getOrElse(Nil).map(normalize).toSet
-            tip.entries.map(_.path).filter(p =>
-              mine.contains(normalize(p)) ||
-                tipScopeNorm.contains(normalize(p)))
-          }
-      try {
-        commit(fs, root, tip.version + 1,
-          encodeSnapshot(withSizes(fs, tip.entries),
-            withSizes(fs, tip.delta) ++ myDeltaFiles,
-            tip.dvKeys match { case Nil => keyCols; case pinned => pinned },
-            scope,
-            stats = carriedStats(conf, tip.stats,
-              tip.entries ++ tip.delta, myDeltaFiles),
-            schemaJson = tip.schemaJson,
-            deletes = withSizes(fs, tip.deletes) ++ tombFiles,
-            colMap = tip.colMap,
-            // the rebase appends MY disjoint keys onto the TIP's
-            // row-level state: the recorded set extends tip ∪ mine
-            dvLits = ks.dvLitsAfter(spark, tip)))
-        return Some(MergeStats(tip.version + 1,
-          tip.entries.size + tip.delta.size, 0,
-          myDeltaFiles.size + tombFiles.size, myUpserts))
-      } catch {
-        case _: FileAlreadyExistsException => // another winner: re-validate
-      }
-    }
-    None
+    commitOrRebase(spark, fs, root,
+      Snapshot(snap.version + 1, snap.entries, carried ++ fresh,
+        snap.dvKeys match { case Nil => keyCols; case pinned => pinned },
+        scope,
+        stats = carriedStats(spark.sparkContext.hadoopConfiguration,
+          statsUnderSchema(snap.stats, widened), snap.entries ++ carried, fresh),
+        schemaJson = sj, deletes = tombs, colMap = cm1,
+        // the commit's key set is provably prev ∪ ks: an upserted key
+        // moves base→delta or tombstones→delta, a deleted one moves
+        // base→tombstones or delta→tombstones — the union never
+        // shrinks short of a fold
+        dvLits = ks.dvLitsAfter(spark, snap)),
+      MergeStats(snap.version + 1,
+        snap.entries.size + carried.size +
+          (if (tombsRewritten) 0 else snap.deletes.size),
+        (if (deltaRewritten) snap.delta.size else 0) +
+          (if (tombsRewritten) snap.deletes.size else 0),
+        fresh.size + (if (tombsRewritten) tombs.size else 0),
+        nU),
+      // APPEND-SHAPED commits — the prior delta carried verbatim and no
+      // prior tombstone touched — may rebase onto a winner's tip: my
+      // delta files as written, my delete keys as a tombstone file of
+      // their own (the file written above is exactly that when there
+      // were no prior tombstones; else it binds MY base's tombstones,
+      // stale vs the tip, and becomes a vacuum-reclaimable orphan).
+      // Anything else re-runs whole.
+      if (deltaRewritten || tombHit > 0) None
+      else Some(Append(ks, snap, nU, delta = fresh,
+        tombstones = () =>
+          if (nD == 0) Nil
+          else if (snap.deletes.isEmpty) tombs
+          else writeBatch(spark, fs, root, d.get.coalesce(1), keyOnly = true),
+        budget = Some((maxDeltaRows, maxDeltaFiles)))))
   }
 }

@@ -2067,9 +2067,6 @@ class MergeTableSpec extends SparkSpec {
       .as[Long].collect().sorted.toSeq === Seq(10L, 20L))
     assert(MergeTable.changesBetween(spark, path, 1L, 2L, Seq("id")).count()
       === 0, "a pure delete window reports no changed rows")
-    val est = MergeTable.changesCostEstimate(spark, path, 1L, 2L, Seq("id"))
-    assert(est.scanFiles === 0,
-      s"the changes feed early-returns on a tombstone-only window: $est")
     // the EXCEPT oracle both ways (the q137 convention, in-spec)
     val v1 = MergeTable.readAt(spark, path, 1L)
     val v2 = MergeTable.readAt(spark, path, 2L)
@@ -2281,50 +2278,6 @@ class MergeTableSpec extends SparkSpec {
       assert(got === (if (all.contains(probe)) 1L else 0L),
         s"probe '$probe' must match the full scan")
     }
-  }
-
-  test("changesCostEstimate: manifest-only cost shape matches what the feed scans; compaction flags fullScan") {
-    val path = freshPath()
-    MergeTable.init(spark, path, rows(1 to 1000, "a"))       // v1
-    MergeTable.compactTable(spark, path, "id", 8)            // v2
-    MergeTable.merge(spark, path, rows(10 to 19, "m"), Seq("id")) // v3: 1 file churned
-    val narrow = MergeTable.changesCostEstimate(spark, path, 2L, 3L, Seq("id"))
-    assert(narrow.addedFiles === 1 && narrow.probeFiles === 1,
-      s"a one-file merge diff scans two files: $narrow")
-    assert(!narrow.fullScan)
-    assert(narrow.addedBytes > 0 && narrow.tableFiles === 8)
-    // a mergeLite window: added = delta file, probe = carried scope file
-    MergeTable.mergeLite(spark, path, rows(500 to 504, "dv"), Seq("id")) // v4
-    val lite = MergeTable.changesCostEstimate(spark, path, 3L, 4L, Seq("id"))
-    assert(lite.addedFiles === 1, s"the delta file: $lite")
-    assert(lite.probeFiles ===
-      MergeTable.snapshot(spark, path).dvFiles.map(_.size).getOrElse(-1),
-      s"the probe side is exactly the carried scope: $lite")
-    assert(!lite.fullScan)
-    // the estimate prices exactly what changesBetween reads: its row
-    // answer on this window stays the 5 upserted rows
-    assert(MergeTable.changesBetween(spark, path, 3L, 4L, Seq("id")).count() === 5)
-    // a compaction in the window: everything churns — flagged
-    MergeTable.compactTable(spark, path, "id", 8)            // v5 (folds)
-    val wide = MergeTable.changesCostEstimate(spark, path, 4L, 5L, Seq("id"))
-    assert(wide.fullScan, s"compaction windows must flag fullScan: $wide")
-    assert(wide.scanFiles >= 16)
-    // and the honest answer over that window is still "nothing changed"
-    assert(MergeTable.changesBetween(spark, path, 4L, 5L, Seq("id")).count() === 0)
-    // a window adding NO file (a rescope-shaped manifest-only commit)
-    // prices as FREE — the feed early-returns without scanning, and
-    // the estimate must mirror that, not charge the probe side
-    // (review catch)
-    MergeTable.mergeLite(spark, path, rows(30 to 34, "dv5"), Seq("id")) // v6
-    MergeTable.rescopeDelta(spark, path)  // no-op (already scoped) — force
-    tamperManifest(path)(ls => ls.filterNot(l =>
-      l.startsWith("dvfiles\t") || l.startsWith("dvfile\t")))
-    val rescoped = MergeTable.rescopeDelta(spark, path)       // v7: same files
-    assert(rescoped.version === 7L)
-    val free = MergeTable.changesCostEstimate(spark, path, 6L, 7L, Seq("id"))
-    assert(free.scanFiles === 0 && free.scanBytes === 0L && !free.fullScan,
-      s"a no-added-file window must price as free: $free")
-    assert(MergeTable.changesBetween(spark, path, 6L, 7L, Seq("id")).count() === 0)
   }
 
   test("deleteLite works under a bloom config with non-key columns (key-only tombstone files)") {
@@ -2618,7 +2571,7 @@ class MergeTableSpec extends SparkSpec {
     assert(MergeTable.read(spark, c).count() === 990)
   }
 
-  test("rowLevelPressure + foldIfTombstones: footer-metadata telemetry; threshold fold clears tombstones; CDF across the fold stays correct") {
+  test("rowLevelPressure + maintain's fold policy: footer-metadata telemetry; threshold fold clears tombstones; CDF across the fold stays correct") {
     val path = freshPath()
     MergeTable.init(spark, path, rows(1 to 1000, "a"))
     MergeTable.mergeLite(spark, path, rows(10 to 14, "dv"), Seq("id"))    // v2
@@ -2629,11 +2582,14 @@ class MergeTableSpec extends SparkSpec {
     assert(p.deltaFiles >= 1 && p.tombstoneFiles === 1 &&
       p.deltaBytes > 0 && p.tombstoneBytes > 0)
     assert(!p.unscoped && p.scopeFiles >= 1, s"scoped state: $p")
+    def foldAt(maxTombstoneRows: Long) = MergeTable.maintain(spark, path,
+      MergeTable.MaintenancePolicy(rescope = false,
+        foldAtTombstoneRows = Some(maxTombstoneRows), vacuumRetainMillis = None)).folded
     // under threshold: no fold, no commit
-    assert(MergeTable.foldIfTombstones(spark, path, 100L).isEmpty)
+    assert(foldAt(100L).isEmpty)
     assert(MergeTable.snapshot(spark, path).version === 3L)
     // over threshold: the fold clears every piece of row-level state
-    assert(MergeTable.foldIfTombstones(spark, path, 5L).isDefined)
+    assert(foldAt(5L).isDefined)
     val snap = MergeTable.snapshot(spark, path)
     assert(!snap.rowLevel, "the fold must commit a DV-free manifest")
     assert(MergeTable.read(spark, path).count() === 993)
@@ -3198,7 +3154,7 @@ class MergeTableSpec extends SparkSpec {
       MergeTable.trimLog(spark, path, keepLast = 0))
   }
 
-  test("deleteWhereLite rediscoverPerRetry: a racing writer's new matches re-match; the default binds to discovery") {
+  test("deleteWhereLite binds to discovery: a racing writer's new match survives; a quiescent call is one commit") {
     def build(): String = {
       val p = freshPath()
       MergeTable.init(spark, p, (1 to 100)
@@ -3224,21 +3180,9 @@ class MergeTableSpec extends SparkSpec {
     assert(ra.count() === 1 &&
       ra.select($"id").as[Long].head() === 1001L,
       "default semantics: discovery-bound, documented")
-    // OPT-IN: the lost commit re-runs discovery against the fresh tip,
-    // so the racer's row dies in the same call
-    val b = build()
-    raceInsertBad(b)
-    try MergeTable.deleteWhereLite(spark, b, $"tag" === "bad", Seq("id"),
-      rediscoverPerRetry = true)
-    finally MergeTable.commitRaceHookForTest = () => ()
-    assert(MergeTable.read(spark, b).filter($"tag" === "bad").count() === 0,
-      "rediscoverPerRetry: deleteWhere's concurrent semantics at tombstone cost")
-    assert(MergeTable.read(spark, b).count() === 90,
-      "the non-matching rows (100 - 10 bad; the racer's 1001 gone too) survive")
-    // quiescent: both modes identical, one commit
+    // quiescent: one commit
     val c = build()
-    val s = MergeTable.deleteWhereLite(spark, c, $"tag" === "bad",
-      Seq("id"), rediscoverPerRetry = true)
+    val s = MergeTable.deleteWhereLite(spark, c, $"tag" === "bad", Seq("id"))
     assert(s.version === 2L &&
       MergeTable.read(spark, c).filter($"tag" === "bad").count() === 0)
   }
@@ -3339,7 +3283,7 @@ class MergeTableSpec extends SparkSpec {
       sna.entries.size === 3, "the single rewrite folded AND compacted")
     // content equals the explicit fold-then-compact composition
     val pb = freshPath(); stage(pb)
-    MergeTable.foldIfTombstones(spark, pb, maxTombstoneRows = 0L)
+    MergeTable.foldRowLevel(spark, pb)
     MergeTable.compactTable(spark, pb, "id", 3)
     val a = MergeTable.read(spark, pa).orderBy($"id").collect().toSeq
     val b = MergeTable.read(spark, pb).orderBy($"id").collect().toSeq

@@ -250,6 +250,21 @@ class RowLevelSpec extends SparkSpec {
     assert(MergeTable.snapshot(spark, path).version === v + 1)
   }
 
+  test("a zero-row merge over tombstones that suppress nothing commits a DV-free manifest") {
+    val path = freshPath()
+    base(path)
+    MergeTable.deleteLite(spark, path, keys(900 to 902), Seq("id")) // absent keys
+    val want = sorted(path)
+    val v = MergeTable.snapshot(spark, path).version
+    val st = MergeTable.merge(spark, path, rows(Nil, "z"), Seq("id"))
+    val snap = MergeTable.snapshot(spark, path)
+    assert(st.version === v + 1 && snap.version === v + 1,
+      s"the inert tombstones must be cleared by one commit: $st")
+    assert(!snap.rowLevel && snap.dvFiles.isEmpty && snap.dvLits.isEmpty,
+      "the zero-row merge must leave a DV-free manifest")
+    assert(sorted(path) === want)
+  }
+
   test("merge never meets the row-level writer's dvkeys-line and delta-file-cap refusals") {
     // a key name the manifest's dvkeys line cannot store: the row-level
     // writers refuse it up front; merge, which never commits row-level
