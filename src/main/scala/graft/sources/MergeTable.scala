@@ -2277,10 +2277,10 @@ object MergeTable {
         if (!rowLevel || tip.rowLevel && tip.dvFiles.isEmpty) None
         else a.ks.pointTouched(
             relationFor(spark, a.base.entries, a.base.stats, Some(schema)))
-          .map { mine =>
+          .map { touched =>
             val tipScope = tip.dvFiles.getOrElse(Nil).map(normalize).toSet
             tip.entries.map(_.path).filter(p =>
-              mine.contains(normalize(p)) || tipScope.contains(normalize(p)))
+              touched.contains(normalize(p)) || tipScope.contains(normalize(p)))
           }
       try {
         commit(fs, root, tip.copy(version = tip.version + 1,
