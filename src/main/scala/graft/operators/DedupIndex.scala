@@ -212,12 +212,12 @@ object DedupIndex {
     *
     * A batch doc with NULL text is a CONTENT RETRACTION: the id's
     * bands and shingles are DELETED from the index (bounded predicate
-    * delete — batch-sized id list), not skipped. Skipping would leave
-    * the retracted content's signature serving forever: future docs
-    * similar to the dead text would keep getting rejected as
-    * near-dups of content that no longer exists.
+    * delete — batch-sized id list — in the merge's version), not
+    * skipped. Skipping would leave the retracted content's signature
+    * serving forever: future docs similar to the dead text would keep
+    * getting rejected as near-dups of content that no longer exists.
     *
-    * Atomic for readers: the component deletes/merges commit first
+    * Atomic for readers: the component writes commit first
     * (unpublished), then ONE composite commit flips every reader from
     * the whole old state to the whole new one — see the class doc for
     * the crash/replay and single-writer contract. */
@@ -232,36 +232,16 @@ object DedupIndex {
     val sPath = componentPath(path, p0.shingles.dir)
     val bPath = componentPath(path, p0.bands.dir)
     try {
-      // component versions to publish: start from the current pins so
-      // a no-op batch publishes nothing
-      var sV = p0.shingles.version
-      var bV = p0.bands.version
-      // shingles and bands are independent components: each component's
-      // delete-then-merge CHAIN runs as one branch and the two branches
-      // overlap (guide §2.6) — per-component order preserved, no
-      // cross-component barrier between the delete and merge phases
-      // (a slow shingles purge must not hold up the bands merge)
-      val doRetract = retracted.nonEmpty
-      val doMerge = !sh.isEmpty
-      if (doRetract || doMerge) {
-        val (sv2, bv2) = graft.util.Par.both(
-          {
-            var v = sV
-            if (doRetract) v = MergeTable.deleteWhere(spark, sPath,
-              col("id").isin(retracted: _*)).version
-            if (doMerge) v = MergeTable.merge(spark, sPath, sh, Seq("id")).version
-            v
-          },
-          {
-            var v = bV
-            if (doRetract) v = MergeTable.deleteWhere(spark, bPath,
-              col("id").isin(retracted: _*)).version
-            if (doMerge) v = MergeTable.merge(spark, bPath,
-              Dedup.bandFrame(sh, p.numHashes, p.bands), Seq("id", "band")).version
-            v
-          })
-        sV = sv2; bV = bv2
-      }
+      val retract = Option.when(retracted.nonEmpty)(col("id").isin(retracted: _*))
+      val upserts = Some(sh).filterNot(_.isEmpty)
+      // shingles and bands are independent components: each writes its
+      // retraction and merge as one version, and the two overlap
+      // (guide §2.6). A no-op batch leaves both at their pins and
+      // publishes nothing.
+      val (sV, bV) = graft.util.Par.both(
+        CI.writeComponent(spark, sPath, p0.shingles.version, upserts, Seq("id"), retract),
+        CI.writeComponent(spark, bPath, p0.bands.version,
+          upserts.map(Dedup.bandFrame(_, p.numHashes, p.bands)), Seq("id", "band"), retract))
       if (sV != p0.shingles.version || bV != p0.bands.version)
         CI.commitPin(spark, path, p0.version + 1, Map(
           "bands" -> Ref(p0.bands.dir, bV),

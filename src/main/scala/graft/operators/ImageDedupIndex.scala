@@ -166,9 +166,9 @@ object ImageDedupIndex {
     * merge by (id, band) — matched ids fully replaced (the band set
     * per id is fixed), new ids inserted, touched parquet files only.
     * A batch row with NULL fp is a CONTENT RETRACTION ([[DedupIndex
-    * .upsert]]'s NULL-text rule): the id's bands DELETE, so dead
-    * images stop rejecting future lookalikes. One composite commit
-    * publishes; a no-op batch publishes nothing. */
+    * .upsert]]'s NULL-text rule): the id's bands DELETE, in the
+    * merge's version, so dead images stop rejecting future lookalikes.
+    * One composite commit publishes; a no-op batch publishes nothing. */
   def upsert(
       spark: SparkSession, path: String, hashes: DataFrame,
       idCol: String, fpCol: String): Unit = {
@@ -184,16 +184,15 @@ object ImageDedupIndex {
       val retracted = h.filter(col("fp").isNull)
         .select(col("id")).distinct().collect().map(_.get(0)).toSeq
       val fp = h.filter(col("fp").isNotNull)
-      var bV = p0.bands.version
       // chunked like every bulk id-predicate purge (the isin-literal
-      // analysis cliff — [[graft.util.Pushdown.RetractChunk]])
-      retracted.grouped(RetractChunk).foreach { chunk =>
-        bV = MergeTable.deleteWhere(spark, bPath,
-          col("id").isin(chunk: _*)).version
-      }
-      if (!fp.isEmpty)
-        bV = MergeTable.merge(spark, bPath,
-          Dedup.hammingBands(fp), Seq("id", "band")).version
+      // analysis cliff — [[graft.util.Pushdown.RetractChunk]]): the
+      // last (usually only) chunk rides the merge's version
+      val chunks = retracted.grouped(RetractChunk).map(c => col("id").isin(c: _*)).toSeq
+      val v0 = chunks.dropRight(1).foldLeft(p0.bands.version)((_, c) =>
+        MergeTable.deleteWhere(spark, bPath, c).version)
+      val bV = CI.writeComponent(spark, bPath, v0,
+        Some(fp).filterNot(_.isEmpty).map(Dedup.hammingBands), Seq("id", "band"),
+        chunks.lastOption)
       if (bV != p0.bands.version)
         CI.commitPin(spark, path, p0.version + 1, Map(
           "bands" -> Ref(p0.bands.dir, bV), "params" -> p0.params))

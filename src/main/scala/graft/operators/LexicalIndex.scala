@@ -181,7 +181,7 @@ object LexicalIndex {
     * keep batches bounded (ingest-batch sized, not corpus-sized —
     * rebuild via [[build]] for corpus-scale changes).
     *
-    * Atomic for readers: the component deletes/merges commit first
+    * Atomic for readers: the component writes commit first
     * (unpublished), then ONE composite commit flips every query from
     * the whole old index to the whole new one. The df delta and the
     * dictionary values are computed from the PINNED state, not the
@@ -207,11 +207,10 @@ object LexicalIndex {
         // so a no-op batch evaluates nothing (review catch)
         postings = Some(postings0.localCheckpoint(true))
         val idSeq = ids.toSeq
-        // df delta BEFORE the delete, against the PINNED postings: each
-        // affected term's df moves by (new batch postings) - (old batch
-        // postings). The old-side probe reads only (term, id) of the
-        // id-matched rows; the touched term set is bounded by the
-        // batch's vocabulary.
+        // df delta against the PINNED postings: each affected term's df
+        // moves by (new batch postings) - (old batch postings). The
+        // old-side probe reads only (term, id) of the id-matched rows;
+        // the touched term set is bounded by the batch's vocabulary.
         val oldCounts = MergeTable.readAt(spark, pPath, p0("postings").version)
           .filter(col("id").isin(idSeq: _*))
           .groupBy(col("term")).agg(count(lit(1)).as("__old"))
@@ -221,7 +220,7 @@ object LexicalIndex {
             (coalesce(col("__new"), lit(0L)) - coalesce(col("__old"), lit(0L)))
               .as("__delta"))
           .filter(col("__delta") =!= 0)
-          .localCheckpoint(true) // must be read before AND after the delete
+          .localCheckpoint(true) // read twice: the affected terms and dfUpdates
         try {
           val affected = delta.select(col("term"))
           val current = MergeTable.readAt(spark, tPath, p0("termdf").version)
@@ -229,18 +228,15 @@ object LexicalIndex {
           val dfUpdates = delta.join(current, Seq("term"), "left_outer")
             .select(col("term"),
               (coalesce(col("df"), lit(0L)) + col("__delta")).as("df"))
-          // the three components are independent tables: the postings
-          // delete→merge chain, the doclens merge and the termdf merge
-          // overlap from driver threads (guide §2.6). Within postings
-          // the order stays delete-then-merge: stale postings of
-          // REPLACED docs — a term the new text no longer contains
-          // would survive a bare merge (its (id, term) key is absent
-          // from the update frame) and keep matching.
+          // the three components are independent tables: their merges
+          // overlap from driver threads (guide §2.6). The postings merge
+          // drops every posting of the batch's ids in the same version:
+          // stale postings of REPLACED docs — a term the new text no
+          // longer contains would survive a bare merge (its (id, term)
+          // key is absent from the update frame) and keep matching.
           val (pv, dv, tv) = graft.util.Par.three(
-            {
-              MergeTable.deleteWhere(spark, pPath, col("id").isin(idSeq: _*))
-              MergeTable.merge(spark, pPath, postings.get, Seq("id", "term"))
-            },
+            MergeTable.merge(spark, pPath, postings.get, Seq("id", "term"),
+              where = Some(col("id").isin(idSeq: _*))),
             MergeTable.merge(spark, dPath, doclens, Seq("id")),
             MergeTable.merge(spark, tPath, dfUpdates, Seq("term")))
           CI.publishNext(spark, path, p0, Map(
@@ -290,8 +286,8 @@ object LexicalIndex {
         .localCheckpoint(true)
       try {
         // three independent components (guide §2.6): the two id-purges
-        // and the dictionary chain overlap; within termdf the order
-        // stays merge-then-delete on the one table.
+        // and the dictionary write overlap; the dictionary's decrements
+        // and its dead-term deletes are one merge.
         //
         // Purge mechanism deliberately stays deleteWhere (the eager
         // per-file rewrite), NOT deleteWhereLite (r17 A/B): the
@@ -311,14 +307,12 @@ object LexicalIndex {
           // the dictionary only moves when some posting actually died
           if (dfNew.isEmpty) p0("termdf").version
           else {
-            val merged = MergeTable.merge(spark, tPath,
-              dfNew.filter(col("df") > 0), Seq("term"))
             // dead dictionary terms: bounded by the dying docs' vocabulary
             val dead = dfNew.filter(col("df") <= 0).select(col("term"))
               .collect().map(_.getString(0)).toSeq
-            if (dead.isEmpty) merged.version
-            else MergeTable.deleteWhere(spark, tPath,
-              col("term").isin(dead: _*)).version
+            MergeTable.merge(spark, tPath, dfNew.filter(col("df") > 0),
+              Seq("term"), where = Option.when(dead.nonEmpty)(col("term").isin(dead: _*)))
+              .version
           })
         // all-absent ids leave every component at its pin: publish
         // nothing (DedupIndex.delete's no-op contract — a replayed or

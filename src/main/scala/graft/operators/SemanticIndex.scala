@@ -135,8 +135,9 @@ object SemanticIndex {
     * key (replaced or inserted, touched parquet files only), assigned
     * with the PINNED quantizer. A batch row with a NULL vector is a
     * CONTENT RETRACTION — the id's row is DELETED (bounded predicate
-    * delete), not skipped, or the dead vector's semantics would keep
-    * rejecting future lookalikes ([[DedupIndex.upsert]]'s stance).
+    * delete, in the merge's version), not skipped, or the dead
+    * vector's semantics would keep rejecting future lookalikes
+    * ([[DedupIndex.upsert]]'s stance).
     * Batches are ingest-batch sized (the id list is collected for the
     * retraction predicate). One composite commit publishes; a no-op
     * batch publishes nothing. */
@@ -149,13 +150,9 @@ object SemanticIndex {
       .select(col(idCol)).distinct().collect().map(_.get(0)).toSeq
     val cents = centroidsAt(spark, path, p0)
     val assigned = assignedFrame(batch, idCol, vecCol, cents)
-    val vPath = componentPath(path, p0.vectors.dir)
-    var vV = p0.vectors.version
-    if (retracted.nonEmpty)
-      vV = MergeTable.deleteWhere(spark, vPath,
-        col("id").isin(retracted: _*)).version
-    if (!assigned.isEmpty)
-      vV = MergeTable.merge(spark, vPath, assigned, Seq("id")).version
+    val vV = CI.writeComponent(spark, componentPath(path, p0.vectors.dir),
+      p0.vectors.version, Some(assigned).filterNot(_.isEmpty), Seq("id"),
+      Option.when(retracted.nonEmpty)(col("id").isin(retracted: _*)))
     if (vV != p0.vectors.version)
       CI.commitPin(spark, path, p0.version + 1, Map(
         "vectors" -> Ref(p0.vectors.dir, vV),

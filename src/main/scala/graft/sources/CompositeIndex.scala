@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Cross-component consistency for multi-table serving indexes — the
   * manifest level ABOVE [[MergeTable]], shared by
@@ -124,6 +124,20 @@ final class CompositeIndex(label: String, componentNames: Seq[String]) {
             "one maintenance stream per index")
     }
   }
+
+  /** One component's share of an incremental batch, committed as ONE
+    * component version: merge `updates` by `keyCols` after dropping the
+    * rows `retract` matches ([[MergeTable.merge]]'s predicate side), or,
+    * with no updates, delete those rows alone. Returns the component
+    * version to publish — `v0`, nothing committed, when the batch has
+    * neither side. */
+  def writeComponent(
+      spark: SparkSession, path: String, v0: Long, updates: Option[DataFrame],
+      keyCols: Seq[String], retract: Option[Column]): Long =
+    updates match {
+      case Some(u) => MergeTable.merge(spark, path, u, keyCols, where = retract).version
+      case None => retract.fold(v0)(MergeTable.deleteWhere(spark, path, _).version)
+    }
 
   /** Publish the successor of `p0` with `updated` components replacing
     * their pinned refs (untouched components carry over). */

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-level keyed MERGE over versioned parquet — the storage half of
@@ -259,6 +259,18 @@ object MergeTable {
   private def presentLogical(df: DataFrame, cm: ColMap): DataFrame =
     if (cm.ren.isEmpty) df
     else df.select(df.columns.map(c => col(c).as(cm.logicalOf(c))): _*)
+
+  /** `df` (PHYSICAL names under `cm`) without the rows predicate `where`
+    * (LOGICAL names) holds on; a NULL verdict keeps the row. Evaluated
+    * over the logical view ([[presentLogical]]) and projected back to
+    * the physical names. */
+  private[sources] def without(
+      df: DataFrame, cm: ColMap, where: Option[Column]): DataFrame =
+    where.fold(df) { c =>
+      val kept = presentLogical(df, cm).filter(!coalesce(c, lit(false)))
+      if (cm.ren.isEmpty) kept
+      else kept.select(df.columns.toSeq.map(p => col(cm.logicalOf(p)).as(p)): _*)
+    }
 
   /** The LOGICAL→PHYSICAL translation at the writer boundary: rename
     * the incoming frame's columns into the table's physical namespace
@@ -1539,8 +1551,7 @@ object MergeTable {
     // land between them). A fold that rewrites nothing proves the
     // state inert at its snapshot and clears it with a manifest-only
     // commit pinned one version past it (see RowLevel.once).
-    transact(spark, path, "foldRowLevel")(
-      RowLevel.fold(spark, path, _, clearInert = true))
+    transact(spark, path, "foldRowLevel")(RowLevel.fold(spark, path, _))
 
   /** One-call operational summary of the table at its tip — the
     * DESCRIBE DETAIL analog (Delta's, miniature): everything an
@@ -1838,6 +1849,12 @@ object MergeTable {
     * ([[mergeLite]]/[[deleteLite]]) state folds it into the same commit
     * — even for a zero-row `updates` — emitting a DV-free manifest.
     *
+    * `where` (Delta's `replaceWhere`, keyed): delete the rows matching
+    * the predicate (LOGICAL names), then merge `updates` by key — in
+    * the same one version. It drops rows of the PRIOR state only, never
+    * a row of `updates`, and a call with it re-discovers its files per
+    * OCC attempt ([[deleteWhere]]'s contract) instead of rebasing.
+    *
     * `allowSchemaEvolution` (Delta's `mergeSchema`, additive half):
     * extra `updates` columns WIDEN the table — the commit records the
     * widened schema in the manifest, files written before it read the
@@ -1847,9 +1864,10 @@ object MergeTable {
   def merge(
       spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String],
-      allowSchemaEvolution: Boolean = false): MergeStats =
+      allowSchemaEvolution: Boolean = false,
+      where: Option[Column] = None): MergeStats =
     RowLevel(spark, path, Some(updates), None, keyCols, maxDeltaRows = 0L,
-      DefaultMaxDeltaFiles, allowSchemaEvolution, "merge")
+      DefaultMaxDeltaFiles, allowSchemaEvolution, "merge", where)
 
   /** Shared key-list contract of [[merge]] and [[mergeLite]]: nonempty
     * and DUPLICATE-FREE — a repeated name would brick the table: a
@@ -2072,6 +2090,14 @@ object MergeTable {
     * caller guarantees they are disjoint from `u`'s keys (the commit
     * invariant: a re-inserted key moves out of the tombstone set), and
     * that `knownTouched` — when passed — covers their files too. */
+  /** `where` (the predicate side of [[deleteWhere]] and [[merge]]): base
+    * rows it matches drop too. The files it matches are discovered here
+    * on top of the key-touched ones — one stats-pruned scan over the
+    * logical view, the predicate pushed into it, so with range-sorted
+    * files most are never opened. `u` holds no row it matches but the
+    * caller's own (the caller filters the prior delta's rows), while
+    * `ks` keeps every key of the new delta, so a dropped delta row's
+    * superseded base row stays dropped. */
   private[sources] def rewriteMerge(
       spark: SparkSession, fs: FileSystem, root: Path, snap: Snapshot,
       u: DataFrame, ks: KeySet,
@@ -2080,6 +2106,7 @@ object MergeTable {
       knownTouched: Option[Set[String]],
       removeKeys: Option[DataFrame],
       colMap0: ColMap,
+      where: Option[Column],
       // true ONLY for a PURE caller batch (no prior delta, no deletes)
       // on a DV-free base (see RowLevel.once). FOLD calls must never rebase:
       // their `u` is delta-carried state whose validity depends on the
@@ -2107,11 +2134,16 @@ object MergeTable {
 
     // counted only if discovery needs the In-vs-range decision
     val removal = removeKeys.map(rk => KeySet.Frame(rk, keyCols, rk.count()))
-    val touched: Set[String] = knownTouched.getOrElse {
-      val uTouched =
-        if (nU == 0) Set.empty[String] else ks.touchedFiles(base)
-      uTouched ++ removal.toSeq.flatMap(_.touchedFiles(base))
-    }
+    // every discovery plan — the key sets' unless known, the
+    // predicate's — runs as ONE collect of their union
+    val discovery = knownTouched.fold(
+        (if (nU == 0) Nil else Seq(ks.discoveryFrame(base))) ++
+          removal.toSeq.map(_.discoveryFrame(base)))(_ => Nil) ++
+      where.map(c => presentLogical(base, colMap0).filter(c)
+        .select(input_file_name().as("__file")).distinct())
+    val touched: Set[String] = knownTouched.getOrElse(Set.empty[String]) ++
+      discovery.reduceOption(_ union _).toSeq
+        .flatMap(_.collect().map(r => normalize(r.getString(0))))
 
     val (hit, kept) = snap.entries.partition(e => touched.contains(normalize(e.path)))
     // the DV-free version this merge publishes over `entries`; kept
@@ -2144,11 +2176,14 @@ object MergeTable {
         return MergeStats(snap.version + 1, kept.size, 0, 0, 0)
       }
       else if (hit.isEmpty) u.select(cols.map(col): _*).coalesce(insertFiles)
-      // replaced keys AND removed keys drop from the hit files; only the
-      // replaced ones re-enter via u — a removed key's row ends here
-      // (the deleteLite fold)
-      else removal.fold(ks)(ks.union)
-        .anti(relationFor(spark, hit, Nil, Some(widened)))
+      // replaced keys AND removed keys drop from the hit files, and so
+      // do the rows `where` matches; only the replaced ones re-enter via
+      // u — a removed key's row ends here (the deleteLite fold)
+      else without({
+          val hitRows = relationFor(spark, hit, Nil, Some(widened))
+          if (nU == 0 && removal.isEmpty) hitRows
+          else removal.fold(ks)(ks.union).anti(hitRows)
+        }, colMap0, where)
         .select(cols.map(col): _*)
         .unionByName(u.select(cols.map(col): _*))
         // as many output files as were hit: without this, the replaced
@@ -2365,9 +2400,8 @@ object MergeTable {
     * union's file count, amortized 1/cap). Once the accumulated delta
     * would exceed `maxDeltaRows`, the call FOLDS instead — one rewrite
     * merge of the combined rows, clearing the row-level state.
-    * [[deleteWhere]] folds before predicate deletes (its per-file
-    * rewrite cannot see the key suppression), and
-    * [[compactTable]]/[[merge]] fold naturally.
+    * [[deleteWhere]], [[compactTable]] and [[merge]] fold it in the
+    * version they commit.
     * Same contract as [[merge]]: unique, NULL-free keys; exact schema —
     * or additive widening with `allowSchemaEvolution` (the [[merge]]
     * semantics: the commit records the widened schema, every file
@@ -2459,9 +2493,9 @@ object MergeTable {
     * in the manifest's `ddel` set): the read path adds them to the
     * base-leg suppression join — a deleted base row is superseded by
     * nothing — so the delete is an O(keys) write at any table size,
-    * and [[compactTable]]/[[merge]]/[[deleteWhere]] folds clear the
+    * and the [[compactTable]]/[[merge]]/[[deleteWhere]] folds clear the
     * tombstones by dropping their rows during the rewrite they were
-    * already paying.
+    * already paying, in the version they commit.
     *
     * Interplay invariant (enforced by every writer): tombstone keys
     * and delta keys are DISJOINT. Deleting a key that lives in the
@@ -2510,8 +2544,8 @@ object MergeTable {
     * vs deleteWhere: bit-equal on a quiescent table (spec-pinned);
     * under concurrency the predicate binds to the DISCOVERY snapshot
     * (a concurrent writer's new matching rows are not re-discovered
-    * by the commit retries, where deleteWhere re-runs its discovery
-    * per attempt — the price of the O(keys) write path). */
+    * by the commit retries, where deleteWhere's fold re-runs its
+    * discovery per attempt — the price of the O(keys) write path). */
   def deleteWhereLite(
       spark: SparkSession, path: String,
       cond: org.apache.spark.sql.Column, keyCols: Seq[String],
@@ -2524,68 +2558,22 @@ object MergeTable {
   }
 
   /** Row-level DELETE: rewrite only the files that contain a row
-    * matching `cond`, keeping their non-matching rows — the reference's
-    * TTL sweep (`DELETE WHERE expires_at < now`,
+    * matching `cond` (LOGICAL names), keeping their non-matching rows —
+    * the reference's TTL sweep (`DELETE WHERE expires_at < now`,
     * `vector_service.py` cleanup loop) at the storage layer. The
-    * predicate is pushed into the discovery scan, so with range-sorted
-    * files most are never opened. Commits optimistically like [[merge]].
-    * For SELECTIVE predicates on large tables prefer
-    * [[deleteWhereLite]], which turns the match into tombstones
-    * instead of rewriting every matched file. */
+    * predicate is pushed into the stats-pruned discovery scan, so with
+    * range-sorted files most are never opened. It is the row-level
+    * writer's fold with only a predicate side: on a table carrying
+    * row-level ([[mergeLite]]/[[deleteLite]]) state the fold and the
+    * delete land in ONE version (a matching delta row drops without
+    * resurrecting the base row it superseded), emitting a DV-free
+    * manifest. Commits optimistically, re-discovering per attempt. For
+    * SELECTIVE predicates on large tables prefer [[deleteWhereLite]],
+    * which turns the match into tombstones instead of rewriting every
+    * matched file. */
   def deleteWhere(
-      spark: SparkSession, path: String,
-      cond: org.apache.spark.sql.Column): MergeStats =
-    transact(spark, path, "deleteWhere") { snap0 =>
-      val (fs, root) = fsOf(spark, path)
-      // FOLD row-level (mergeLite/deleteLite) state first: the
-      // per-file rewrite below reasons about PHYSICAL rows and cannot
-      // see the key suppression — deleting a matching DELTA row
-      // directly would un-tombstone its key and RESURRECT the
-      // superseded base row.
-      val snap =
-        if (!snap0.rowLevel) snap0
-        else if (RowLevel.fold(spark, path, snap0, clearInert = false)
-            .version != snap0.version) snapshot(spark, path)
-        // tombstones that suppress nothing + no delta: the fold has
-        // nothing to rewrite and commits nothing — the predicate path
-        // below is still sound (no base row was suppressed) and its
-        // own commit drops the inert row-level lines
-        else snap0.copy(delta = Nil, dvKeys = Nil, dvFiles = None, deletes = Nil)
-      val schema0 = tableSchemaOf(spark, snap)
-      // the predicate speaks LOGICAL names: evaluate it over the
-      // logical-aliased view (identity on unmapped tables) — Catalyst
-      // pushes the filter through the aliasing Project, so parquet
-      // pushdown and the manifest stat pruners (physical-named) are
-      // unaffected — then project survivors back to physical for the
-      // rewrite.
-      // Manifest stats prune the DISCOVERY too: a TTL sweep on the
-      // stats column schedules tasks only for files whose recorded
-      // range can match — the 100k-file sweep reads the expirable few
-      val touched = presentLogical(
-          relationFor(spark, snap.entries, snap.stats, Some(schema0)),
-          snap.colMap)
-        .filter(cond)
-        .select(input_file_name().as("__file")).distinct()
-        .collect().map(r => normalize(r.getString(0))).toSet
-      val (hit, kept) = snap.entries.partition(e => touched.contains(normalize(e.path)))
-      if (hit.isEmpty) MergeStats(snap.version, kept.size, 0, 0, 0)
-      else {
-        val survivorsL = presentLogical(
-            relationFor(spark, hit, Nil, Some(schema0)), snap.colMap)
-          .filter(!coalesce(cond, lit(false)))
-        val survivors = (
-          if (snap.colMap.ren.isEmpty) survivorsL
-          else survivorsL.select(schema0.fieldNames.toSeq
-            .map(p => col(snap.colMap.logicalOf(p)).as(p)): _*))
-          .coalesce(hit.size) // one output file per hit file (see rewriteMerge)
-        val newFiles = writeBatch(spark, fs, root, survivors)
-        commit(fs, root, Snapshot(snap.version + 1, kept ++ newFiles,
-          stats = carriedStats(spark.sparkContext.hadoopConfiguration,
-            snap.stats, kept, newFiles),
-          schemaJson = Some(asNullableSchema(schema0).json), colMap = snap.colMap))
-        MergeStats(snap.version + 1, kept.size, hit.size, newFiles.size, 0)
-      }
-    }
+      spark: SparkSession, path: String, cond: Column): MergeStats =
+    transact(spark, path, "deleteWhere")(RowLevel.fold(spark, path, _, Some(cond)))
 
   /** Rewrite the whole table into `numFiles` range-sorted files — the
     * [[Catalog.compact]] maintenance pass, expressed as a committed

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import MergeTable._
@@ -8,11 +8,12 @@ import MergeTable._
 /** The one row-level writer: [[MergeTable.applyChanges]], and through it
   * [[MergeTable.mergeLite]] (no delete side), [[MergeTable.deleteLite]]
   * (no upsert side) and [[MergeTable.merge]] (no delete side, a zero
-  * row budget: every call folds). [[MergeTable.foldRowLevel]] and
-  * [[MergeTable.deleteWhere]] run its fold with no side at all
-  * ([[fold]]). A call's upserts and deletes land in ONE manifest
-  * version — Delta's one-log-entry transaction of adds and removes — so
-  * no reader can pin a version holding half of it.
+  * row budget: every call folds). [[MergeTable.foldRowLevel]] runs its
+  * fold with no side at all ([[fold]]), and [[MergeTable.deleteWhere]]
+  * the same fold with only a PREDICATE side; [[MergeTable.merge]] takes
+  * that side too. A call's upserts, deletes and predicate land in ONE
+  * manifest version — Delta's one-log-entry transaction of adds and
+  * removes — so no reader can pin a version holding half of it.
   *
   * Per attempt the writer takes one snapshot and, for the union `ks` of
   * both key sets, runs one probe over the delta and one over the
@@ -32,7 +33,13 @@ import MergeTable._
   *  - once the new delta + tombstone rows would pass `maxDeltaRows`, the
   *    call FOLDS instead: one rewrite merge of the new delta that drops
   *    every tombstoned row, emitting a DV-free manifest. Under a zero
-  *    budget the probes are skipped and every call folds.
+  *    budget the probes are skipped and every call folds;
+  *  - a PREDICATE side (zero budget only) drops the rows of the PRIOR
+  *    state it matches — base survivors and prior delta rows, never the
+  *    call's own upserts — inside that fold. The fold's anti-join key
+  *    set stays the unfiltered new delta's keys, so a delta row the
+  *    predicate drops keeps its superseded base row dropped: the
+  *    predicate can never resurrect a row.
   *
   * The suppression is SCOPED as every row-level commit is: the prior
   * scope plus the base files a cheap point probe proves hold a key of
@@ -45,7 +52,8 @@ private[sources] object RowLevel {
       spark: SparkSession, path: String,
       upserts: Option[DataFrame], deletes: Option[DataFrame],
       keyCols: Seq[String], maxDeltaRows: Long,
-      maxDeltaFiles: Int, allowEvolution: Boolean, caller: String): MergeStats = {
+      maxDeltaFiles: Int, allowEvolution: Boolean, caller: String,
+      where: Option[Column] = None): MergeStats = {
     requireKeyCols(keyCols)
     require(maxDeltaFiles >= 1, "maxDeltaFiles must be >= 1")
     // '\r' too: Manifests.read splits lines on CR as well as LF, so a
@@ -64,31 +72,30 @@ private[sources] object RowLevel {
       val ch = KeySet.validatedChanges(u, deletes, keyCols)
       try transact(spark, path, caller)(
         once(spark, path, _, u, ch, maxDeltaRows, maxDeltaFiles,
-          allowEvolution, caller, clearInert = true))
+          allowEvolution, caller, where))
       finally ch.deletes.foreach(graft.util.Checkpoints.free)
     } finally u.foreach(graft.util.Checkpoints.free)
   }
 
-  /** One attempt of the fold alone — no upsert or delete side, a zero
-    * budget — against `snap`. [[MergeTable.foldRowLevel]] transacts it;
-    * [[MergeTable.deleteWhere]] runs it before its per-file rewrite
-    * with `clearInert` off, because its own commit drops inert
-    * row-level lines. */
+  /** One attempt of the fold with no upsert or delete side — a zero
+    * budget, and the predicate `where` when given — against `snap`.
+    * [[MergeTable.foldRowLevel]] transacts it bare,
+    * [[MergeTable.deleteWhere]] with its predicate. */
   def fold(spark: SparkSession, path: String, snap: Snapshot,
-      clearInert: Boolean): MergeStats = {
+      where: Option[Column] = None): MergeStats = {
     val none = KeySet.Frame(spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         keySchemaOf(tableSchemaOf(spark, snap), snap.dvKeys)),
       snap.dvKeys, 0L)
     once(spark, path, snap, None, KeySet.Changes(none, 0L, 0L, None),
       maxDeltaRows = 0L, DefaultMaxDeltaFiles, allowEvolution = false,
-      "fold", clearInert)
+      "fold", where)
   }
 
   private def once(
       spark: SparkSession, path: String, snap: Snapshot, u0: Option[DataFrame],
       ch: KeySet.Changes, maxDeltaRows: Long, maxDeltaFiles: Int,
-      allowEvolution: Boolean, caller: String, clearInert: Boolean): MergeStats = {
+      allowEvolution: Boolean, caller: String, where: Option[Column]): MergeStats = {
     val (fs, root) = fsOf(spark, path)
     val schema0 = tableSchemaOf(spark, snap)
     // writer boundary: the caller speaks LOGICAL names; everything
@@ -137,8 +144,9 @@ private[sources] object RowLevel {
     })
     val sj = Some(asNullableSchema(widened).json)
     // a zero budget admits no row-level state: a zero-row call on a
-    // row-level table falls through to the fold
-    if (nU == 0 && nD == 0 && (maxDeltaRows > 0 || !snap.rowLevel)) {
+    // row-level table falls through to the fold, as does a predicate
+    if (nU == 0 && nD == 0 && where.isEmpty &&
+        (maxDeltaRows > 0 || !snap.rowLevel)) {
       val kept = snap.entries.size + snap.delta.size + snap.deletes.size
       // zero-row no-op — EXCEPT when it widens the schema: commit the
       // manifest-only widening deterministically, carrying every piece
@@ -174,9 +182,11 @@ private[sources] object RowLevel {
     // an empty ks, or a probe that saw no key of it, spares the anti-join
     def withoutKs(df: DataFrame, probe: Option[(Long, Long)]) =
       if (ks.size == 0 || probe.exists(_._2 == 0L)) df else ks.anti(df)
-    // delta survivors ∪ upserts, projected to the widened shape
-    def newDelta(): DataFrame = (deltaDf.map(df =>
-        withoutKs(padTo(df, widened), deltaProbe).select(cols.map(col): _*)).toSeq ++
+    // delta survivors ∪ upserts, projected to the widened shape; `p`
+    // drops matching delta survivors, never upserts
+    def newDelta(p: Option[Column] = None): DataFrame = (deltaDf.map(df =>
+        without(withoutKs(padTo(df, widened), deltaProbe), cm1, p)
+          .select(cols.map(col): _*)).toSeq ++
       u.map(_.select(cols.map(col): _*))).reduceOption(_ unionByName _)
       .getOrElse(padTo(base.limit(0), widened)) // typed empty frame
     // tombstone survivors ∪ deletes — disjoint, so already distinct
@@ -195,9 +205,12 @@ private[sources] object RowLevel {
       // the rewrite groups them into, are then the same whichever entry
       // point folds. rewriteMerge reads it up to three times (count,
       // discovery, hit-file anti-join). The tombstones are checkpointed
-      // when ks filters them.
+      // when ks filters them. A predicate filters the rows the fold
+      // writes, not its key set: `rows` re-reads the delta files
+      // through it in the write itself.
       val combined =
         if (deltaDf.isEmpty) newDelta() else newDelta().localCheckpoint(true)
+      val rows = if (deltaDf.isEmpty || where.isEmpty) combined else newDelta(where)
       val removeKeys =
         if (tombDf.isEmpty || ks.size == 0) newTombs()
         else newTombs().map(_.localCheckpoint(true))
@@ -215,22 +228,24 @@ private[sources] object RowLevel {
           else combined.count()
         // a PURE caller batch (no prior delta, no deletes) keeps its own
         // key set, literal when it fits, and on a DV-free base may
-        // rebase a lost insert-only commit (see rewriteMerge)
+        // rebase a lost insert-only commit (see rewriteMerge); a call
+        // with a predicate never rebases, it re-discovers per attempt
         val pure = deltaDf.isEmpty && d.isEmpty
         val st = rewriteMerge(spark, fs, root, snap,
-          combined, if (pure) ks else KeySet.Frame(combined, keyCols, n),
+          rows, if (pure) ks else KeySet.Frame(combined, keyCols, n),
           tableSchema = schema0, allowEvolution = allowEvolution,
           knownTouched = known, removeKeys = removeKeys, colMap0 = cm1,
-          allowRebase = pure && !snap.rowLevel)
-        if (st.version != snap.version || !clearInert)
+          where = where, allowRebase = pure && !snap.rowLevel && where.isEmpty)
+        if (st.version != snap.version || !snap.rowLevel)
           return st.copy(rowsUpserted = nU)
-        // nothing to write and nothing touched: the row-level state
-        // provably suppresses nothing AT snap.version (deleting absent
-        // keys is a no-op), so the folded state is a clean entries-only
-        // manifest — claimed as exactly snap.version + 1. A writer
-        // landing after the proof makes the claim lose OCC, and the
-        // retry re-proves against its state: its delta rows are never
-        // blind-cleared, its deletions never resurrected.
+        // nothing to write and nothing touched (a predicate matched no
+        // row either): the row-level state provably suppresses nothing
+        // AT snap.version (deleting absent keys is a no-op), so the
+        // folded state is a clean entries-only manifest — claimed as
+        // exactly snap.version + 1. A writer landing after the proof
+        // makes the claim lose OCC, and the retry re-proves against its
+        // state: its delta rows are never blind-cleared, its deletions
+        // never resurrected.
         commit(fs, root, Snapshot(snap.version + 1, snap.entries,
           stats = snap.stats, schemaJson = Some(asNullableSchema(schema0).json),
           colMap = cm1))

@@ -90,7 +90,7 @@ class CommitPathSpec extends SparkSpec {
     check("deleteWhere", attempts, dvFree)(
       MergeTable.deleteWhere(spark, _, $"id" <= 5L))
     check("deleteWhere", attempts, rowLevel)(
-      MergeTable.deleteWhere(spark, _, $"id" <= 5L)) // its pre-fold loses
+      MergeTable.deleteWhere(spark, _, $"id" <= 5L)) // folds and deletes in one claim
     check("compactTable", 1, rowLevel)(MergeTable.compactTable(spark, _, "id", 2))
     check("compactTableZOrder", 1, dvFree)(
       MergeTable.compactTableZOrder(spark, _, Seq("id"), 2))

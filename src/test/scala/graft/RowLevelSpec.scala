@@ -265,6 +265,71 @@ class RowLevelSpec extends SparkSpec {
     assert(sorted(path) === want)
   }
 
+  test("deleteWhere on a row-level table folds and deletes in one version; no version holds the fold alone") {
+    // matches delta rows by key (140..150) and by a non-key column (tag
+    // d, ids < 105), and base rows 151..160; the base rows the matched
+    // delta rows superseded must stay dropped
+    val cond = $"id".between(140, 160) || ($"tag" === "d" && $"id" < 105)
+    val stages = Seq[(String, String => Unit)](
+      "delta" -> (p => {
+        MergeTable.mergeLite(spark, p, rows(101 to 150, "d"), Seq("id")); ()
+      }),
+      "delta and tombstones" -> (p => {
+        MergeTable.mergeLite(spark, p, rows(101 to 150, "d"), Seq("id"))
+        MergeTable.deleteLite(spark, p, keys(1 to 10), Seq("id")); ()
+      }))
+    for ((what, stage) <- stages) {
+      val path = freshPath()
+      base(path)
+      stage(path)
+      val v = MergeTable.snapshot(spark, path).version
+      val want = MergeTable.read(spark, path).filter(!cond).orderBy("id").collect().toSeq
+      val st = MergeTable.deleteWhere(spark, path, cond)
+      val snap = MergeTable.snapshot(spark, path)
+      assert(st.version === v + 1 && snap.version === v + 1,
+        s"$what: deleteWhere must add exactly one version")
+      assert(MergeTable.versions(spark, path).filter(_ > v) === Seq(v + 1),
+        s"$what: no retained version may hold the folded-but-undeleted state")
+      assert(!snap.rowLevel, s"$what: the version is DV-free")
+      assert(sorted(path) === want, s"$what: rows")
+      assert(MergeTable.read(spark, path).filter($"id".between(101, 104) ||
+        $"id".between(140, 160)).count() === 0,
+        s"$what: a dropped delta row must not resurrect its base row")
+    }
+  }
+
+  test("deleteWhere has no discovery, rewrite or commit of its own: one coalesce(hit.size) in sources/") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = Paths.get("src/main/scala/graft/sources")
+    assert(Files.isDirectory(dir), s"$dir not found from ${Paths.get("").toAbsolutePath}")
+    def isComment(line: String): Boolean = {
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }
+    def code(f: java.nio.file.Path): Seq[String] =
+      Files.readAllLines(f).asScala.toSeq.filterNot(isComment)
+    val files = {
+      val s = Files.list(dir)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    val needle = "coalesce(hit" + ".size)"
+    assert(files.flatMap(code).count(_.contains(needle)) === 1,
+      s"$needle must appear once: the fold's rewrite")
+    // deleteWhere's lines: from its def to the next object member
+    val member = """\b(?:def|val|var|class|object)\s+(\w+)""".r
+    var owner = "<top>"
+    val body = code(dir.resolve("MergeTable.scala")).filter { l =>
+      if (l.startsWith("  ") && !l.startsWith("   "))
+        member.findFirstMatchIn(l).foreach(m => owner = m.group(1))
+      owner == "deleteWhere"
+    }
+    assert(body.nonEmpty, "deleteWhere not found in MergeTable.scala")
+    for (n <- Seq("writeBatch" + "(", "commit" + "(", "input_file_name" + "("))
+      assert(!body.exists(_.contains(n)), s"deleteWhere calls $n itself:\n${body.mkString("\n")}")
+  }
+
   test("merge never meets the row-level writer's dvkeys-line and delta-file-cap refusals") {
     // a key name the manifest's dvkeys line cannot store: the row-level
     // writers refuse it up front; merge, which never commits row-level
