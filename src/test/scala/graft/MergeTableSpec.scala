@@ -871,8 +871,8 @@ class MergeTableSpec extends SparkSpec {
     assert(g1.count() === 100)
     assert(g1.filter($"tag" === "lite").count() === 3)  // 5,6,7
     assert(g1.filter($"tag" === "full").count() === 5)  // 8..12
-    // deleteWhere folds FIRST — deleting the delta's copy of a key must
-    // not resurrect the superseded base row
+    // deleteWhere folds the delta in its own version — deleting the
+    // delta's copy of a key must not resurrect the superseded base row
     val p2 = freshPath()
     MergeTable.init(spark, p2, rows(1 to 100, "old"))
     MergeTable.mergeLite(spark, p2, rows(50 to 54, "lite"), Seq("id"))
@@ -1254,7 +1254,7 @@ class MergeTableSpec extends SparkSpec {
     assert(probe.count() === 1)
     assert(scannedFiles(probe) <= 3L,
       "a DV read's point probe stays file-pruned on every leg")
-    // deleteWhere's discovery prunes on the stats column (folds first here)
+    // deleteWhere's discovery prunes on the stats column (and folds here)
     MergeTable.deleteWhere(spark, path, $"id" === 700L)
     assert(MergeTable.read(spark, path).count() === 999)
     assert(MergeTable.snapshot(spark, path).stats.nonEmpty)
@@ -2011,8 +2011,8 @@ class MergeTableSpec extends SparkSpec {
     assert(g.count() === 91)
     assert(g.filter($"id" === 15L).select("tag").head().getString(0) === "again")
     assert(g.filter($"id" === 10L).isEmpty)
-    // deleteWhere on a tombstone-carrying table folds first, then
-    // applies its predicate — no resurrection
+    // deleteWhere on a tombstone-carrying table folds the tombstones
+    // and applies its predicate in one version — no resurrection
     val p2 = freshPath()
     MergeTable.init(spark, p2, rows(1 to 100, "a"))
     MergeTable.deleteLite(spark, p2, Seq(1L, 2L).toDF("id"), Seq("id"))
