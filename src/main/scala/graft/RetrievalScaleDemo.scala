@@ -166,7 +166,7 @@ object RetrievalScaleDemo {
           }
       }
       val df = sources.MergeTable.read(
-          spark, operators.LexicalIndex.postingsPath(spark, path))
+          spark, sources.CompositeIndex.pinnedPath(spark, path, "postings"))
         .filter(col("term").isin(terms: _*))
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
@@ -181,7 +181,7 @@ object RetrievalScaleDemo {
       // MergeTable lays files out under versioned subdirectories —
       // count the parquet leaves recursively
       val walk = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(operators.LexicalIndex.postingsPath(spark, path)))
+        java.nio.file.Paths.get(sources.CompositeIndex.pinnedPath(spark, path, "postings")))
       val onDisk =
         try walk.filter(p => p.toString.endsWith(".parquet")).count()
         finally walk.close()

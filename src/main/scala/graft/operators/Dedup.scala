@@ -59,6 +59,37 @@ object Dedup {
       .drop("__rn" +: versionCol.toSeq: _*)
   }
 
+  /** The admission gates' batch reduction: one row per non-null id
+    * ([[deterministicOnePerKey]] — the pairwise rule (strict
+    * id_a < id_b) can never pair two rows sharing an id, so same-id
+    * duplicates would BOTH pass a gate); NULL-id rows pass through
+    * (no identity to reduce under or to pair with). */
+  private[graft] def onePerIdNullsKept(df: DataFrame, idCol: String): DataFrame =
+    deterministicOnePerKey(df.filter(col(idCol).isNotNull), idCol)
+      .unionByName(df.filter(col(idCol).isNull))
+
+  /** The rows of a one-per-id `batch` that survive the near-dup
+    * `pairs` (id_a < id_b) of an admission probe. Incumbents (ids
+    * outside the batch) never die: a batch id dies iff it is id_b of
+    * any pair (the other side is an incumbent or a smaller batch id),
+    * or id_a of a pair whose id_b is an incumbent (the batch row drew
+    * the smaller id, but the incumbent still wins) — one survivor per
+    * in-batch dup clique. EAGER: the survivors materialize before the
+    * checkpointed `pairs` are freed. */
+  private[graft] def pairSurvivors(
+      batch: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    try {
+      val batchIds = batch.select(col(idCol)).distinct()
+      val dead = pairs.select(col("id_b").as("__dead"))
+        .unionByName(
+          pairs.join(batchIds.withColumnRenamed(idCol, "id_a"), Seq("id_a"), "left_semi")
+            .join(batchIds.withColumnRenamed(idCol, "id_b"), Seq("id_b"), "left_anti")
+            .select(col("id_a").as("__dead")))
+        .distinct()
+      batch.join(dead, batch(idCol) === dead("__dead"), "left_anti")
+        .localCheckpoint(true)
+    } finally freeCheckpoint(pairs)
+
   /** Null-key rows pass through untouched (task-id dedup semantics,
     * `app/state_manager.py:41-47`: unsaved tasks are always kept). */
   def firstWinsNullsKept(df: DataFrame, key: String, order: Seq[Column]): DataFrame = {

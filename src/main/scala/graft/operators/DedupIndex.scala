@@ -43,7 +43,7 @@ import graft.sources.{CompositeIndex, MergeTable}
   *
   * CROSS-COMPONENT consistency comes from one more manifest level:
   * `path/_manifests/v<N>` pins, for each component, the DIRECTORY it
-  * lives in and the version to read it at ([[Pin]] — manifest lines
+  * lives in and the version to read it at ([[CompositeIndex.Pin]] — manifest lines
   * `bands=<dir>@<version>`). Every write ([[build]]/[[upsert]]/
   * [[compact]]) advances the components FIRST (each commit
   * individually atomic, but invisible) and publishes them with ONE
@@ -75,39 +75,18 @@ import graft.sources.{CompositeIndex, MergeTable}
   */
 object DedupIndex {
 
-  /** The composite-manifest machinery is the SHARED layer
-    * ([[CompositeIndex]] — also under [[LexicalIndex]]); this object
-    * keeps the dedup-specific surface: shingling parameters pinned in
-    * the index, retraction semantics, probes and the admission gate. */
+  /** The composite-manifest machinery and write protocol are the
+    * SHARED layer ([[CompositeIndex]]); this object keeps the
+    * dedup-specific surface: shingling parameters pinned in the index,
+    * retraction semantics, probes and the admission gate. */
   private val CI = new CompositeIndex("dedup index",
     Seq("bands", "shingles", "params"))
 
-  type Ref = CompositeIndex.Ref
-  val Ref = CompositeIndex.Ref
-
-  private def componentPath(path: String, dir: String) =
-    CI.componentPath(path, dir)
-
-  /** Absolute path of the PINNED bands component (test/diagnostic
-    * access — component dirs are build-unique, never assume a name). */
-  private[graft] def bandsPath(spark: SparkSession, path: String): String =
-    componentPath(path, pin(spark, path).bands.dir)
-  private[graft] def shinglesPath(spark: SparkSession, path: String): String =
-    componentPath(path, pin(spark, path).shingles.dir)
-
   final case class Params(shingleSize: Int, numHashes: Int, bands: Int)
 
-  /** One composite index version: the component refs that together
-    * form a consistent state. Readers resolve a pin ONCE and read
-    * every component at its pinned dir+version. */
-  final case class Pin(version: Long, bands: Ref, shingles: Ref, params: Ref)
-
-  private def toPin(p: CompositeIndex.Pin): Pin =
-    Pin(p.version, p("bands"), p("shingles"), p("params"))
-
   /** The latest committed composite version. */
-  def pin(spark: SparkSession, path: String): Pin =
-    toPin(CI.pin(spark, path))
+  def pin(spark: SparkSession, path: String): CompositeIndex.Pin =
+    CI.pin(spark, path)
 
   /** Build the index at `path` from scratch (fails if one exists —
     * CREATE INDEX semantics; use [[upsert]] for maintenance). `docs`
@@ -158,14 +137,14 @@ object DedupIndex {
         // from driver threads (guide §2.6) instead of serializing three
         // write jobs + their planning/commit gaps
         val (sv, bv, pv) = graft.util.Par.three(
-          MergeTable.init(spark, componentPath(path, dirs("shingles")), sh),
+          MergeTable.init(spark, CI.componentPath(path, dirs("shingles")), sh),
           // bucket blooms: LSH buckets are a uniform hash domain — min/max
           // stats never skip a row group for the probe's `bucket IN`
           // until [[compact]] range-sorts the files; the bloom skips from
           // the first committed version
-          MergeTable.init(spark, componentPath(path, dirs("bands")),
+          MergeTable.init(spark, CI.componentPath(path, dirs("bands")),
             Dedup.bandFrame(sh, numHashes, bands), bloomKeys = Seq("bucket")),
-          MergeTable.init(spark, componentPath(path, dirs("params")),
+          MergeTable.init(spark, CI.componentPath(path, dirs("params")),
             Seq((shingleSize, numHashes, bands))
               .toDF("shingle_size", "num_hashes", "bands")))
         Map("bands" -> bv.version, "shingles" -> sv.version,
@@ -173,7 +152,7 @@ object DedupIndex {
       }
       // CompositeIndex.build proved every pinned component EXISTS; the
       // params VALUES are this index's own integrity signal on top
-      val p = paramsAt(spark, path, toPin(committed))
+      val p = paramsAt(spark, path, committed)
       require(p == Params(shingleSize, numHashes, bands),
         s"dedup index at $path corrupted by a concurrent build (read " +
           s"back $p); builds must be serialized — rebuild the path")
@@ -196,9 +175,9 @@ object DedupIndex {
   def params(spark: SparkSession, path: String): Params =
     paramsAt(spark, path, pin(spark, path))
 
-  private def paramsAt(spark: SparkSession, path: String, p: Pin): Params = {
-    val r = MergeTable.readAt(
-        spark, componentPath(path, p.params.dir), p.params.version)
+  private def paramsAt(
+      spark: SparkSession, path: String, p: CompositeIndex.Pin): Params = {
+    val r = CI.readAt(spark, path, p, "params")
       .select(col("shingle_size"), col("num_hashes"), col("bands"))
       .head()
     Params(r.getInt(0), r.getInt(1), r.getInt(2))
@@ -223,30 +202,22 @@ object DedupIndex {
     * the crash/replay and single-writer contract. */
   def upsert(
       spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, textCol: String): Unit = {
-    val p0 = pin(spark, path)
+      idCol: String, textCol: String): Unit = CI.write(spark, path) { p0 =>
     val p = paramsAt(spark, path, p0)
     val retracted = docs.filter(col(textCol).isNull && col(idCol).isNotNull)
       .select(col(idCol)).distinct().collect().map(_.get(0)).toSeq
     val sh = shingled(docs, idCol, textCol, p.shingleSize)
-    val sPath = componentPath(path, p0.shingles.dir)
-    val bPath = componentPath(path, p0.bands.dir)
     try {
-      val retract = Option.when(retracted.nonEmpty)(col("id").isin(retracted: _*))
       val upserts = Some(sh).filterNot(_.isEmpty)
       // shingles and bands are independent components: each writes its
       // retraction and merge as one version, and the two overlap
       // (guide §2.6). A no-op batch leaves both at their pins and
       // publishes nothing.
       val (sV, bV) = graft.util.Par.both(
-        CI.writeComponent(spark, sPath, p0.shingles.version, upserts, Seq("id"), retract),
-        CI.writeComponent(spark, bPath, p0.bands.version,
-          upserts.map(Dedup.bandFrame(_, p.numHashes, p.bands)), Seq("id", "band"), retract))
-      if (sV != p0.shingles.version || bV != p0.bands.version)
-        CI.commitPin(spark, path, p0.version + 1, Map(
-          "bands" -> Ref(p0.bands.dir, bV),
-          "shingles" -> Ref(p0.shingles.dir, sV),
-          "params" -> p0.params))
+        CI.writeComponent(spark, path, p0, "shingles", upserts, Seq("id"), retracted),
+        CI.writeComponent(spark, path, p0, "bands",
+          upserts.map(Dedup.bandFrame(_, p.numHashes, p.bands)), Seq("id", "band"), retracted))
+      Map("shingles" -> sV, "bands" -> bV)
     } finally graft.util.Checkpoints.free(sh)
   }
 
@@ -257,43 +228,16 @@ object DedupIndex {
     * dead docs' signatures stop rejecting future lookalikes. Ids
     * absent from the index are no-ops; an all-absent batch publishes
     * nothing. Bounded id list — the [[upsert]] batch contract. */
-  def delete(spark: SparkSession, path: String, ids: Seq[Any]): Unit = {
-    if (ids.isEmpty) return
-    val p0 = pin(spark, path)
-    val sV = MergeTable.deleteWhere(spark,
-      componentPath(path, p0.shingles.dir), col("id").isin(ids: _*)).version
-    val bV = MergeTable.deleteWhere(spark,
-      componentPath(path, p0.bands.dir), col("id").isin(ids: _*)).version
-    if (sV != p0.shingles.version || bV != p0.bands.version)
-      CI.commitPin(spark, path, p0.version + 1, Map(
-        "bands" -> Ref(p0.bands.dir, bV),
-        "shingles" -> Ref(p0.shingles.dir, sV),
-        "params" -> p0.params))
-  }
+  def delete(spark: SparkSession, path: String, ids: Seq[Any]): Unit =
+    CI.deleteIds(spark, path, ids, Seq("shingles", "bands"))
 
   /** Range-sort the band files on `bucket` so probe scans prune
     * non-matching files from parquet footers alone — [[LexicalIndex
     * .compact]]'s locality pass for the collision table. Run after
-    * bulk loads; published with a composite commit like every write.
-    *
-    * The rewrite reads the bands component AT THE PINNED version, not
-    * component-latest: an upsert that crashed between its component
-    * merges and its composite commit leaves newer UNPUBLISHED component
-    * versions, and compacting those would publish the crashed batch's
-    * bands against the OLD pinned shingles — the exact mixed state the
-    * composite manifest exists to prevent. The compacted rewrite
-    * becomes the component's new tip, superseding the crashed commit's
-    * rows there; that is safe because unpublished rows are, by the
-    * at-least-once contract, awaiting a replay that re-merges them. */
-  def compact(spark: SparkSession, path: String, numFiles: Int): Unit = {
-    val p0 = pin(spark, path)
-    val b = MergeTable.compactTableAt(
-      spark, componentPath(path, p0.bands.dir), "bucket", numFiles,
-      Some(p0.bands.version))
-    CI.commitPin(spark, path, p0.version + 1, Map(
-      "bands" -> Ref(p0.bands.dir, b.version),
-      "shingles" -> p0.shingles, "params" -> p0.params))
-  }
+    * bulk loads; the pinned rewrite of [[CompositeIndex.compact]],
+    * published with a composite commit like every write. */
+  def compact(spark: SparkSession, path: String, numFiles: Int): Unit =
+    CI.compact(spark, path, "bands", "bucket", numFiles)
 
   /** Maintenance sweep over the whole index — [[CompositeIndex
     * .vacuum]]: pinned-version-aware component vacuums, orphan
@@ -363,8 +307,7 @@ object DedupIndex {
         // filters on cid AFTER the join, where only collision rows
         // remain.
         val buckets = graft.util.Pushdown.keyLiterals(bandsB, "bucket", idPushLimit)
-        val corpusScan0 = MergeTable.readAt(
-          spark, componentPath(path, p0.bands.dir), p0.bands.version)
+        val corpusScan0 = CI.readAt(spark, path, p0, "bands")
         val corpusScan = buckets match {
           case Some(bs) => corpusScan0.filter(col("bucket").isin(bs: _*))
           case None => corpusScan0
@@ -438,8 +381,7 @@ object DedupIndex {
           // against the broadcast collision frame — scan-time hash
           // probe, never a driver-side literal explosion.
           val cids = graft.util.Pushdown.keyLiterals(collide, "cid", idPushLimit)
-          val corpusShAll = MergeTable.readAt(
-            spark, componentPath(path, p0.shingles.dir), p0.shingles.version)
+          val corpusShAll = CI.readAt(spark, path, p0, "shingles")
           val corpusSh = cids match {
             case Some(cs) => corpusShAll.filter(col("id").isin(cs: _*))
             case None => corpusShAll.join(
@@ -505,7 +447,7 @@ object DedupIndex {
     * depend on released blocks).
     *
     * The batch is reduced to ONE row per id up front
-    * ([[Dedup.deterministicOnePerKey]]): the pairwise candidate rule
+    * ([[Dedup.onePerIdNullsKept]]): the pairwise candidate rule
     * (strict id_a < id_b) can never pair two rows sharing an id, so
     * same-id duplicates would BOTH pass the gate and then collapse
     * arbitrarily in the follow-up [[upsert]]'s keyed merge. The
@@ -517,13 +459,9 @@ object DedupIndex {
   def admit(
       spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.8,
-      maxBucketPostings: Option[Int] = None): DataFrame = {
-    val batch1 = Dedup.deterministicOnePerKey(
-        batch.filter(col(idCol).isNotNull), idCol)
-      .unionByName(batch.filter(col(idCol).isNull))
-    admitOnePerId(spark, path, batch1, idCol, textCol, threshold,
-      maxBucketPostings)
-  }
+      maxBucketPostings: Option[Int] = None): DataFrame =
+    admitOnePerId(spark, path, Dedup.onePerIdNullsKept(batch, idCol), idCol,
+      textCol, threshold, maxBucketPostings)
 
   /** [[admit]] minus the up-front one-per-id reduction, for callers
     * that have ALREADY reduced the batch (the streaming path runs
@@ -535,26 +473,9 @@ object DedupIndex {
   private[graft] def admitOnePerId(
       spark: SparkSession, path: String, batch1: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      maxBucketPostings: Option[Int]): DataFrame = {
-    val pairs = nearDupsAgainst(spark, path, batch1, idCol, textCol, threshold,
-      maxBucketPostings = maxBucketPostings)
-    try {
-      val batchIds = batch1.select(col(idCol)).distinct()
-      // pairs are normalized id_a < id_b, and corpus incumbents are
-      // never killed: batch id X dies iff it appears as id_b of any
-      // pair (the other side is a corpus doc or a smaller batch id),
-      // or as id_a of a pair whose id_b is a corpus doc (the batch doc
-      // drew the smaller id, but the incumbent still wins).
-      val dead = pairs.select(col("id_b").as("__dead"))
-        .unionByName(
-          pairs.join(batchIds.withColumnRenamed(idCol, "id_a"), Seq("id_a"), "left_semi")
-            .join(batchIds.withColumnRenamed(idCol, "id_b"), Seq("id_b"), "left_anti")
-            .select(col("id_a").as("__dead")))
-        .distinct()
-      batch1.join(dead, batch1(idCol) === dead("__dead"), "left_anti")
-        .localCheckpoint(true)
-    } finally Dedup.freeCheckpoint(pairs)
-  }
+      maxBucketPostings: Option[Int]): DataFrame =
+    Dedup.pairSurvivors(batch1, idCol, nearDupsAgainst(spark, path, batch1,
+      idCol, textCol, threshold, maxBucketPostings = maxBucketPostings))
 
   /** (id, shingles) checkpointed; NULL-text rows dropped (no content
     * to be a duplicate of) and NULL-id rows dropped (no identity to

@@ -59,23 +59,9 @@ object ImageDedupIndex {
   private val CI = new CompositeIndex("image dedup index",
     Seq("bands", "params"))
 
-  type Ref = CompositeIndex.Ref
-  val Ref = CompositeIndex.Ref
-
-  private def componentPath(path: String, dir: String) =
-    CI.componentPath(path, dir)
-
-  private[graft] def bandsPath(spark: SparkSession, path: String): String =
-    componentPath(path, pin(spark, path).bands.dir)
-
-  /** One composite index version (see [[DedupIndex.Pin]]). */
-  final case class Pin(version: Long, bands: Ref, params: Ref)
-
-  private def toPin(p: CompositeIndex.Pin): Pin =
-    Pin(p.version, p("bands"), p("params"))
-
-  def pin(spark: SparkSession, path: String): Pin =
-    toPin(CI.pin(spark, path))
+  /** The latest committed composite version. */
+  def pin(spark: SparkSession, path: String): CompositeIndex.Pin =
+    CI.pin(spark, path)
 
   def exists(spark: SparkSession, path: String): Boolean =
     CI.exists(spark, path)
@@ -84,11 +70,8 @@ object ImageDedupIndex {
     * pixel pair served here, or [[SimHashIndex]]'s text pair); 1-row
     * read. */
   def algo(spark: SparkSession, path: String): String =
-    algoAt(spark, path, pin(spark, path))
-
-  private def algoAt(spark: SparkSession, path: String, p: Pin): String =
-    MergeTable.readAt(spark, componentPath(path, p.params.dir),
-      p.params.version).select(col("algo")).head().getString(0)
+    CI.readAt(spark, path, pin(spark, path), "params")
+      .select(col("algo")).head().getString(0)
 
   /** Every kernel a band index can pin: the pixel pair served by the
     * image wrappers here, and the text pair served by
@@ -143,9 +126,9 @@ object ImageDedupIndex {
         import spark.implicits._
         // independent component writes — overlap them (guide §2.6)
         val (bv, pv) = graft.util.Par.both(
-          MergeTable.init(spark, componentPath(path, dirs("bands")),
+          MergeTable.init(spark, CI.componentPath(path, dirs("bands")),
             Dedup.hammingBands(fp), bloomKeys = Seq("bucket")),
-          MergeTable.init(spark, componentPath(path, dirs("params")),
+          MergeTable.init(spark, CI.componentPath(path, dirs("params")),
             Seq(algo).toDF("algo")))
         Map("bands" -> bv.version, "params" -> pv.version)
       }
@@ -171,9 +154,7 @@ object ImageDedupIndex {
     * One composite commit publishes; a no-op batch publishes nothing. */
   def upsert(
       spark: SparkSession, path: String, hashes: DataFrame,
-      idCol: String, fpCol: String): Unit = {
-    val p0 = pin(spark, path)
-    val bPath = componentPath(path, p0.bands.dir)
+      idCol: String, fpCol: String): Unit = CI.write(spark, path) { p0 =>
     // ONE materialization of the (id, fp) projection: the retraction
     // collect, the liveness probe and the bands merge all act on it —
     // an expensive upstream (a CDF churn diff, a hash over pixels)
@@ -184,24 +165,11 @@ object ImageDedupIndex {
       val retracted = h.filter(col("fp").isNull)
         .select(col("id")).distinct().collect().map(_.get(0)).toSeq
       val fp = h.filter(col("fp").isNotNull)
-      // chunked like every bulk id-predicate purge (the isin-literal
-      // analysis cliff — [[graft.util.Pushdown.RetractChunk]]): the
-      // last (usually only) chunk rides the merge's version
-      val chunks = retracted.grouped(RetractChunk).map(c => col("id").isin(c: _*)).toSeq
-      val v0 = chunks.dropRight(1).foldLeft(p0.bands.version)((_, c) =>
-        MergeTable.deleteWhere(spark, bPath, c).version)
-      val bV = CI.writeComponent(spark, bPath, v0,
+      Map("bands" -> CI.writeComponent(spark, path, p0, "bands",
         Some(fp).filterNot(_.isEmpty).map(Dedup.hammingBands), Seq("id", "band"),
-        chunks.lastOption)
-      if (bV != p0.bands.version)
-        CI.commitPin(spark, path, p0.version + 1, Map(
-          "bands" -> Ref(p0.bands.dir, bV), "params" -> p0.params))
+        retracted))
     } finally graft.util.Checkpoints.free(h)
   }
-
-  /** Bulk id-predicate chunk size — the shared
-    * [[graft.util.Pushdown.RetractChunk]]. */
-  private val RetractChunk = graft.util.Pushdown.RetractChunk
 
   /** [[upsert]] from raw decoded images, hashing with the PINNED
     * kernel. An image whose buffer no longer hashes (NULL payload,
@@ -228,47 +196,29 @@ object ImageDedupIndex {
     * (review catch). The tombstones fold at the next [[compact]]. */
   def deleteKeys(
       spark: SparkSession, path: String, ids: DataFrame,
-      idCol: String): Unit = {
-    val p0 = pin(spark, path)
+      idCol: String): Unit = CI.write(spark, path) { p0 =>
     val keyFrame = ids.select(col(idCol).as("id"))
       .filter(col("id").isNotNull).distinct()
       .crossJoin(spark.range(4).select(col("id").cast("int").as("band")))
-    if (keyFrame.isEmpty) return
-    val bV = MergeTable.deleteLite(spark,
-      componentPath(path, p0.bands.dir), keyFrame, Seq("id", "band")).version
-    if (bV != p0.bands.version)
-      CI.commitPin(spark, path, p0.version + 1, Map(
-        "bands" -> Ref(p0.bands.dir, bV), "params" -> p0.params))
+    if (keyFrame.isEmpty) Map.empty
+    else Map("bands" -> MergeTable.deleteLite(spark,
+      CI.componentPath(path, p0("bands").dir), keyFrame, Seq("id", "band")).version)
   }
 
   /** Remove ids outright — the purge form of the NULL-fp retraction,
-    * for callers that hold only ids. Chunked at [[RetractChunk]], so
-    * a bulk backlog degrades to more commits, never a Catalyst-
-    * breaking literal list. For id sets that are already a frame (or
-    * unbounded), prefer [[deleteKeys]]. */
-  def delete(spark: SparkSession, path: String, ids: Seq[Any]): Unit = {
-    if (ids.isEmpty) return
-    val p0 = pin(spark, path)
-    var bV = p0.bands.version
-    ids.grouped(RetractChunk).foreach { chunk =>
-      bV = MergeTable.deleteWhere(spark,
-        componentPath(path, p0.bands.dir), col("id").isin(chunk: _*)).version
-    }
-    if (bV != p0.bands.version)
-      CI.commitPin(spark, path, p0.version + 1, Map(
-        "bands" -> Ref(p0.bands.dir, bV), "params" -> p0.params))
-  }
+    * for callers that hold only ids. Chunked at
+    * [[graft.util.Pushdown.RetractChunk]] ([[CompositeIndex.deleteIds]]),
+    * so a bulk backlog degrades to more component commits under one
+    * composite version, never a Catalyst-breaking literal list. For id
+    * sets that are already a frame (or unbounded), prefer
+    * [[deleteKeys]]. */
+  def delete(spark: SparkSession, path: String, ids: Seq[Any]): Unit =
+    CI.deleteIds(spark, path, ids, Seq("bands"))
 
   /** Range-sort the band files on `bucket` — [[DedupIndex.compact]]'s
     * locality pass (probe scans then prune from footers alone). */
-  def compact(spark: SparkSession, path: String, numFiles: Int): Unit = {
-    val p0 = pin(spark, path)
-    val b = MergeTable.compactTableAt(
-      spark, componentPath(path, p0.bands.dir), "bucket", numFiles,
-      Some(p0.bands.version))
-    CI.commitPin(spark, path, p0.version + 1, Map(
-      "bands" -> Ref(p0.bands.dir, b.version), "params" -> p0.params))
-  }
+  def compact(spark: SparkSession, path: String, numFiles: Int): Unit =
+    CI.compact(spark, path, "bands", "bucket", numFiles)
 
   /** Maintenance sweep — [[CompositeIndex.vacuum]]. */
   def vacuum(
@@ -303,8 +253,7 @@ object ImageDedupIndex {
     val bandsB = Dedup.hammingBands(fpB).localCheckpoint(true)
     try {
       val buckets = graft.util.Pushdown.keyLiterals(bandsB, "bucket", idPushLimit)
-      val corpusScan0 = MergeTable.readAt(
-        spark, componentPath(path, p0.bands.dir), p0.bands.version)
+      val corpusScan0 = CI.readAt(spark, path, p0, "bands")
       val corpusScan = buckets match {
         case Some(bs) => corpusScan0.filter(col("bucket").isin(bs: _*))
         case None => corpusScan0
@@ -341,10 +290,8 @@ object ImageDedupIndex {
   def admit(
       spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, fpCol: String, maxHamming: Int = 3): DataFrame = {
-    val batch1 = Dedup.deterministicOnePerKey(
-        batch.filter(col(idCol).isNotNull), idCol)
-      .unionByName(batch.filter(col(idCol).isNull))
-    admitOnePerId(spark, path, batch1, idCol, fpCol, maxHamming)
+    admitOnePerId(spark, path, Dedup.onePerIdNullsKept(batch, idCol), idCol,
+      fpCol, maxHamming)
   }
 
   /** [[admit]] minus the one-per-id reduction, for callers that have
@@ -352,25 +299,9 @@ object ImageDedupIndex {
     * (no identity to pair with). */
   private[graft] def admitOnePerId(
       spark: SparkSession, path: String, batch1: DataFrame,
-      idCol: String, fpCol: String, maxHamming: Int): DataFrame = {
-    val pairs = nearDupsAgainst(spark, path, batch1, idCol, fpCol, maxHamming)
-    try {
-      val batchIds = batch1.select(col(idCol)).distinct()
-      // pairs are normalized id_a < id_b and incumbents never die:
-      // batch id X dies iff it is id_b of any pair, or id_a of a pair
-      // whose id_b is a corpus id (the incumbent drew the larger id)
-      val dead = pairs.select(col("id_b").as("__dead"))
-        .unionByName(
-          pairs.join(batchIds.withColumnRenamed(idCol, "id_a"),
-              Seq("id_a"), "left_semi")
-            .join(batchIds.withColumnRenamed(idCol, "id_b"),
-              Seq("id_b"), "left_anti")
-            .select(col("id_a").as("__dead")))
-        .distinct()
-      batch1.join(dead, batch1(idCol) === dead("__dead"), "left_anti")
-        .localCheckpoint(true)
-    } finally Dedup.freeCheckpoint(pairs)
-  }
+      idCol: String, fpCol: String, maxHamming: Int): DataFrame =
+    Dedup.pairSurvivors(batch1, idCol,
+      nearDupsAgainst(spark, path, batch1, idCol, fpCol, maxHamming))
 
   /** [[admit]] from raw decoded images, hashing with the pinned
     * kernel; the fp column is appended as `fpColOut` on the survivors
@@ -387,9 +318,7 @@ object ImageDedupIndex {
     val withFp = batch.withColumn(fpColOut,
       hashBy(a)(col(widthCol).cast("int"), col(heightCol).cast("int"),
         col(rgbCol)))
-    val batch1 = Dedup.deterministicOnePerKey(
-        withFp.filter(col(idCol).isNotNull), idCol)
-      .unionByName(withFp.filter(col(idCol).isNull))
-    admitOnePerId(spark, path, batch1, idCol, fpColOut, maxHamming)
+    admitOnePerId(spark, path, Dedup.onePerIdNullsKept(withFp, idCol), idCol,
+      fpColOut, maxHamming)
   }
 }

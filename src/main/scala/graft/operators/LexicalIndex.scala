@@ -64,16 +64,7 @@ object LexicalIndex {
 
   private val CI = new CompositeIndex("lexical index",
     Seq("postings", "doclens", "termdf"))
-  import CompositeIndex.Ref
 
-  /** Absolute path of the PINNED postings component (test/diagnostic
-    * access — component dirs are build-unique, never assume a name). */
-  private[graft] def postingsPath(spark: SparkSession, path: String): String =
-    CI.componentPath(path, CI.pin(spark, path)("postings").dir)
-  private[graft] def termDfPath(spark: SparkSession, path: String): String =
-    CI.componentPath(path, CI.pin(spark, path)("termdf").dir)
-  private[graft] def doclensPath(spark: SparkSession, path: String): String =
-    CI.componentPath(path, CI.pin(spark, path)("doclens").dir)
   private[graft] def pinVersion(spark: SparkSession, path: String): Long =
     CI.pin(spark, path).version
   /** The N/avgdl a query on the current pin scores with. */
@@ -191,16 +182,13 @@ object LexicalIndex {
     * converges to the same published state (at-least-once contract). */
   def upsert(
       spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, textCol: String): Unit = {
-    val p0 = CI.pin(spark, path)
-    val pPath = CI.componentPath(path, p0("postings").dir)
-    val dPath = CI.componentPath(path, p0("doclens").dir)
-    val tPath = CI.componentPath(path, p0("termdf").dir)
+      idCol: String, textCol: String): Unit = CI.write(spark, path) { p0 =>
     val (postings0, doclens, handle) = tokenize(docs, idCol, textCol)
     var postings: Option[DataFrame] = None
     try {
       val ids = doclens.select(col("id")).collect().map(_.get(0))
-      if (ids.nonEmpty) {
+      if (ids.isEmpty) Map.empty
+      else {
         // two consumers below (the df-delta aggregation and the
         // postings merge): one checkpoint pins the batch-sized
         // explode+groupBy once — taken only past the empty-batch gate,
@@ -211,7 +199,7 @@ object LexicalIndex {
         // moves by (new batch postings) - (old batch postings). The
         // old-side probe reads only (term, id) of the id-matched rows;
         // the touched term set is bounded by the batch's vocabulary.
-        val oldCounts = MergeTable.readAt(spark, pPath, p0("postings").version)
+        val oldCounts = CI.readAt(spark, path, p0, "postings")
           .filter(col("id").isin(idSeq: _*))
           .groupBy(col("term")).agg(count(lit(1)).as("__old"))
         val newCounts = postings.get.groupBy(col("term")).agg(count(lit(1)).as("__new"))
@@ -223,7 +211,7 @@ object LexicalIndex {
           .localCheckpoint(true) // read twice: the affected terms and dfUpdates
         try {
           val affected = delta.select(col("term"))
-          val current = MergeTable.readAt(spark, tPath, p0("termdf").version)
+          val current = CI.readAt(spark, path, p0, "termdf")
             .join(affected, Seq("term"), "left_semi")
           val dfUpdates = delta.join(current, Seq("term"), "left_outer")
             .select(col("term"),
@@ -235,17 +223,13 @@ object LexicalIndex {
           // longer contains would survive a bare merge (its (id, term)
           // key is absent from the update frame) and keep matching.
           val (pv, dv, tv) = graft.util.Par.three(
-            MergeTable.merge(spark, pPath, postings.get, Seq("id", "term"),
-              where = Some(col("id").isin(idSeq: _*))),
-            MergeTable.merge(spark, dPath, doclens, Seq("id")),
-            MergeTable.merge(spark, tPath, dfUpdates, Seq("term")))
-          CI.publishNext(spark, path, p0, Map(
-            "postings" -> Ref(p0("postings").dir, pv.version),
-            "doclens" -> Ref(p0("doclens").dir, dv.version),
-            "termdf" -> Ref(p0("termdf").dir, tv.version)))
+            CI.writeComponent(spark, path, p0, "postings", postings,
+              Seq("id", "term"), idSeq),
+            CI.writeComponent(spark, path, p0, "doclens", Some(doclens), Seq("id"), Nil),
+            CI.writeComponent(spark, path, p0, "termdf", Some(dfUpdates), Seq("term"), Nil))
+          Map("postings" -> pv, "doclens" -> dv, "termdf" -> tv)
         } finally graft.util.Checkpoints.free(delta)
       }
-      ()
     } finally {
       postings.foreach(graft.util.Checkpoints.free)
       graft.util.Checkpoints.free(handle)
@@ -267,82 +251,63 @@ object LexicalIndex {
     * compute from the PINNED state, every component write stays
     * unpublished until the single composite commit, and the
     * replace-by-key / delete-by-key writes are idempotent. */
-  def delete(spark: SparkSession, path: String, ids: Seq[Any]): Unit = {
-    if (ids.isEmpty) return
-    val p0 = CI.pin(spark, path)
-    val pPath = CI.componentPath(path, p0("postings").dir)
-    val dPath = CI.componentPath(path, p0("doclens").dir)
-    val tPath = CI.componentPath(path, p0("termdf").dir)
-    // the dying docs' per-term posting counts, from the PIN — read
-    // again after the deletes start, so it must not be a live view
-    val oldCounts = MergeTable.readAt(spark, pPath, p0("postings").version)
-      .filter(col("id").isin(ids: _*))
-      .groupBy(col("term")).agg(count(lit(1)).as("__old"))
-      .localCheckpoint(true)
-    try {
-      val dfNew = MergeTable.readAt(spark, tPath, p0("termdf").version)
-        .join(oldCounts, Seq("term"))
-        .select(col("term"), (col("df") - col("__old")).as("df"))
+  def delete(spark: SparkSession, path: String, ids: Seq[Any]): Unit =
+    if (ids.nonEmpty) CI.write(spark, path) { p0 =>
+      // the dying docs' per-term posting counts, from the PIN — read
+      // again after the deletes start, so it must not be a live view
+      val oldCounts = CI.readAt(spark, path, p0, "postings")
+        .filter(col("id").isin(ids: _*))
+        .groupBy(col("term")).agg(count(lit(1)).as("__old"))
         .localCheckpoint(true)
       try {
-        // three independent components (guide §2.6): the two id-purges
-        // and the dictionary write overlap; the dictionary's decrements
-        // and its dead-term deletes are one merge.
-        //
-        // Purge mechanism deliberately stays deleteWhere (the eager
-        // per-file rewrite), NOT deleteWhereLite (r17 A/B): the
-        // tombstone path's fixed machinery (discovery checkpoint +
-        // delta/tombstone probes + scope discovery per component)
-        // measured MORE jobs (40 → 64) and a slower wall at sf0.1 than
-        // the rewrite it defers, and this index's serving reads then
-        // pay the suppression anti-join until the next rewrite folds
-        // it anyway. The crossover favors tombstones only on tables
-        // orders of magnitude past the bench corpus (MergeLiteDemo:
-        // 17.7x at 40M rows) — a deployment there calls
-        // MergeTable.deleteWhereLite on the components directly (the
-        // q146-pinned path); the default keeps reads bare.
-        val (pv, dv, tv) = graft.util.Par.three(
-          MergeTable.deleteWhere(spark, pPath, col("id").isin(ids: _*)),
-          MergeTable.deleteWhere(spark, dPath, col("id").isin(ids: _*)),
-          // the dictionary only moves when some posting actually died
-          if (dfNew.isEmpty) p0("termdf").version
-          else {
-            // dead dictionary terms: bounded by the dying docs' vocabulary
-            val dead = dfNew.filter(col("df") <= 0).select(col("term"))
-              .collect().map(_.getString(0)).toSeq
-            MergeTable.merge(spark, tPath, dfNew.filter(col("df") > 0),
-              Seq("term"), where = Option.when(dead.nonEmpty)(col("term").isin(dead: _*)))
-              .version
-          })
-        // all-absent ids leave every component at its pin: publish
-        // nothing (DedupIndex.delete's no-op contract — a replayed or
-        // empty-effect purge must not grow the composite log forever)
-        if (pv.version != p0("postings").version ||
-            dv.version != p0("doclens").version ||
-            tv != p0("termdf").version)
-          CI.publishNext(spark, path, p0, Map(
-            "postings" -> Ref(p0("postings").dir, pv.version),
-            "doclens" -> Ref(p0("doclens").dir, dv.version),
-            "termdf" -> Ref(p0("termdf").dir, tv)))
-      } finally graft.util.Checkpoints.free(dfNew)
-    } finally graft.util.Checkpoints.free(oldCounts)
-  }
+        val dfNew = CI.readAt(spark, path, p0, "termdf")
+          .join(oldCounts, Seq("term"))
+          .select(col("term"), (col("df") - col("__old")).as("df"))
+          .localCheckpoint(true)
+        try {
+          // three independent components (guide §2.6): the two id-purges
+          // and the dictionary write overlap; the dictionary's decrements
+          // and its dead-term deletes are one merge.
+          //
+          // Purge mechanism deliberately stays deleteWhere (the eager
+          // per-file rewrite), NOT deleteWhereLite (r17 A/B): the
+          // tombstone path's fixed machinery (discovery checkpoint +
+          // delta/tombstone probes + scope discovery per component)
+          // measured MORE jobs (40 → 64) and a slower wall at sf0.1 than
+          // the rewrite it defers, and this index's serving reads then
+          // pay the suppression anti-join until the next rewrite folds
+          // it anyway. The crossover favors tombstones only on tables
+          // orders of magnitude past the bench corpus (MergeLiteDemo:
+          // 17.7x at 40M rows) — a deployment there calls
+          // MergeTable.deleteWhereLite on the components directly (the
+          // q146-pinned path); the default keeps reads bare.
+          val (pv, dv, tv) = graft.util.Par.three(
+            CI.writeComponent(spark, path, p0, "postings", None, Nil, ids),
+            CI.writeComponent(spark, path, p0, "doclens", None, Nil, ids),
+            // the dictionary only moves when some posting actually died
+            if (dfNew.isEmpty) p0("termdf").version
+            else {
+              // dead dictionary terms: bounded by the dying docs' vocabulary
+              val dead = dfNew.filter(col("df") <= 0).select(col("term"))
+                .collect().map(_.getString(0)).toSeq
+              CI.writeComponent(spark, path, p0, "termdf",
+                Some(dfNew.filter(col("df") > 0)), Seq("term"), dead, retractCol = "term")
+            })
+          // all-absent ids leave every component at its pin, and the
+          // write publishes nothing
+          Map("postings" -> pv, "doclens" -> dv, "termdf" -> tv)
+        } finally graft.util.Checkpoints.free(dfNew)
+      } finally graft.util.Checkpoints.free(oldCounts)
+    }
 
   /** Range-sort the postings files on `term` so query-term scans prune
     * non-matching files from the parquet footers alone — the analog of
     * posting-list locality in a classical inverted index. Run after
-    * bulk loads. Rewrites the PINNED postings snapshot (a crashed
-    * upsert's unpublished component commits must not ride in — the
-    * [[DedupIndex.compact]] reasoning) and publishes with one
-    * composite commit. */
-  def compact(spark: SparkSession, path: String, numFiles: Int): Unit = {
-    val p0 = CI.pin(spark, path)
-    val pv = MergeTable.compactTableAt(
-      spark, CI.componentPath(path, p0("postings").dir), "term", numFiles,
-      Some(p0("postings").version))
-    CI.publishNext(spark, path, p0,
-      Map("postings" -> Ref(p0("postings").dir, pv.version)))
-  }
+    * bulk loads. Rewrites the PINNED postings snapshot
+    * ([[CompositeIndex.compact]]) and publishes with one composite
+    * commit. */
+  def compact(spark: SparkSession, path: String, numFiles: Int): Unit =
+    CI.compact(spark, path, "postings", "term", numFiles)
 
   /** [[Lexical.bm25TopK]] served from the index. */
   def bm25TopK(
@@ -509,7 +474,8 @@ object LexicalIndex {
 
   private[graft] def statsMemoSize: Int = statsMemo.synchronized(statsMemo.size())
 
-  private def statsKey(spark: SparkSession, path: String, ref: Ref): (String, Long) = {
+  private def statsKey(
+      spark: SparkSession, path: String, ref: CompositeIndex.Ref): (String, Long) = {
     val dir = new org.apache.hadoop.fs.Path(CI.componentPath(path, ref.dir))
     (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir).toString,
       ref.version)

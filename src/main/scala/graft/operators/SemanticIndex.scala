@@ -50,27 +50,13 @@ object SemanticIndex {
   private val CI = new CompositeIndex("semantic index",
     Seq("vectors", "centroids"))
 
-  type Ref = CompositeIndex.Ref
-  val Ref = CompositeIndex.Ref
-
-  private def componentPath(path: String, dir: String) =
-    CI.componentPath(path, dir)
-
-  /** One composite index version — readers resolve a pin ONCE and read
-    * every component at its pinned dir+version. */
-  final case class Pin(version: Long, vectors: Ref, centroids: Ref)
-
-  private def toPin(p: CompositeIndex.Pin): Pin =
-    Pin(p.version, p("vectors"), p("centroids"))
-
-  def pin(spark: SparkSession, path: String): Pin =
-    toPin(CI.pin(spark, path))
+  /** The latest committed composite version — readers resolve a pin
+    * ONCE and read every component at its pinned dir+version. */
+  def pin(spark: SparkSession, path: String): CompositeIndex.Pin =
+    CI.pin(spark, path)
 
   def exists(spark: SparkSession, path: String): Boolean =
     CI.exists(spark, path)
-
-  private[graft] def vectorsPath(spark: SparkSession, path: String): String =
-    componentPath(path, pin(spark, path).vectors.dir)
 
   /** Build the index from scratch with a CALLER-PROVIDED coarse
     * quantizer (`cents`: (cluster, centroid) — any discrete clustering
@@ -95,17 +81,13 @@ object SemanticIndex {
       val committed = CI.build(spark, path) { dirs =>
         // independent component writes — overlap them (guide §2.6)
         val (vv, cv) = graft.util.Par.both(
-          MergeTable.init(
-            spark, componentPath(path, dirs("vectors")), assigned),
-          MergeTable.init(
-            spark, componentPath(path, dirs("centroids")), centsN))
+          MergeTable.init(spark, CI.componentPath(path, dirs("vectors")), assigned),
+          MergeTable.init(spark, CI.componentPath(path, dirs("centroids")), centsN))
         Map("vectors" -> vv.version, "centroids" -> cv.version)
       }
       // CompositeIndex.build proved the pinned components exist; the
       // quantizer cardinality is this index's own integrity signal
-      val p = toPin(committed)
-      val readBack = MergeTable.readAt(
-        spark, componentPath(path, p.centroids.dir), p.centroids.version).count()
+      val readBack = CI.readAt(spark, path, committed, "centroids").count()
       require(readBack == nCents,
         s"semantic index at $path corrupted by a concurrent build " +
           s"(centroids $readBack != $nCents); builds must be serialized")
@@ -125,11 +107,8 @@ object SemanticIndex {
       SimilaritySearch.kmeansCentroids(docs, idCol, vecCol, k, iters))
 
   /** The pinned quantizer (k-row read). */
-  def centroids(spark: SparkSession, path: String): DataFrame = {
-    val p = pin(spark, path)
-    MergeTable.readAt(
-      spark, componentPath(path, p.centroids.dir), p.centroids.version)
-  }
+  def centroids(spark: SparkSession, path: String): DataFrame =
+    CI.readAt(spark, path, pin(spark, path), "centroids")
 
   /** Incrementally admit a vector batch: each id's row is merged by
     * key (replaced or inserted, touched parquet files only), assigned
@@ -143,49 +122,27 @@ object SemanticIndex {
     * batch publishes nothing. */
   def upsert(
       spark: SparkSession, path: String, batch: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val p0 = pin(spark, path)
+      idCol: String, vecCol: String): Unit = CI.write(spark, path) { p0 =>
     val retracted = batch
       .filter(col(vecCol).isNull && col(idCol).isNotNull)
       .select(col(idCol)).distinct().collect().map(_.get(0)).toSeq
-    val cents = centroidsAt(spark, path, p0)
-    val assigned = assignedFrame(batch, idCol, vecCol, cents)
-    val vV = CI.writeComponent(spark, componentPath(path, p0.vectors.dir),
-      p0.vectors.version, Some(assigned).filterNot(_.isEmpty), Seq("id"),
-      Option.when(retracted.nonEmpty)(col("id").isin(retracted: _*)))
-    if (vV != p0.vectors.version)
-      CI.commitPin(spark, path, p0.version + 1, Map(
-        "vectors" -> Ref(p0.vectors.dir, vV),
-        "centroids" -> p0.centroids))
+    val assigned = assignedFrame(batch, idCol, vecCol,
+      CI.readAt(spark, path, p0, "centroids"))
+    Map("vectors" -> CI.writeComponent(spark, path, p0, "vectors",
+      Some(assigned).filterNot(_.isEmpty), Seq("id"), retracted))
   }
 
   /** Remove ids outright — [[upsert]]'s retraction for callers that
     * hold only ids. Absent ids are no-ops; an all-absent batch
     * publishes nothing. Bounded id list (batch contract). */
-  def delete(spark: SparkSession, path: String, ids: Seq[Any]): Unit = {
-    if (ids.isEmpty) return
-    val p0 = pin(spark, path)
-    val vV = MergeTable.deleteWhere(spark,
-      componentPath(path, p0.vectors.dir), col("id").isin(ids: _*)).version
-    if (vV != p0.vectors.version)
-      CI.commitPin(spark, path, p0.version + 1, Map(
-        "vectors" -> Ref(p0.vectors.dir, vV),
-        "centroids" -> p0.centroids))
-  }
+  def delete(spark: SparkSession, path: String, ids: Seq[Any]): Unit =
+    CI.deleteIds(spark, path, ids, Seq("vectors"))
 
   /** Range-sort the vectors component on `cluster` so probe scans
-    * prune non-matching files from parquet footers alone. Reads AT the
-    * pinned version (never component-latest — the [[DedupIndex
-    * .compact]] crashed-upsert rationale). */
-  def compact(spark: SparkSession, path: String, numFiles: Int): Unit = {
-    val p0 = pin(spark, path)
-    val v = MergeTable.compactTableAt(
-      spark, componentPath(path, p0.vectors.dir), "cluster", numFiles,
-      Some(p0.vectors.version))
-    CI.commitPin(spark, path, p0.version + 1, Map(
-      "vectors" -> Ref(p0.vectors.dir, v.version),
-      "centroids" -> p0.centroids))
-  }
+    * prune non-matching files from parquet footers alone — the pinned
+    * rewrite of [[CompositeIndex.compact]]. */
+  def compact(spark: SparkSession, path: String, numFiles: Int): Unit =
+    CI.compact(spark, path, "vectors", "cluster", numFiles)
 
   /** Maintenance sweep — [[CompositeIndex.vacuum]]. */
   def vacuum(
@@ -229,7 +186,7 @@ object SemanticIndex {
     requireProbeArgs(tau, maxClusterPostings)
     val p0 = pin(spark, path)
     val assignedB = assignedFrame(
-        batch, idCol, vecCol, centroidsAt(spark, path, p0))
+        batch, idCol, vecCol, CI.readAt(spark, path, p0, "centroids"))
       .localCheckpoint(true)
     try probePinned(spark, path, p0, batch, idCol, assignedB, tau,
       includeBatchPairs, idPushLimit, maxClusterPostings)
@@ -251,13 +208,12 @@ object SemanticIndex {
     * assignment pass (it needs the centroid_sim ranks the probe
     * already computed). */
   private def probePinned(
-      spark: SparkSession, path: String, p0: Pin, batch: DataFrame,
+      spark: SparkSession, path: String, p0: CompositeIndex.Pin, batch: DataFrame,
       idCol: String, assignedB: DataFrame, tau: Double,
       includeBatchPairs: Boolean, idPushLimit: Int,
       maxClusterPostings: Option[Int]): DataFrame = {
     val clusters = graft.util.Pushdown.keyLiterals(assignedB, "cluster", idPushLimit)
-      val corpusScan0 = MergeTable.readAt(
-        spark, componentPath(path, p0.vectors.dir), p0.vectors.version)
+      val corpusScan0 = CI.readAt(spark, path, p0, "vectors")
       val corpusScan = clusters match {
         case Some(cs) => corpusScan0.filter(col("cluster").isin(cs: _*))
         case None => corpusScan0.join(
@@ -335,10 +291,7 @@ object SemanticIndex {
       spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, vecCol: String, tau: Double,
       maxClusterPostings: Option[Int] = None): DataFrame = {
-    val batch1 = Dedup.deterministicOnePerKey(
-        batch.filter(col(idCol).isNotNull), idCol)
-      .unionByName(batch.filter(col(idCol).isNull))
-      .localCheckpoint(true)
+    val batch1 = Dedup.onePerIdNullsKept(batch, idCol).localCheckpoint(true)
     try admitOnePerId(spark, path, batch1, idCol, vecCol, tau,
       maxClusterPostings)
     finally Dedup.freeCheckpoint(batch1)
@@ -357,7 +310,7 @@ object SemanticIndex {
     // ONE pin and ONE assignment pass for the probe AND the ranks
     val p0 = pin(spark, path)
     val assignedB = assignedFrame(
-        batch1, idCol, vecCol, centroidsAt(spark, path, p0))
+        batch1, idCol, vecCol, CI.readAt(spark, path, p0, "centroids"))
       .localCheckpoint(true)
     try {
       val pairs = probePinned(spark, path, p0, batch1, idCol, assignedB,
@@ -395,11 +348,6 @@ object SemanticIndex {
       } finally Dedup.freeCheckpoint(pairs)
     } finally Dedup.freeCheckpoint(assignedB)
   }
-
-  private def centroidsAt(
-      spark: SparkSession, path: String, p: Pin): DataFrame =
-    MergeTable.readAt(
-      spark, componentPath(path, p.centroids.dir), p.centroids.version)
 
   /** (id, vec, cluster, centroid_sim) for the index/probe side:
     * NULL-id rows dropped (no identity — a MergeTable key may not be

@@ -1,12 +1,17 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Cross-component consistency for multi-table serving indexes — the
-  * manifest level ABOVE [[MergeTable]], shared by
-  * [[graft.operators.DedupIndex]] (bands/shingles/params) and
-  * [[graft.operators.LexicalIndex]] (postings/doclens/termdf).
+  * manifest level ABOVE [[MergeTable]], and the one write protocol of
+  * every persisted index family: [[graft.operators.LexicalIndex]]
+  * (postings/doclens/termdf), [[graft.operators.DedupIndex]]
+  * (bands/shingles/params), [[graft.operators.SemanticIndex]]
+  * (vectors/centroids), [[graft.operators.ImageDedupIndex]]
+  * (bands/params) and [[graft.operators.SimHashIndex]] (the image
+  * layout, text kernels).
   *
   * A serving index made of several MergeTables has each component
   * commit atomically but nothing tying the components together: a
@@ -16,9 +21,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * statistics. This layer adds `path/_manifests/v<N>`, each version
   * one line per component `name=<dir>@<version>` ([[CompositeIndex.Ref]]):
   * writers advance components FIRST (individually atomic, invisible)
-  * and publish them with ONE composite commit; readers resolve the
-  * latest composite ONCE ([[pin]]) and read every component at its
-  * pinned dir+version. Index-level writers must be serialized (one
+  * and publish them with ONE composite commit ([[write]]); readers
+  * resolve the latest composite ONCE ([[pin]]) and read every component
+  * at its pinned dir+version. Index-level writers must be serialized (one
   * maintenance stream per index); a second concurrent writer loses the
   * composite commit race LOUDLY ([[MergeTable.CommitConflict]]), never
   * silently. A writer crash between component commits and the
@@ -61,6 +66,33 @@ object CompositeIndex {
       case Array(ver) => Ref(k, ver.toLong)
     })
   }
+
+  private def manifestDir(spark: SparkSession, path: String) = {
+    val dir = new Path(path, "_manifests")
+    (dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
+  }
+
+  /** The latest committed composite version, via
+    * [[Manifests.latestLines]]'s swept-tip retry (the pin-log retention
+    * in [[CompositeIndex.vacuum]] can reclaim a just-superseded pin
+    * between a reader's resolve and read). The retry covers the pin
+    * manifest only; the pinned component reads carry the
+    * component-level retention contract. */
+  private def latest(spark: SparkSession, path: String, label: String): Pin = {
+    val (fs, dir) = manifestDir(spark, path)
+    val (v, lines) = Manifests.latestLines(fs, dir)(
+      throw new IllegalArgumentException(s"no $label at $path"))
+    Pin(v, lines.map(parseRef).toMap)
+  }
+
+  /** Absolute path of component `name` of the index at `path`, at its
+    * current pin (test and diagnostic access — component dirs are
+    * build-unique, never assume a name). */
+  private[graft] def pinnedPath(spark: SparkSession, path: String, name: String): String = {
+    val p = latest(spark, path, "composite index")
+    require(p.refs.contains(name), s"composite index at $path has no component $name")
+    s"$path/${p(name).dir}"
+  }
 }
 
 /** The composite-manifest operations for one index layout. `label` is
@@ -75,30 +107,18 @@ final class CompositeIndex(label: String, componentNames: Seq[String]) {
 
   def componentPath(path: String, dir: String): String = s"$path/$dir"
 
-  private def manifestDir(spark: SparkSession, path: String) = {
-    val dir = new Path(path, "_manifests")
-    (dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
-  }
-
   def exists(spark: SparkSession, path: String): Boolean = {
     val (fs, dir) = manifestDir(spark, path)
     Manifests.latestVersion(fs, dir).isDefined
   }
 
-  /** The latest committed composite version, via
-    * [[Manifests.latestLines]]'s swept-tip retry (the pin-log retention
-    * in [[vacuum]] can reclaim a just-superseded pin between a reader's
-    * resolve and read). The retry covers the pin manifest only; the
-    * pinned component reads carry the component-level retention
-    * contract. */
+  /** The latest committed composite version, every component of the
+    * layout present. */
   def pin(spark: SparkSession, path: String): Pin = {
-    val (fs, dir) = manifestDir(spark, path)
-    val (v, lines) = Manifests.latestLines(fs, dir)(
-      throw new IllegalArgumentException(s"no $label at $path"))
-    val m = lines.map(parseRef).toMap
-    componentNames.foreach(n => require(m.contains(n),
-      s"$label at $path: composite v$v is missing component $n"))
-    Pin(v, m)
+    val p = latest(spark, path, label)
+    componentNames.foreach(n => require(p.refs.contains(n),
+      s"$label at $path: composite v${p.version} is missing component $n"))
+    p
   }
 
   /** Read one component at its pinned dir+version. */
@@ -108,7 +128,7 @@ final class CompositeIndex(label: String, componentNames: Seq[String]) {
   /** The ONE commit that publishes a new index state. Exclusive-create
     * (the [[Manifests]] OCC primitive); losing the race means a second
     * index-level writer, which the contract forbids — fail loudly. */
-  def commitPin(
+  private def commitPin(
       spark: SparkSession, path: String, version: Long,
       refs: Map[String, Ref]): Unit = {
     require(refs.keySet == componentNames.toSet,
@@ -125,29 +145,73 @@ final class CompositeIndex(label: String, componentNames: Seq[String]) {
     }
   }
 
-  /** One component's share of an incremental batch, committed as ONE
-    * component version: merge `updates` by `keyCols` after dropping the
-    * rows `retract` matches ([[MergeTable.merge]]'s predicate side), or,
-    * with no updates, delete those rows alone. Returns the component
-    * version to publish — `v0`, nothing committed, when the batch has
+  /** The one index-level write: resolve the pin ONCE, run the family's
+    * component writes against it (`components` returns the version
+    * each written component reached), and publish the successor pin
+    * only when some component version moved — untouched components
+    * carry over, and a write that moved nothing publishes nothing (a
+    * replayed or empty-effect batch must not grow the composite log). */
+  def write(spark: SparkSession, path: String)(
+      components: Pin => Map[String, Long]): Unit = {
+    val p0 = pin(spark, path)
+    val versions = components(p0)
+    require(versions.keySet.subsetOf(componentNames.toSet),
+      s"unknown components ${versions.keySet -- componentNames}")
+    val moved = versions.collect {
+      case (n, v) if v != p0(n).version => n -> Ref(p0(n).dir, v)
+    }
+    if (moved.nonEmpty) commitPin(spark, path, p0.version + 1, p0.refs ++ moved)
+  }
+
+  /** One component's share of an incremental batch: drop the rows whose
+    * `retractCol` is in `retract`, then merge `updates` by `keyCols`.
+    * The retraction is split at [[graft.util.Pushdown.RetractChunk]]
+    * literals (past a few thousand, an isin list costs more in analysis
+    * than it prunes): every chunk but the last is a predicate delete of
+    * its own, and the last (usually only) one rides the merge's version
+    * ([[MergeTable.merge]]'s predicate side) — or is a delete alone
+    * when there are no updates. Returns the component version to
+    * publish — the pinned one, nothing committed, when the batch has
     * neither side. */
   def writeComponent(
-      spark: SparkSession, path: String, v0: Long, updates: Option[DataFrame],
-      keyCols: Seq[String], retract: Option[Column]): Long =
+      spark: SparkSession, path: String, p: Pin, name: String,
+      updates: Option[DataFrame], keyCols: Seq[String],
+      retract: Seq[Any], retractCol: String = "id"): Long = {
+    val cPath = componentPath(path, p(name).dir)
+    val chunks = retract.grouped(graft.util.Pushdown.RetractChunk)
+      .map(c => col(retractCol).isin(c: _*)).toSeq
+    val v0 = chunks.dropRight(1).foldLeft(p(name).version)((_, c) =>
+      MergeTable.deleteWhere(spark, cPath, c).version)
     updates match {
-      case Some(u) => MergeTable.merge(spark, path, u, keyCols, where = retract).version
-      case None => retract.fold(v0)(MergeTable.deleteWhere(spark, path, _).version)
+      case Some(u) => MergeTable.merge(spark, cPath, u, keyCols, where = chunks.lastOption).version
+      case None => chunks.lastOption.fold(v0)(MergeTable.deleteWhere(spark, cPath, _).version)
     }
-
-  /** Publish the successor of `p0` with `updated` components replacing
-    * their pinned refs (untouched components carry over). */
-  def publishNext(
-      spark: SparkSession, path: String, p0: Pin,
-      updated: Map[String, Ref]): Unit = {
-    require(updated.keySet.subsetOf(componentNames.toSet),
-      s"unknown components ${updated.keySet -- componentNames}")
-    commitPin(spark, path, p0.version + 1, p0.refs ++ updated)
   }
+
+  /** Remove `ids` from the named id-keyed components, in order, under
+    * ONE composite version. Ids absent from the index are no-ops; an
+    * all-absent batch publishes nothing. */
+  def deleteIds(spark: SparkSession, path: String, ids: Seq[Any],
+      components: Seq[String]): Unit =
+    if (ids.nonEmpty) write(spark, path)(p => components.map(n =>
+      n -> writeComponent(spark, path, p, n, None, Nil, ids)).toMap)
+
+  /** Range-sort component `name` on `sortCol` into `numFiles` files so
+    * probes prune files from parquet footers alone, published with one
+    * composite commit. The rewrite reads the component AT THE PINNED
+    * version, not component-latest: an upsert that crashed between its
+    * component writes and its composite commit leaves newer UNPUBLISHED
+    * component versions, and compacting those would publish the crashed
+    * batch's rows against the other components' OLD pinned state — the
+    * exact mixed state the composite manifest exists to prevent. The
+    * compacted rewrite becomes the component's new tip, superseding the
+    * crashed commit's rows there; that is safe because unpublished rows
+    * are, by the at-least-once contract, awaiting a replay that
+    * re-merges them. */
+  def compact(spark: SparkSession, path: String, name: String,
+      sortCol: String, numFiles: Int): Unit =
+    write(spark, path)(p => Map(name -> MergeTable.compactTableAt(spark,
+      componentPath(path, p(name).dir), sortCol, numFiles, Some(p(name).version)).version))
 
   /** The CHEAP preconditions of [[build]] — no index published, no
     * refused legacy layout — exposed so an index can fail fast BEFORE

@@ -121,11 +121,8 @@ object IndexMaintenance {
       semanticPath: Option[String] = None,
       semanticTau: Option[Double] = None,
       admitMaxClusterPostings: Option[Int] = None): StreamingQuery = {
-    require(admitThreshold.isEmpty || dedupPath.nonEmpty,
-      "admitThreshold needs dedupPath: admission probes the persisted dedup index")
-    require(admitMaxBucketPostings.isEmpty || admitThreshold.nonEmpty,
-      "admitMaxBucketPostings only applies to the admission probe (set admitThreshold)")
-    requireSemanticArgs(semanticPath, semanticTau, admitMaxClusterPostings)
+    requireGateArgs(dedupPath, admitThreshold, admitMaxBucketPostings,
+      semanticPath, semanticTau, admitMaxClusterPostings)
     // fail at start(), not inside the first micro-batch (the JSONL
     // variant's discipline): a missing versionCol would otherwise kill
     // the running stream from within foreachBatch — and NORMALIZE
@@ -259,11 +256,8 @@ object IndexMaintenance {
       semanticPath: Option[String] = None,
       semanticTau: Option[Double] = None,
       admitMaxClusterPostings: Option[Int] = None): StreamingQuery = {
-    require(admitThreshold.isEmpty || dedupPath.nonEmpty,
-      "admitThreshold needs dedupPath: admission probes the persisted dedup index")
-    require(admitMaxBucketPostings.isEmpty || admitThreshold.nonEmpty,
-      "admitMaxBucketPostings only applies to the admission probe (set admitThreshold)")
-    requireSemanticArgs(semanticPath, semanticTau, admitMaxClusterPostings)
+    requireGateArgs(dedupPath, admitThreshold, admitMaxBucketPostings,
+      semanticPath, semanticTau, admitMaxClusterPostings)
     // fail at start(), not inside the first micro-batch: a missing
     // versionCol would otherwise kill the running stream from within
     // foreachBatch, surfaced only via query.exception. Validated here
@@ -535,37 +529,51 @@ object IndexMaintenance {
     import graft.operators.ImageDedupIndex
     require(ImageDedupIndex.exists(spark, indexPath),
       s"no image dedup index at $indexPath — build it first")
-    require(sinceVersion >= 0, "sinceVersion must be >= 0 (0 bootstraps)")
     val MT = graft.sources.MergeTable
-    val tip = MT.snapshot(spark, storePath).version
-    if (tip == sinceVersion) return tip
-    require(tip > sinceVersion,
-      s"cursor v$sinceVersion is ahead of the store tip v$tip at " +
-        s"$storePath — the cursor belongs to another table or lineage")
-    if (sinceVersion == 0L) {
-      ImageDedupIndex.upsertImages(spark, indexPath,
-        MT.read(spark, storePath), idCol, widthCol, heightCol, rgbCol)
-      // a RE-bootstrap (cursor lost/reset after prior syncs) must also
-      // purge index ids the store no longer holds — otherwise keys
-      // deleted in pre-reset windows survive as ghost incumbents and
-      // reject lookalikes of content that exists nowhere (review
-      // catch, the applyImageBatch ghost rule). Frame-sized anti-join,
-      // keyed purge: no driver materialization.
-      val ghosts = MT.read(spark,
-          ImageDedupIndex.bandsPath(spark, indexPath))
-        .select(col("id")).distinct()
-        .join(MT.read(spark, storePath).select(col(idCol).as("id"))
-          .distinct(), Seq("id"), "left_anti")
-      ImageDedupIndex.deleteKeys(spark, indexPath, ghosts, "id")
-    } else {
-      val changed = MT.changesBetween(
-        spark, storePath, sinceVersion, tip, Seq(idCol))
-      if (!changed.isEmpty)
-        ImageDedupIndex.upsertImages(spark, indexPath, changed,
-          idCol, widthCol, heightCol, rgbCol)
-      ImageDedupIndex.deleteKeys(spark, indexPath,
-        MT.deletesBetween(spark, storePath, sinceVersion, tip, Seq(idCol)),
-        idCol)
+    catchUp(spark, storePath, "store", sinceVersion) { tip =>
+      if (sinceVersion == 0L) {
+        ImageDedupIndex.upsertImages(spark, indexPath,
+          MT.read(spark, storePath), idCol, widthCol, heightCol, rgbCol)
+        // a RE-bootstrap (cursor lost/reset after prior syncs) must also
+        // purge index ids the store no longer holds — otherwise keys
+        // deleted in pre-reset windows survive as ghost incumbents and
+        // reject lookalikes of content that exists nowhere (review
+        // catch, the applyImageBatch ghost rule). Frame-sized anti-join,
+        // keyed purge: no driver materialization.
+        val ghosts = MT.read(spark,
+            graft.sources.CompositeIndex.pinnedPath(spark, indexPath, "bands"))
+          .select(col("id")).distinct()
+          .join(MT.read(spark, storePath).select(col(idCol).as("id"))
+            .distinct(), Seq("id"), "left_anti")
+        ImageDedupIndex.deleteKeys(spark, indexPath, ghosts, "id")
+      } else {
+        val changed = MT.changesBetween(
+          spark, storePath, sinceVersion, tip, Seq(idCol))
+        if (!changed.isEmpty)
+          ImageDedupIndex.upsertImages(spark, indexPath, changed,
+            idCol, widthCol, heightCol, rgbCol)
+        ImageDedupIndex.deleteKeys(spark, indexPath,
+          MT.deletesBetween(spark, storePath, sinceVersion, tip, Seq(idCol)),
+          idCol)
+      }
+    }
+  }
+
+  /** A sync cursor's checks, then `apply` the `(sinceVersion, tip]`
+    * window of the table at `path` (`what` names it in messages):
+    * `sinceVersion` must be >= 0 (0 bootstraps), a cursor at the tip
+    * applies nothing, and a cursor past the tip is refused. Returns the
+    * tip — the next cursor. */
+  private def catchUp(
+      spark: org.apache.spark.sql.SparkSession, path: String, what: String,
+      sinceVersion: Long)(apply: Long => Unit): Long = {
+    require(sinceVersion >= 0, "sinceVersion must be >= 0 (0 bootstraps)")
+    val tip = graft.sources.MergeTable.snapshot(spark, path).version
+    if (tip != sinceVersion) {
+      require(tip > sinceVersion,
+        s"cursor v$sinceVersion is ahead of the $what tip v$tip at " +
+          s"$path — the cursor belongs to another table or lineage")
+      apply(tip)
     }
     tip
   }
@@ -597,32 +605,27 @@ object IndexMaintenance {
       dedupPath: Option[String] = None,
       semanticPath: Option[String] = None): Long = {
     val spark = session.spark
-    require(sinceVersion >= 0, "sinceVersion must be >= 0 (0 bootstraps)")
-    val tip = graft.sources.MergeTable.snapshot(spark, tablePath).version
-    if (tip == sinceVersion) return tip
-    require(tip > sinceVersion,
-      s"cursor v$sinceVersion is ahead of the table tip v$tip at " +
-        s"$tablePath — the cursor belongs to another table or lineage")
-    val batch =
-      if (sinceVersion == 0L) graft.sources.MergeTable.read(spark, tablePath)
-      else {
-        val changed = graft.sources.MergeTable.changesBetween(
-          spark, tablePath, sinceVersion, tip, Seq(idCol))
-        val deleted = graft.sources.MergeTable.deletesBetween(
-          spark, tablePath, sinceVersion, tip, Seq(idCol))
-        // deleted keys become retraction rows: every non-key column
-        // NULL (typed from the feed's schema), content included
-        val retract = changed.columns.foldLeft(deleted)((df, c) =>
-          if (c == idCol) df
-          else df.withColumn(c, lit(null).cast(changed.schema(c).dataType)))
-          .select(changed.columns.map(col).toSeq: _*)
-        changed.unionByName(retract)
-      }
-    applyBatch(session, batch, versionCol = None,
-      lexicalPath = lexicalPath, dedupPath = dedupPath,
-      idCol = idCol, contentCol = contentCol, vecCol = vecCol,
-      semanticPath = semanticPath)
-    tip
+    catchUp(spark, tablePath, "table", sinceVersion) { tip =>
+      val batch =
+        if (sinceVersion == 0L) graft.sources.MergeTable.read(spark, tablePath)
+        else {
+          val changed = graft.sources.MergeTable.changesBetween(
+            spark, tablePath, sinceVersion, tip, Seq(idCol))
+          val deleted = graft.sources.MergeTable.deletesBetween(
+            spark, tablePath, sinceVersion, tip, Seq(idCol))
+          // deleted keys become retraction rows: every non-key column
+          // NULL (typed from the feed's schema), content included
+          val retract = changed.columns.foldLeft(deleted)((df, c) =>
+            if (c == idCol) df
+            else df.withColumn(c, lit(null).cast(changed.schema(c).dataType)))
+            .select(changed.columns.map(col).toSeq: _*)
+          changed.unionByName(retract)
+        }
+      applyBatch(session, batch, versionCol = None,
+        lexicalPath = lexicalPath, dedupPath = dedupPath,
+        idCol = idCol, contentCol = contentCol, vecCol = vecCol,
+        semanticPath = semanticPath)
+    }
   }
 
   private[graft] def applyBatch(
@@ -789,9 +792,17 @@ object IndexMaintenance {
       }
   }
 
-  private def requireSemanticArgs(
+  /** The admission-gate arguments every stream runner checks at
+    * start(): each gate needs its index, each guard its gate. */
+  private def requireGateArgs(
+      dedupPath: Option[String], admitThreshold: Option[Double],
+      admitMaxBucketPostings: Option[Int],
       semanticPath: Option[String], semanticTau: Option[Double],
       admitMaxClusterPostings: Option[Int]): Unit = {
+    require(admitThreshold.isEmpty || dedupPath.nonEmpty,
+      "admitThreshold needs dedupPath: admission probes the persisted dedup index")
+    require(admitMaxBucketPostings.isEmpty || admitThreshold.nonEmpty,
+      "admitMaxBucketPostings only applies to the admission probe (set admitThreshold)")
     require(semanticTau.isEmpty || semanticPath.nonEmpty,
       "semanticTau needs semanticPath: the embedding gate probes the " +
         "persisted semantic index")

@@ -4,6 +4,8 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.Try
 
+import org.apache.spark.sql.SparkSession
+
 /** Run INDEPENDENT Spark actions from driver threads so the scheduler
   * overlaps their jobs (optimization guide §2.6): actions are only
   * sequential because driver code calls them sequentially. Two
@@ -33,6 +35,14 @@ import scala.util.Try
   * deadlock once every pool thread did so — a `three` inside a `three`
   * fills the pool with waiters. The outer call already overlaps the
   * jobs; the inner one keeps the same join-all-then-rethrow contract.
+  *
+  * Job properties: a branch on the pool runs under the CALLER's job
+  * group, description, interrupt flag and job tags, and the pool
+  * thread gets its own values back afterwards. Spark keeps these per
+  * thread, and a pool thread would otherwise carry whatever the thread
+  * that caused its creation held — a job group set by the caller
+  * (cancellation, job accounting) would silently miss every job a
+  * branch launches.
   */
 object Par {
   // DEDICATED bounded pool, not ExecutionContext.global: every branch
@@ -63,12 +73,35 @@ object Par {
   private implicit val ec: ExecutionContext =
     ExecutionContext.fromExecutorService(pool)
 
+  /** The Spark local properties a branch inherits from its caller. */
+  private val JobProperties = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags")
+
+  /** `f` on a pool thread under the job properties `caller` held on
+    * the calling thread; the pool thread's own values are restored
+    * after. */
+  private def underCaller(
+      sc: Option[org.apache.spark.SparkContext], caller: Seq[String])(f: () => Any): Any =
+    sc.fold(f()) { c =>
+      def set(values: Seq[String]): Unit =
+        JobProperties.zip(values).foreach { case (k, v) => c.setLocalProperty(k, v) }
+      val own = JobProperties.map(c.getLocalProperty)
+      set(caller)
+      try f() finally set(own)
+    }
+
   /** Every branch settled (inline or on the pool), THEN the first
     * failure in argument order rethrows. */
   private def joinAll(branches: Seq[() => Any]): Seq[Any] = {
     val results =
       if (Thread.currentThread().isInstanceOf[PoolThread]) branches.map(f => Try(f()))
-      else branches.map(f => Future(f())).map(f => Await.ready(f, Duration.Inf).value.get)
+      else {
+        val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+          .map(_.sparkContext)
+        val caller = sc.fold(Seq.empty[String])(c => JobProperties.map(c.getLocalProperty))
+        branches.map(f => Future(underCaller(sc, caller)(f)))
+          .map(f => Await.ready(f, Duration.Inf).value.get)
+      }
     results.collectFirst { case scala.util.Failure(e) => throw e }
     results.map(_.get)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, DedupIndex}
+import graft.sources.CompositeIndex
 
 /** Persisted MinHash-LSH dedup index: a probe against the index must
   * report BIT-IDENTICAL batch-touching pairs to a fresh
@@ -116,7 +117,7 @@ class DedupIndexSpec extends SparkSpec {
     // on (id, band) replaced, never appended
     val p = DedupIndex.params(spark, path)
     val perDoc = graft.sources.MergeTable
-      .read(spark, DedupIndex.bandsPath(spark, path))
+      .read(spark, CompositeIndex.pinnedPath(spark, path, "bands"))
       .groupBy(col("id")).agg(count(lit(1)).as("n"))
       .as[(Long, Long)].collect().toMap
     assert(perDoc.values.toSet === Set(p.bands.toLong))
@@ -195,7 +196,7 @@ class DedupIndexSpec extends SparkSpec {
     // lost pushdown means every probe reads the corpus-sized collision
     // table whole at 100 TB
     val probeScan = graft.sources.MergeTable
-      .read(spark, DedupIndex.bandsPath(spark, path))
+      .read(spark, CompositeIndex.pinnedPath(spark, path, "bands"))
       .filter(col("bucket").isin(1, 2, 3))
     val scan = graft.util.Plans.executedNodes(probeScan)
       .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }.head
@@ -300,7 +301,7 @@ class DedupIndexSpec extends SparkSpec {
       s"retracted content still pairing: $probed")
     // and its rows are physically gone from both component tables
     import graft.sources.MergeTable
-    assert(MergeTable.read(spark, DedupIndex.bandsPath(spark, path))
+    assert(MergeTable.read(spark, CompositeIndex.pinnedPath(spark, path, "bands"))
       .filter(col("id") === 1L).count() === 0L)
   }
 
@@ -331,8 +332,8 @@ class DedupIndexSpec extends SparkSpec {
     assert(!dirs.exists(Set("bands", "shingles", "params")),
       s"build used fixed component names: $dirs")
     val pin = DedupIndex.pin(spark, path)
-    assert(pin.bands.dir.matches("bands-[0-9a-f]+") &&
-      pin.shingles.dir.matches("shingles-[0-9a-f]+"), s"non-token pin: $pin")
+    assert(pin("bands").dir.matches("bands-[0-9a-f]+") &&
+      pin("shingles").dir.matches("shingles-[0-9a-f]+"), s"non-token pin: $pin")
     // a second build on the PUBLISHED index still fails (CREATE INDEX semantics)
     val e = intercept[IllegalArgumentException] {
       DedupIndex.build(spark, path,
@@ -364,7 +365,7 @@ class DedupIndexSpec extends SparkSpec {
     // migrate publishes it as composite v1; probes serve it unchanged
     DedupIndex.migrate(spark, path)
     assert(DedupIndex.exists(spark, path))
-    assert(DedupIndex.pin(spark, path).bands.dir === "bands")
+    assert(DedupIndex.pin(spark, path)("bands").dir === "bands")
     val probed = pairs(DedupIndex.nearDupsAgainst(
       spark, path, Seq((9L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text"),
       "doc_id", "text", threshold = 0.5))
@@ -390,9 +391,9 @@ class DedupIndexSpec extends SparkSpec {
       Seq((7L, "totally disjoint vocabulary set occupying space"))
         .toDF("doc_id", "text"), "doc_id", "text", 3)
     graft.sources.MergeTable.merge(
-      spark, DedupIndex.shinglesPath(spark, path), sh7, Seq("id"))
+      spark, CompositeIndex.pinnedPath(spark, path, "shingles"), sh7, Seq("id"))
     graft.sources.MergeTable.merge(
-      spark, DedupIndex.bandsPath(spark, path),
+      spark, CompositeIndex.pinnedPath(spark, path, "bands"),
       Dedup.bandFrame(sh7, 128, 32), Seq("id", "band"))
     // compact must rewrite the PINNED snapshot: publishing the crashed
     // merge's bands against the old pinned shingles would be a mixed
@@ -405,7 +406,7 @@ class DedupIndexSpec extends SparkSpec {
     assert(probed === Set.empty[(Long, Long, Double)],
       s"compact published the crashed upsert's unpublished bands: $probed")
     assert(graft.sources.MergeTable
-      .read(spark, DedupIndex.bandsPath(spark, path))
+      .read(spark, CompositeIndex.pinnedPath(spark, path, "bands"))
       .filter(col("id") === 7L).count() === 0L)
     // the replayed batch re-merges and publishes normally — convergence
     DedupIndex.upsert(spark, path,
@@ -440,7 +441,7 @@ class DedupIndexSpec extends SparkSpec {
     val dirs = fs.listStatus(rootP).map(_.getPath.getName).toSet
     assert(!dirs.contains("bands-0ddba11c0de5"), s"orphan survived: $dirs")
     val pin = DedupIndex.pin(spark, path)
-    assert(dirs.contains(pin.bands.dir) && dirs.contains(pin.shingles.dir),
+    assert(dirs.contains(pin("bands").dir) && dirs.contains(pin("shingles").dir),
       s"vacuum removed a referenced component: $dirs vs $pin")
     // the index still serves after the sweep
     val probed = pairs(DedupIndex.nearDupsAgainst(
@@ -499,9 +500,9 @@ class DedupIndexSpec extends SparkSpec {
       Seq((2L, "completely novel content about streaming joins here"))
         .toDF("doc_id", "text"), "doc_id", "text", 3)
     graft.sources.MergeTable.merge(
-      spark, DedupIndex.shinglesPath(spark, path), sh7, Seq("id"))
+      spark, CompositeIndex.pinnedPath(spark, path, "shingles"), sh7, Seq("id"))
     graft.sources.MergeTable.merge(
-      spark, DedupIndex.bandsPath(spark, path),
+      spark, CompositeIndex.pinnedPath(spark, path, "bands"),
       Dedup.bandFrame(sh7, 128, 32), Seq("id", "band"))
     DedupIndex.vacuum(spark, path, retainMillis = 0L)
     // a latest-only component vacuum would have deleted the pinned
@@ -574,7 +575,7 @@ class DedupIndexSpec extends SparkSpec {
     // reading component-latest here would drop the pair at the verify
     // join (the pre-fix mixed state); a pinned reader must not notice
     graft.sources.MergeTable.deleteWhere(
-      spark, DedupIndex.shinglesPath(spark, path), col("id") === 1L)
+      spark, CompositeIndex.pinnedPath(spark, path, "shingles"), col("id") === 1L)
     assert(probe() === Set((1L, 7L, 1.0)),
       "probe read a mixed state: component-latest shingles with pinned bands")
     // the PUBLISHED retraction (one composite commit) flips the whole view

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
 import graft.operators.ImageDedupIndex
+import graft.sources.CompositeIndex
 
 /** Persisted perceptual-hash (dHash) image dedup index: an indexed
   * probe must report BIT-IDENTICAL batch-touching pairs to a fresh
@@ -100,7 +101,7 @@ class ImageDedupIndexSpec extends SparkSpec {
     // delete purges by id alone
     ImageDedupIndex.delete(spark, path, Seq(1L, 2L))
     val left = graft.sources.MergeTable.read(spark,
-      ImageDedupIndex.bandsPath(spark, path))
+      CompositeIndex.pinnedPath(spark, path, "bands"))
       .select(col("id")).distinct().count()
     assert(left === 17) // 20 − replaced-then-retracted 3 − deleted 1,2
   }
@@ -169,7 +170,7 @@ class ImageDedupIndexSpec extends SparkSpec {
       "img_id", "w", "h", "rgb")
     ImageDedupIndex.compact(spark, path, numFiles = 2)
     val probeScan = graft.sources.MergeTable
-      .read(spark, ImageDedupIndex.bandsPath(spark, path))
+      .read(spark, CompositeIndex.pinnedPath(spark, path, "bands"))
       .filter(col("bucket").isin(1L, 2L, 3L))
     val scan = graft.util.Plans.executedNodes(probeScan)
       .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }.head

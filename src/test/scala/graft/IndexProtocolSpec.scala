@@ -184,4 +184,60 @@ class IndexProtocolSpec extends SparkSpec {
       model --= present
     }
   }
+
+  test("one index protocol: publishes, compactions, pins, purges, survivor rules and one-per-id reductions each have one implementation") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
+    def isComment(line: String): Boolean = {
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }
+    val member = """\b(?:def|val|var|class|object)\s+(\w+)""".r
+    // every code line of the tree: (file under graft/, the object or
+    // class member (two-space indent) it is in, the line)
+    val code: Seq[(String, String, String)] = {
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .sortBy(_.toString).flatMap { f =>
+          var owner = "<top>"
+          Files.readAllLines(f).asScala.toSeq.filterNot(isComment).map { l =>
+            if (l.startsWith("  ") && !l.startsWith("   "))
+              member.findFirstMatchIn(l).foreach(m => owner = m.group(1))
+            (root.relativize(f).toString, owner, l)
+          }
+        }
+      finally walk.close()
+    }
+    def calls(needle: String) = code.filter { case (_, _, l) =>
+      l.contains(needle) && !l.contains("def " + needle) }
+    def files(needle: String): Map[String, Int] =
+      calls(needle).groupBy(_._1).map { case (f, ls) => f -> ls.size }
+    def under(dir: String, needle: String) = files(needle).keySet.filter(_.startsWith(dir))
+    val ci = "sources/CompositeIndex.scala"
+    // the composite pin is published by the one write step only
+    assert(files("commitPin(").keySet ++ files("publishNext(").keySet === Set(ci))
+    assert(calls("commitPin(").filter(_._1 == ci).map(_._2).toSet ===
+      Set("write", "build", "migrate"))
+    // one pinned compaction, one Pin type
+    assert(under("operators/", "compactTableAt(") === Set.empty)
+    assert(under("operators/", "case class Pin") === Set.empty)
+    // one chunked id purge: every index-component predicate delete is
+    // CompositeIndex.writeComponent's
+    assert(under("operators/", "deleteWhere(") === Set.empty)
+    assert(calls("deleteWhere(").filter(_._1 == ci).map(_._2).toSet === Set("writeComponent"))
+    assert(calls("RetractChunk").filter(_._1 == ci).map(_._2).toSet === Set("writeComponent"))
+    // one survivor rule (incumbents win, the larger id of an in-batch
+    // pair dies) and one one-per-id reduction for the admission gates
+    assert(files("""col("id_b").as("__dead")""") === Map("operators/Dedup.scala" -> 1))
+    assert(files("deterministicOnePerKey(").filter(_._1.startsWith("operators/")) ===
+      Map("operators/Dedup.scala" -> 1))
+    // manifest commits: MergeTable's one commit path, the composite
+    // pin, and the IVF layout's own three in GraftSession (the
+    // remaining separate commit path), plus a demo
+    assert(files("Manifests.commit(") === Map(
+      "sources/MergeTable.scala" -> 1, ci -> 1,
+      "GraftSession.scala" -> 3, "MergeLiteDemo.scala" -> 1))
+  }
 }

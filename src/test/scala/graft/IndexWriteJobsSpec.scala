@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 
 import graft.operators.{DedupIndex, ImageDedupIndex, LexicalIndex, SemanticIndex}
-import graft.sources.MergeTable
+import graft.sources.{CompositeIndex, MergeTable}
 
 /** Spark-job and manifest-version ceilings of the index components'
   * incremental writes, in the `MergeTableJobsSpec` style: each write
@@ -41,10 +41,7 @@ class IndexWriteJobsSpec extends SparkSpec {
   private def assertCeilings(what: String, paths: Map[String, String],
       jobs: Int, versions: Map[String, Int])(body: => Unit): Unit = {
     val before = versionsOf(paths)
-    // Par's pool threads do not inherit the caller's job group; counted
-    // from a pool thread, the body's Par calls run inline on it, so
-    // every job the write launches lands in the group
-    val n = graft.util.Par.both(JobCount.of(spark)(body), ())._1
+    val n = JobCount.of(spark)(body)
     val after = versionsOf(paths)
     val added = paths.keys.map(c => c -> (after(c) - before(c)).toInt).toMap
     val bytes = paths.keys.toSeq.sorted.map(c =>
@@ -58,9 +55,9 @@ class IndexWriteJobsSpec extends SparkSpec {
   }
 
   private def lexicalPaths(path: String) = Map(
-    "postings" -> LexicalIndex.postingsPath(spark, path),
-    "doclens" -> LexicalIndex.doclensPath(spark, path),
-    "termdf" -> LexicalIndex.termDfPath(spark, path))
+    "postings" -> CompositeIndex.pinnedPath(spark, path, "postings"),
+    "doclens" -> CompositeIndex.pinnedPath(spark, path, "doclens"),
+    "termdf" -> CompositeIndex.pinnedPath(spark, path, "termdf"))
 
   private def text(id: Int, words: Int) =
     (0 until words).map(w => s"w${(id * 7 + w * 3) % 50}").mkString(" ")
@@ -103,8 +100,8 @@ class IndexWriteJobsSpec extends SparkSpec {
       (1 to 60).map(i => (i.toLong, text(i, 12))).toDF("doc_id", "text"),
       "doc_id", "text")
     val paths = Map(
-      "shingles" -> DedupIndex.shinglesPath(spark, path),
-      "bands" -> DedupIndex.bandsPath(spark, path))
+      "shingles" -> CompositeIndex.pinnedPath(spark, path, "shingles"),
+      "bands" -> CompositeIndex.pinnedPath(spark, path, "bands"))
     val batch = (Seq((3L, None: Option[String]), (4L, None)) ++
       (5 to 8).map(i => (i.toLong, Some(text(i + 500, 12)))) ++
       (101 to 103).map(i => (i.toLong, Some(text(i, 12))))).toDF("doc_id", "text")
@@ -126,7 +123,7 @@ class IndexWriteJobsSpec extends SparkSpec {
       .localCheckpoint(true)
     val path = freshPath()
     SemanticIndex.build(spark, path, corp.toDF("id", "vec"), "id", "vec", cents)
-    val paths = Map("vectors" -> SemanticIndex.vectorsPath(spark, path))
+    val paths = Map("vectors" -> CompositeIndex.pinnedPath(spark, path, "vectors"))
     val batch = (Seq((3L, None: Option[Array[Float]]), (4L, None)) ++
       (5 to 8).map(i => (i.toLong, Some(vec()))) ++
       (101 to 103).map(i => (i.toLong, Some(vec())))).toDF("id", "vec")
@@ -141,7 +138,7 @@ class IndexWriteJobsSpec extends SparkSpec {
     ImageDedupIndex.build(spark, path,
       (1 to 60).map(i => (i.toLong, i.toLong * 0x9E3779B97F4A7C15L)).toDF("id", "fp"),
       "id", "fp")
-    val paths = Map("bands" -> ImageDedupIndex.bandsPath(spark, path))
+    val paths = Map("bands" -> CompositeIndex.pinnedPath(spark, path, "bands"))
     val batch = (Seq((3L, None: Option[Long]), (4L, None)) ++
       (5 to 8).map(i => (i.toLong, Some(i.toLong * 31))) ++
       (101 to 103).map(i => (i.toLong, Some(i.toLong * 0x9E3779B97F4A7C15L))))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Lexical, LexicalIndex}
+import graft.sources.CompositeIndex
 
 /** Persisted inverted index: indexed rankings must be BIT-IDENTICAL to
   * the fresh tokenize-per-call path on the same corpus, survive
@@ -105,7 +106,7 @@ class LexicalIndexSpec extends SparkSpec {
     // the plan bm25TopKMany runs for its postings touch (the pinned
     // postings component — dirs are build-unique token names)
     val scan = graft.sources.MergeTable
-      .read(spark, LexicalIndex.postingsPath(spark, path))
+      .read(spark, CompositeIndex.pinnedPath(spark, path, "postings"))
       .filter(col("term").isin("w0", "w7"))
     val scans = graft.util.Plans.executedNodes(scan).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
@@ -229,7 +230,7 @@ class LexicalIndexSpec extends SparkSpec {
     // latest reader would lose the doc (or score fresh df against
     // stale postings); a pinned reader must not notice
     graft.sources.MergeTable.deleteWhere(
-      spark, LexicalIndex.postingsPath(spark, path), col("id") === 1L)
+      spark, CompositeIndex.pinnedPath(spark, path, "postings"), col("id") === 1L)
     assert(ranking(LexicalIndex.bm25TopK(
       spark, path, "doc_id", Seq("zebra"), 5)) === before,
       "query read a mixed state: component-latest postings with pinned stats")
@@ -314,7 +315,7 @@ class LexicalIndexSpec extends SparkSpec {
     // (a 100 TB dictionary must not accumulate dead terms), while
     // 'zebra' survives with df decremented to 1
     import graft.sources.MergeTable
-    val dict = MergeTable.read(spark, LexicalIndex.termDfPath(spark, path))
+    val dict = MergeTable.read(spark, CompositeIndex.pinnedPath(spark, path, "termdf"))
       .as[(String, Long)].collect().toMap
     assert(!dict.contains("unicorn"), s"dead term kept: $dict")
     assert(dict.get("zebra").contains(1L), s"df not decremented: $dict")
@@ -348,13 +349,13 @@ class LexicalIndexSpec extends SparkSpec {
     val path = freshPath()
     LexicalIndex.build(spark, path, corpus(23, 40).toDF("doc_id", "text"), "doc_id", "text")
     def fresh(): (Long, Double) = {
-      val r = MergeTable.read(spark, LexicalIndex.doclensPath(spark, path))
+      val r = MergeTable.read(spark, CompositeIndex.pinnedPath(spark, path, "doclens"))
         .agg(count(lit(1)), avg(col("dl"))).head()
       (r.getLong(0), r.getDouble(1))
     }
     // does any action of `call` scan the pinned doclens component?
     def scansDoclens(call: => Any): Boolean = {
-      val dir = new org.apache.hadoop.fs.Path(LexicalIndex.doclensPath(spark, path)).getName
+      val dir = new org.apache.hadoop.fs.Path(CompositeIndex.pinnedPath(spark, path, "doclens")).getName
       GeneratedCode.plans(spark)(call).flatMap(graft.util.Plans.flatten).exists {
         case f: FileSourceScanExec =>
           f.relation.location.rootPaths.exists(_.toString.contains(dir))

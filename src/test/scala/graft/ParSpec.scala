@@ -1,10 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.Par
@@ -39,5 +41,47 @@ class ParSpec extends AnyFunSuite {
     }
     run()
     Par.both(run(), ())
+  }
+
+  test("a job started in a Par branch carries the caller's job group, description, interrupt flag and tags") {
+    val spark = SparkTestSession.spark
+    val sc = spark.sparkContext
+    // the pool's threads exist before the caller sets its group: a
+    // thread created after would inherit the group at its creation
+    Par.three((), (), ())
+    val group = "par-caller-" + java.util.UUID.randomUUID()
+    val started = new ConcurrentLinkedQueue[java.util.Properties]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.job.description") == "par caller")
+          started.add(e.properties)
+    }
+    org.apache.spark.JobCountBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "par caller", interruptOnCancel = true)
+    sc.addJobTag("par-tag")
+    val counts =
+      try Par.both(spark.range(10).count(), spark.range(5).count())
+      finally {
+        sc.removeJobTag("par-tag")
+        sc.clearJobGroup()
+        org.apache.spark.JobCountBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(counts === ((10L, 5L)))
+    import scala.jdk.CollectionConverters._
+    val props = started.asScala.toSeq
+    // each branch's count launches at least one job
+    assert(props.size >= 2, s"${props.size} jobs ran under the caller's description")
+    props.foreach { p =>
+      assert(p.getProperty("spark.jobGroup.id") === group)
+      assert(p.getProperty("spark.job.interruptOnCancel") === "true")
+      assert(p.getProperty("spark.job.tags").split(",").contains("par-tag"))
+    }
+    // a later caller without a group or tags: its branches see none,
+    // though the pool threads just ran under the group above
+    assert(Par.both(sc.getLocalProperty("spark.jobGroup.id"),
+      sc.getLocalProperty("spark.job.tags")) === ((null, null)))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, SemanticIndex, SimilaritySearch}
+import graft.sources.CompositeIndex
 
 /** Persisted semantic-dedup index: probes must report BIT-IDENTICAL
   * batch-touching pairs to [[Dedup.semanticDedup]]'s tau-ball rule
@@ -82,7 +83,7 @@ class SemanticIndexSpec extends SparkSpec {
 
     // after upsert the index holds all ids
     val held = graft.sources.MergeTable.read(
-        spark, SemanticIndex.vectorsPath(spark, path))
+        spark, CompositeIndex.pinnedPath(spark, path, "vectors"))
       .select("id").as[Long].collect().toSet
     assert(held === all.map(_._1).toSet)
 
@@ -102,7 +103,7 @@ class SemanticIndexSpec extends SparkSpec {
     // delete purges outright
     SemanticIndex.delete(spark, path, Seq(18L))
     val held2 = graft.sources.MergeTable.read(
-        spark, SemanticIndex.vectorsPath(spark, path))
+        spark, CompositeIndex.pinnedPath(spark, path, "vectors"))
       .select("id").as[Long].collect().toSet
     assert(!held2.contains(9L) && !held2.contains(18L))
   }

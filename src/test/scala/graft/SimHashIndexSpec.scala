@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, ImageDedupIndex, SimHashIndex}
+import graft.sources.CompositeIndex
 
 /** Persisted SimHash text near-dup index: the text facade over the
   * 64-bit Hamming core — an indexed probe must report BIT-IDENTICAL
@@ -74,7 +75,7 @@ class SimHashIndexSpec extends SparkSpec {
     // delete purges by id alone
     SimHashIndex.delete(spark, path, Seq(1L, 2L))
     val left = graft.sources.MergeTable.read(spark,
-      ImageDedupIndex.bandsPath(spark, path))
+      CompositeIndex.pinnedPath(spark, path, "bands"))
       .select(col("id")).distinct().count()
     assert(left === 17) // 20 − replaced-then-retracted 3 − deleted 1,2
   }
