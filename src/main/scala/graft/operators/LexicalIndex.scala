@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Bm25, TextFunctions}
-import graft.sources.{CompositeIndex, MergeTable}
+import graft.sources.{CompositeIndex, KeySet, MergeTable}
 
 /** Persisted inverted index for [[Lexical]] — the serving path.
   *
@@ -197,18 +197,20 @@ object LexicalIndex {
         val idSeq = ids.toSeq
         // df delta against the PINNED postings: each affected term's df
         // moves by (new batch postings) - (old batch postings). The
-        // old-side probe reads only (term, id) of the id-matched rows;
-        // the touched term set is bounded by the batch's vocabulary.
-        val oldCounts = CI.readAt(spark, path, p0, "postings")
-          .filter(col("id").isin(idSeq: _*))
-          .groupBy(col("term")).agg(count(lit(1)).as("__old"))
-        val newCounts = postings.get.groupBy(col("term")).agg(count(lit(1)).as("__new"))
-        val delta = newCounts.join(oldCounts, Seq("term"), "full_outer")
-          .select(col("term"),
-            (coalesce(col("__new"), lit(0L)) - coalesce(col("__old"), lit(0L)))
-              .as("__delta"))
-          .filter(col("__delta") =!= 0)
-          .localCheckpoint(true) // read twice: the affected terms and dfUpdates
+        // old-side probe reads only (term, id) of the id-matched rows —
+        // one membership test however many ids —; the touched term set
+        // is bounded by the batch's vocabulary.
+        val delta = KeySet.withMembers(
+            CI.readAt(spark, path, p0, "postings"), "id", idSeq) { old =>
+          val oldCounts = old.groupBy(col("term")).agg(count(lit(1)).as("__old"))
+          val newCounts = postings.get.groupBy(col("term")).agg(count(lit(1)).as("__new"))
+          newCounts.join(oldCounts, Seq("term"), "full_outer")
+            .select(col("term"),
+              (coalesce(col("__new"), lit(0L)) - coalesce(col("__old"), lit(0L)))
+                .as("__delta"))
+            .filter(col("__delta") =!= 0)
+            .localCheckpoint(true) // read twice: the affected terms and dfUpdates
+        }
         try {
           val affected = delta.select(col("term"))
           val current = CI.readAt(spark, path, p0, "termdf")
@@ -254,11 +256,11 @@ object LexicalIndex {
   def delete(spark: SparkSession, path: String, ids: Seq[Any]): Unit =
     if (ids.nonEmpty) CI.write(spark, path) { p0 =>
       // the dying docs' per-term posting counts, from the PIN — read
-      // again after the deletes start, so it must not be a live view
-      val oldCounts = CI.readAt(spark, path, p0, "postings")
-        .filter(col("id").isin(ids: _*))
-        .groupBy(col("term")).agg(count(lit(1)).as("__old"))
-        .localCheckpoint(true)
+      // again after the deletes start, so it must not be a live view;
+      // one membership test however many ids
+      val oldCounts = KeySet.withMembers(
+          CI.readAt(spark, path, p0, "postings"), "id", ids)(
+        _.groupBy(col("term")).agg(count(lit(1)).as("__old")).localCheckpoint(true))
       try {
         val dfNew = CI.readAt(spark, path, p0, "termdf")
           .join(oldCounts, Seq("term"))

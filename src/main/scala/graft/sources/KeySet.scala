@@ -1,12 +1,17 @@
 package graft.sources
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.ExprBridge.{toColumn, toExpr}
+
 /** The key set a MergeTable writer or read works with — a write batch's
   * conflict keys, a fold's removal set, or a version's row-level
-  * suppression set — in ONE of two forms, chosen once where the keys
+  * suppression set — in ONE of three forms, chosen once where the keys
   * are first seen:
   *
   *  - [[KeySet.Literals]]: one stable-typed key column and at most
@@ -18,20 +23,37 @@ import org.apache.spark.sql.types._
   *    parquet reader's footer stats AND bloom filters. The staged
   *    lineages are driver-gap-bound (37 jobs × ~30 ms + ~45 ms gaps
   *    measured on q144), so every shed job is wall-clock.
+  *  - [[KeySet.Held]]: one stable-typed key column past that budget but
+  *    within [[KeySet.HeldLimit]], its values already on the driver
+  *    because the batch's one bounded validation collect brought them
+  *    there. The values are held as ONE object — a hash set of
+  *    Catalyst-internal values, shipped to tasks as one broadcast
+  *    variable the first time a consumer needs it — and every consumer
+  *    tests against it with one codegen'd membership expression
+  *    ([[InKeys]]), never a list of literals: validation, the overlap
+  *    probe, both anti-joins and discovery launch no key-collect or
+  *    broadcast-build job. Discovery adds the set's [min, max] as a
+  *    pushed range, and [[ManifestFileIndex]] prunes files on the set
+  *    itself. The owner frees the broadcast ([[KeySet.free]]) when
+  *    its call ends.
   *  - [[KeySet.Frame]]: every other set — multi-column, an unstable key
   *    type (binary: reference equality; float/double: NaN equality
-  *    differs between Seq.distinct and SQL), or past the budget — kept
-  *    as a key frame and joined by broadcast. Its size and frame are
-  *    lazy: a set that only feeds a gate or a union costs nothing until
-  *    a consumer runs it.
+  *    differs between Seq.distinct and SQL), or past the held limit —
+  *    kept as a key frame and joined by broadcast. Its size and frame
+  *    are lazy: a set that only feeds a gate or a union costs nothing
+  *    until a consumer runs it.
   *
-  * Both forms answer every operation with identical rows and files
+  * The literal budget stays the bound of the `dvlits` manifest line and
+  * of scoped point probes ([[pointTouched]]): a held set commits what a
+  * frame of the same keys commits.
+  *
+  * Every form answers every operation with identical rows and files
   * (KeySetSpec pins it per key type), so each consumer makes ONE call
   * and never branches on the form. The NULL argument that makes them
   * agree: a join never matches a NULL key, so an anti-join KEEPS
-  * NULL-keyed rows and a semi-join drops them; `isin` evaluates NULL on
-  * a NULL key, so the literal anti-join adds an explicit `isNull` guard
-  * and the literal semi-join needs none. */
+  * NULL-keyed rows and a semi-join drops them; `isin` and [[InKeys]]
+  * evaluate NULL on a NULL key, so the literal and held anti-joins add
+  * an explicit `isNull` guard and their semi-joins need none. */
 private[graft] sealed trait KeySet {
   def keyCols: Seq[String]
 
@@ -82,6 +104,10 @@ private[graft] sealed trait KeySet {
 
   /** `d` minus the rows whose key is in the set; NULL-keyed rows stay. */
   def anti(d: DataFrame): DataFrame
+
+  /** Releases what the set holds outside the plan — a held set's
+    * broadcast variable. The set must not be used afterwards. */
+  def free(): Unit = ()
 
   /** Whether any row of `d` carries a key of the set — the OCC rebase
     * probes over the files a winner added (stops at the first hit). */
@@ -161,6 +187,55 @@ private[graft] object KeySet {
     * measured tripling a probe). */
   val DiscoveryInLimit = 1000
 
+  /** The most keys per side one bounded validation collect brings to
+    * the driver, and so the largest [[Held]] side: past it a batch's
+    * keys stay a [[Frame]]. */
+  val HeldLimit = 100000
+
+  /** Test seam (true in production): false holds every set past the
+    * literal budget to the [[Frame]] form, as if [[HeldLimit]] were the
+    * literal budget, so the broadcast-join path stays testable. */
+  private val heldForm = new scala.util.DynamicVariable[Boolean](true)
+
+  /** Runs `body` with the held form switched off (see [[heldForm]]). */
+  private[graft] def framesOnlyForTest[A](body: => A): A = heldForm.withValue(false)(body)
+
+  private def heldLimit: Int = if (heldForm.value) HeldLimit else DiscoveryInLimit
+
+  /** A frame of one key column from driver-side values: a local
+    * relation, planned and scanned with no job. */
+  private def localKeys(keyCol: String, keyType: DataType, values: Seq[Any]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    SparkSession.active.createDataFrame(values.map(Row(_)).asJava,
+      StructType(Seq(StructField(keyCol, keyType))))
+  }
+
+  /** The form of one stable-typed key column's complete distinct,
+    * NULL-free values, collected to the driver: literal within the
+    * budget, held past it (a frame of the same values under
+    * [[framesOnlyForTest]]). */
+  private def onDriver(keyCol: String, keyType: DataType, values: Seq[Any]): KeySet =
+    if (values.size <= DiscoveryInLimit) Literals(keyCol, keyType, values)
+    else if (heldForm.value)
+      Held(keyCol, keyType, values, new HeldKeys(keyType, values))
+    else Frame(localKeys(keyCol, keyType, values), Seq(keyCol), values.size.toLong)
+
+  /** `d`'s rows whose `keyCol` is among the driver-side `values`, handed
+    * to `body` while the set lives: one `In` within the literal budget,
+    * one [[InKeys]] expression past it for a stable key type — never a
+    * list of thousands of literals — and `isin` otherwise. Values are
+    * cast to the column's type. */
+  private[graft] def withMembers[A](d: DataFrame, keyCol: String, values: Seq[Any])(
+      body: DataFrame => A): A = {
+    val t = d.schema(keyCol).dataType
+    if (values.size <= DiscoveryInLimit || !litStableKeyType(t) || values.contains(null))
+      body(d.filter(col(keyCol).isin(values: _*)))
+    else {
+      val held = new HeldKeys(t, values)
+      try body(d.filter(held.member(col(keyCol)))) finally held.free()
+    }
+  }
+
   /** One stable-typed key column's COMPLETE distinct values. The
     * values come from a collect of a `keyType` column (or a typed
     * manifest decode), so `lit(v)` rebuilds literals of exactly the
@@ -171,17 +246,39 @@ private[graft] object KeySet {
     def size: Long = values.size.toLong
     def rebound(u: DataFrame, keyCols: Seq[String]): KeySet =
       copy(keyCol = keyCols.head)
-    def keys: DataFrame = {
-      import scala.jdk.CollectionConverters._
-      SparkSession.active.createDataFrame(values.map(Row(_)).asJava,
-        StructType(Seq(StructField(keyCol, keyType))))
-    }
+    def keys: DataFrame = localKeys(keyCol, keyType, values)
     private def in = col(keyCol).isin(values: _*)
     protected def withHit(d: DataFrame): (DataFrame, Column) = (d, in)
     def anti(d: DataFrame): DataFrame = d.filter(col(keyCol).isNull || !in)
     def hitsAny(d: DataFrame): Boolean = d.filter(in).limit(1).count() > 0
     def discoveryFrame(base: DataFrame): DataFrame =
       inDiscovery(base, keyCol, values)
+  }
+
+  /** One stable-typed key column's complete distinct values past the
+    * literal budget, held as ONE [[HeldKeys]] object that every
+    * consumer tests through the [[InKeys]] membership expression.
+    * `values` are the collected (external) values; [[rebound]] copies
+    * share the one holder, and [[free]] releases it. */
+  final case class Held(keyCol: String, keyType: DataType, values: Seq[Any],
+      held: HeldKeys) extends KeySet {
+    def keyCols: Seq[String] = Seq(keyCol)
+    def size: Long = values.size.toLong
+    def rebound(u: DataFrame, keyCols: Seq[String]): KeySet =
+      copy(keyCol = keyCols.head)
+    def keys: DataFrame = localKeys(keyCol, keyType, values)
+    private def in = held.member(col(keyCol))
+    protected def withHit(d: DataFrame): (DataFrame, Column) = (d, in)
+    def anti(d: DataFrame): DataFrame = d.filter(col(keyCol).isNull || !in)
+    def hitsAny(d: DataFrame): Boolean = d.filter(in).limit(1).count() > 0
+    // the [min, max] range pushes to the parquet footers as the frame
+    // form's does, with no job to find it; the membership test is exact
+    def discoveryFrame(base: DataFrame): DataFrame = {
+      val (lo, hi) = held.bounds
+      base.filter(col(keyCol) >= lo && col(keyCol) <= hi && in)
+        .select(input_file_name().as("__file")).distinct()
+    }
+    override def free(): Unit = held.free()
   }
 
   /** A key frame: `df` projects to `keyCols` (extra columns are
@@ -257,10 +354,72 @@ private[graft] object KeySet {
 
   /** The validated sides of one row-level call: `ks` is the union of
     * both key sets, `nU`/`nD` count each side's keys, and `deletes` is
-    * the delete side as a distinct key frame — driver-local when it fit
-    * the literal budget, else a checkpoint the caller frees. */
+    * the delete side as a distinct key frame — driver-local when its
+    * keys were collected, else a checkpoint. [[free]] releases both;
+    * the owner calls it when the call ends. */
   final case class Changes(
-      ks: KeySet, nU: Long, nD: Long, deletes: Option[DataFrame])
+      ks: KeySet, nU: Long, nD: Long, deletes: Option[DataFrame]) {
+    def free(): Unit = {
+      deletes.foreach(graft.util.Checkpoints.free)
+      ks.free()
+    }
+  }
+
+  /** The refusals of one row-level call over `keyCols`. */
+  private final class Refusals(keyCols: Seq[String]) {
+    private val keyList = keyCols.mkString(",")
+    val uNull = s"updates contain NULL in a key column ($keyList); " +
+      "NULL keys cannot match and would duplicate on every merge"
+    val dNull = s"keys contain NULL in a key column ($keyList); " +
+      "NULL keys never match and would tombstone nothing"
+    val dup = s"updates must be unique on $keyList"
+    val both = s"a key on ($keyList) is both upserted and deleted in " +
+      "one call; resolve each key to one change first"
+  }
+
+  /** Validates both sides of one call from their collected key values
+    * (a single stable-typed key column), with no job: NULL keys, a
+    * repeated upsert key and a key on both sides are refused. The
+    * union of both sides takes the literal form within the budget and
+    * the held form past it; a delete side, when `hasDeletes`, becomes a
+    * driver-local frame. */
+  private[graft] def collectedChanges(keyCol: String, keyType: DataType,
+      uVals: Seq[Any], dVals: Seq[Any], hasDeletes: Boolean): Changes = {
+    val no = new Refusals(Seq(keyCol))
+    require(!uVals.contains(null), no.uNull)
+    require(!dVals.contains(null), no.dNull)
+    val uDistinct = uVals.distinct
+    require(uVals.length == uDistinct.length, no.dup)
+    val dDistinct = dVals.distinct
+    val uSet = uDistinct.toSet
+    require(!dDistinct.exists(uSet.contains), no.both)
+    Changes(onDriver(keyCol, keyType, uDistinct ++ dDistinct),
+      uDistinct.size.toLong, dDistinct.size.toLong,
+      Option.when(hasDeletes)(localKeys(keyCol, keyType, dDistinct)))
+  }
+
+  /** One CDC batch's two sides from ONE bounded collect of (key,
+    * `upsert`) over its `winners` — a materialized frame, unique per
+    * key: Some((upsert keys, delete keys)) for a single stable-typed
+    * key column within [[HeldLimit]] rows, None otherwise (the caller
+    * routes with an aggregate and the writer validates). A NULL
+    * `upsert` is a row with no route, refused with `noRoute`. */
+  private[graft] def routed(winners: DataFrame, keyCols: Seq[String],
+      upsert: Column, noRoute: String): Option[(Seq[Any], Seq[Any])] = {
+    val t = winners.schema(keyCols.head).dataType
+    if (keyCols.size != 1 || !litStableKeyType(t)) None
+    else {
+      val cap = heldLimit
+      val rows = winners.select(col(keyCols.head), upsert).coalesce(1)
+        .limit(cap + 1).collect()
+      if (rows.length > cap) None
+      else {
+        require(!rows.exists(_.isNullAt(1)), noRoute)
+        val (u, d) = rows.partition(_.getBoolean(1))
+        Some((u.map(_.get(0)).toSeq, d.map(_.get(0)).toSeq))
+      }
+    }
+  }
 
   /** Validates an upsert side `u` (full rows, unique keys) and a delete
     * side `d` (keys, duplicates collapse) of one
@@ -270,26 +429,19 @@ private[graft] object KeySet {
     *
     * For a single stable-typed key column, ONE bounded collect (key
     * column only, a single-partition early-stopping limit per side)
-    * validates both sides on the driver whenever each fits the budget,
-    * the both-sides check being a set intersection. Otherwise one
-    * aggregate over the union of both sides' keys does it: counts per
-    * side, NULLs per side, and one distinct count that equals
-    * `nU + nD` exactly when the upserts are unique and the sides are
-    * disjoint (the delete side is made distinct first). `struct` makes
-    * the distinct count NULL-key tolerant, and with NULLs refused first
-    * it equals the dropDuplicates count. Only a failed check runs a
-    * second query, to name which rule broke. */
+    * validates both sides on the driver whenever each fits
+    * [[HeldLimit]] ([[collectedChanges]]). Otherwise one aggregate over
+    * the union of both sides' keys does it: counts per side, NULLs per
+    * side, and one distinct count that equals `nU + nD` exactly when
+    * the upserts are unique and the sides are disjoint (the delete side
+    * is made distinct first). `struct` makes the distinct count
+    * NULL-key tolerant, and with NULLs refused first it equals the
+    * dropDuplicates count. Only a failed check runs a second query, to
+    * name which rule broke. */
   def validatedChanges(
       u: Option[DataFrame], d: Option[DataFrame],
       keyCols: Seq[String]): Changes = {
-    val keyList = keyCols.mkString(",")
-    val uNull = s"updates contain NULL in a key column ($keyList); " +
-      "NULL keys cannot match and would duplicate on every merge"
-    val dNull = s"keys contain NULL in a key column ($keyList); " +
-      "NULL keys never match and would tombstone nothing"
-    val dupMsg = s"updates must be unique on $keyList"
-    val bothMsg = s"a key on ($keyList) is both upserted and deleted in " +
-      "one call; resolve each key to one change first"
+    val no = new Refusals(keyCols)
     val uKeys = u.map(_.select(keyCols.map(col): _*))
     val dKeys = d.map(_.select(keyCols.map(col): _*))
     for (uk <- uKeys; dk <- dKeys; f <- dk.schema) {
@@ -305,31 +457,19 @@ private[graft] object KeySet {
         dk.map(_.withColumn(side, lit(false)))).reduce(_ unionByName _)
     val dLits: Option[Seq[Any]] =
       if (keyCols.size == 1 && litStableKeyType(t)) {
+        val cap = heldLimit
         val bounded = tagged(
-          uKeys.map(_.coalesce(1).limit(DiscoveryInLimit + 1)),
-          dKeys.map(_.coalesce(1).limit(DiscoveryInLimit + 1))).collect()
+          uKeys.map(_.coalesce(1).limit(cap + 1)),
+          dKeys.map(_.coalesce(1).limit(cap + 1))).collect()
         val (uRows, dRows) = bounded.partition(_.getBoolean(1))
         val uVals = uRows.map(_.get(0)).toSeq
         val dVals = dRows.map(_.get(0)).toSeq
-        if (uVals.length <= DiscoveryInLimit && dVals.length <= DiscoveryInLimit) {
-          require(!uVals.contains(null), uNull)
-          require(!dVals.contains(null), dNull)
-          val uDistinct = uVals.distinct
-          require(uVals.length == uDistinct.length, dupMsg)
-          val dDistinct = dVals.distinct
-          val uSet = uDistinct.toSet
-          require(!dDistinct.exists(uSet.contains), bothMsg)
-          val all = Literals(keyCols.head, t, uDistinct ++ dDistinct)
-          return Changes(
-            if (all.values.size <= DiscoveryInLimit) all
-            else Frame(all.keys, keyCols, all.size),
-            uDistinct.size.toLong, dDistinct.size.toLong,
-            dKeys.map(_ => Literals(keyCols.head, t, dDistinct).keys))
-        }
-        if (dVals.length <= DiscoveryInLimit) Some(dVals.distinct) else None
+        if (uVals.length <= cap && dVals.length <= cap)
+          return collectedChanges(keyCols.head, t, uVals, dVals, dKeys.isDefined)
+        if (dVals.length <= cap) Some(dVals.distinct) else None
       } else None
     val dDistinct = dKeys.map(dk => dLits.fold(dk.distinct().localCheckpoint(true))(
-      vs => Literals(keyCols.head, t, vs).keys))
+      vs => localKeys(keyCols.head, t, vs)))
     val union = tagged(uKeys, dDistinct)
     val anyNull = keyCols.map(col(_).isNull).reduce(_ || _)
     val row = union.select(Seq(
@@ -339,12 +479,12 @@ private[graft] object KeySet {
       uKeys.map(_ => countDistinct(struct(keyCols.map(col): _*))): _*).head()
     val (nU, nD) = (row.getLong(0), row.getLong(1))
     try {
-      require(row.getLong(2) == 0L, uNull)
-      require(row.getLong(3) == 0L, dNull)
+      require(row.getLong(2) == 0L, no.uNull)
+      require(row.getLong(3) == 0L, no.dNull)
       if (uKeys.isDefined && row.getLong(4) != nU + nD) {
         require(uKeys.get.select(countDistinct(struct(keyCols.map(col): _*)))
-          .head().getLong(0) == nU, dupMsg)
-        throw new IllegalArgumentException(bothMsg)
+          .head().getLong(0) == nU, no.dup)
+        throw new IllegalArgumentException(no.both)
       }
     } catch {
       case e: IllegalArgumentException =>
@@ -402,4 +542,74 @@ private[graft] object KeySet {
          StringType => true
     case _ => false
   }
+}
+
+/** A held key set's values ([[KeySet.Held]]): Catalyst-internal values
+  * (`UTF8String` for strings), cast to `keyType` on the driver, in one
+  * hash set. Tasks reach it through ONE broadcast variable, made the
+  * first time a consumer plans a membership test, so each executor
+  * fetches the set once and a query serializes only the handle; the
+  * driver keeps the values for the planner (bounds, file pruning).
+  * [[free]] destroys the broadcast. */
+private[graft] final class HeldKeys(val keyType: DataType, external: Seq[Any])
+    extends Serializable {
+
+  /** The internal values, driver-side only (not serialized). */
+  @transient val values: Array[Any] = {
+    val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+    external.map(v => Cast(Literal(v), keyType, tz).eval()).toArray
+  }
+
+  /** (min, max) of the values as literals of `keyType`. */
+  @transient lazy val bounds: (Column, Column) = {
+    val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(keyType)
+    (toColumn(Literal(values.min(ord), keyType)), toColumn(Literal(values.max(ord), keyType)))
+  }
+
+  private var shipped: Broadcast[java.util.HashSet[Any]] = _
+
+  private def handle(): Broadcast[java.util.HashSet[Any]] = synchronized {
+    if (shipped == null) {
+      val set = new java.util.HashSet[Any](values.length * 2)
+      values.foreach(set.add)
+      shipped = SparkSession.active.sparkContext.broadcast(set)
+    }
+    shipped
+  }
+
+  @transient private lazy val set: java.util.HashSet[Any] = shipped.value
+
+  /** Whether internal value `v` is held — per row, from the
+    * interpreted path and from generated code. */
+  def contains(v: Any): Boolean = set.contains(v)
+
+  /** The membership test of column `c` against this set. */
+  def member(c: Column): Column = { handle(); toColumn(InKeys(toExpr(c), this)) }
+
+  def size: Int = values.length
+
+  def free(): Unit = synchronized { if (shipped != null) shipped.destroy() }
+}
+
+/** `child IN keys` over a [[HeldKeys]] set: NULL on a NULL child, else
+  * whether the set holds it. The set lives in the expression object and
+  * generated code reaches it through `ctx.addReferenceObj` (the
+  * [[graft.functions.Bm25Score]] pattern), so a plan holds one object,
+  * never a literal per key. */
+private[graft] case class InKeys(child: Expression, keys: HeldKeys)
+    extends UnaryExpression {
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "in_keys"
+  override def toString: String = s"$child IN held(${keys.size} keys)"
+  override def sql: String = s"(${child.sql} IN held(${keys.size} keys))"
+
+  override protected def nullSafeEval(v: Any): Any = keys.contains(v)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("keys", keys, classOf[HeldKeys].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.contains($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

@@ -2449,6 +2449,15 @@ object MergeTable {
       maxDeltaFiles, allowSchemaEvolution, "applyChanges")
   }
 
+  /** [[applyChanges]] at its defaults for a caller that materialized its
+    * upsert side and validated both sides itself — the CDC sink's
+    * micro-batch, whose one bounded collect already validated them
+    * ([[KeySet.collectedChanges]]). The caller frees both. */
+  private[graft] def applyValidated(
+      spark: SparkSession, path: String, upserts: Option[DataFrame],
+      changes: KeySet.Changes): MergeStats =
+    RowLevel.validated(spark, path, upserts, changes, "applyChanges")
+
   /** MAINTENANCE RE-SCOPE (r14 verdict #2): give an UNSCOPED delta
     * manifest its suppression scope by deliberately running the base
     * key-column discovery scan the WRITE path refused to pay — large

@@ -54,6 +54,36 @@ private[sources] object RowLevel {
       keyCols: Seq[String], maxDeltaRows: Long,
       maxDeltaFiles: Int, allowEvolution: Boolean, caller: String,
       where: Option[Column] = None): MergeStats = {
+    admit(upserts, deletes, keyCols, maxDeltaRows, maxDeltaFiles)
+    // one computation across retries, materialized by the validation's
+    // pass over it rather than by a job of its own: a lazy local
+    // checkpoint stores the partitions that pass computes, and
+    // computes any it left behind once it ends
+    val u = upserts.map(_.localCheckpoint(false))
+    try {
+      val ch = KeySet.validatedChanges(u, deletes, keyCols)
+      try run(spark, path, u, ch, maxDeltaRows, maxDeltaFiles,
+        allowEvolution, caller, where)
+      finally ch.free()
+    } finally u.foreach(graft.util.Checkpoints.free)
+  }
+
+  /** [[apply]] for a caller that materialized its upsert side `u` and
+    * validated both sides itself ([[KeySet.collectedChanges]], or
+    * [[KeySet.validatedChanges]] over `u`): neither is done again. The
+    * caller frees `u` and `ch`. The CDC sink commits each micro-batch
+    * here, at the [[MergeTable]] defaults. */
+  def validated(
+      spark: SparkSession, path: String, u: Option[DataFrame],
+      ch: KeySet.Changes, caller: String): MergeStats = {
+    admit(u, ch.deletes, ch.ks.keyCols, DefaultMaxDeltaRows, DefaultMaxDeltaFiles)
+    run(spark, path, u, ch, DefaultMaxDeltaRows, DefaultMaxDeltaFiles,
+      allowEvolution = false, caller, where = None)
+  }
+
+  private def admit(
+      upserts: Option[DataFrame], deletes: Option[DataFrame],
+      keyCols: Seq[String], maxDeltaRows: Long, maxDeltaFiles: Int): Unit = {
     requireKeyCols(keyCols)
     require(maxDeltaFiles >= 1, "maxDeltaFiles must be >= 1")
     // '\r' too: Manifests.read splits lines on CR as well as LF, so a
@@ -67,15 +97,15 @@ private[sources] object RowLevel {
       s"key ${keyCols.mkString(",")} missing from updates"))
     deletes.foreach(k => require(keyCols.forall(k.columns.contains),
       s"key ${keyCols.mkString(",")} missing from keys frame"))
-    val u = upserts.map(_.localCheckpoint(true)) // one computation across retries
-    try {
-      val ch = KeySet.validatedChanges(u, deletes, keyCols)
-      try transact(spark, path, caller)(
-        once(spark, path, _, u, ch, maxDeltaRows, maxDeltaFiles,
-          allowEvolution, caller, where))
-      finally ch.deletes.foreach(graft.util.Checkpoints.free)
-    } finally u.foreach(graft.util.Checkpoints.free)
   }
+
+  private def run(
+      spark: SparkSession, path: String, u: Option[DataFrame],
+      ch: KeySet.Changes, maxDeltaRows: Long, maxDeltaFiles: Int,
+      allowEvolution: Boolean, caller: String, where: Option[Column]): MergeStats =
+    transact(spark, path, caller)(
+      once(spark, path, _, u, ch, maxDeltaRows, maxDeltaFiles,
+        allowEvolution, caller, where))
 
   /** One attempt of the fold with no upsert or delete side — a zero
     * budget, and the predicate `where` when given — against `snap`.

@@ -495,10 +495,11 @@ object IndexMaintenance {
     *    index version is unreadable) and poisons the stream by
     *    replay — full teardown is an offline rebuild, not a stream
     *    event.
-    *  - Retract ids are driver-collected and pushed as predicates in
-    *    chunks of [[RetractChunk]] (a bulk-purge backlog degrades to
-    *    more commits, never to the isin-literal analysis cliff);
-    *    still cap trigger sizes (`maxFilesPerTrigger` on the JSONL
+    *  - Retract ids are driver-collected, and each index takes them
+    *    in ONE delete and one composite version: its component purges
+    *    split at [[RetractChunk]] inside that version and its probes
+    *    test one held key set, so a bulk-purge backlog never reaches
+    *    the isin-literal analysis cliff; still cap trigger sizes (`maxFilesPerTrigger` on the JSONL
     *    path, the source's own trigger bound elsewhere). The KB
     *    delete's discovery pass scans the corpus NARROWLY (id+cluster
     *    columns only) to find touched clusters; the rewrite itself is
@@ -691,18 +692,18 @@ object IndexMaintenance {
           "index version is unreadable) — full teardown is an offline " +
           "rebuild, not a stream event")
     }
-    // chunked deletes: retract ids ride as isin literals, and past a
-    // few thousand the literal list costs more in analysis than it
-    // prunes (the measured lesson) — bound each call, not the batch
-    if (retractIds.nonEmpty)
-      retractIds.grouped(RetractChunk).foreach { chunk =>
-        lexicalPath.foreach(lp => graft.operators.LexicalIndex.delete(
-          session.spark, lp, chunk.toSeq))
-        dedupPath.foreach(dp => graft.operators.DedupIndex.delete(
-          session.spark, dp, chunk.toSeq))
-        semanticPath.foreach(sp => graft.operators.SemanticIndex.delete(
-          session.spark, sp, chunk.toSeq))
-      }
+    // ONE delete per index, so a batch publishes one composite version
+    // per index: each delete bounds its own predicates (its component
+    // purges split at RetractChunk inside that version, its probes
+    // test one held key set)
+    if (retractIds.nonEmpty) {
+      lexicalPath.foreach(lp => graft.operators.LexicalIndex.delete(
+        session.spark, lp, retractIds))
+      dedupPath.foreach(dp => graft.operators.DedupIndex.delete(
+        session.spark, dp, retractIds))
+      semanticPath.foreach(sp => graft.operators.SemanticIndex.delete(
+        session.spark, sp, retractIds))
+    }
     val one = one0.filter(col(contentCol).isNotNull)
     // admission gate BEFORE any index sees the batch: near-dups of
     // the admitted corpus (or of a smaller-id batchmate) never

@@ -289,39 +289,58 @@ object JobProcessor {
   /** One micro-batch of [[runChangesToMergeTable]]: reconcile the
     * batch's ops per key, then commit the winners — upserts and
     * deletes together — as one row-level change. An empty batch
-    * commits nothing. */
+    * commits nothing.
+    *
+    * The winners are materialized ONCE, as a lazy local checkpoint
+    * whose first pass is one bounded collect of (key, route): it
+    * routes the batch, refuses a NULL op, shows an empty batch and
+    * validates both key sides on the driver ([[graft.sources.KeySet
+    * .routed]]). The writer reads the upsert side from that checkpoint
+    * and takes the validated sides as they are — past the literal
+    * budget as one held key set — so it neither re-materializes nor
+    * re-validates them. Keys that cannot be held on the driver
+    * (several key columns, an unstable key type, a batch past
+    * [[graft.sources.KeySet.HeldLimit]]) take one routing aggregate
+    * and the writer's own validation instead. */
   private[graft] def applyCdcBatch(
       spark: SparkSession, batch: DataFrame, tablePath: String,
       keyCols: Seq[String], seqCol: String, opCol: String,
       deleteValue: String): Unit = {
     val MT = graft.sources.MergeTable
+    val KS = graft.sources.KeySet
     // deterministic winner under replay (the mergeResponsesBatch
     // rationale): seq first, content fingerprint breaking exact ties
     val contentTie = xxhash64(
       to_json(struct(batch.columns.map(col): _*))).asc
     val winners = graft.operators.Dedup.firstWins(
-      batch, keyCols, Seq(col(seqCol).desc, contentTie)).persist()
+      batch, keyCols, Seq(col(seqCol).desc, contentTie)).localCheckpoint(false)
     try {
-      // ONE aggregate over the persisted winners routes the batch and
-      // shows an empty one (the KeySet.validated aggregate, micro-batch
-      // form), in a single task so it plans no exchange: a NULL op
-      // matches NEITHER route filter below — the row would vanish
-      // silently — so it is refused loudly like the NULL-key contract.
-      val routed = winners.coalesce(1).select(
-        count(when(col(opCol).isNull, lit(1))).as("nNullOp"),
-        count(when(col(opCol) =!= deleteValue, lit(1))).as("nUps"),
-        count(when(col(opCol) === deleteValue, lit(1))).as("nDels")).head()
-      require(routed.getLong(0) == 0L,
-        s"batch contains NULL in op column '$opCol'; every CDC op must " +
-          s"be an upsert marker or '$deleteValue'")
-      val ups = Option.when(routed.getLong(1) > 0)(
-        winners.filter(col(opCol) =!= deleteValue).drop(opCol))
-      val dels = Option.when(routed.getLong(2) > 0)(
-        winners.filter(col(opCol) === deleteValue).select(keyCols.map(col): _*))
+      val upsert = col(opCol) =!= deleteValue
+      // a NULL op matches NEITHER route — the row would vanish
+      // silently — so it is refused loudly like the NULL-key contract
+      val noRoute = s"batch contains NULL in op column '$opCol'; every CDC op must " +
+        s"be an upsert marker or '$deleteValue'"
+      val sides = KS.routed(winners, keyCols, upsert, noRoute)
+      // the frame path: ONE aggregate in a single task (no exchange)
+      val (nU, nD) = sides.fold {
+        val r = winners.coalesce(1).select(
+          count(when(col(opCol).isNull, lit(1))),
+          count(when(upsert, lit(1))), count(when(!upsert, lit(1)))).head()
+        require(r.getLong(0) == 0L, noRoute)
+        (r.getLong(1), r.getLong(2))
+      } { case (u, d) => (u.size.toLong, d.size.toLong) }
+      val ups = Option.when(nU > 0)(winners.filter(upsert).drop(opCol))
       def commit(): Unit = {
-        MT.applyChanges(spark, tablePath, ups, dels, keyCols); ()
+        val ch = sides match {
+          case Some((u, d)) => KS.collectedChanges(keyCols.head,
+            winners.schema(keyCols.head).dataType, u, d, hasDeletes = d.nonEmpty)
+          case None => KS.validatedChanges(ups, Option.when(nD > 0)(
+            winners.filter(!upsert).select(keyCols.map(col): _*)), keyCols)
+        }
+        try { MT.applyValidated(spark, tablePath, ups, ch); () }
+        finally ch.free()
       }
-      if (ups.isEmpty && dels.isEmpty) () // an empty batch commits nothing
+      if (nU == 0 && nD == 0) () // an empty batch commits nothing
       else if (MT.exists(spark, tablePath)) commit()
       else ups.foreach { u =>
         // the first batch creates the table from its upserts alone: its
@@ -332,7 +351,8 @@ object JobProcessor {
         // here (the mergeResponsesBatch rationale) — and a lost
         // exists→init race commits the whole batch instead, per the
         // OCC contract.
-        require(u.filter(keyCols.map(col(_).isNull).reduce(_ || _)).isEmpty,
+        require(sides.fold(u.filter(keyCols.map(col(_).isNull).reduce(_ || _)).isEmpty)(
+            !_._1.contains(null)),
           s"batch contains NULL in key (${keyCols.mkString(",")}); " +
             "merge-table keys must be non-null")
         try { MT.init(spark, tablePath, u, bloomKeys = keyCols); () }
@@ -341,7 +361,7 @@ object JobProcessor {
                _: org.apache.hadoop.fs.FileAlreadyExistsException => commit()
         }
       }
-    } finally winners.unpersist()
+    } finally graft.util.Checkpoints.free(winners)
   }
 
   /** Run to a parquet `job_responses` sink with checkpointing; the

@@ -531,6 +531,69 @@ class IndexMaintenanceSpec extends SparkSpec {
     } finally graft.plans.IvfIndex.unregister(spark, "embedding")
   }
 
+  test("a batch of RetractChunk + 1 retractions publishes one composite version per index, with the chunked deletes' rows") {
+    import graft.operators.{DedupIndex, LexicalIndex, SemanticIndex}
+    import graft.sources.CompositeIndex
+    val emb = HashEmbedder(16)
+    val g = GraftSession(spark, emb)
+    val docs = emb.embedColumn((1L to 30L).map(i =>
+      (i, s"document number $i about topic${i % 5} and w${i * 7 % 13}")).toDF("id", "content"),
+      "content", "embedding")
+    g.loadKnowledgeBase(docs)
+    val base = java.nio.file.Files.createTempDirectory("idx_maint_bulk").toString
+    g.indexKnowledge(s"$base/kb", nClusters = 1, nprobe = 1)
+    val cents = {
+      val rows = graft.operators.SimilaritySearch.kmeansCentroids(
+        docs, "id", "embedding", k = 2, iters = 3).collect()
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        rows.head.schema)
+    }
+    val components = Map(
+      "lex" -> Seq("postings", "doclens", "termdf"),
+      "dup" -> Seq("bands", "shingles", "params"),
+      "sem" -> Seq("vectors", "centroids"))
+    val layouts = Seq("lex" -> "LexicalIndex", "dup" -> "DedupIndex", "sem" -> "SemanticIndex")
+      .map { case (n, label) => n -> new CompositeIndex(label, components(n)) }
+    def build(dir: String): Unit = {
+      LexicalIndex.build(spark, s"$dir/lex", docs, "id", "content")
+      DedupIndex.build(spark, s"$dir/dup", docs, "id", "content")
+      SemanticIndex.build(spark, s"$dir/sem", docs, "id", "embedding", cents)
+    }
+    def versions(dir: String): Map[String, Long] =
+      layouts.map { case (n, ci) => n -> ci.pin(spark, s"$dir/$n").version }.toMap
+    def rows(dir: String): Map[String, Seq[String]] = layouts.flatMap { case (n, ci) =>
+      val p = ci.pin(spark, s"$dir/$n")
+      components(n).map(c => s"$n/$c" -> ci.readAt(spark, s"$dir/$n", p, c)
+        .collect().map(_.toString).toSeq.sorted)
+    }.toMap
+    val (one, chunked) = (s"$base/one", s"$base/chunked")
+    build(one); build(chunked)
+    // ten present ids among absent ones, one present id in the last chunk
+    val present = (1L to 10L).toSeq
+    val ids = present.init ++
+      (1 to graft.util.Pushdown.RetractChunk + 1 - present.size).map(i => 100000L + i) :+
+      present.last
+    try {
+      val before = versions(one)
+      IndexMaintenance.applyBatch(g,
+        ids.map(i => (i, null.asInstanceOf[String])).toDF("id", "content"),
+        versionCol = None, lexicalPath = Some(s"$one/lex"),
+        dedupPath = Some(s"$one/dup"), semanticPath = Some(s"$one/sem"))
+      assert(versions(one) === before.map { case (n, v) => n -> (v + 1) },
+        "one composite version per index")
+      assert(g.knowledgeBase.select("id").collect().map(_.getLong(0)).toSet ===
+        (11L to 30L).toSet)
+      // the deletes as they ran chunk by chunk
+      ids.grouped(graft.util.Pushdown.RetractChunk).foreach { chunk =>
+        LexicalIndex.delete(spark, s"$chunked/lex", chunk)
+        DedupIndex.delete(spark, s"$chunked/dup", chunk)
+        SemanticIndex.delete(spark, s"$chunked/sem", chunk)
+      }
+      val (got, want) = (rows(one), rows(chunked))
+      want.keys.foreach(c => assert(got(c) === want(c), s"component $c rows"))
+    } finally graft.plans.IvfIndex.unregister(spark, "embedding")
+  }
+
   test("syncFromTable: the change feed drives offline index catch-up, retractions included") {
     val emb = HashEmbedder(16)
     val g = GraftSession(spark, emb)

@@ -11,7 +11,9 @@ import graft.sources.KeySet
   * the writers and the read path use — including NULL-keyed rows in
   * the probed frame, an empty key set, and keys absent from the table.
   * The frame form is also forced past the literal budget, so its
-  * range + broadcast semi-join discovery is the one compared. */
+  * range + broadcast semi-join discovery is the one compared. Past the
+  * budget the same battery compares the held form with the frame form
+  * the test seam forces, at 1,001 and 5,000 keys. */
 class KeySetSpec extends SparkSpec {
 
   /** Each admitted key type as an expression over a row number `i`. */
@@ -129,5 +131,89 @@ class KeySetSpec extends SparkSpec {
     val pairs = Seq((1L, "a"), (2L, "b")).toDF("k", "j")
     val ks = KeySet.validated(pairs, Seq("k", "j"))
     assert(!ks.isInstanceOf[KeySet.Literals] && ks.size === 2L)
+  }
+
+  /** The key types with more than 5,000 distinct values, each as an
+    * expression that stays distinct over row numbers 0..10,000 (byte
+    * and boolean keys cannot pass the literal budget). */
+  private val wideKeyTypes: Seq[(String, Column => Column)] =
+    keyTypes.filterNot { case (n, _) => n == "byte" || n == "boolean" }.map {
+      case ("short", _) => "short" -> ((i: Column) => i.cast("short"))
+      case other => other
+    }
+
+  /** Every operation agrees between the held and the frame form. */
+  private def assertSameHeld(label: String, h: KeySet, f: KeySet, d: DataFrame): Unit = {
+    assertSame(label, h, f, d)
+    assert(rows(h.keys) === rows(f.keys), s"$label: keys")
+    val (a, b) = (h.union(f), f.union(h))
+    assert(rows(a.anti(d)) === rows(b.anti(d)), s"$label: union")
+  }
+
+  for ((name, key) <- wideKeyTypes; n <- Seq(1001, 5000))
+    test(f"Held and Frame agree on $n%,d $name keys") {
+      val d = table(key)
+      // every other row number: rows 0, 2, .., 38 of the table are hit
+      val ids = (0 until 2 * n by 2)
+      val h = KeySet.validated(keyFrame(key, ids), Seq("k"))
+      val f = KeySet.framesOnlyForTest(KeySet.validated(keyFrame(key, ids), Seq("k")))
+      try {
+        assert(h.isInstanceOf[KeySet.Held], s"$name keys past the budget must be held")
+        assert(f.isInstanceOf[KeySet.Frame], "the seam must force the frame form")
+        assert(h.size === n.toLong && f.size === n.toLong)
+        assertSameHeld(s"$n $name keys", h, f, d)
+        assert(h.overlap(d) === ((43L, 20L)), s"$name: twenty keys are present")
+        assert(h.touchedFiles(d).nonEmpty)
+      } finally h.free()
+    }
+
+  test("past the budget, the held form refuses what the frame form refuses") {
+    import spark.implicits._
+    def refused(what: String)(body: => Any): Unit = {
+      val held = intercept[IllegalArgumentException](body).getMessage
+      val framed = intercept[IllegalArgumentException](
+        KeySet.framesOnlyForTest(body)).getMessage
+      assert(held.contains(what), s"expected '$what' in: $held")
+      assert(framed.contains(what), s"expected '$what' in: $framed")
+    }
+    val ups = (1L to 1500L).map(i => (Option(i), s"v$i"))
+    def u(rows: Seq[(Option[Long], String)]) = rows.toDF("k", "v")
+    def keys(ids: Seq[Option[Long]]) = ids.toDF("k")
+    refused("updates contain NULL")(KeySet.validatedChanges(
+      Some(u(ups :+ ((None, "x")))), None, Seq("k")))
+    refused("keys contain NULL")(KeySet.validatedChanges(
+      Some(u(ups)), Some(keys((2001L to 3500L).map(Option(_)) :+ None)), Seq("k")))
+    refused("must be unique")(KeySet.validatedChanges(
+      Some(u(ups :+ ((Some(7L), "again")))), None, Seq("k")))
+    refused("both upserted and deleted")(KeySet.validatedChanges(
+      Some(u(ups)), Some(keys(Seq(Some(1499L)))), Seq("k")))
+    // a CDC batch past the budget with one op that routes nowhere
+    import graft.streaming.{CdcOp, JobProcessor}
+    val path = java.nio.file.Files.createTempDirectory("keyset_cdc").toString + "/t"
+    graft.sources.MergeTable.init(spark, path,
+      Seq(CdcOp("k0", 1L, "U", "p")).toDF().drop("op"), bloomKeys = Seq("key"))
+    val batch = ((1 to 1500).map(i => CdcOp(s"k$i", 2L, "U", s"p$i")) :+
+      CdcOp("k9999", 2L, null, "p")).toDF()
+    refused("NULL in op column")(JobProcessor.applyCdcBatch(
+      spark, batch, path, Seq("key"), "seq", "op", "D"))
+    assert(graft.sources.MergeTable.read(spark, path).count() === 1L)
+  }
+
+  test("past the budget, a row-level call writes the same rows held as framed") {
+    import spark.implicits._
+    import graft.sources.MergeTable
+    def run(): Seq[String] = {
+      val path = java.nio.file.Files.createTempDirectory("keyset_rl").toString + "/t"
+      MergeTable.init(spark, path, (1L to 3000L).map(i => (i, s"base$i")).toDF("k", "v"))
+      MergeTable.mergeLite(spark, path, (1L to 100L).map(i => (i, s"d$i")).toDF("k", "v"), Seq("k"))
+      MergeTable.applyChanges(spark, path,
+        Some((1001L to 2500L).map(i => (i, s"u$i")).toDF("k", "v")),
+        Some((51L to 650L).toDF("k")), Seq("k"))
+      MergeTable.merge(spark, path, (2001L to 3600L).map(i => (i, s"m$i")).toDF("k", "v"), Seq("k"))
+      rows(MergeTable.read(spark, path))
+    }
+    val held = run()
+    assert(held.size === 3600 - 600)
+    assert(held === KeySet.framesOnlyForTest(run()))
   }
 }

@@ -305,6 +305,57 @@ class LexicalIndexSpec extends SparkSpec {
       === Lexical.bm25TopKMany(survivors, "doc_id", "text", queries, 40).map(ranking))
   }
 
+  test("upsert and delete past the literal budget probe the pinned postings with one membership expression") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    /** The optimized plans of the df probes `body` ran: the
+      * aggregates of the dying postings' counts (`__old`). */
+    def probes(body: => Unit): Seq[LogicalPlan] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+      val l = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.optimizedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try { body; org.apache.spark.JobCountBus.drain(spark.sparkContext) }
+      finally spark.listenerManager.unregister(l)
+      import scala.jdk.CollectionConverters._
+      plans.asScala.toSeq.filter(_.exists {
+        case a: Aggregate => a.aggregateExpressions.exists(_.name == "__old")
+        case _ => false
+      })
+    }
+    def oneMembership(what: String, ps: Seq[LogicalPlan]): Unit = {
+      assert(ps.nonEmpty, s"$what: no df probe ran")
+      ps.foreach { p =>
+        val es = p.flatMap(_.expressions).flatMap(_.collect { case e => e })
+        assert(es.exists(_.isInstanceOf[graft.sources.InKeys]),
+          s"$what: the probe plans no held membership test")
+        assert(!es.exists { case _: In | _: InSet => true; case _ => false },
+          s"$what: the probe plans a literal list")
+      }
+    }
+    val docs = corpus(23, 40).toDF("doc_id", "text")
+    val path = freshPath()
+    LexicalIndex.build(spark, path, docs, "doc_id", "text")
+    // 1,200 docs: 20 replace indexed ones, the rest are new
+    val batch = corpus(29, 1220).drop(20).toDF("doc_id", "text")
+    oneMembership("upsert of 1,200 ids", probes(
+      LexicalIndex.upsert(spark, path, batch, "doc_id", "text")))
+    val live = docs.filter(col("doc_id") <= 20L).unionByName(batch)
+    val dead = (1L to 5001L).filter(_ % 3 == 0)
+    val ids = dead ++ (100001L to (100001L + 5001 - dead.size - 1))
+    assert(ids.size === 5001)
+    oneMembership("delete of 5,001 ids", probes(LexicalIndex.delete(spark, path, ids)))
+    val survivors = live.filter(!col("doc_id").isin(dead: _*))
+    val queries = Seq(Seq("w0", "w3", "w11"), Seq("w5", "w9"))
+    assert(LexicalIndex.bm25TopKMany(spark, path, "doc_id", queries, 40).map(ranking)
+      === Lexical.bm25TopKMany(survivors, "doc_id", "text", queries, 40).map(ranking))
+  }
+
   test("delete drops dead dictionary terms and leaves absent ids as unpublished no-ops") {
     val path = freshPath()
     LexicalIndex.build(spark, path, Seq(
