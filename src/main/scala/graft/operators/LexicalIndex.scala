@@ -200,17 +200,15 @@ object LexicalIndex {
         // old-side probe reads only (term, id) of the id-matched rows —
         // one membership test however many ids —; the touched term set
         // is bounded by the batch's vocabulary.
-        val delta = KeySet.withMembers(
-            CI.readAt(spark, path, p0, "postings"), "id", idSeq) { old =>
-          val oldCounts = old.groupBy(col("term")).agg(count(lit(1)).as("__old"))
-          val newCounts = postings.get.groupBy(col("term")).agg(count(lit(1)).as("__new"))
-          newCounts.join(oldCounts, Seq("term"), "full_outer")
-            .select(col("term"),
-              (coalesce(col("__new"), lit(0L)) - coalesce(col("__old"), lit(0L)))
-                .as("__delta"))
-            .filter(col("__delta") =!= 0)
-            .localCheckpoint(true) // read twice: the affected terms and dfUpdates
-        }
+        val oldCounts = KeySet.members(CI.readAt(spark, path, p0, "postings"), "id", idSeq)
+          .groupBy(col("term")).agg(count(lit(1)).as("__old"))
+        val newCounts = postings.get.groupBy(col("term")).agg(count(lit(1)).as("__new"))
+        val delta = newCounts.join(oldCounts, Seq("term"), "full_outer")
+          .select(col("term"),
+            (coalesce(col("__new"), lit(0L)) - coalesce(col("__old"), lit(0L)))
+              .as("__delta"))
+          .filter(col("__delta") =!= 0)
+          .localCheckpoint(true) // read twice: the affected terms and dfUpdates
         try {
           val affected = delta.select(col("term"))
           val current = CI.readAt(spark, path, p0, "termdf")
@@ -258,9 +256,9 @@ object LexicalIndex {
       // the dying docs' per-term posting counts, from the PIN — read
       // again after the deletes start, so it must not be a live view;
       // one membership test however many ids
-      val oldCounts = KeySet.withMembers(
-          CI.readAt(spark, path, p0, "postings"), "id", ids)(
-        _.groupBy(col("term")).agg(count(lit(1)).as("__old")).localCheckpoint(true))
+      val oldCounts = KeySet.members(CI.readAt(spark, path, p0, "postings"), "id", ids)
+        .groupBy(col("term")).agg(count(lit(1)).as("__old"))
+        .localCheckpoint(true)
       try {
         val dfNew = CI.readAt(spark, path, p0, "termdf")
           .join(oldCounts, Seq("term"))

@@ -1,9 +1,7 @@
 package graft.sources
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,15 +25,14 @@ import graft.functions.ExprBridge.{toColumn, toExpr}
   *    within [[KeySet.HeldLimit]], its values already on the driver
   *    because the batch's one bounded validation collect brought them
   *    there. The values are held as ONE object — a hash set of
-  *    Catalyst-internal values, shipped to tasks as one broadcast
-  *    variable the first time a consumer needs it — and every consumer
-  *    tests against it with one codegen'd membership expression
-  *    ([[InKeys]]), never a list of literals: validation, the overlap
-  *    probe, both anti-joins and discovery launch no key-collect or
-  *    broadcast-build job. Discovery adds the set's [min, max] as a
-  *    pushed range, and [[ManifestFileIndex]] prunes files on the set
-  *    itself. The owner frees the broadcast ([[KeySet.free]]) when
-  *    its call ends.
+  *    Catalyst-internal values in one `InSet` expression, which
+  *    generated code reaches through `ctx.addReferenceObj` (the
+  *    [[graft.functions.Bm25Score]] pattern) — never a list of
+  *    literals for the analyzer to walk: validation, the overlap probe,
+  *    both anti-joins and discovery launch no key-collect or
+  *    broadcast-build job. The parquet reader takes the `InSet` as a
+  *    pushed [min, max] range and [[ManifestFileIndex]] prunes files on
+  *    it, as on the `InSet` Catalyst makes of a long `In` list.
   *  - [[KeySet.Frame]]: every other set — multi-column, an unstable key
   *    type (binary: reference equality; float/double: NaN equality
   *    differs between Seq.distinct and SQL), or past the held limit —
@@ -51,7 +48,7 @@ import graft.functions.ExprBridge.{toColumn, toExpr}
   * (KeySetSpec pins it per key type), so each consumer makes ONE call
   * and never branches on the form. The NULL argument that makes them
   * agree: a join never matches a NULL key, so an anti-join KEEPS
-  * NULL-keyed rows and a semi-join drops them; `isin` and [[InKeys]]
+  * NULL-keyed rows and a semi-join drops them; `isin` and `InSet`
   * evaluate NULL on a NULL key, so the literal and held anti-joins add
   * an explicit `isNull` guard and their semi-joins need none. */
 private[graft] sealed trait KeySet {
@@ -104,10 +101,6 @@ private[graft] sealed trait KeySet {
 
   /** `d` minus the rows whose key is in the set; NULL-keyed rows stay. */
   def anti(d: DataFrame): DataFrame
-
-  /** Releases what the set holds outside the plan — a held set's
-    * broadcast variable. The set must not be used afterwards. */
-  def free(): Unit = ()
 
   /** Whether any row of `d` carries a key of the set — the OCC rebase
     * probes over the files a winner added (stops at the first hit). */
@@ -189,8 +182,11 @@ private[graft] object KeySet {
 
   /** The most keys per side one bounded validation collect brings to
     * the driver, and so the largest [[Held]] side: past it a batch's
-    * keys stay a [[Frame]]. */
-  val HeldLimit = 100000
+    * keys stay a [[Frame]], after a discarded collect of at most this
+    * many keys plus one. It is the largest held set KeySetSpec checks
+    * against the frame form; the ingest workload's large commits
+    * (3,000 ops) fit it. */
+  val HeldLimit = 5000
 
   /** Test seam (true in production): false holds every set past the
     * literal budget to the [[Frame]] form, as if [[HeldLimit]] were the
@@ -216,24 +212,27 @@ private[graft] object KeySet {
     * [[framesOnlyForTest]]). */
   private def onDriver(keyCol: String, keyType: DataType, values: Seq[Any]): KeySet =
     if (values.size <= DiscoveryInLimit) Literals(keyCol, keyType, values)
-    else if (heldForm.value)
-      Held(keyCol, keyType, values, new HeldKeys(keyType, values))
+    else if (heldForm.value) Held(keyCol, keyType, values)
     else Frame(localKeys(keyCol, keyType, values), Seq(keyCol), values.size.toLong)
 
-  /** `d`'s rows whose `keyCol` is among the driver-side `values`, handed
-    * to `body` while the set lives: one `In` within the literal budget,
-    * one [[InKeys]] expression past it for a stable key type — never a
-    * list of thousands of literals — and `isin` otherwise. Values are
-    * cast to the column's type. */
-  private[graft] def withMembers[A](d: DataFrame, keyCol: String, values: Seq[Any])(
-      body: DataFrame => A): A = {
+  /** `values` as the Catalyst-internal hash set of an `InSet` over a
+    * `t` column (`UTF8String` for strings), each cast to `t` on the
+    * driver — exact for values collected from a `t` column. */
+  private def internalSet(t: DataType, values: Seq[Any]): Set[Any] = {
+    val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+    values.iterator.map(v => Cast(Literal(v), t, tz).eval()).toSet
+  }
+
+  /** `d`'s rows whose `keyCol` is among the driver-side `values`: one
+    * `InSet` past the literal budget when every value is of the
+    * column's stable type — never a list of thousands of literals for
+    * the analyzer to walk — and `isin` otherwise. */
+  private[graft] def members(d: DataFrame, keyCol: String, values: Seq[Any]): DataFrame = {
     val t = d.schema(keyCol).dataType
-    if (values.size <= DiscoveryInLimit || !litStableKeyType(t) || values.contains(null))
-      body(d.filter(col(keyCol).isin(values: _*)))
-    else {
-      val held = new HeldKeys(t, values)
-      try body(d.filter(held.member(col(keyCol)))) finally held.free()
-    }
+    if (values.size <= DiscoveryInLimit || !litStableKeyType(t) ||
+        values.exists(v => v == null || Literal(v).dataType != t))
+      d.filter(col(keyCol).isin(values: _*))
+    else d.filter(toColumn(InSet(toExpr(col(keyCol)), internalSet(t, values))))
   }
 
   /** One stable-typed key column's COMPLETE distinct values. The
@@ -256,29 +255,30 @@ private[graft] object KeySet {
   }
 
   /** One stable-typed key column's complete distinct values past the
-    * literal budget, held as ONE [[HeldKeys]] object that every
-    * consumer tests through the [[InKeys]] membership expression.
-    * `values` are the collected (external) values; [[rebound]] copies
-    * share the one holder, and [[free]] releases it. */
-  final case class Held(keyCol: String, keyType: DataType, values: Seq[Any],
-      held: HeldKeys) extends KeySet {
+    * literal budget (the collected, external values), tested as ONE
+    * `InSet` of their internal values. */
+  final case class Held(keyCol: String, keyType: DataType, values: Seq[Any])
+      extends KeySet {
     def keyCols: Seq[String] = Seq(keyCol)
     def size: Long = values.size.toLong
     def rebound(u: DataFrame, keyCols: Seq[String]): KeySet =
       copy(keyCol = keyCols.head)
     def keys: DataFrame = localKeys(keyCol, keyType, values)
-    private def in = held.member(col(keyCol))
-    protected def withHit(d: DataFrame): (DataFrame, Column) = (d, in)
-    def anti(d: DataFrame): DataFrame = d.filter(col(keyCol).isNull || !in)
-    def hitsAny(d: DataFrame): Boolean = d.filter(in).limit(1).count() > 0
-    // the [min, max] range pushes to the parquet footers as the frame
-    // form's does, with no job to find it; the membership test is exact
-    def discoveryFrame(base: DataFrame): DataFrame = {
-      val (lo, hi) = held.bounds
-      base.filter(col(keyCol) >= lo && col(keyCol) <= hi && in)
-        .select(input_file_name().as("__file")).distinct()
+    private lazy val set = internalSet(keyType, values)
+    /** The membership test of `d`'s key column. A column of another
+      * type — a key widened by schema evolution, whose int values
+      * never equal a long set's — takes `isin`, which the analyzer
+      * coerces to a common type as it does the literal form's. */
+    private def in(d: DataFrame): Column = {
+      val k = col(keyCol)
+      if (d.select(k).schema.head.dataType == keyType) toColumn(InSet(toExpr(k), set))
+      else k.isin(values: _*)
     }
-    override def free(): Unit = held.free()
+    protected def withHit(d: DataFrame): (DataFrame, Column) = (d, in(d))
+    def anti(d: DataFrame): DataFrame = d.filter(col(keyCol).isNull || !in(d))
+    def hitsAny(d: DataFrame): Boolean = d.filter(in(d)).limit(1).count() > 0
+    def discoveryFrame(base: DataFrame): DataFrame =
+      base.filter(in(base)).select(input_file_name().as("__file")).distinct()
   }
 
   /** A key frame: `df` projects to `keyCols` (extra columns are
@@ -355,15 +355,10 @@ private[graft] object KeySet {
   /** The validated sides of one row-level call: `ks` is the union of
     * both key sets, `nU`/`nD` count each side's keys, and `deletes` is
     * the delete side as a distinct key frame — driver-local when its
-    * keys were collected, else a checkpoint. [[free]] releases both;
-    * the owner calls it when the call ends. */
+    * keys were collected, else a checkpoint the owner frees when the
+    * call ends. */
   final case class Changes(
-      ks: KeySet, nU: Long, nD: Long, deletes: Option[DataFrame]) {
-    def free(): Unit = {
-      deletes.foreach(graft.util.Checkpoints.free)
-      ks.free()
-    }
-  }
+      ks: KeySet, nU: Long, nD: Long, deletes: Option[DataFrame])
 
   /** The refusals of one row-level call over `keyCols`. */
   private final class Refusals(keyCols: Seq[String]) {
@@ -542,74 +537,4 @@ private[graft] object KeySet {
          StringType => true
     case _ => false
   }
-}
-
-/** A held key set's values ([[KeySet.Held]]): Catalyst-internal values
-  * (`UTF8String` for strings), cast to `keyType` on the driver, in one
-  * hash set. Tasks reach it through ONE broadcast variable, made the
-  * first time a consumer plans a membership test, so each executor
-  * fetches the set once and a query serializes only the handle; the
-  * driver keeps the values for the planner (bounds, file pruning).
-  * [[free]] destroys the broadcast. */
-private[graft] final class HeldKeys(val keyType: DataType, external: Seq[Any])
-    extends Serializable {
-
-  /** The internal values, driver-side only (not serialized). */
-  @transient val values: Array[Any] = {
-    val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
-    external.map(v => Cast(Literal(v), keyType, tz).eval()).toArray
-  }
-
-  /** (min, max) of the values as literals of `keyType`. */
-  @transient lazy val bounds: (Column, Column) = {
-    val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(keyType)
-    (toColumn(Literal(values.min(ord), keyType)), toColumn(Literal(values.max(ord), keyType)))
-  }
-
-  private var shipped: Broadcast[java.util.HashSet[Any]] = _
-
-  private def handle(): Broadcast[java.util.HashSet[Any]] = synchronized {
-    if (shipped == null) {
-      val set = new java.util.HashSet[Any](values.length * 2)
-      values.foreach(set.add)
-      shipped = SparkSession.active.sparkContext.broadcast(set)
-    }
-    shipped
-  }
-
-  @transient private lazy val set: java.util.HashSet[Any] = shipped.value
-
-  /** Whether internal value `v` is held — per row, from the
-    * interpreted path and from generated code. */
-  def contains(v: Any): Boolean = set.contains(v)
-
-  /** The membership test of column `c` against this set. */
-  def member(c: Column): Column = { handle(); toColumn(InKeys(toExpr(c), this)) }
-
-  def size: Int = values.length
-
-  def free(): Unit = synchronized { if (shipped != null) shipped.destroy() }
-}
-
-/** `child IN keys` over a [[HeldKeys]] set: NULL on a NULL child, else
-  * whether the set holds it. The set lives in the expression object and
-  * generated code reaches it through `ctx.addReferenceObj` (the
-  * [[graft.functions.Bm25Score]] pattern), so a plan holds one object,
-  * never a literal per key. */
-private[graft] case class InKeys(child: Expression, keys: HeldKeys)
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "in_keys"
-  override def toString: String = s"$child IN held(${keys.size} keys)"
-  override def sql: String = s"(${child.sql} IN held(${keys.size} keys))"
-
-  override protected def nullSafeEval(v: Any): Any = keys.contains(v)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("keys", keys, classOf[HeldKeys].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.contains($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

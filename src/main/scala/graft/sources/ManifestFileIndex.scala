@@ -173,14 +173,6 @@ private[graft] object ManifestFileIndex {
           val vs = qs.flatten.toArray
           Some((lo, hi) => vs.forall(q => q < lo || q > hi))
         } else None
-      // a held key set (KeySet.Held): the same internal values, one
-      // object
-      case InKeys(a, keys) if isCol(a) && keys.size > 0 =>
-        val qs = keys.values.toSeq.map(v)
-        if (qs.forall(_.isDefined)) {
-          val vs = qs.flatten.toArray
-          Some((lo, hi) => vs.forall(q => q < lo || q > hi))
-        } else None
       case And(l, r) =>
         (rangeExcluder(colName, l, caseSensitive),
          rangeExcluder(colName, r, caseSensitive)) match {
@@ -259,12 +251,6 @@ private[graft] object ManifestFileIndex {
       // in In.
       case InSet(a, hset) if isCol(a) && hset.nonEmpty =>
         val qs = hset.toSeq.map(v)
-        if (qs.forall(_.isDefined)) {
-          val vs = qs.flatten.toArray
-          Some((lo, hi) => vs.forall { case (qLo, qHi) => qHi < lo || qLo > hi })
-        } else None
-      case InKeys(a, keys) if isCol(a) && keys.size > 0 =>
-        val qs = keys.values.toSeq.map(v)
         if (qs.forall(_.isDefined)) {
           val vs = qs.flatten.toArray
           Some((lo, hi) => vs.forall { case (qLo, qHi) => qHi < lo || qLo > hi })

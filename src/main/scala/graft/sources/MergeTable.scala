@@ -2452,7 +2452,8 @@ object MergeTable {
   /** [[applyChanges]] at its defaults for a caller that materialized its
     * upsert side and validated both sides itself — the CDC sink's
     * micro-batch, whose one bounded collect already validated them
-    * ([[KeySet.collectedChanges]]). The caller frees both. */
+    * ([[KeySet.collectedChanges]]). The caller frees `upserts` and
+    * `changes.deletes`. */
   private[graft] def applyValidated(
       spark: SparkSession, path: String, upserts: Option[DataFrame],
       changes: KeySet.Changes): MergeStats =

@@ -55,23 +55,19 @@ private[sources] object RowLevel {
       maxDeltaFiles: Int, allowEvolution: Boolean, caller: String,
       where: Option[Column] = None): MergeStats = {
     admit(upserts, deletes, keyCols, maxDeltaRows, maxDeltaFiles)
-    // one computation across retries, materialized by the validation's
-    // pass over it rather than by a job of its own: a lazy local
-    // checkpoint stores the partitions that pass computes, and
-    // computes any it left behind once it ends
-    val u = upserts.map(_.localCheckpoint(false))
+    val u = upserts.map(_.localCheckpoint(true)) // one computation across retries
     try {
       val ch = KeySet.validatedChanges(u, deletes, keyCols)
       try run(spark, path, u, ch, maxDeltaRows, maxDeltaFiles,
         allowEvolution, caller, where)
-      finally ch.free()
+      finally ch.deletes.foreach(graft.util.Checkpoints.free)
     } finally u.foreach(graft.util.Checkpoints.free)
   }
 
   /** [[apply]] for a caller that materialized its upsert side `u` and
     * validated both sides itself ([[KeySet.collectedChanges]], or
     * [[KeySet.validatedChanges]] over `u`): neither is done again. The
-    * caller frees `u` and `ch`. The CDC sink commits each micro-batch
+    * caller frees `u` and `ch.deletes`. The CDC sink commits each micro-batch
     * here, at the [[MergeTable]] defaults. */
   def validated(
       spark: SparkSession, path: String, u: Option[DataFrame],

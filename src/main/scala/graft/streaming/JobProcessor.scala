@@ -338,7 +338,7 @@ object JobProcessor {
             winners.filter(!upsert).select(keyCols.map(col): _*)), keyCols)
         }
         try { MT.applyValidated(spark, tablePath, ups, ch); () }
-        finally ch.free()
+        finally ch.deletes.foreach(graft.util.Checkpoints.free)
       }
       if (nU == 0 && nD == 0) () // an empty batch commits nothing
       else if (MT.exists(spark, tablePath)) commit()

@@ -157,14 +157,12 @@ class KeySetSpec extends SparkSpec {
       val ids = (0 until 2 * n by 2)
       val h = KeySet.validated(keyFrame(key, ids), Seq("k"))
       val f = KeySet.framesOnlyForTest(KeySet.validated(keyFrame(key, ids), Seq("k")))
-      try {
-        assert(h.isInstanceOf[KeySet.Held], s"$name keys past the budget must be held")
-        assert(f.isInstanceOf[KeySet.Frame], "the seam must force the frame form")
-        assert(h.size === n.toLong && f.size === n.toLong)
-        assertSameHeld(s"$n $name keys", h, f, d)
-        assert(h.overlap(d) === ((43L, 20L)), s"$name: twenty keys are present")
-        assert(h.touchedFiles(d).nonEmpty)
-      } finally h.free()
+      assert(h.isInstanceOf[KeySet.Held], s"$name keys past the budget must be held")
+      assert(f.isInstanceOf[KeySet.Frame], "the seam must force the frame form")
+      assert(h.size === n.toLong && f.size === n.toLong)
+      assertSameHeld(s"$n $name keys", h, f, d)
+      assert(h.overlap(d) === ((43L, 20L)), s"$name: twenty keys are present")
+      assert(h.touchedFiles(d).nonEmpty)
     }
 
   test("past the budget, the held form refuses what the frame form refuses") {
@@ -215,5 +213,27 @@ class KeySetSpec extends SparkSpec {
     val held = run()
     assert(held.size === 3600 - 600)
     assert(held === KeySet.framesOnlyForTest(run()))
+  }
+
+  test("past the budget, a key widened from int to long over a delta and tombstones writes the same rows held as framed") {
+    import spark.implicits._
+    import graft.sources.MergeTable
+    def run(): Seq[String] = {
+      val path = java.nio.file.Files.createTempDirectory("keyset_widen").toString + "/t"
+      MergeTable.init(spark, path, (1 to 3000).map(i => (i, s"base$i")).toDF("k", "v"))
+      // int-keyed row-level state past the budget: a delta, tombstones
+      MergeTable.mergeLite(spark, path, (1 to 1500).map(i => (i, s"d$i")).toDF("k", "v"), Seq("k"))
+      MergeTable.deleteLite(spark, path, (1501 to 2800).toDF("k"), Seq("k"))
+      // long keys past the budget re-upsert delta and tombstoned keys;
+      // the int-typed state is probed against them
+      MergeTable.mergeLite(spark, path, (1001L to 2200L).map(i => (i, s"w$i")).toDF("k", "v"),
+        Seq("k"), allowSchemaEvolution = true)
+      rows(MergeTable.read(spark, path))
+    }
+    val expected = rows(((1L to 1000L).map(i => (i, s"d$i")) ++
+      (1001L to 2200L).map(i => (i, s"w$i")) ++
+      (2801L to 3000L).map(i => (i, s"base$i"))).toDF("k", "v"))
+    assert(run() === expected)
+    assert(KeySet.framesOnlyForTest(run()) === expected)
   }
 }

@@ -21,7 +21,7 @@ import graft.sources.MergeTable
   * micro-batch and the past-budget `merge`, `deleteLite` and
   * `applyChanges` ceilings are the counts measured once a batch's keys
   * past the literal budget were held on the driver as one membership
-  * set and the upsert side materialized once (10, 13, 10 and 10
+  * set and a CDC batch's winners materialized once (10, 13, 10 and 10
   * before). */
 class MergeTableJobsSpec extends SparkSpec {
   import spark.implicits._
@@ -56,7 +56,7 @@ class MergeTableJobsSpec extends SparkSpec {
     }
     val p1200 = freshPath()
     MergeTable.init(spark, p1200, rows(1 to 3000, "base"))
-    assertCeiling("merge 1200 keys", 4) {
+    assertCeiling("merge 1200 keys", 5) {
       MergeTable.merge(spark, p1200, rows(2401 to 3600, "new"), Seq("id"))
     }
     assert(MergeTable.read(spark, p600).count() === 3300)
@@ -105,7 +105,7 @@ class MergeTableJobsSpec extends SparkSpec {
         Some(keys(51 to 150)), Seq("id"))
     }
     val big = rowLevelTable()
-    assertCeiling("applyChanges 1200 upserts + 600 deletes", 4) {
+    assertCeiling("applyChanges 1200 upserts + 600 deletes", 5) {
       MergeTable.applyChanges(spark, big, Some(rows(1001 to 2200, "u")),
         Some(keys(51 to 650)), Seq("id"))
     }
